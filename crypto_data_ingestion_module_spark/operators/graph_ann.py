@@ -72,10 +72,13 @@ GANN_CLOSURE_MAX = 262144
 
 
 def _closure_max() -> int:
-    """The effective closure bound, read from the env PER CALL (r18,
-    ADVICE r17 item 4: the old import-time read silently ignored any
-    configuration set after module import).  The module global stays
-    the compiled-in default so tests can still pin it directly."""
+    """The effective closure bound: ``SPARK_GRAFT_GANN_CLOSURE_MAX``,
+    read from the env PER CALL (r18, ADVICE r17 item 4: the old
+    import-time read silently ignored any configuration set after module
+    import), else the ``GANN_CLOSURE_MAX`` default.  The env var wins
+    over the module global, so a path pin (tests included) sets the env
+    var, e.g. ``monkeypatch.setenv``; assigning the global is ignored
+    whenever the env var is set."""
     env = os.environ.get("SPARK_GRAFT_GANN_CLOSURE_MAX")
     return int(env) if env is not None else GANN_CLOSURE_MAX
 

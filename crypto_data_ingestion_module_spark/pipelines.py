@@ -11,14 +11,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import upsert_lake
+from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
+    _lake_exists,
+    read_lake,
+    upsert_lake,
+)
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    current_version,
+    evaluated_once,
+    read_snapshot,
+    snapshot_upsert,
+)
 from crypto_data_ingestion_module_spark.sources.fetch import (
     Adapter,
     fetch_pages,
     normalize_mock_pages,
     quarantined,
 )
-from crypto_data_ingestion_module_spark.sources.manifest import backfill_manifest
+from crypto_data_ingestion_module_spark.sources.manifest import (
+    backfill_manifest,
+    incremental_manifest,
+)
 
 
 def curate_and_shard(
@@ -111,6 +124,15 @@ def backfill(
     max collected timestamp (the reference's ``last_collected_ts`` state,
     500-512/652) and the failed-task side channel.
 
+    One evaluation per batch: the fetched pages are evaluated once
+    (``sinks.snapshot.evaluated_once``), so each manifest page is
+    requested once, and the committed candles, the touched partitions
+    and the quarantine all come from that one answer.  The quarantine
+    (at most one row per failed page) is collected and returned as a
+    local DataFrame; reading it makes no request.  An empty batch (a
+    re-run over an up-to-date lake) writes nothing and commits no
+    version.
+
     ``backend="snapshot"`` (default) lands the merge as one
     snapshot-isolated commit (``sinks.snapshot``) — concurrent readers
     never see a half-applied backfill; ``"swap"`` keeps the plain
@@ -130,50 +152,36 @@ def backfill(
     """
     manifest = backfill_manifest(spark, symbols_df, intervals_df, end_ms)
     if incremental:
-        from crypto_data_ingestion_module_spark.sources.manifest import (
-            incremental_manifest,
-        )
-
         existing = None
         if backend == "snapshot":
-            from crypto_data_ingestion_module_spark.sinks.snapshot import (
-                current_version,
-                read_snapshot,
-            )
-
             if current_version(spark, lake_root) is not None:
                 existing = read_snapshot(spark, lake_root)
-        else:
-            from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-                _lake_exists,
-                read_lake,
-            )
-
-            if _lake_exists(spark, lake_root):
-                existing = read_lake(spark, lake_root)
+        elif _lake_exists(spark, lake_root):
+            existing = read_lake(spark, lake_root)
         if existing is not None:
             manifest = incremental_manifest(manifest, existing)
     raw = fetch_pages(spark, manifest, adapter, pacing=pacing)
-    # drop the chunk-provenance seq: the lake stamps a monotone
-    # (max existing + 1) arrival order, so a re-fetch of the same range
-    # strictly supersedes prior data and corrections always win
-    candles = normalizer(raw).drop("_ingest_seq")
-    if backend == "snapshot":
-        from crypto_data_ingestion_module_spark.sinks.snapshot import (
-            read_snapshot,
-            snapshot_upsert,
-        )
 
-        snapshot_upsert(spark, candles, lake_root)
-        lake = read_snapshot(spark, lake_root)
-    else:
-        upsert_lake(spark, candles, lake_root)
+    # one evaluation of the fetched pages feeds both the committed
+    # candles and the returned quarantine: each page is requested once
+    with evaluated_once(raw) as pages:
+        # drop the chunk-provenance seq: the lake stamps a monotone
+        # (max existing + 1) arrival order, so a re-fetch of the same range
+        # strictly supersedes prior data and corrections always win
+        candles = normalizer(pages).drop("_ingest_seq")
+        if backend == "snapshot":
+            snapshot_upsert(spark, candles, lake_root)
+        else:
+            upsert_lake(spark, candles, lake_root)
+        failed = quarantined(pages)
+        quarantine = spark.createDataFrame(failed.collect(), failed.schema)
 
-        from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-            read_lake,
-        )
-
+    if backend != "snapshot":
         lake = read_lake(spark, lake_root)
+    elif current_version(spark, lake_root) is not None:
+        lake = read_snapshot(spark, lake_root)
+    else:  # nothing fetched into a new lake: no version was committed
+        lake = spark.createDataFrame([], candles.schema)
 
     progress = (
         lake.groupBy("symbol", "interval", "exchange")
@@ -182,4 +190,4 @@ def backfill(
             F.count(F.lit(1)).alias("n_candles"),
         )
     )
-    return progress, quarantined(raw)
+    return progress, quarantine

@@ -46,7 +46,8 @@ from __future__ import annotations
 
 import json
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,6 +132,57 @@ def _partition_of(rel_file: str, partition_cols: Sequence[str]) -> str:
     ``symbol=BTC/.../date=x`` partition key string."""
     parts = [p for p in rel_file.split("/") if "=" in p]
     return "/".join(parts)
+
+
+def _partition_key(row, partition_cols: Sequence[str]) -> str:
+    """A row's partition values as the manifest's ``c=v/...`` key."""
+    return "/".join(f"{c}={row[c]}" for c in partition_cols)
+
+
+@contextmanager
+def evaluated_once(df: DataFrame) -> Iterator[DataFrame]:
+    """Cut ``df``'s lineage so every job inside the block reads ONE
+    evaluation of it.
+
+    A write transaction reads its batch several times (touched
+    partitions, the merge+write, the sequence high-water mark).  Without
+    a cut each job re-runs the batch's whole plan: for a fetched batch
+    that re-requests every venue page, and since a venue can answer
+    differently the second time, the committed rows need not match the
+    touched partitions computed from the first answer.  The cut is
+    ``localCheckpoint(eager=False)``: the first job that reads it stores
+    its partitions as executor-local blocks and every later job reads
+    those, so nothing runs until the block needs it (a replayed
+    ``applied_id`` never evaluates the batch at all).
+
+    The blocks are released when the block exits, normally or by an
+    exception such as :class:`CommitConflict` after the last retry.
+    Fault-tolerance trade-off: a local checkpoint is not replicated and
+    cannot be recomputed, so losing an executor between the first read
+    and the exit fails the transaction (no version is committed; the
+    caller re-runs it) instead of recomputing the lost partitions from
+    lineage.  Frames derived from the cut are unreadable after exit.
+    """
+    cut = df.localCheckpoint(eager=False)
+    try:
+        yield cut
+    finally:
+        cut._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _touched_partitions(
+    df: DataFrame, partition_cols: Sequence[str]
+) -> tuple[set[str], int | None]:
+    """The partitions ``df`` lands in and its max ``_ingest_seq`` (None
+    without the column), from one small aggregate job.  An empty set
+    means an empty batch."""
+    grouped = df.groupBy(*partition_cols)
+    has_seq = INGEST_SEQ in df.columns
+    rows = (
+        grouped.agg(F.max(INGEST_SEQ).alias("_hi")) if has_seq else grouped.count()
+    ).collect()
+    hi = max((int(r["_hi"] or 0) for r in rows), default=0) if has_seq else None
+    return {_partition_key(r, partition_cols) for r in rows}, hi
 
 
 #: Partition values are DUPLICATED into the data files under this prefix
@@ -693,16 +745,31 @@ def init_snapshot_lake(
     root: str,
     partition_cols: Sequence[str] = PARTITION_COLS,
     applied_id: str | None = None,
-) -> int:
-    """Bootstrap version 1 from an initial batch."""
+) -> int | None:
+    """Bootstrap version 1 from an initial batch, evaluated once
+    (:func:`evaluated_once`).  An empty batch writes nothing, commits no
+    version and returns None."""
+    with evaluated_once(df) as batch:
+        return _init_snapshot_lake(spark, batch, root, partition_cols, applied_id)
+
+
+def _init_snapshot_lake(
+    spark: SparkSession,
+    df: DataFrame,
+    root: str,
+    partition_cols: Sequence[str],
+    applied_id: str | None,
+) -> int | None:
     df = _with_date(df)
     if INGEST_SEQ not in df.columns:
         df = df.withColumn(INGEST_SEQ, F.lit(0).cast("long"))
+    touched, seq_max = _touched_partitions(df, partition_cols)
+    if not touched:
+        return None
     files = _write_data_files(spark, df, root, partition_cols)
     parts: dict[str, list[str]] = {}
     for f in files:
         parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    seq_max = df.agg(F.max(INGEST_SEQ).alias("m")).first()["m"]
     commit_version(
         spark,
         root,
@@ -719,7 +786,7 @@ def init_snapshot_lake(
             # rather than truncated
             "applied_ids_evicted": 0,
             "applied_ids_frozen_n": 0,
-            "max_ingest_seq": int(seq_max or 0),
+            "max_ingest_seq": seq_max,
         },
         1,
     )
@@ -756,16 +823,20 @@ def snapshot_merge_partitions(
     ``merge_fn(current: DataFrame | None, incoming) -> DataFrame``
     receives None when the lake doesn't exist yet (bootstrap).  Its
     result must carry the partition columns.
+
+    ``incoming`` is evaluated once for all attempts
+    (:func:`evaluated_once`); its blocks are released on return.
     """
     last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _snapshot_merge_once(
-                spark, root, incoming, merge_fn, partition_cols,
-                applied_id, ts_col,
-            )
-        except CommitConflict as e:
-            last = e
+    with evaluated_once(incoming) as batch:
+        for _ in range(retries + 1):
+            try:
+                return _snapshot_merge_once(
+                    spark, root, batch, merge_fn, partition_cols,
+                    applied_id, ts_col,
+                )
+            except CommitConflict as e:
+                last = e
     raise last
 
 
@@ -807,19 +878,10 @@ def _snapshot_merge_once(
     if applied_id is not None and applied_id in manifest.get("applied_ids", []):
         return v
 
-    # `incoming` is consumed TWICE below (touched-keys collect, then the
-    # merge+write job); without a lineage cut both jobs re-run its full
-    # plan — for the streaming rollup that is one extra whole-batch
-    # aggregation per commit (r18, guide §2.6 loop invariants; measured
-    # ~0.9× on the stream_rollup_1h drain).  The checkpoint is lazy, so
-    # a replayed batch id (returned above) never materializes anything,
-    # and per-run only: nothing persists across invocations.
-    incoming = incoming.localCheckpoint(eager=False)
-
-    touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for r in incoming.select(*partition_cols).distinct().collect()
-    }
+    # `incoming` is consumed twice below (touched-keys collect, then the
+    # merge+write job): snapshot_merge_partitions hands it over cut
+    # (evaluated_once), so the batch's plan runs once
+    touched_keys, _ = _touched_partitions(incoming, partition_cols)
     schema = _manifest_schema(spark, root, manifest, v)
     current_touched = _read_touched(spark, root, manifest, touched_keys, schema)
     merged = merge_fn(current_touched, incoming)
@@ -1010,7 +1072,7 @@ def snapshot_upsert(
     batch_seq: int | None = None,
     retries: int = 2,
     applied_id: str | None = None,
-) -> int:
+) -> int | None:
     """Keep-last MERGE with snapshot isolation and optimistic retry.
 
     A concurrent writer winning the version race surfaces as the
@@ -1023,16 +1085,25 @@ def snapshot_upsert(
     id, backfill run id).  A manifest already listing it makes the call
     a no-op — exactly-once commits under at-least-once delivery, without
     leaning on keep-last coincidence.
+
+    One evaluation per batch: ``incoming`` is cut once for all attempts
+    (:func:`evaluated_once`), so the committed rows, the touched
+    partitions and the sequence high-water mark all come from the same
+    evaluation, and a fetched batch requests each page once.  An empty
+    batch runs no write job and commits no version (its ``applied_id``
+    is not recorded); the call returns the current version, None when
+    there is no lake yet.
     """
     last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _snapshot_upsert_once(
-                spark, incoming, root, key_cols, partition_cols, batch_seq,
-                applied_id,
-            )
-        except CommitConflict as e:
-            last = e
+    with evaluated_once(incoming) as batch:
+        for _ in range(retries + 1):
+            try:
+                return _snapshot_upsert_once(
+                    spark, batch, root, key_cols, partition_cols, batch_seq,
+                    applied_id,
+                )
+            except CommitConflict as e:
+                last = e
     raise last
 
 
@@ -1044,7 +1115,7 @@ def _snapshot_upsert_once(
     partition_cols: Sequence[str] = PARTITION_COLS,
     batch_seq: int | None = None,
     applied_id: str | None = None,
-) -> int:
+) -> int | None:
     """One optimistic attempt of the keep-last MERGE.
 
     Reads ONLY the current snapshot's touched partitions — the file list
@@ -1055,14 +1126,13 @@ def _snapshot_upsert_once(
     full-lake aggregate on the hot path (legacy manifests without them
     fall back to one full read).  A crash before ``commit_version``
     leaves unreferenced data files (garbage, collected by ``vacuum``)
-    and an unchanged live snapshot.  Returns the committed version.
+    and an unchanged live snapshot.  Returns the committed version (the
+    current one for an empty batch).
     """
-    from pyspark.sql import types as T
-
     v = current_version(spark, root)
     if v is None:
-        return init_snapshot_lake(
-            spark, incoming, root, partition_cols, applied_id=applied_id
+        return _init_snapshot_lake(
+            spark, incoming, root, partition_cols, applied_id
         )
     manifest = read_manifest(spark, root, v)
     _check_partition_cols(manifest, partition_cols)
@@ -1081,8 +1151,7 @@ def _snapshot_upsert_once(
                 .first()
             )
             batch_seq = int(row["m"] or 0) + 1
-    incoming_had_seq = INGEST_SEQ in incoming.columns
-    if not incoming_had_seq:
+    if INGEST_SEQ not in incoming.columns:
         incoming = incoming.withColumn(
             INGEST_SEQ, F.lit(batch_seq).cast("long")
         )
@@ -1094,10 +1163,9 @@ def _snapshot_upsert_once(
     # a migration, not an upsert.
     evolved = _evolve_schema(cur_schema, incoming.schema)
 
-    touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for r in incoming.select(*partition_cols).distinct().collect()
-    }
+    touched_keys, seq_now = _touched_partitions(incoming, partition_cols)
+    if not touched_keys:
+        return v
     current_touched = _read_touched(
         spark, root, manifest, touched_keys, cur_schema
     )
@@ -1124,11 +1192,6 @@ def _snapshot_upsert_once(
         if f in kept
     }
     stats.update(_file_time_stats(spark, root, new_files))
-    if incoming_had_seq:
-        row = incoming.agg(F.max(INGEST_SEQ).alias("m")).first()
-        seq_now = int(row["m"] or 0)
-    else:
-        seq_now = batch_seq
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     commit_version(
         spark,
@@ -1205,7 +1268,7 @@ def _snapshot_delete_once(
         return v, 0
 
     touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
+        _partition_key(r, partition_cols)
         for r in read_snapshot(spark, root, v)
         .filter(predicate)
         .select(*partition_cols)

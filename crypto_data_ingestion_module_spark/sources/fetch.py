@@ -32,7 +32,9 @@ from pyspark.sql import types as T
 from crypto_data_ingestion_module_spark.functions.timeutil import (
     parse_native_interval_ms,
 )
-from crypto_data_ingestion_module_spark.operators.normalize import NORMALIZERS
+from crypto_data_ingestion_module_spark.operators.normalize import (
+    normalize_venue_pages,
+)
 
 #: Raw page row produced by the fetch kernel: one kline as array<string>
 #: (uniform across venues; each venue's normalizer knows its layout).
@@ -199,34 +201,14 @@ def normalize_mock_pages(raw: DataFrame) -> DataFrame:
 
 
 def normalize_real_pages(raw: DataFrame) -> DataFrame:
-    """Real venue pages → canonical candles via the per-dialect
-    normalizers (operators.normalize); quarantine rows dropped, interval
-    and arrival order carried through."""
+    """Real venue pages → canonical candles: one projection over ``raw``
+    (``operators.normalize.normalize_venue_pages``), so the fetch kernel
+    below it runs once per evaluation; quarantine rows and unknown
+    venues are dropped, interval and arrival order carried through."""
     good = raw.filter(F.col("error").isNull())
-    extra = ("interval", "_ingest_seq")
-    parts = []
-    for exchange, normalizer in NORMALIZERS.items():
-        sub = good.filter(F.col("exchange") == exchange)
-        if exchange == "bitstamp":
-            # bitstamp's named-field payload arrives positionally here
-            sub = sub.withColumn(
-                "ohlc",
-                F.struct(
-                    F.col("kline")[0].alias("timestamp"),
-                    F.col("kline")[1].alias("open"),
-                    F.col("kline")[2].alias("high"),
-                    F.col("kline")[3].alias("low"),
-                    F.col("kline")[4].alias("close"),
-                    F.col("kline")[5].alias("volume"),
-                ),
-            )
-            parts.append(normalizer(sub, extra=extra))
-        else:
-            parts.append(normalizer(sub, extra=extra))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.withColumn("data_type", F.lit("spot"))
+    return normalize_venue_pages(good, extra=("interval", "_ingest_seq")).withColumn(
+        "data_type", F.lit("spot")
+    )
 
 
 def quarantined(raw: DataFrame) -> DataFrame:

@@ -188,8 +188,8 @@ def parse_response(exchange: str, status: int, body: object) -> list[list[str]]:
             raise RuntimeError(f"kucoin API error: {msg}")
         rows = body["data"]
     elif exchange == "bitstamp":
-        # named-field rows → the positional layout normalize_real_pages
-        # rebuilds its struct from (fetch.py bitstamp branch).  A 200
+        # named-field rows → the positional order of bitstamp's entry in
+        # operators.normalize.LAYOUTS, which normalize_real_pages reads.  A 200
         # without the data/ohlc envelope is an error page, not an empty
         # window — raise so the kernel quarantines it.
         if not isinstance(body, dict) or not isinstance(body.get("data"), dict) \

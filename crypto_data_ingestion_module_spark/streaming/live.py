@@ -159,10 +159,10 @@ def live_collection_stream(
         )
 
     def _cycle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
         max_ts = batch_df.agg(F.max("timestamp")).first()[0]
+        if max_ts is None:  # no ticks in this micro-batch
+            return
         boundary_ms = (
             int(max_ts.timestamp() * 1000) // (tick_seconds * 1000)
         ) * (tick_seconds * 1000)
@@ -191,17 +191,16 @@ def live_collection_stream(
         )
         raw = fetch_pages(sess, manifest, adapter, pacing=pacing)
         candles = normalizer(raw).drop("_ingest_seq")
-        if candles.isEmpty():
-            return
         if backend == "snapshot":
             # the cycle boundary, not the micro-batch id, is the logical
             # batch identity: a restarted stream re-fetching the same
-            # boundary must not double-commit it
+            # boundary must not double-commit it.  The sink evaluates the
+            # fetch once and commits nothing when it comes back empty.
             snapshot_upsert(
                 sess, candles, lake_root,
                 applied_id=f"cycle-{boundary_ms}",
             )
-        else:
+        elif not candles.isEmpty():
             upsert_lake(sess, candles, lake_root)
 
     writer = ticks.writeStream.foreachBatch(_cycle).option(

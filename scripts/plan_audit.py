@@ -10,6 +10,10 @@ bans:
 - ``BatchEvalPython`` — a row-at-a-time Python UDF in any plan
   (Arrow ``ArrowEvalPython`` / ``MapInPandas`` / ``FlatMapGroupsInPandas``
   are the sanctioned Python paths and are NOT flagged);
+- ``repeated-python-exec`` — one of those Arrow Python exec nodes
+  appearing more than once in one executed plan (same node, same
+  function, same columns once expression ids are stripped): each copy
+  re-runs its kernel, e.g. a frame filtered per key and unioned back;
 - events/lineitem scans whose ``ReadSchema`` carries every column (no
   pruning — usually a ``select`` forgotten before a wide operator).
 
@@ -20,6 +24,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, ".")
 
@@ -63,6 +68,29 @@ WIDE_ALLOW = {
     "time_range_filter",
 }
 
+PYTHON_EXEC = re.compile(
+    r"\b(?:MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas)\b.*"
+)
+
+# Queries whose plan repeats a Python exec node today, with the reason
+# (each is a re-run kernel still to remove, not a design choice).
+REPEAT_ALLOW = {
+    "ann_lsh_topk": "LSH bucket UDF hashes the corpus and its query subset from one table",
+    "ann_lsh_seed_topk": "LSH bucket UDF hashes the corpus and its query subset from one table",
+    "hybrid_rrf_per_query": "LSH bucket UDF hashes the corpus and its query subset from one table",
+    "ann_recall_mrr": "metric row reads the approximate top-k in more than one branch",
+    "mmr_diversified_topk": "scored candidate set feeds both the pairwise and the selection branch",
+    "semdedup_pair_recall": "pair-set metrics count the candidate pairs and join them to the truth",
+}
+
+
+def repeated_python_exec(plan: str) -> list[str]:
+    """Python exec nodes that occur more than once in ``plan``."""
+    nodes = Counter(
+        re.sub(r"#\d+L?", "", m.group(0)).strip() for m in PYTHON_EXEC.finditer(plan)
+    )
+    return [node for node, n in nodes.items() if n > 1]
+
 
 def main() -> int:
     from crypto_data_ingestion_module_spark.plans.queries import QUERY_SPECS
@@ -80,6 +108,9 @@ def main() -> int:
             continue
         if "BatchEvalPython" in plan:
             findings.append((name, "row-at-a-time-udf", "BatchEvalPython"))
+        repeated = repeated_python_exec(plan)
+        if repeated and name not in REPEAT_ALLOW:
+            findings.append((name, "repeated-python-exec", repeated[0][:80]))
         if (
             re.search(r"CartesianProduct|BroadcastNestedLoopJoin", plan)
             and name not in NL_ALLOW

@@ -95,12 +95,12 @@ if __name__ == "__main__":
     raise SystemExit(pytest.main([__file__, "-q"]))
 
 
-def test_closure_kernel_bit_parity_with_join_path(spark):
+def test_closure_kernel_bit_parity_with_join_path(spark, monkeypatch):
     """r17: the closure-matrix pair scorer (ids-only shuffle) must be
     bit-identical to the fully-distributed vector-attach join path —
-    the gate only changes the physical shape, never a cosine."""
-    import crypto_data_ingestion_module_spark.operators.graph_ann as g
-
+    the gate only changes the physical shape, never a cosine.  The path
+    is pinned through the env var, which ``_closure_max`` reads per call
+    and which takes precedence over the module default."""
     emb = load_table(spark, SF, "embeddings")
     n = emb.count()
     queries = emb.filter(F.col("vec_id") % 100 == 0)
@@ -111,12 +111,8 @@ def test_closure_kernel_bit_parity_with_join_path(spark):
             for r in ann_graph_topk(emb, queries, n_nodes=n, k=5).collect()
         )
 
-    saved = g.GANN_CLOSURE_MAX
-    try:
-        g.GANN_CLOSURE_MAX = 10**9  # force kernel path
-        kernel_rows = run()
-        g.GANN_CLOSURE_MAX = -1  # force join path
-        join_rows = run()
-    finally:
-        g.GANN_CLOSURE_MAX = saved
+    monkeypatch.setenv("SPARK_GRAFT_GANN_CLOSURE_MAX", str(10**9))  # kernel path
+    kernel_rows = run()
+    monkeypatch.setenv("SPARK_GRAFT_GANN_CLOSURE_MAX", "-1")  # join path
+    join_rows = run()
     assert kernel_rows == join_rows and len(kernel_rows) > 0

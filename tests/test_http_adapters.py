@@ -202,6 +202,108 @@ def test_kucoin_error_envelope_quarantines_not_fails(spark):
     assert normalize_real_pages(raw).count() == 0
 
 
+_MANIFEST_DDL = (
+    "symbol string, interval string, exchange string, "
+    "native_interval string, page_limit int, "
+    "chunk_start_ms long, chunk_end_ms long"
+)
+
+
+def test_real_pages_plan_runs_fetch_kernel_once(spark):
+    """Normalizing a mixed-venue page set is one projection over the
+    fetch: the executed plan holds exactly one MapInPandas, so each
+    evaluation requests each page once (a per-venue union re-ran the
+    kernel once per venue)."""
+    import re
+
+    manifest = spark.createDataFrame(
+        [
+            ("BTC-USDT", "15m", ex, native, 300, START_MS, END_MS)
+            for ex, native in VENUE_NATIVE.items()
+        ],
+        _MANIFEST_DDL,
+    )
+    raw = fetch_pages(
+        spark, manifest, HttpExchangeAdapter(transport=_recorded_transport())
+    )
+    plan = normalize_real_pages(raw)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+
+
+def _counting_adapter(spark, inner):
+    """``inner`` wrapped so every request adds 1 to its page's count in a
+    driver-side accumulator (executor copies of the adapter cannot report
+    through their own state)."""
+    from pyspark.accumulators import AccumulatorParam
+
+    class PageCounts(AccumulatorParam):
+        def zero(self, value):
+            return {}
+
+        def addInPlace(self, a, b):
+            for k, n in b.items():
+                a[k] = a.get(k, 0) + n
+            return a
+
+    counts = spark.sparkContext.accumulator({}, PageCounts())
+
+    def adapter(exchange, symbol, interval, start_ms, end_ms, limit):
+        counts.add({(exchange, symbol, int(start_ms), int(end_ms)): 1})
+        return inner(exchange, symbol, interval, start_ms, end_ms, limit)
+
+    return adapter, counts
+
+
+def test_backfill_requests_each_page_once_and_noop_commits_nothing(spark, tmp_path):
+    """A cold backfill requests every manifest page exactly once (fetch,
+    commit and quarantine share one evaluation); a re-run over the
+    up-to-date lake requests nothing, commits no version and writes no
+    data directory."""
+    import os
+
+    from crypto_data_ingestion_module_spark.pipelines import backfill
+    from crypto_data_ingestion_module_spark.sinks.snapshot import current_version
+    from crypto_data_ingestion_module_spark.sources.manifest import (
+        backfill_manifest,
+    )
+
+    lake = str(tmp_path / "lake")
+    symbols = spark.createDataFrame(
+        [("BTC-USDT", START_MS)], "symbol string, start_ms long"
+    )
+    intervals = spark.createDataFrame(
+        [("15m", 96)], "interval string, candles_per_day long"
+    )
+    adapter, counts = _counting_adapter(
+        spark, HttpExchangeAdapter(transport=_recorded_transport())
+    )
+
+    def run():
+        progress, quarantine = backfill(
+            spark, symbols, intervals, END_MS, adapter, lake,
+            normalizer=normalize_real_pages,
+        )
+        return progress.collect(), quarantine.collect()
+
+    pages = {
+        (r.exchange, r.symbol, r.chunk_start_ms, r.chunk_end_ms)
+        for r in backfill_manifest(spark, symbols, intervals, END_MS).collect()
+    }
+    assert len(pages) == len(VENUE_NATIVE)
+    progress, quarantine = run()
+    assert counts.value == {p: 1 for p in pages}
+    assert quarantine == []
+    assert {r.n_candles for r in progress} == {2}
+    version = current_version(spark, lake)
+    data_dirs = sorted(os.listdir(os.path.join(lake, "data")))
+
+    progress2, _ = run()
+    assert counts.value == {p: 1 for p in pages}
+    assert current_version(spark, lake) == version
+    assert sorted(os.listdir(os.path.join(lake, "data"))) == data_dirs
+    assert sorted(progress2) == sorted(progress)
+
+
 def test_python_symbol_dialects_match_column_expressions(spark):
     """The adapter's plain-Python symbol mappers must agree with the
     Column-expression dialects (functions/symbols.py) used by the

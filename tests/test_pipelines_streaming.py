@@ -67,6 +67,50 @@ def test_backfill_end_to_end(spark, tmp_path):
     assert prog2 == prog
 
 
+def _flaky_adapter(marker: str):
+    """The mock venue, except that the very first request (across all
+    executors: creating ``marker`` exclusively claims it) fails as a
+    transient 503."""
+    inner = MockExchangeAdapter()
+
+    def adapter(exchange, symbol, interval, start_ms, end_ms, limit):
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            return inner(exchange, symbol, interval, start_ms, end_ms, limit)
+        raise RuntimeError(f"{exchange} API error 503")
+
+    return adapter
+
+
+def test_flaky_venue_upsert_leaves_no_duplicate_keys(spark, tmp_path):
+    """A venue that fails once and then answers must not change what one
+    backfill commits between its touched-partition scan and its write:
+    with the batch evaluated once, the failed page is quarantined, its
+    existing partition is left alone, and no logical key is stored
+    twice."""
+    lake = str(tmp_path / "lake")
+    intervals = spark.createDataFrame(
+        [("1h", 24)], "interval string, candles_per_day long"
+    )
+    end_ms = START_MS + DAY_MS
+    backfill(spark, _symbols(spark), intervals, end_ms, MockExchangeAdapter(), lake)
+    before = read_snapshot(spark, lake).count()
+    assert before == 5 * 24  # one 1h day per venue
+
+    _, quarantine = backfill(
+        spark, _symbols(spark), intervals, end_ms,
+        _flaky_adapter(str(tmp_path / "failed-once")), lake,
+        incremental=False,
+    )
+    rows = read_snapshot(spark, lake)
+    keys = ["symbol", "interval", "data_type", "exchange", "timestamp"]
+    duplicated = rows.groupBy(*keys).count().filter("count > 1").count()
+    assert (duplicated, rows.count()) == (0, before)
+    failed = quarantine.collect()
+    assert len(failed) == 1 and failed[0].error.endswith("API error 503")
+
+
 def test_backfill_quarantine(spark, tmp_path):
     lake = str(tmp_path / "lake")
     progress, quarantine = backfill(
