@@ -27,16 +27,11 @@ from crypto_data_ingestion_module_spark.operators.graph import (  # noqa: F401
 )
 from crypto_data_ingestion_module_spark.operators.incremental import (  # noqa: F401
     incremental_near_dup,
-    ingest_batch,
 )
 from crypto_data_ingestion_module_spark.operators.quantize import (  # noqa: F401
     dequantize,
     quantize_embeddings,
     quantized_cosine_topk,
-)
-from crypto_data_ingestion_module_spark.operators.rollup import (  # noqa: F401
-    maintain_rollup,
-    read_rollup,
 )
 from crypto_data_ingestion_module_spark.operators.sampling import (  # noqa: F401
     mixture_sample,

@@ -16,8 +16,8 @@ path:
   cluster table.
 
 Refresh discipline: pair edges only ever ACCUMULATE (a batch's pairs
-come out of ``operators.incremental.ingest_batch`` against the
-fingerprint lake), and connected components is monotone in its edge set
+come out of ``streaming.dedup_stream`` against the fingerprint lake),
+and connected components is monotone in its edge set
 — so the refresh is CC over the accumulated pair lake, whose input is
 pairs (tiny), not documents.  Merging clusters on new evidence happens
 at refresh, exactly like the reference re-deriving progress state from

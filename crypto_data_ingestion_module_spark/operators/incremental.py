@@ -22,11 +22,11 @@ batch-by-batch ingestion finds EXACTLY the pairs a from-scratch run
 over the union finds (pinned by test).  No recall is lost by going
 incremental.
 
-The index persists via ``sinks.parquet_lake`` append; band rows are
-immutable facts (a doc's signature never changes), so append — not
-upsert — is the right discipline, and re-running a failed batch is
-idempotent up to duplicate band rows, which the candidate join's
-``dropDuplicates`` absorbs.
+``streaming.dedup_stream`` persists the index as a snapshot lake
+(``sinks.snapshot.snapshot_append``): band rows are immutable facts (a
+doc's signature never changes), so append — not upsert — is the right
+discipline, and the manifest's ``applied_ids`` ledger makes a re-run
+batch append nothing.
 """
 
 from __future__ import annotations
@@ -101,38 +101,3 @@ def incremental_near_dup(
         .select("id_a", "id_b", _estimate(num_hashes).alias("est_jaccard"))
     )
     return pairs, new_bands
-
-
-def ingest_batch(
-    spark,
-    index_path: str,
-    new_docs: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One pipeline step: read the index lake, find the batch's near-dup
-    pairs, append the batch's fingerprints.  Returns the pairs.
-
-    The append happens AFTER the pairs materialize (the pair count
-    forces the plan), so a failure leaves the lake without the batch —
-    re-running the batch is the recovery, and its extra band rows, if
-    any landed, are absorbed by the candidate dedup.
-    """
-    # Existence is checked explicitly (Hadoop FS — works for any lake
-    # root): only a genuinely missing index means "first batch ever".
-    # Any OTHER read failure must propagate — swallowing it would check
-    # the batch only against itself and permanently admit duplicates of
-    # the whole existing corpus with no error surfaced.
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    index = spark.read.parquet(index_path) if fs.exists(p) else None
-    pairs, new_bands = incremental_near_dup(
-        new_docs, index, num_hashes, bands, shingle_n, text_col, id_col
-    )
-    pairs = pairs.localCheckpoint(eager=True)
-    new_bands.write.mode("append").parquet(index_path)
-    return pairs

@@ -20,27 +20,19 @@ merge bit-exact regardless of merge order (a double sum would drift by
 batch split — the same policy as ``plans.queries.dsum``).  Merging two
 partials is the SAME aggregate as building one, so maintenance is:
 partial-agg the batch → union with the stored partials of the touched
-date partitions only (partition pruning does the "only" part) → re-agg →
-dynamic-overwrite those partitions.  ``finalize`` projects the partial
+date partitions only (manifest pruning does the "only" part) → re-agg →
+replace those partitions in one commit.  ``finalize`` projects the partial
 form to the user-facing OHLCV row.
 
 Replay safety: merging is additive, so at-least-once delivery would
-double-count.  ``maintain_rollup`` therefore commits each touched DATE
-PARTITION by a staged directory rename that carries an
-``_applied-batch-{id}`` marker file INSIDE the partition directory —
-data and marker land in one atomic rename, so the replay check ("does
-this date already contain this batch?") and the data commit share one
-atomic unit, per date.  A replayed batch re-merges only the dates whose
-marker is absent; a crash mid-swap is repaired by the restore pass at
-the next attempt (old content is parked in a deterministic per-batch
-backup dir, never deleted before every swap succeeded).  All marker and
-swap I/O goes through the Hadoop FS API so the discipline holds on any
-lake root (HDFS, s3a via a rename-capable committer, local).
+double-count.  :func:`maintain_rollup_snapshot` commits each batch to
+the snapshot lake (``sinks.snapshot``) as ONE manifest swap carrying the
+batch id in the manifest's ``applied_ids`` ledger: a re-delivered batch
+is a no-op, and a crash before the commit applies nothing.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -154,10 +146,6 @@ def cascade_partials(
     return merge_partials(rebucketed, keys)
 
 
-def read_rollup(spark: SparkSession, lake_root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(lake_root, "partials"))
-
-
 def maintain_rollup_snapshot(
     spark: SparkSession,
     batch: DataFrame,
@@ -170,25 +158,23 @@ def maintain_rollup_snapshot(
     volume_col: str | None = None,
     tiebreak_col: str = "event_id",
 ) -> int:
-    """Rollup maintenance over the SNAPSHOT lake — the unified-lake twin
-    of :func:`maintain_rollup` (VERDICT r4 item 5).
+    """Merge one tick batch into the candle rollup lake (a snapshot
+    lake partitioned by ``date``).
 
-    Same algebra (partial-agg the batch, re-merge only the touched date
-    partitions), but durability and replay come from the snapshot
-    manifest instead of marker files + directory renames:
+    Partial-agg the batch, re-merge only the touched date partitions:
 
     * the touched dates' stored partials are read through the manifest
       (file-pruned, never a full-lake scan),
-    * the commit is ONE atomic manifest swap — there is no per-date
-      partial-application window at all (the marker design could apply
-      some dates and crash before others; here a crash before commit
-      applies nothing and replay redoes everything),
+    * the commit is ONE atomic manifest swap — a crash before commit
+      applies nothing and replay redoes everything,
     * replay idempotence is the manifest's ``applied_ids`` ledger: a
       re-delivered ``batch_id`` is a no-op without reading any data,
+    * an empty batch over an existing lake commits nothing,
     * concurrent maintainers get optimistic retry + snapshot-isolated
       readers for free.
 
-    Returns the committed snapshot version.
+    Returns the committed snapshot version (the current one when nothing
+    was committed).
     """
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
         snapshot_merge_partitions,
@@ -225,111 +211,3 @@ def read_rollup_snapshot(
     )
 
     return read_snapshot(spark, lake_root, version, ts_col="bucket_ts")
-
-
-def _fs(spark: SparkSession, path_str: str):
-    """(Path class, FileSystem) via the Hadoop FS API — the lake root may
-    be any Hadoop-supported filesystem, not just local."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    return jvm.org.apache.hadoop.fs.Path, p.getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-
-def maintain_rollup(
-    spark: SparkSession,
-    batch: DataFrame,
-    lake_root: str,
-    interval_ms: int,
-    batch_id: str | int,
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    price_col: str = "value",
-    volume_col: str | None = None,
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Merge one tick batch into the candle rollup lake.
-
-    Only the date partitions the batch touches are read and rewritten.
-    The touched-date list is collected driver-side — it is bounded by
-    the batch's calendar span, not its size.
-
-    Replay idempotence is per DATE PARTITION: the staged content of each
-    touched date carries an ``_applied-batch-{id}`` marker file (parquet
-    readers ignore ``_``-prefixed files), and the directory rename that
-    promotes the partition moves data + marker atomically.  A replay
-    re-merges exactly the dates whose marker is missing; markers of
-    previously applied batches are carried forward into the staged dir
-    before the swap, so older replays stay skipped too.  A crash between
-    "old content parked in backup" and "staged content renamed in" is
-    repaired by the restore pass below at the next attempt of the same
-    batch — backup dirs are deterministic per batch id and deleted only
-    after every swap succeeded.
-    """
-    path = f"{lake_root.rstrip('/')}/partials"
-    Path, fs = _fs(spark, lake_root)
-    staging = f"{lake_root.rstrip('/')}/_staging/batch-{batch_id}"
-    backup = f"{lake_root.rstrip('/')}/_backup/batch-{batch_id}"
-
-    # Restore pass: a previous attempt of THIS batch may have crashed
-    # after parking a date's old content in backup but before promoting
-    # the staged replacement — that date is missing from the lake and its
-    # pre-batch content lives only in backup.  Move it back before
-    # recomputing, so the merge below sees the full pre-batch state.
-    if fs.exists(Path(backup)):
-        for st in fs.listStatus(Path(backup)):
-            name = st.getPath().getName()  # date=YYYYMMDD
-            if name.startswith("date=") and not fs.exists(Path(f"{path}/{name}")):
-                fs.mkdirs(Path(path))
-                fs.rename(st.getPath(), Path(f"{path}/{name}"))
-
-    new = candle_partials(
-        batch, interval_ms, keys, ts_col, price_col, volume_col, tiebreak_col
-    ).withColumn("date", F.date_format("bucket_ts", "yyyyMMdd"))
-    touched = [r.date for r in new.select("date").distinct().collect()]
-    marker_name = f"_applied-batch-{batch_id}"
-    pending = [
-        d for d in touched if not fs.exists(Path(f"{path}/date={d}/{marker_name}"))
-    ]
-    if not pending:
-        # fully applied (or empty batch): only leftover dirs to clean
-        fs.delete(Path(staging), True)
-        fs.delete(Path(backup), True)
-        return
-    new = new.filter(F.col("date").isin(pending))
-
-    # Existence is checked explicitly — any OTHER read failure (corrupt
-    # footer, FS hiccup, permissions) must propagate, never be mistaken
-    # for "lake does not exist yet" (that would silently replace the
-    # accumulated history of the touched dates with this batch alone).
-    if fs.exists(Path(path)):
-        stored = spark.read.parquet(path).filter(F.col("date").isin(pending))
-        merged = merge_partials(
-            stored.unionByName(new), keys
-        ).withColumn("date", F.date_format("bucket_ts", "yyyyMMdd"))
-    else:
-        merged = new
-
-    merged.write.mode("overwrite").partitionBy("date").parquet(staging)
-
-    # Per-date atomic promote: stage markers (new + carried-forward),
-    # park old content in backup, rename staged dir in.
-    for d in pending:
-        src = Path(f"{staging}/date={d}")
-        if not fs.exists(src):
-            continue
-        fs.createNewFile(Path(f"{staging}/date={d}/{marker_name}"))
-        dst = Path(f"{path}/date={d}")
-        if fs.exists(dst):
-            for st in fs.listStatus(dst):
-                nm = st.getPath().getName()
-                if nm.startswith("_applied-batch-") and nm != marker_name:
-                    fs.createNewFile(Path(f"{staging}/date={d}/{nm}"))
-            fs.mkdirs(Path(backup))
-            fs.rename(dst, Path(f"{backup}/date={d}"))
-        else:
-            fs.mkdirs(Path(path))
-        fs.rename(src, dst)
-    fs.delete(Path(staging), True)
-    fs.delete(Path(backup), True)

@@ -11,11 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-    _lake_exists,
-    read_lake,
-    upsert_lake,
-)
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     current_version,
     evaluated_once,
@@ -114,7 +109,6 @@ def backfill(
     lake_root: str,
     pacing: dict[str, float] | None = None,
     normalizer=normalize_mock_pages,
-    backend: str = "snapshot",
     incremental: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Historical backfill: manifest → distributed fetch → canonical
@@ -133,10 +127,9 @@ def backfill(
     re-run over an up-to-date lake) writes nothing and commits no
     version.
 
-    ``backend="snapshot"`` (default) lands the merge as one
-    snapshot-isolated commit (``sinks.snapshot``) — concurrent readers
-    never see a half-applied backfill; ``"swap"`` keeps the plain
-    directory layout for external parquet scanners.
+    The merge lands as one snapshot-isolated commit
+    (``sinks.snapshot``): concurrent readers never see a half-applied
+    backfill.
 
     ``incremental=True`` (default): when the lake already exists, the
     manifest is clamped to its per-series watermarks
@@ -151,15 +144,8 @@ def backfill(
     venue payloads — a mismatch scrambles OHLC column order silently.
     """
     manifest = backfill_manifest(spark, symbols_df, intervals_df, end_ms)
-    if incremental:
-        existing = None
-        if backend == "snapshot":
-            if current_version(spark, lake_root) is not None:
-                existing = read_snapshot(spark, lake_root)
-        elif _lake_exists(spark, lake_root):
-            existing = read_lake(spark, lake_root)
-        if existing is not None:
-            manifest = incremental_manifest(manifest, existing)
+    if incremental and current_version(spark, lake_root) is not None:
+        manifest = incremental_manifest(manifest, read_snapshot(spark, lake_root))
     raw = fetch_pages(spark, manifest, adapter, pacing=pacing)
 
     # one evaluation of the fetched pages feeds both the committed
@@ -169,17 +155,12 @@ def backfill(
         # (max existing + 1) arrival order, so a re-fetch of the same range
         # strictly supersedes prior data and corrections always win
         candles = normalizer(pages).drop("_ingest_seq")
-        if backend == "snapshot":
-            snapshot_upsert(spark, candles, lake_root)
-        else:
-            upsert_lake(spark, candles, lake_root)
+        version = snapshot_upsert(spark, candles, lake_root)
         failed = quarantined(pages)
         quarantine = spark.createDataFrame(failed.collect(), failed.schema)
 
-    if backend != "snapshot":
-        lake = read_lake(spark, lake_root)
-    elif current_version(spark, lake_root) is not None:
-        lake = read_snapshot(spark, lake_root)
+    if version is not None:
+        lake = read_snapshot(spark, lake_root, version)
     else:  # nothing fetched into a new lake: no version was committed
         lake = spark.createDataFrame([], candles.schema)
 

@@ -399,8 +399,7 @@ FROM events
 # ALGEBRAIC candle
 # partials into the snapshot lake (one atomic manifest commit per
 # batch — the commit cost is independent of how many of the 30 date
-# partitions a batch touches, which is why the snapshot backend and
-# not the per-date-rename marker backend carries the paired row);
+# partitions a batch touches);
 # after the availableNow drain the finalized candles are read BACK
 # from the lake.  Because the partial form is associative and exact
 # (struct min/max opens/closes, micro-unit LONG sums — operators/
@@ -467,7 +466,6 @@ def _stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         price_col="value",
         volume_col=None,
         tiebreak_col="event_id",
-        backend="snapshot",
     )
     q.awaitTermination()
     # the checkpoint dies with the drained query; the LAKE must outlive

@@ -1,8 +1,3 @@
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import (  # noqa: F401
-    read_lake,
-    upsert_lake,
-    write_lake,
-)
 from crypto_data_ingestion_module_spark.sinks.shards import (  # noqa: F401
     read_manifest,
     read_shard,

@@ -19,8 +19,8 @@ baked in at write time.  Requirements this sink meets:
   directory, not one-per-task-per-shard small-file spray.
 - **Audited**: a ``_manifest`` parquet records per-shard row count and
   an order-insensitive content fingerprint, written AFTER the data so
-  its presence marks a complete write (same commit discipline as
-  ``parquet_lake``'s staged upsert).
+  its presence marks a complete write (written last, like the snapshot
+  lake's version file).
 
 100 TB shape: one full shuffle of the corpus (the repartition) — which
 is the theoretical minimum for a global shuffle — followed by a

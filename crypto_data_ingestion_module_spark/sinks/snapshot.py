@@ -1,14 +1,13 @@
 """Snapshot-isolated lake: versioned manifests + an atomic version log.
 
-``sinks.parquet_lake.commit_upsert`` is crash-atomic per partition (every
-partition ends wholly old or wholly new), but a reader that lists the lake
-DIRECTORY while the per-partition renames are in flight can observe a mix
-of old and new partitions — fine for append-mostly candle data, wrong for
-anything that needs a consistent cross-partition view (the reference has
-no concurrent readers at all: one process, one day-file,
-crypto_collector.py:542-556).
+The candle lake (K1/K2: the reference's partitioned day-files and
+keep-last MERGE, crypto_collector.py:514-558), the rollup partials, the
+streamed dedup fingerprint index and pair log, and the streamed ANN index
+all commit through this one protocol.  The
+reference overwrites its day-file in place (542-556): one process, no
+concurrent readers, and a kill mid-write truncates the file.
 
-This module adds the standard 100 TB answer — readers never list data
+This module gives the standard 100 TB answer — readers never list data
 directories; they resolve a MANIFEST through a version log:
 
     root/
@@ -38,8 +37,8 @@ directories; they resolve a MANIFEST through a version log:
   manifest references.
 
 At 100 TB the manifest is bounded by file count, not rows, and the upsert
-writes only the touched partitions — same incrementality as the
-directory-swap path, plus reader isolation.
+writes only the touched partitions.  Exactly-once under at-least-once
+delivery comes from one place: the manifest's ``applied_ids`` ledger.
 """
 
 from __future__ import annotations
@@ -54,13 +53,20 @@ from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.dedup import dedup_keep_last
 from crypto_data_ingestion_module_spark.operators.merge import INGEST_SEQ
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-    LOGICAL_KEY,
-    PARTITION_COLS,
-    _with_date,
-)
-
 _VERSIONS = "_versions"
+
+#: The candle lake's Hive partitioning, the reference's day-file path
+#: ``{symbol}/{interval}/{data_type}/{exchange}/{date}_...parquet``
+#: (crypto_collector.py:514-521), and its keep-last MERGE key (542-556).
+PARTITION_COLS = ("symbol", "interval", "data_type", "exchange", "date")
+LOGICAL_KEY = ("symbol", "interval", "data_type", "exchange", "timestamp")
+
+
+def _with_date(df: DataFrame) -> DataFrame:
+    """Derive the yyyyMMdd partition date (reference 533)."""
+    if "date" in df.columns:
+        return df
+    return df.withColumn("date", F.date_format("timestamp", "yyyyMMdd"))
 
 #: Replay-ledger retention horizon: each manifest keeps only the NEWEST
 #: this-many ``applied_ids`` (arrival order).  Unbounded, the ledger is
@@ -825,7 +831,11 @@ def snapshot_merge_partitions(
     result must carry the partition columns.
 
     ``incoming`` is evaluated once for all attempts
-    (:func:`evaluated_once`); its blocks are released on return.
+    (:func:`evaluated_once`); its blocks are released on return.  An
+    empty batch over an existing lake follows the :func:`snapshot_upsert`
+    rule: no write, no version, its ``applied_id`` is not recorded, and
+    the current version is returned.  The bootstrap still commits
+    version 1 for an empty batch, so readers of a new table find one.
     """
     last: CommitConflict | None = None
     with evaluated_once(incoming) as batch:
@@ -882,6 +892,8 @@ def _snapshot_merge_once(
     # merge+write job): snapshot_merge_partitions hands it over cut
     # (evaluated_once), so the batch's plan runs once
     touched_keys, _ = _touched_partitions(incoming, partition_cols)
+    if not touched_keys:
+        return v
     schema = _manifest_schema(spark, root, manifest, v)
     current_touched = _read_touched(spark, root, manifest, touched_keys, schema)
     merged = merge_fn(current_touched, incoming)

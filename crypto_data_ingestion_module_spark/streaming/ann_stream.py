@@ -12,9 +12,10 @@ foreachBatch per micro-batch:
 - assign each new vector's ``list_id`` (frozen seeded centroids), and
 - PQ-encode it (frozen seeded codebooks),
 then append ``(nid, list_id, codes)`` — the ~32x-compressed serving form
-— under a batch-id-deterministic directory, so at-least-once replays
-overwrite their own output instead of duplicating rows (the same
-idempotence discipline as streaming/dedup_stream's pair log).
+— to a snapshot lake partitioned by ``list_id``, with the batch id in the
+manifest's ``applied_ids`` ledger, so an at-least-once replay appends
+nothing instead of duplicating rows (the same discipline as
+streaming/dedup_stream's fingerprint index).
 
 Because the quantizers are frozen, streaming N batches produces
 EXACTLY the rows batch-encoding their union would (pinned by test) —
@@ -26,6 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    read_snapshot,
+    snapshot_append,
+)
 
 
 def index_batch(
@@ -39,17 +45,14 @@ def index_batch(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int = 64,
-    backend: str = "snapshot",
 ) -> None:
     """Encode + assign one batch against the frozen quantizers and append
     it to the index lake (idempotent per batch id).
 
-    ``backend="snapshot"`` (default): the append is one snapshot commit
-    partitioned by ``list_id``, with the batch id in the manifest's
-    replay ledger — a re-delivered batch appends NOTHING, and searchers
-    scanning the index mid-append see a whole version, never a partial
-    batch.  ``backend="swap"`` keeps the batch-id-deterministic
-    directory layout (replay overwrites its own dir)."""
+    The append is one snapshot commit partitioned by ``list_id``, with
+    the batch id in the manifest's replay ledger — a re-delivered batch
+    appends NOTHING, and searchers scanning the index mid-append see a
+    whole version, never a partial batch."""
     from crypto_data_ingestion_module_spark.operators.pq import (
         pq_encode,
         seeded_codebook,
@@ -92,36 +95,18 @@ def index_batch(
             "nid", F.transform(F.col("_c"), lambda s: s["code"]).alias("codes")
         )
     )
-    out = assigned.join(codes, "nid")
-    if backend == "snapshot":
-        from crypto_data_ingestion_module_spark.sinks.snapshot import (
-            snapshot_append,
-        )
-
-        snapshot_append(
-            batch.sparkSession,
-            lake_root,
-            out,
-            partition_cols=("list_id",),
-            applied_id=f"ann-{batch_id}",
-            ts_col="_no_ts",
-        )
-    else:
-        # batch-id-deterministic dir: a replayed batch overwrites itself
-        out.write.mode("overwrite").parquet(
-            f"{lake_root.rstrip('/')}/batch-{batch_id}"
-        )
+    snapshot_append(
+        batch.sparkSession,
+        lake_root,
+        assigned.join(codes, "nid"),
+        partition_cols=("list_id",),
+        applied_id=f"ann-{batch_id}",
+        ts_col="_no_ts",
+    )
 
 
 def read_index(spark: SparkSession, lake_root: str) -> DataFrame:
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-        read_snapshot,
-    )
-
-    if current_version(spark, lake_root) is not None:
-        return read_snapshot(spark, lake_root)
-    return spark.read.parquet(f"{lake_root.rstrip('/')}/batch-*")
+    return read_snapshot(spark, lake_root)
 
 
 def stream_index_embeddings(

@@ -112,8 +112,9 @@ def stream_curate_ingest(
         if qdocs.isEmpty():
             return
         # Existence checked explicitly; any other index-read failure
-        # propagates and fails the batch (never "first batch ever" —
-        # the same discipline as operators.incremental.ingest_batch).
+        # propagates and fails the batch (never "first batch ever":
+        # that would check the batch only against itself and admit
+        # duplicates of the whole existing corpus).
         index = (
             spark.read.parquet(index_path).drop("batch_id")
             if _exists(spark, index_path)

@@ -7,15 +7,14 @@ crypto_collector.py:481-520).
 
 Per micro-batch cost is O(batch + collisions): shingle+sign the batch,
 one equi-join against the accumulated band-row index, append.  State
-lives entirely in the two parquet lakes (fingerprint index + pair log),
+lives entirely in two snapshot lakes (fingerprint index + pair log),
 NOT in streaming state stores — so it survives checkpoint wipes, is
 readable by batch jobs mid-stream, and has no watermark-bounded window:
 a duplicate of a document ingested a year ago is still caught, which
-dropDuplicatesWithinWatermark cannot do.  The trade is that this sits
-in ``foreachBatch`` (exactly-once only up to the idempotence of the
-sinks): re-running a failed batch re-appends band rows, which the
-candidate join's dedup absorbs, and pair-log replays overwrite by
-batch id — same recovery discipline as the candle lake's upsert.
+dropDuplicatesWithinWatermark cannot do.  ``foreachBatch`` delivers at
+least once; the snapshot lakes' ``applied_ids`` ledger makes each
+batch's two commits exactly-once, so a replay appends no band rows and
+recommits no pair partition.
 """
 
 from __future__ import annotations
@@ -26,7 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from crypto_data_ingestion_module_spark.operators.incremental import ingest_batch
+from crypto_data_ingestion_module_spark.operators.incremental import (
+    incremental_near_dup,
+)
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    read_snapshot,
+    snapshot_append,
+    snapshot_merge_partitions,
+)
 
 PAIRS_SUBDIR = "pairs"
 INDEX_SUBDIR = "fingerprints"
@@ -42,24 +48,20 @@ def stream_dedup_ingest(
     text_col: str = "text",
     id_col: str = "doc_id",
     available_now: bool = True,
-    backend: str = "snapshot",
 ) -> StreamingQuery:
     """Start the streaming dedup ingestion.
 
-    ``lake_root`` gains two tables: ``fingerprints/`` (banded MinHash
-    index, append-only, partitioned by band) and ``pairs/`` (near-dup
-    pair log, partitioned by micro-batch id so a replayed batch replaces
-    ONLY its own partition).
+    ``lake_root`` gains two snapshot lakes: ``fingerprints/`` (banded
+    MinHash index, append-only, partitioned by band) and ``pairs/``
+    (near-dup pair log, partitioned by (stream, micro-batch) id so a
+    replayed batch replaces ONLY its own partition).
 
-    ``backend="snapshot"`` (default, VERDICT r4 item 5): both tables are
-    snapshot lakes.  The micro-batch id is the ``applied_id`` of both
-    commits, so a checkpoint replay appends NO duplicate band rows and
-    recommits NO pair partition — the candidate join no longer needs to
-    absorb replay garbage; readers get isolation.  Crash between the two
+    The micro-batch id is the ``applied_id`` of both commits, so a
+    checkpoint replay appends NO duplicate band rows and recommits NO
+    pair partition; readers get isolation.  Crash between the two
     commits is safe: the pair recomputation against an index already
     holding the batch's bands yields the identical pair set (banding is
     order-independent; ``dropDuplicates`` collapses the double match).
-    ``backend="swap"`` keeps the plain append + dynamic-overwrite layout.
     """
     from crypto_data_ingestion_module_spark.streaming.identity import (
         stream_qid,
@@ -68,39 +70,9 @@ def stream_dedup_ingest(
     index_path = os.path.join(lake_root, INDEX_SUBDIR)
     pairs_path = os.path.join(lake_root, PAIRS_SUBDIR)
 
-    def _sink_swap(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = ingest_batch(
-            batch_df.sparkSession,
-            index_path,
-            batch_df,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
-            text_col=text_col,
-            id_col=id_col,
-        )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            # per-write dynamic mode: replaying batch N must replace
-            # ONLY partition batch_id=N even on a consumer session that
-            # never ran session.configure (static mode would wipe the
-            # whole pair log — the exact bug the upsert sink once had)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(pairs_path)
-        )
-
-    def _sink_snapshot(batch_df: DataFrame, batch_id: int) -> None:
-        from crypto_data_ingestion_module_spark.operators.incremental import (
-            incremental_near_dup,
-        )
-        from crypto_data_ingestion_module_spark.sinks.snapshot import (
-            read_snapshot,
-            snapshot_append,
-            snapshot_merge_partitions,
-        )
-
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
         sess = batch_df.sparkSession
         # stream-scoped ledger ids, resolved at sink time so the
         # checkpoint's creation marker scopes them (identity.py)
@@ -137,14 +109,6 @@ def stream_dedup_ingest(
             ts_col="_no_ts",
         )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if backend == "snapshot":
-            _sink_snapshot(batch_df, batch_id)
-        else:
-            _sink_swap(batch_df, batch_id)
-
     writer = source.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint
     )
@@ -153,25 +117,12 @@ def stream_dedup_ingest(
     return writer.start()
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Snapshot-aware read: resolve through the version log when one
-    exists (the default backend), else plain directory scan (swap)."""
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-        read_snapshot,
-    )
-
-    if current_version(spark, path) is not None:
-        return read_snapshot(spark, path)
-    return spark.read.parquet(path)
-
-
 def read_pair_log(spark: SparkSession, lake_root: str) -> DataFrame:
-    return _read_table(spark, os.path.join(lake_root, PAIRS_SUBDIR))
+    return read_snapshot(spark, os.path.join(lake_root, PAIRS_SUBDIR))
 
 
 def read_fingerprint_index(spark: SparkSession, lake_root: str) -> DataFrame:
-    return _read_table(spark, os.path.join(lake_root, INDEX_SUBDIR))
+    return read_snapshot(spark, os.path.join(lake_root, INDEX_SUBDIR))
 
 
 INDEX_MD5_SUBDIR = "fingerprints_md5"

@@ -33,7 +33,6 @@ from crypto_data_ingestion_module_spark.functions.timeutil import (
     parse_interval_ms,
     should_collect_ms,
 )
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import upsert_lake
 from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_upsert
 from crypto_data_ingestion_module_spark.sources.fetch import (
     Adapter,
@@ -49,56 +48,40 @@ def stream_upsert_to_lake(
     checkpoint: str,
     available_now: bool = True,
     key_cols: Sequence[str] = ("symbol", "interval", "data_type", "exchange", "timestamp"),
-    backend: str = "snapshot",
 ) -> StreamingQuery:
     """Stream canonical candles into the lake via foreachBatch MERGE.
 
-    ``backend="snapshot"`` (default, VERDICT r4 item 5): each micro-batch
-    is one snapshot-isolated commit; the checkpoint's micro-batch id is
-    the manifest ``applied_id``, so a replay after checkpoint recovery
-    commits NOTHING instead of leaning on keep-last coincidence — true
-    exactly-once from at-least-once delivery.  Readers use
+    Each micro-batch is one snapshot-isolated commit; the checkpoint's
+    micro-batch id is the manifest ``applied_id``, so a replay after
+    checkpoint recovery commits NOTHING instead of leaning on keep-last
+    coincidence — true exactly-once from at-least-once delivery.  An
+    empty micro-batch commits nothing either.  Readers use
     ``sinks.snapshot.read_snapshot`` and never see a half-applied batch.
-    ``backend="swap"`` keeps the directory-rename lake
-    (``sinks.parquet_lake``) for layouts that external parquet readers
-    scan directly.
     """
     from crypto_data_ingestion_module_spark.streaming.identity import (
         stream_qid,
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # the ledger id is (stream, batch) — Delta's txnAppId
         # discipline; resolved inside the sink so the checkpoint's
         # creation marker is folded in (see streaming/identity.py)
         qid = stream_qid(checkpoint)
         # batch_seq defaults to lake-max+1: monotone regardless of what
         # seq domain earlier writers used (a raw batch_id like 0,1,2
-        # could never supersede epoch-scale seqs already in the lake);
-        # replaying a failed batch yields a higher seq but an identical
-        # payload, so recovery stays idempotent under keep-last
+        # could never supersede epoch-scale seqs already in the lake)
         clean = (
             batch_df.drop("_ingest_seq")
             if "_ingest_seq" in batch_df.columns
             else batch_df
         )
-        if backend == "snapshot":
-            snapshot_upsert(
-                batch_df.sparkSession,
-                clean,
-                lake_root,
-                key_cols=key_cols,
-                applied_id=f"stream-{qid}-batch-{batch_id}",
-            )
-        else:
-            upsert_lake(
-                batch_df.sparkSession,
-                clean,
-                lake_root,
-                key_cols=key_cols,
-            )
+        snapshot_upsert(
+            batch_df.sparkSession,
+            clean,
+            lake_root,
+            key_cols=key_cols,
+            applied_id=f"stream-{qid}-batch-{batch_id}",
+        )
 
     writer = source.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint
@@ -138,7 +121,6 @@ def live_collection_stream(
     exchanges: Sequence[str] = ("coinbase", "bitstamp", "bitfinex", "kucoin", "binanceus"),
     ticks: DataFrame | None = None,
     normalizer=normalize_mock_pages,
-    backend: str = "snapshot",
 ) -> StreamingQuery:
     """Live collection: rate-source ticks → per-cycle fetch + MERGE.
 
@@ -191,17 +173,14 @@ def live_collection_stream(
         )
         raw = fetch_pages(sess, manifest, adapter, pacing=pacing)
         candles = normalizer(raw).drop("_ingest_seq")
-        if backend == "snapshot":
-            # the cycle boundary, not the micro-batch id, is the logical
-            # batch identity: a restarted stream re-fetching the same
-            # boundary must not double-commit it.  The sink evaluates the
-            # fetch once and commits nothing when it comes back empty.
-            snapshot_upsert(
-                sess, candles, lake_root,
-                applied_id=f"cycle-{boundary_ms}",
-            )
-        elif not candles.isEmpty():
-            upsert_lake(sess, candles, lake_root)
+        # the cycle boundary, not the micro-batch id, is the logical
+        # batch identity: a restarted stream re-fetching the same
+        # boundary must not double-commit it.  The sink evaluates the
+        # fetch once and commits nothing when it comes back empty.
+        snapshot_upsert(
+            sess, candles, lake_root,
+            applied_id=f"cycle-{boundary_ms}",
+        )
 
     writer = ticks.writeStream.foreachBatch(_cycle).option(
         "checkpointLocation", checkpoint

@@ -16,19 +16,19 @@ one the others can't replace:
   (crypto_collector.py:523-558 save path, re-expressed as maintenance).
 
 Exactly-once: foreachBatch is at-least-once, and partial-merging is
-additive, so idempotence comes from ``maintain_rollup``'s applied-batch
-markers — a replayed batch id is a no-op by construction.
+additive, so idempotence comes from the snapshot lake's ``applied_ids``
+ledger (``maintain_rollup_snapshot``) — a replayed batch id is a no-op
+by construction.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from crypto_data_ingestion_module_spark.operators.rollup import (
-    maintain_rollup,
     maintain_rollup_snapshot,
 )
 
@@ -44,31 +44,20 @@ def stream_rollup(
     volume_col: str | None = None,
     tiebreak_col: str = "event_id",
     available_now: bool = True,
-    backend: str = "markers",
 ) -> StreamingQuery:
     """Start continuous candle maintenance over a tick stream.
 
-    ``backend`` picks the lake's durability discipline: ``"markers"``
-    commits each touched DATE PARTITION by marker-file + directory
-    rename (one rename per touched date — fine when batches touch few
-    dates); ``"snapshot"`` commits every batch as ONE atomic manifest
-    swap on the snapshot lake (``maintain_rollup_snapshot``) — the
-    right choice when a batch's calendar span is wide, since the
-    commit cost is independent of how many dates it touches.  Replay
-    idempotence holds in both (per-date markers vs the manifest's
-    applied-ids ledger), so at-least-once foreachBatch delivery never
-    double-merges.
+    Every micro-batch is ONE atomic manifest swap on the snapshot lake
+    (``maintain_rollup_snapshot``); the commit cost is independent of
+    how many dates the batch touches.  The manifest's applied-ids
+    ledger makes at-least-once foreachBatch delivery never double-merge.
+    Read the lake back with ``operators.rollup.read_rollup_snapshot``.
     """
-    if backend not in ("markers", "snapshot"):
-        raise ValueError(f"unknown rollup backend: {backend!r}")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        maintain = (
-            maintain_rollup if backend == "markers" else maintain_rollup_snapshot
-        )
-        maintain(
+        maintain_rollup_snapshot(
             batch_df.sparkSession,
             batch_df,
             lake_root,

@@ -65,14 +65,3 @@ def test_streamed_index_equals_batch(spark, tmp_path):
     one = emb.filter(F.col("vec_id") % 3 == 1)
     index_batch(one, ref, lake, f"{qid}-0")  # batch 0 carried %3==1
     assert _state(read_index(spark, lake)) == got
-    # and a replay under a WRONG identity on the swap backend also stays
-    # idempotent (deterministic dir overwrite) — both disciplines hold
-    swap_lake = str(tmp_path / "swap_index")
-    for i, m in enumerate([1, 0, 2]):
-        index_batch(
-            emb.filter(F.col("vec_id") % 3 == m), ref, swap_lake, i,
-            backend="swap",
-        )
-    swap_state = _state(read_index(spark, swap_lake))
-    index_batch(one, ref, swap_lake, 0, backend="swap")
-    assert _state(read_index(spark, swap_lake)) == swap_state == got

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.incremental import (
     incremental_near_dup,
-    ingest_batch,
 )
 from crypto_data_ingestion_module_spark.operators.text_dedup import (
     minhash_lsh_pairs,
@@ -39,38 +38,3 @@ def test_incremental_equals_from_scratch(spark):
     # the two batches' pair sets are disjoint (each pair reported once,
     # in the batch that completed it)
     assert not (_pairs_set(p1) & _pairs_set(p2))
-
-
-def test_ingest_empty_batch_is_noop(spark, tmp_path):
-    docs = spark.createDataFrame([], "doc_id long, text string")
-    p = ingest_batch(spark, str(tmp_path / "fp"), docs)
-    assert p.count() == 0
-
-
-def test_ingest_batch_lake_roundtrip(spark, tmp_path):
-    docs = load_table(spark, SF_SMALL, "documents")
-    path = str(tmp_path / "fp_index")
-    b1 = docs.filter(F.col("doc_id") < 250)
-    b2 = docs.filter(F.col("doc_id") >= 250)
-
-    p1 = ingest_batch(spark, path, b1)
-    p2 = ingest_batch(spark, path, b2)
-    full = minhash_lsh_pairs(docs)
-    assert _pairs_set(p1) | _pairs_set(p2) == _pairs_set(full)
-
-    # index now holds band rows for every doc
-    idx = spark.read.parquet(path)
-    assert idx.select("id").distinct().count() == docs.count()
-
-    # re-running a batch (failure recovery) re-reports its pairs and the
-    # duplicate band rows don't create duplicate candidates later
-    p2_again = ingest_batch(spark, path, b2)
-    assert _pairs_set(p2_again) >= _pairs_set(p2)
-    n_dups = (
-        spark.read.parquet(path)
-        .groupBy("id", "band")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    assert n_dups > 0  # the append really did duplicate batch-2 rows

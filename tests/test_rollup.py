@@ -1,5 +1,6 @@
-"""Incremental candle rollup: batch-split independence, bit-exact volume,
-partition-pruned maintenance, replay idempotence."""
+"""Incremental candle rollup on the snapshot lake: batch-split
+independence, bit-exact volume, partition-pruned maintenance, replay
+idempotence, streaming maintenance."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,10 +8,14 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_module_spark.operators.resample import resample_ohlcv
 from crypto_data_ingestion_module_spark.operators.rollup import (
     finalize,
-    maintain_rollup,
-    read_rollup,
+    maintain_rollup_snapshot,
+    read_rollup_snapshot,
 )
 from crypto_data_ingestion_module_spark.session import load_table
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    current_version,
+    read_manifest,
+)
 from tests.conftest import SF_SMALL
 
 IVL = 3_600_000  # 1h
@@ -33,6 +38,10 @@ def _full(spark):
     )
 
 
+def _read(spark, lake):
+    return finalize(read_rollup_snapshot(spark, lake), ["event_type"])
+
+
 def _rows(df):
     return {
         (r.bucket_ts, r.event_type): (
@@ -47,20 +56,25 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
     lake = str(tmp_path / "rollup")
     # three arbitrary batches, NOT time-aligned — buckets straddle batches
     for i in range(3):
-        maintain_rollup(
+        maintain_rollup_snapshot(
             spark,
             ev.filter(F.col("event_id") % 3 == i),
             lake,
             IVL,
             batch_id=i,
         )
-    got = _rows(finalize(read_rollup(spark, lake), ["event_type"]))
+    got = _rows(_read(spark, lake))
     want = _rows(_full(spark))
     assert got == want
 
-    # replaying an already-applied batch changes nothing
-    maintain_rollup(spark, ev.filter(F.col("event_id") % 3 == 1), lake, IVL, batch_id=1)
-    assert _rows(finalize(read_rollup(spark, lake), ["event_type"])) == want
+    # replaying an older already-applied batch (not the newest) commits
+    # nothing and changes nothing
+    v = current_version(spark, lake)
+    maintain_rollup_snapshot(
+        spark, ev.filter(F.col("event_id") % 3 == 1), lake, IVL, batch_id=1
+    )
+    assert current_version(spark, lake) == v
+    assert _rows(_read(spark, lake)) == want
 
 
 def test_stream_rollup_matches_batch(spark, tmp_path):
@@ -92,17 +106,24 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     lake = str(tmp_path / "rollup")
     q = stream_rollup(src, lake, str(tmp_path / "ck"), IVL)
     q.awaitTermination(120)
-    got = _rows(finalize(read_rollup(spark, lake), ["event_type"]))
+    got = _rows(_read(spark, lake))
     assert got == _rows(_full(spark))
 
 
 def test_rollup_empty_batch_is_noop(spark, tmp_path):
+    """An empty batch over an existing lake commits no version and does
+    not enter the replay ledger (the snapshot_upsert rule)."""
     ev = load_table(spark, SF_SMALL, "events")
     lake = str(tmp_path / "r")
-    maintain_rollup(spark, ev, lake, IVL, batch_id="a")
-    want = _rows(finalize(read_rollup(spark, lake), ["event_type"]))
-    maintain_rollup(spark, ev.filter(F.lit(False)), lake, IVL, batch_id="b")
-    assert _rows(finalize(read_rollup(spark, lake), ["event_type"])) == want
+    v = maintain_rollup_snapshot(spark, ev, lake, IVL, batch_id="a")
+    want = _rows(_read(spark, lake))
+    out = maintain_rollup_snapshot(
+        spark, ev.filter(F.lit(False)), lake, IVL, batch_id="b"
+    )
+    assert out == v
+    assert current_version(spark, lake) == v
+    assert "rollup-b" not in read_manifest(spark, lake, v)["applied_ids"]
+    assert _rows(_read(spark, lake)) == want
 
 
 def test_rollup_random_split_associativity(spark, tmp_path):
@@ -121,36 +142,35 @@ def test_rollup_random_split_associativity(spark, tmp_path):
             batch = ev.filter(
                 F.pmod(F.xxhash64("event_id", F.lit(salt)), F.lit(n_batches)) == i
             )
-            maintain_rollup(spark, batch, lake, IVL, batch_id=f"{trial}-{i}")
-        got = _rows(finalize(read_rollup(spark, lake), ["event_type"]))
+            maintain_rollup_snapshot(
+                spark, batch, lake, IVL, batch_id=f"{trial}-{i}"
+            )
+        got = _rows(_read(spark, lake))
         assert got == want, (trial, n_batches, salt)
 
 
 def test_rollup_touches_only_batch_dates(spark, tmp_path):
+    """On disk, a one-day batch writes files for that date only and
+    leaves every existing data file as it was."""
     import glob
     import os
 
     ev = load_table(spark, SF_SMALL, "events")
     lake = str(tmp_path / "rollup")
-    maintain_rollup(spark, ev, lake, IVL, batch_id="seed")
+    maintain_rollup_snapshot(spark, ev, lake, IVL, batch_id="seed")
 
     # record file mtimes, then merge a batch confined to ONE day
     one_day = ev.filter(F.date_format("ts", "yyyyMMdd") == "20240115")
     assert one_day.count() > 0
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(lake + "/partials/date=*/*.parquet")
+    pattern = lake + "/data/*/date=*/*.parquet"
+    before = {p: os.path.getmtime(p) for p in glob.glob(pattern)}
+    maintain_rollup_snapshot(spark, one_day, lake, IVL, batch_id="day2")
+    after = {p: os.path.getmtime(p) for p in glob.glob(pattern)}
+    assert {p: after[p] for p in before} == before
+    new_dates = {
+        p.split("date=")[1].split("/")[0] for p in set(after) - set(before)
     }
-    maintain_rollup(spark, one_day, lake, IVL, batch_id="day2")
-    after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(lake + "/partials/date=*/*.parquet")
-    }
-    changed_dates = {
-        p.split("date=")[1].split("/")[0]
-        for p in set(after) - set(before) | {p for p in before if before[p] != after.get(p, before[p])}
-    }
-    assert changed_dates == {"20240115"}
+    assert new_dates == {"20240115"}
 
 
 def test_stream_vwap_matches_batch_query(spark, tmp_path):
@@ -202,7 +222,7 @@ def test_stream_vwap_matches_batch_query(spark, tmp_path):
     q.awaitTermination(120)
     got = {
         (r.bucket_ts, r.event_type): (r.vwap, round(r.volume, 6))
-        for r in finalize(read_rollup(spark, lake), ["event_type"]).collect()
+        for r in _read(spark, lake).collect()
     }
     want = {
         (r.bucket_start, r.event_type): (r.vwap, round(r.volume, 6))
@@ -245,45 +265,3 @@ def test_cascade_partials_equals_direct(spark):
 
     with pytest.raises(ValueError, match="not a multiple"):
         cascade_partials(fine, 900_000, 1_000_000)
-
-
-def test_stream_rollup_snapshot_backend_matches_batch(spark, tmp_path):
-    """The snapshot-lake backend (one atomic manifest commit per
-    micro-batch) finalizes identically to the marker backend and the
-    one-shot batch resample — the discipline carrying the driver row
-    stream_rollup_1h.  Also pins that a bad backend name is loud."""
-    import glob
-    import os
-
-    from crypto_data_ingestion_module_spark.operators.rollup import (
-        read_rollup_snapshot,
-    )
-    from crypto_data_ingestion_module_spark.streaming.rollup_stream import (
-        stream_rollup,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events")
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    for n, i in enumerate([2, 0, 1]):  # shuffled arrival order
-        tmp = str(tmp_path / f"t{i}")
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(tmp)
-        os.rename(
-            glob.glob(tmp + "/*.parquet")[0],
-            os.path.join(in_dir, f"b{n}.parquet"),
-        )
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    lake = str(tmp_path / "snap_lake")
-    q = stream_rollup(
-        src, lake, str(tmp_path / "ck"), IVL, backend="snapshot"
-    )
-    q.awaitTermination(120)
-    got = _rows(finalize(read_rollup_snapshot(spark, lake).drop("date"), ["event_type"]))
-    assert got == _rows(_full(spark))
-
-    with pytest.raises(ValueError, match="unknown rollup backend"):
-        stream_rollup(src, lake, str(tmp_path / "ck2"), IVL, backend="nope")

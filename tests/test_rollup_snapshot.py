@@ -1,9 +1,7 @@
-"""Rollup maintenance over the snapshot lake (unified-lake path,
-VERDICT r4 item 5): batch-split equivalence to the marker-based lake and
-to the one-shot resample, replay idempotence via the manifest ledger,
+"""Rollup maintenance over the snapshot lake: batch-split equivalence to
+the one-shot resample, replay idempotence via the manifest ledger,
 manifest-pruned merge input, and isolation (old version intact)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.resample import resample_ohlcv
@@ -129,26 +127,6 @@ def test_snapshot_rollup_random_split_associativity(spark, tmp_path):
         maintain_rollup_snapshot(spark, batch, lake, IVL, batch_id=f"b{i}")
     got = _rows(finalize(read_rollup_snapshot(spark, lake), ["event_type"]))
     assert got == want, (n_batches, salt)
-
-
-def test_snapshot_rollup_matches_marker_lake(spark, tmp_path):
-    """Unification pin: the snapshot-lake rollup and the marker-file
-    rollup finalize bit-identically over the same batches."""
-    from crypto_data_ingestion_module_spark.operators.rollup import (
-        maintain_rollup,
-        read_rollup,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events")
-    snap = str(tmp_path / "snap")
-    mark = str(tmp_path / "mark")
-    for i in range(2):
-        batch = ev.filter(F.col("event_id") % 2 == i)
-        maintain_rollup_snapshot(spark, batch, snap, IVL, batch_id=i)
-        maintain_rollup(spark, batch, mark, IVL, batch_id=i)
-    assert _rows(
-        finalize(read_rollup_snapshot(spark, snap), ["event_type"])
-    ) == _rows(finalize(read_rollup(spark, mark), ["event_type"]))
 
 
 def test_cascade_from_snapshot_rollup(spark, tmp_path):

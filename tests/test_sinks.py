@@ -1,178 +1,8 @@
-"""Sink semantics (K1/K2): partitioned layout, upsert keep-last,
-idempotence, partition pruning of the merge."""
+"""Bucketed-table sink (``sinks/bucketed``): co-bucketed joins need no
+shuffle.  The candle lake's K1 layout and K2 upsert are pinned in
+tests/test_snapshot.py."""
 
-import datetime as dt
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-    read_lake,
-    upsert_lake,
-    write_lake,
-)
-
-
-def _candles(spark, rows):
-    return spark.createDataFrame(
-        [
-            (o, o + 1, o - 1, o + 0.5, v, ts, sym, ex, ivl, "spot")
-            for (o, v, ts, sym, ex, ivl) in rows
-        ],
-        "open double, high double, low double, close double, volume double, "
-        "timestamp timestamp, symbol string, exchange string, interval string, data_type string",
-    )
-
-
-T0 = dt.datetime(2024, 1, 1, 0, 0)
-T1 = dt.datetime(2024, 1, 1, 0, 15)
-T2 = dt.datetime(2024, 1, 2, 0, 0)  # next day → different partition
-
-
-def test_write_lake_layout(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    df = _candles(
-        spark,
-        [
-            (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-            (200.0, 2.0, T2, "BTC-USDT", "coinbase", "15m"),
-            (300.0, 3.0, T0, "ETH-USDT", "kucoin", "15m"),
-        ],
-    )
-    write_lake(df, root, mode="overwrite")
-    # hive-style directory scheme, one leaf per (…,date)
-    assert os.path.isdir(
-        os.path.join(
-            root,
-            "symbol=BTC-USDT", "interval=15m", "data_type=spot",
-            "exchange=coinbase", "date=20240101",
-        )
-    )
-    back = read_lake(spark, root)
-    assert back.count() == 3
-    # partition filter prunes to one directory and returns the right rows
-    one = back.filter(
-        (F.col("symbol") == "ETH-USDT") & (F.col("date") == "20240101")
-    )
-    assert [r.open for r in one.collect()] == [300.0]
-
-
-def test_upsert_keep_last_and_idempotent(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    base = _candles(
-        spark,
-        [
-            (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-            (110.0, 1.5, T1, "BTC-USDT", "coinbase", "15m"),
-        ],
-    )
-    upsert_lake(spark, base, root)
-
-    # correction for T0 (same logical key, new values) + new row T2
-    patch = _candles(
-        spark,
-        [
-            (999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m"),
-            (120.0, 2.0, T2, "BTC-USDT", "coinbase", "15m"),
-        ],
-    )
-    upsert_lake(spark, patch, root, batch_seq=7)
-
-    got = {
-        r.timestamp: (r.open, r.volume)
-        for r in read_lake(spark, root).collect()
-    }
-    assert got == {
-        T0: (999.0, 9.0),  # corrected row won
-        T1: (110.0, 1.5),  # untouched row survived the partition rewrite
-        T2: (120.0, 2.0),
-    }
-
-    # idempotence: re-deliver the identical patch with the same batch_seq
-    upsert_lake(spark, patch, root, batch_seq=7)
-    again = {
-        r.timestamp: (r.open, r.volume)
-        for r in read_lake(spark, root).collect()
-    }
-    assert again == got
-
-
-def test_upsert_interrupted_after_staging_preserves_lake(spark, tmp_path):
-    """Atomicity: a job killed between staging and commit must leave the
-    lake serving the PRE-upsert content (the r2 weak item — dynamic
-    overwrite deleted partitions in place).  After the commit swap, the
-    merged content is live and no staging/backup dirs remain."""
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-        commit_upsert,
-        stage_upsert,
-    )
-
-    root = str(tmp_path / "lake")
-    base = _candles(
-        spark,
-        [
-            (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-            (110.0, 1.5, T1, "BTC-USDT", "coinbase", "15m"),
-        ],
-    )
-    upsert_lake(spark, base, root)
-    before = {
-        r.timestamp: (r.open, r.volume) for r in read_lake(spark, root).collect()
-    }
-
-    patch = _candles(
-        spark,
-        [
-            (999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m"),
-            (120.0, 2.0, T2, "BTC-USDT", "coinbase", "15m"),
-        ],
-    )
-    # phase 1 only — simulate a crash before the commit swap
-    staging = stage_upsert(spark, patch, root, batch_seq=7)
-    assert os.path.isdir(staging)
-    interrupted = {
-        r.timestamp: (r.open, r.volume) for r in read_lake(spark, root).collect()
-    }
-    assert interrupted == before  # lake untouched by staging
-
-    # recovery path: committing the surviving staging dir completes the merge
-    commit_upsert(spark, staging, root)
-    after = {
-        r.timestamp: (r.open, r.volume) for r in read_lake(spark, root).collect()
-    }
-    assert after == {T0: (999.0, 9.0), T1: (110.0, 1.5), T2: (120.0, 2.0)}
-    # no staging or backup residue next to the lake
-    residue = [d for d in os.listdir(tmp_path) if "__staging__" in d]
-    assert residue == []
-
-
-def test_upsert_does_not_touch_other_partitions(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    write_lake(
-        _candles(
-            spark,
-            [
-                (1.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-                (2.0, 2.0, T0, "ETH-USDT", "kucoin", "15m"),
-            ],
-        ),
-        root,
-        mode="overwrite",
-    )
-    eth_dir = os.path.join(
-        root, "symbol=ETH-USDT", "interval=15m", "data_type=spot",
-        "exchange=kucoin", "date=20240101",
-    )
-    before = sorted(os.listdir(eth_dir))
-    upsert_lake(
-        spark,
-        _candles(spark, [(5.0, 5.0, T1, "BTC-USDT", "coinbase", "15m")]),
-        root,
-    )
-    # dynamic partition overwrite must not rewrite the ETH partition
-    assert sorted(os.listdir(eth_dir)) == before
-    assert read_lake(spark, root).count() == 3
 
 
 def test_bucketed_cobucketed_join_has_no_shuffle(spark, tmp_path):
@@ -217,48 +47,3 @@ def test_bucketed_cobucketed_join_has_no_shuffle(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_bleft")
         spark.sql("DROP TABLE IF EXISTS t_bright")
-
-
-def test_compaction_one_file_per_partition_identical_content(spark, tmp_path):
-    """N upserts leave multi-file partitions; compaction rewrites ONLY
-    breached partitions down to one file each with identical table
-    content (including _ingest_seq, so later upserts still supersede)."""
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-        compact_lake,
-        partition_file_stats,
-    )
-
-    from crypto_data_ingestion_module_spark.operators.merge import INGEST_SEQ
-
-    root = str(tmp_path / "lake")
-    for i in range(3):
-        batch = (
-            _candles(
-                spark,
-                [
-                    (100.0 + i, float(i), T0 + dt.timedelta(minutes=i), "BTC-USDT", "coinbase", "15m"),
-                    (50.0 + i, float(i), T1 + dt.timedelta(minutes=i), "BTC-USDT", "coinbase", "15m"),
-                    (200.0 + i, float(i), T2 + dt.timedelta(minutes=i), "BTC-USDT", "coinbase", "15m"),
-                ],
-            )
-            .withColumn(INGEST_SEQ, F.lit(i).cast("long"))
-            .repartition(4)  # several writer tasks → several files/partition
-        )
-        write_lake(batch, root, mode="append")
-
-    pre_stats = partition_file_stats(spark, root)
-    assert any(s["n_files"] > 1 for s in pre_stats), pre_stats
-    before = sorted(
-        tuple(r) for r in read_lake(spark, root).collect()
-    )
-
-    rewritten = compact_lake(spark, root, max_files_per_partition=1)
-    assert rewritten  # something was actually compacted
-
-    post_stats = partition_file_stats(spark, root)
-    assert all(s["n_files"] == 1 for s in post_stats), post_stats
-    after = sorted(tuple(r) for r in read_lake(spark, root).collect())
-    assert before == after  # byte-identical table content
-
-    # second pass is a no-op
-    assert compact_lake(spark, root, max_files_per_partition=1) == []

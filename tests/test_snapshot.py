@@ -2,6 +2,8 @@
 exactly the old or the new snapshot, never a mix (VERDICT r3 item 4)."""
 
 import datetime as dt
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -85,6 +87,32 @@ def test_snapshot_upsert_keep_last(spark, tmp_path):
     assert [r.open for r in old.filter(F.col("timestamp") == T0).collect()] == [
         100.0
     ]
+
+    # K1 layout (reference crypto_collector.py:514-521): one manifest key
+    # per (symbol, interval, data_type, exchange, date), and its files sit
+    # in that Hive directory under an immutable data/<uuid>/ batch dir
+    key = "symbol=BTC-USDT/interval=15m/data_type=spot/exchange=coinbase/date=20240101"
+    parts = read_manifest(spark, root, v2)["partitions"]
+    assert set(parts) == {key, key.replace("20240101", "20240102")}
+    for f in parts[key]:
+        assert re.fullmatch(rf"data/[0-9a-f]{{32}}/{key}/[^/]+\.parquet", f), f
+        assert os.path.isfile(os.path.join(root, f))
+
+    # idempotence without an applied_id: re-delivering the same patch
+    # supersedes with identical payloads, so the state is unchanged
+    state = _state(got)
+    snapshot_upsert(
+        spark,
+        _candles(
+            spark,
+            [
+                (999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m"),
+                (120.0, 2.0, T2, "BTC-USDT", "coinbase", "15m"),
+            ],
+        ),
+        root,
+    )
+    assert _state(read_snapshot(spark, root)) == state
 
 
 def test_reader_sees_old_or_new_never_mixed(spark, tmp_path):
@@ -192,10 +220,8 @@ def test_compact_snapshot_preserves_content_and_isolation(spark, tmp_path):
     # Build a version whose 20240101 partition holds files from two
     # separate write batches (the many-tasks-per-partition layout a
     # large write produces): two data batches, one stitched manifest.
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
-        PARTITION_COLS,
-    )
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
         _partition_of,
         _write_data_files,
     )
@@ -812,8 +838,10 @@ def test_append_widens_schema_and_refuses_retype(spark, tmp_path):
     """ADVICE r5 (medium): the append path honors the same additive
     schema-evolution contract as upsert — new columns reach the manifest
     schema (so the explicit-schema read path keeps them), retypes raise."""
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import PARTITION_COLS
-    from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_append
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        snapshot_append,
+    )
 
     root = str(tmp_path / "snap")
     snapshot_upsert(
@@ -846,8 +874,10 @@ def test_append_advances_seq_high_water(spark, tmp_path):
     recorded high-water must raise max_ingest_seq, or a later upsert
     stamps a stale batch_seq and keep-last prefers old rows."""
     from crypto_data_ingestion_module_spark.operators.merge import INGEST_SEQ
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import PARTITION_COLS
-    from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_append
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        snapshot_append,
+    )
 
     root = str(tmp_path / "snap")
     snapshot_upsert(
@@ -1228,7 +1258,7 @@ def test_beyond_horizon_replay_contract_upsert_and_append(
     # --- append path -------------------------------------------------
     root_a = str(tmp_path / "ap")
     a0 = _candles(spark, [(500.0, 5.0, T0, "BTC-USDT", "coinbase", "15m")])
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
         _with_date,
     )
 
@@ -1309,7 +1339,7 @@ def test_legacy_manifest_heals_max_ingest_seq_with_lake_wide_max(
     commit_version(spark, root, legacy, v + 1)
     assert read_manifest(spark, root, v + 1).get("max_ingest_seq") is None
     # append into a DIFFERENT partition with a deliberately LOW seq
-    from crypto_data_ingestion_module_spark.sinks.parquet_lake import (
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
         _with_date,
     )
 
