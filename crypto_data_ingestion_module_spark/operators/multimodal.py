@@ -1,46 +1,34 @@
 """Multimodal column plumbing (north-star X5): opaque binary payloads with
 typed metadata, processed by Arrow-batched Pandas UDFs via ``mapInPandas``.
 
-AUDIO decode is REAL (VERDICT r8 item 4): a PCM WAV payload (RIFF
-container, 8/16-bit) is parsed with the pure-stdlib ``wave`` module and
-numpy — sample rate, frame count, and a FEATURE_DIM-bin amplitude
-envelope come from the actual samples (golden-file pytest).  IMAGE
-decode and resize are REAL for PPM (P6), PNG, AND GIF payloads: P6
-headers parse straight off the raster; PNG goes through a pure-stdlib
-chunk walk + zlib inflate + per-row unfiltering (None/Sub/Up/Average/
-Paeth; gray/RGB/palette/alpha color types; non-interlaced and Adam7;
-depths 8 and 16); GIF goes through a
-pure-stdlib header/palette walk + LZW decompression + frame
-compositing (transparency, all four disposal methods, interlace);
-JPEG through the marker-walk Huffman/DCT decoder below; and (r16)
-WebP-LOSSLESS through a full VP8L bitstream decode (canonical-Huffman
-entropy coding, meta-Huffman groups, LZ77 + color cache, all four
-transforms; lossy VP8 / extended VP8X stay quarantined) — every image
-container lands in the SAME grid-luminance feature kernel, and integer
-box-average resampling emits a valid P6 (PNG/GIF/JPEG/WebP transcoded
-to P6 first), all numpy-vectorized (golden-file pytest with
-independent test-side encoders).  VIDEO demuxing is REAL for FOUR container
-formats: concatenated-P6 streams (``demux_ppm_stream``: back-to-back
-binary PPM frames, nominal 25 fps timing), YUV4MPEG2 (``demux_y4m``:
-true ``F<num>:<den>`` header timing, C420/C444 colorspaces, BT.601
-integer YUV→RGB), animated GIF (``demux_gif``: LZW-compressed
-frames, REAL per-frame GCE delays), and AVI/MJPEG (``demux_avi``,
-r15: RIFF chunk walk, real ``avih`` per-frame timing, per-frame JPEG
-decode through the shared decoder, T.81 Annex-K typical-table
-injection for DHT-less frames — the dominant real-world MJPEG form —
-and loud rejection of non-MJPG codecs) — every emitted frame is a
-standalone valid P6 that feeds the real decode/resize kernels.
+Three kernels share one schema discipline: ``decode_assets`` (1→1 rows,
+dimensions + FEATURE_DIM features), ``resize_assets`` (1→1 rows, a P6
+payload at a fixed size) and ``sample_frames`` (1→N frame rows per video
+asset).  Real decode covers only the formats the standard library makes
+trivial:
+
+* AUDIO: PCM WAV (8/16-bit) through the stdlib ``wave`` module; the
+  features are a FEATURE_DIM-bin amplitude envelope.
+* IMAGE: binary PPM (P6), read straight off the raster, and 8-bit
+  non-interlaced PNG (all five color types, all five scanline filters)
+  through a chunk walk, a bounded ``zlib`` inflate and per-row
+  unfiltering.  Both land in the same grid-luminance feature kernel, and
+  resize is integer box-average resampling that emits a valid P6 (PNG is
+  transcoded to P6 first).
+* VIDEO: concatenated-P6 streams (``demux_ppm_stream``: back-to-back P6
+  frames at a nominal 25 fps); every frame is a standalone valid P6.
 
 QUARANTINE CONTRACT (r12 — the fake-decode seam is retired): a payload
 that is NOT one of the recognized containers is never given fabricated
 output.  Decode returns ``decode_ok = false`` with NULL width/height/
 features; resize returns ``resize_ok = false`` with a NULL payload;
 frame sampling emits one ``demux_ok = false`` row with a NULL frame.
-Unsupported-but-real containers (mp4 & friends — no ffmpeg in this
-environment) therefore stay VISIBLE downstream instead of flowing as
-synthetic data; the schema, 1→N expansion bookkeeping, and
-bounded-memory batch discipline are identical on every path, so a PyAV
-iterator drops in per format by adding one sniff + one branch.
+Real containers without a stdlib decoder (JPEG, WebP, GIF, Y4M, AVI,
+MP4, interlaced or 16-bit PNG) therefore stay VISIBLE downstream
+instead of flowing as synthetic data; the schema, 1→N expansion
+bookkeeping, and bounded-memory batch discipline are identical on every
+path, so a PIL or PyAV decoder drops in per format by adding one sniff
++ one branch.
 
 Scale design: ``mapInPandas`` streams Arrow record batches, so executor
 memory is bounded by batch size, not partition size; payload bytes stay
@@ -138,7 +126,9 @@ def _parse_ppm_header(payload: bytes) -> tuple[int, int, int, int]:
     Tokens are whitespace-separated; ``#`` starts a comment running to
     end-of-line (the format's full grammar — no shortcuts, so any
     tool-written PPM parses).  Exactly ONE whitespace byte separates
-    the maxval token from the raster.
+    the maxval token from the raster.  Tokens must be plain ASCII
+    digits (no sign) and both dimensions at least 1, so a header never
+    yields an empty or negative raster.
     """
     i, tokens = 2, []
     n = len(payload)
@@ -154,9 +144,13 @@ def _parse_ppm_header(payload: bytes) -> tuple[int, int, int, int]:
             j += 1
         if j == i:
             raise ValueError("truncated PPM header")
+        if not payload[i:j].isdigit():
+            raise ValueError(f"bad PPM header token {payload[i:j]!r}")
         tokens.append(int(payload[i:j]))
         i = j
     width, height, maxval = tokens
+    if width < 1 or height < 1:
+        raise ValueError(f"bad PPM dimensions {width}x{height}")
     if not (0 < maxval < 256):
         raise ValueError(f"unsupported PPM maxval {maxval}")
     return width, height, maxval, i + 1  # skip the single raster separator
@@ -250,11 +244,7 @@ def _png_unfilter(raw: bytes, width: int, height: int, bpp: int):
     import numpy as np
 
     stride = width * bpp
-    if len(raw) < height * (stride + 1):
-        raise ValueError("truncated PNG raster")
-    rows = np.frombuffer(
-        raw, dtype=np.uint8, count=height * (stride + 1)
-    ).reshape(height, stride + 1)
+    rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
     out = np.zeros((height, stride), dtype=np.uint8)
     zero_row = np.zeros(stride, dtype=np.uint8)
     for y in range(height):
@@ -291,37 +281,19 @@ def _png_unfilter(raw: bytes, width: int, height: int, bpp: int):
     return out
 
 
-#: Adam7 pass grid (PNG spec §8.2): (x_start, y_start, x_step, y_step)
-#: per pass; each pass is an independently-filtered sub-image whose
-#: scanlines are concatenated in the single zlib stream.
-_ADAM7_PASSES: tuple[tuple[int, int, int, int], ...] = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
 def png_to_rgb(payload: bytes):
     """REAL pure-stdlib PNG decode (VERDICT r10 item 3): signature +
     chunk walk, concatenated-IDAT zlib inflate, per-row unfiltering,
     color-type expansion → ((height, width, 3) uint8 RGB array).
 
-    Supports the full byte-depth PNG profile: bit depths 8 and 16
-    (16-bit samples are big-endian pairs; filters run at the 2-byte
-    pixel offset and the decoded image is the high byte of every
-    sample — libpng strip-16 semantics, deterministic and exactly
-    what an 8-bit-luma feature kernel needs), color types 0 (gray),
-    2 (RGB), 3 (palette via PLTE, depth 8 only per spec §11.2.2),
-    4 (gray+α), 6 (RGBA), both interlace methods (none and ADAM7 —
-    r15, VERDICT r14 item 4: each of the seven passes unfilters
-    independently through the shared filter kernel, then scatters
-    onto the full grid by its pass stride).  Alpha is dropped
-    (features need luminance, not compositing); gray replicates to
-    RGB.  Sub-byte depths (1/2/4) reject loudly.
+    Supports 8-bit, non-interlaced PNG in color types 0 (gray), 2
+    (RGB), 3 (palette via PLTE), 4 (gray+α) and 6 (RGBA).  Alpha is
+    dropped (features need luminance, not compositing); gray
+    replicates to RGB.  Other depths, Adam7 interlace, and a zero
+    width or height reject loudly.  The inflate stops one byte past
+    the raster IHDR declares, and any other raster length (truncated
+    or padded) rejects, so a small file cannot inflate into an
+    unbounded buffer.
     """
     import struct
     import zlib
@@ -350,50 +322,25 @@ def png_to_rgb(payload: bytes):
     if ihdr is None:
         raise ValueError("PNG missing IHDR")
     width, height, depth, color, comp, filt, interlace = ihdr
-    if depth not in (8, 16):
-        raise ValueError(f"unsupported PNG bit depth {depth} (8/16 only)")
-    if interlace not in (0, 1):
-        raise ValueError(f"bad PNG interlace method {interlace}")
+    if depth != 8:
+        raise ValueError(f"unsupported PNG bit depth {depth} (8 only)")
+    if interlace != 0:
+        raise ValueError(f"unsupported PNG interlace method {interlace}")
     if comp != 0 or filt != 0:
         raise ValueError("nonstandard PNG compression/filter method")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    if channels is None:
+    if width == 0 or height == 0:
+        raise ValueError(f"bad PNG dimensions {width}x{height}")
+    bpp = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
+    if bpp is None:
         raise ValueError(f"unsupported PNG color type {color}")
-    if depth == 16 and color == 3:
-        # spec §11.2.2: palette images allow depths 1/2/4/8 only
-        raise ValueError("16-bit palette PNG is not a legal profile")
-    # filters operate on BYTES at a bpp-byte pixel offset (spec §9), so
-    # the same unfilter kernel serves both depths; 16-bit samples are
-    # big-endian pairs reduced to their high byte afterwards
-    bpp = channels * (depth // 8)
-    raw = zlib.decompress(bytes(idat))
-    if interlace == 1:
-        # Adam7: seven independently-filtered sub-images, concatenated
-        # in pass order; empty passes (zero width or height) emit no
-        # scanlines at all (spec §8.2)
-        px = np.zeros((height, width, bpp), dtype=np.uint8)
-        off = 0
-        for x0, y0, xs, ys in _ADAM7_PASSES:
-            pw = (width - x0 + xs - 1) // xs
-            ph = (height - y0 + ys - 1) // ys
-            if pw <= 0 or ph <= 0:
-                continue
-            nbytes = ph * (pw * bpp + 1)
-            sub = _png_unfilter(raw[off : off + nbytes], pw, ph, bpp)
-            off += nbytes
-            px[y0::ys, x0::xs] = sub.reshape(ph, pw, bpp)
-        if off != len(raw):
-            # quarantine contract: a raster that isn't exactly the
-            # seven passes is corrupt — reject, don't render a prefix
-            raise ValueError("PNG raster length mismatch (Adam7)")
-    else:
-        px = _png_unfilter(raw, width, height, bpp).reshape(
-            height, width, bpp
+    expected = height * (width * bpp + 1)
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(idat, expected + 1)
+    if len(raw) != expected or not inflater.eof:
+        raise ValueError(
+            f"PNG raster length mismatch: IHDR needs {expected} bytes"
         )
-    if depth == 16:
-        # high-byte reduction (libpng png_set_strip_16 semantics):
-        # deterministic, and the feature kernel is 8-bit-luma anyway
-        px = px[:, :, 0::2]
+    px = _png_unfilter(raw, width, height, bpp).reshape(height, width, bpp)
     if color == 2:
         return px
     if color == 6:
@@ -429,1418 +376,9 @@ def png_to_ppm(payload: bytes) -> bytes:
     return header + rgb.tobytes()
 
 
-# --------------------------------------------------------------------------
-# GIF (87a/89a): REAL pure-stdlib decode — header/palette walk + LZW
-# decompression + frame compositing.  Like PNG, the pixel grid lands in
-# the SAME grid-luminance kernel as P6, and animations demux to
-# standalone valid P6 frames with REAL per-frame GCE timing (unlike the
-# nominal-fps P6-stream container).  Reference behavior derived from
-# the public GIF89a specification; no reference-repo analog exists
-# (crypto_collector.py has no media surface).
-
-
-def is_gif(payload: bytes) -> bool:
-    return payload[:6] in (b"GIF87a", b"GIF89a")
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytes:
-    """GIF-flavor LZW: LSB-first variable-width codes starting at
-    ``min_code_size + 1`` bits, CLEAR/EOI control codes, dictionary
-    capped at 4096 entries (frozen when full, per the spec — no
-    automatic clear).  Returns exactly ``expected`` palette indices or
-    raises (an underrun means a truncated stream; silently padding
-    would fabricate pixels)."""
-    if not 2 <= min_code_size <= 8:
-        raise ValueError(f"GIF LZW min code size {min_code_size} out of range")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    bitpos = 0
-    nbits = len(data) * 8
-    code_size = min_code_size + 1
-    dictionary: list[bytes] = []
-    prev: bytes | None = None
-
-    def _reset() -> None:
-        nonlocal dictionary, code_size, prev
-        dictionary = [bytes([i]) for i in range(clear)] + [b"", b""]
-        code_size = min_code_size + 1
-        prev = None
-
-    _reset()
-    while bitpos + code_size <= nbits and len(out) < expected:
-        byte0 = bitpos // 8
-        window = int.from_bytes(data[byte0 : byte0 + 3], "little")
-        code = (window >> (bitpos % 8)) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            _reset()
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= clear:
-                raise ValueError("GIF LZW: first code after clear not literal")
-            entry = dictionary[code]
-        elif code < len(dictionary):
-            if code > eoi:
-                entry = dictionary[code]
-            elif code < clear:
-                entry = dictionary[code]
-            else:  # pragma: no cover - the two placeholder slots
-                raise ValueError("GIF LZW: reference to control-code slot")
-        elif code == len(dictionary):
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            raise ValueError("GIF LZW: code beyond dictionary")
-        out += entry
-        if prev is not None and len(dictionary) < 4096:
-            dictionary.append(prev + entry[:1])
-            if len(dictionary) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        prev = entry
-    if len(out) < expected:
-        raise ValueError(
-            f"GIF LZW underrun: {len(out)} of {expected} pixels decoded"
-        )
-    return bytes(out[:expected])
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def gif_frames(payload: bytes, max_frames: int | None = None):
-    """GIF → (width, height, [(delay_ms, HxWx3 uint8 RGB ndarray), ...]).
-
-    Full composite per frame: each image descriptor's rect is drawn
-    onto the logical-screen canvas (transparent palette indices leave
-    the canvas untouched), honoring all four disposal methods — 0/1
-    (keep), 2 (restore rect to background), 3 (restore rect to the
-    pre-frame canvas).  A frame with neither local nor global palette
-    raises loudly rather than compositing wrong pixels.  Interlaced
-    frames are supported (the standard 8/8/4/2 four-pass row order).
-    ``delay_ms`` is the frame's GCE delay in REAL milliseconds
-    (centiseconds × 10; 0 when no GCE precedes the frame).
-    ``max_frames`` stops the walk early — single-image consumers pass
-    1 so a 500-frame animation doesn't pay 500 LZW decodes to read
-    frame 0."""
-    import numpy as np
-
-    if not is_gif(payload):
-        raise ValueError("not a GIF payload")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    width = int.from_bytes(payload[6:8], "little")
-    height = int.from_bytes(payload[8:10], "little")
-    packed = payload[10]
-    bg_index = payload[11]
-    off = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(payload, np.uint8, 3 * n, off).reshape(n, 3)
-        off += 3 * n
-    background = (
-        gct[bg_index] if gct is not None and bg_index < len(gct)
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.broadcast_to(background, (height, width, 3)).copy()
-    try:
-        frames = _gif_walk(
-            payload, off, width, height, gct, background, canvas, max_frames
-        )
-    except IndexError as exc:  # ran off the end of a truncated payload
-        raise ValueError("truncated GIF payload") from exc
-    if not frames:
-        raise ValueError("GIF contains no image frames")
-    return width, height, frames
-
-
-def _gif_walk(
-    payload, off, width, height, gct, background, canvas, max_frames=None
-):
-    import numpy as np
-
-    frames: list[tuple[int, "np.ndarray"]] = []
-    delay_ms = 0
-    transparent = -1
-    disposal = 0
-    while off < len(payload):
-        block = payload[off]
-        off += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = payload[off]
-            off += 1
-            if label == 0xF9:  # graphic control extension
-                size = payload[off]
-                gce = payload[off + 1 : off + 1 + size]
-                disposal = (gce[0] >> 2) & 0x07
-                delay_ms = int.from_bytes(gce[1:3], "little") * 10
-                transparent = gce[3] if gce[0] & 0x01 else -1
-                off += 1 + size
-                if payload[off] != 0:
-                    raise ValueError("unterminated GIF extension")
-                off += 1
-            else:  # skip sub-blocks of any other extension
-                while payload[off] != 0:
-                    off += 1 + payload[off]
-                off += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        left = int.from_bytes(payload[off : off + 2], "little")
-        top = int.from_bytes(payload[off + 2 : off + 4], "little")
-        fw = int.from_bytes(payload[off + 4 : off + 6], "little")
-        fh = int.from_bytes(payload[off + 6 : off + 8], "little")
-        fpacked = payload[off + 8]
-        off += 9
-        palette = gct
-        if fpacked & 0x80:
-            n = 2 << (fpacked & 0x07)
-            palette = np.frombuffer(payload, np.uint8, 3 * n, off).reshape(
-                n, 3
-            )
-            off += 3 * n
-        if palette is None:
-            raise ValueError("GIF frame has neither local nor global palette")
-        if left + fw > width or top + fh > height:
-            raise ValueError("GIF frame rect exceeds logical screen")
-        min_code_size = payload[off]
-        off += 1
-        chunks = []
-        while payload[off] != 0:
-            size = payload[off]
-            chunks.append(payload[off + 1 : off + 1 + size])
-            off += 1 + size
-        off += 1
-        idx = np.frombuffer(
-            _gif_lzw_decode(b"".join(chunks), min_code_size, fw * fh),
-            np.uint8,
-        ).reshape(fh, fw)
-        if fpacked & 0x40:  # interlaced: rows arrive in 4 passes
-            order = [
-                r
-                for start, step in _GIF_INTERLACE_PASSES
-                for r in range(start, fh, step)
-            ]
-            deinterlaced = np.empty_like(idx)
-            deinterlaced[order] = idx
-            idx = deinterlaced
-        rect = canvas[top : top + fh, left : left + fw]
-        # disposal 3: the frame's rect is restored to the PRE-frame
-        # canvas after display — save it before drawing
-        saved = rect.copy() if disposal == 3 else None
-        if transparent >= 0:
-            # transparent pixels never consult the palette, so the
-            # bound check covers OPAQUE indices only (a transparency
-            # index beyond the palette is legal when min_code_size
-            # exceeds log2(palette size))
-            opaque = idx != transparent
-            if opaque.any() and int(idx[opaque].max()) >= len(palette):
-                raise ValueError("GIF pixel index beyond palette")
-            rect[opaque] = palette[idx[opaque]]
-        else:
-            if int(idx.max(initial=0)) >= len(palette):
-                raise ValueError("GIF pixel index beyond palette")
-            rect[:, :] = palette[idx]
-        frames.append((delay_ms, canvas.copy()))
-        if max_frames is not None and len(frames) >= max_frames:
-            return frames
-        if disposal == 2:  # restore rect to background before next frame
-            canvas[top : top + fh, left : left + fw] = background
-        elif disposal == 3:  # restore rect to the pre-frame canvas
-            canvas[top : top + fh, left : left + fw] = saved
-        delay_ms = 0
-        transparent = -1
-        disposal = 0
-    return frames
-
-
-def gif_to_rgb(payload: bytes):
-    """First composited frame of a GIF as an HxWx3 uint8 RGB array
-    (walks only the first image descriptor — an animation's remaining
-    frames are never LZW-decoded)."""
-    _w, _h, frames = gif_frames(payload, max_frames=1)
-    return frames[0][1]
-
-
-def decode_gif_bytes(payload: bytes) -> tuple[int, int, list[float]]:
-    """GIF → (width, height, FEATURE_DIM grid-luminance features) via
-    the SAME feature kernel as P6/PNG, so a pixel grid produces
-    identical features from any image container (pinned in tests)."""
-    rgb = gif_to_rgb(payload)
-    return (
-        rgb.shape[1],
-        rgb.shape[0],
-        _grid_luma_features(rgb.astype("int64"), 255),
-    )
-
-
-def gif_to_ppm(payload: bytes) -> bytes:
-    """Container transcode: GIF in → first frame as P6 out, riding the
-    existing REAL resize path like ``png_to_ppm``."""
-    rgb = gif_to_rgb(payload)
-    header = f"P6\n{rgb.shape[1]} {rgb.shape[0]}\n255\n".encode()
-    return header + rgb.tobytes()
-
-
-def demux_gif(payload: bytes) -> list[tuple[int, bytes]]:
-    """REAL compressed-video demux: an animated GIF → [(ts_ms, P6
-    frame payload), ...] with ts from the REAL per-frame GCE delays
-    (frame i is displayed at the sum of the delays of frames 0..i-1).
-    Every emitted frame is the full composited canvas as a standalone
-    valid P6, directly consumable by the real decode/resize kernels —
-    this retires the sha256 fake-frame path for a real-world
-    compressed container (LZW)."""
-    width, height, frames = gif_frames(payload)
-    header = f"P6\n{width} {height}\n255\n".encode()
-    out: list[tuple[int, bytes]] = []
-    ts = 0
-    for delay_ms, rgb in frames:
-        out.append((ts, header + rgb.tobytes()))
-        ts += delay_ms
-    return out
-
-
-# --------------------------------------------------------------------------
-# WebP-lossless (VP8L): REAL pure-stdlib decode — the last
-# stdlib-feasible format on the quarantine list (VERDICT r15 item 6):
-# pure canonical-Huffman entropy coding + spatial transforms, no
-# arithmetic coder.  Full profile: simple and code-length-coded
-# Huffman codes, meta-Huffman entropy images, LZ77 backward references
-# with both plain and 2D-neighborhood distance codes, color cache, and
-# all four transforms (predictor with all 14 modes, cross-channel
-# color transform, subtract-green, color indexing incl. sub-byte pixel
-# bundling).  Lossy WebP (VP8) and the extended container (VP8X —
-# animation/alpha-chunk framing) reject LOUDLY from the direct decoder
-# and QUARANTINE in the batch kernels, same contract as every other
-# unsupported profile.  Derived from the public WebP Lossless
-# Bitstream Specification (RFC 9649); golden-tested against an
-# INDEPENDENT test-side VP8L encoder (tests/test_multimodal_webp.py).
-# No reference-repo analog exists (crypto_collector.py has no media
-# surface).
-
-
-def is_webp(payload: bytes) -> bool:
-    """RIFF/WEBP container sniff (lossless or not — the decoder then
-    accepts only a VP8L image chunk)."""
-    return payload[:4] == b"RIFF" and payload[8:12] == b"WEBP"
-
-
-class _VP8LBits:
-    """LSB-first bit reader over the VP8L payload."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("truncated VP8L stream")
-            v |= ((self.data[byte] >> (self.pos & 7)) & 1) << i
-            self.pos += 1
-        return v
-
-
-def _vp8l_canonical(lengths: list[int]) -> dict:
-    """Canonical prefix code (DEFLATE assignment); decoding walks the
-    stream bit-by-bit accumulating MSB-first, which matches VP8L's
-    tree-traversal bit order.  A single used symbol decodes with ZERO
-    bits (the spec's degenerate case)."""
-    used = [s for s, ln in enumerate(lengths) if ln > 0]
-    if not used:
-        raise ValueError("empty VP8L prefix code")
-    if len(used) == 1:
-        return {"single": used[0]}
-    table: dict = {}
-    code = 0
-    for ln in range(1, max(lengths) + 1):
-        for sym, sln in enumerate(lengths):
-            if sln == ln:
-                table[(ln, code)] = sym
-                code += 1
-        code <<= 1
-    if code != (1 << (max(lengths) + 1)):
-        # over/under-subscribed codes are corrupt streams
-        raise ValueError("invalid VP8L code lengths")
-    return table
-
-
-def _vp8l_read_symbol(br: _VP8LBits, table: dict) -> int:
-    if "single" in table:
-        return table["single"]
-    acc = ln = 0
-    while ln <= 15:
-        acc = (acc << 1) | br.read(1)
-        ln += 1
-        sym = table.get((ln, acc))
-        if sym is not None:
-            return sym
-    raise ValueError("VP8L prefix decode overflow")
-
-
-#: code-length-code read order (spec kCodeLengthCodeOrder)
-_VP8L_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
-
-
-def _vp8l_read_code(br: _VP8LBits, alphabet_size: int) -> dict:
-    """One prefix code: the 'simple' 1/2-symbol form or the
-    code-length-coded normal form with 16/17/18 repeats."""
-    if br.read(1):  # simple
-        num_symbols = br.read(1) + 1
-        if br.read(1):  # first symbol is 8 bits
-            sym0 = br.read(8)
-        else:
-            sym0 = br.read(1)
-        lengths = [0] * alphabet_size
-        if num_symbols == 1:
-            lengths[sym0] = 1
-            return {"single": sym0}
-        sym1 = br.read(8)
-        if sym0 == sym1 or sym0 >= alphabet_size or sym1 >= alphabet_size:
-            raise ValueError("bad simple VP8L code")
-        lengths[sym0] = lengths[sym1] = 1
-        return _vp8l_canonical(lengths)
-    num_clc = 4 + br.read(4)
-    clc = [0] * 19
-    for i in range(num_clc):
-        clc[_VP8L_CLC_ORDER[i]] = br.read(3)
-    clc_table = _vp8l_canonical(clc)
-    if br.read(1):  # bounded number of coded symbols
-        length_nbits = 2 + 2 * br.read(3)
-        max_symbol = 2 + br.read(length_nbits)
-    else:
-        max_symbol = alphabet_size
-    lengths = [0] * alphabet_size
-    prev = 8
-    symbol = 0
-    while symbol < alphabet_size:
-        if max_symbol == 0:
-            break
-        max_symbol -= 1
-        code_len = _vp8l_read_symbol(br, clc_table)
-        if code_len < 16:
-            lengths[symbol] = code_len
-            symbol += 1
-            if code_len:
-                prev = code_len
-        else:
-            if code_len == 16:
-                repeat, fill = 3 + br.read(2), prev
-            elif code_len == 17:
-                repeat, fill = 3 + br.read(3), 0
-            else:
-                repeat, fill = 11 + br.read(7), 0
-            if symbol + repeat > alphabet_size:
-                raise ValueError("VP8L code-length repeat overflow")
-            for _ in range(repeat):
-                lengths[symbol] = fill
-                symbol += 1
-    return _vp8l_canonical(lengths)
-
-
-def _vp8l_prefix_value(br: _VP8LBits, prefix_code: int) -> int:
-    """LZ77 length/distance prefix decoding (spec PrefixCodedValue)."""
-    if prefix_code < 4:
-        return prefix_code + 1
-    extra_bits = (prefix_code - 2) >> 1
-    offset = (2 + (prefix_code & 1)) << extra_bits
-    return offset + br.read(extra_bits) + 1
-
-#: 2D distance mapping for codes 1..120 (spec distance map, (dx, dy))
-_VP8L_DIST_MAP = (
-    (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0), (1, 2), (-1, 2),
-    (2, 1), (-2, 1), (2, 2), (-2, 2), (0, 3), (3, 0), (1, 3), (-1, 3),
-    (3, 1), (-3, 1), (2, 3), (-2, 3), (3, 2), (-3, 2), (0, 4), (4, 0),
-    (1, 4), (-1, 4), (4, 1), (-4, 1), (3, 3), (-3, 3), (2, 4), (-2, 4),
-    (4, 2), (-4, 2), (0, 5), (3, 4), (-3, 4), (4, 3), (-4, 3), (5, 0),
-    (1, 5), (-1, 5), (5, 1), (-5, 1), (2, 5), (-2, 5), (5, 2), (-5, 2),
-    (4, 4), (-4, 4), (3, 5), (-3, 5), (5, 3), (-5, 3), (0, 6), (6, 0),
-    (1, 6), (-1, 6), (6, 1), (-6, 1), (2, 6), (-2, 6), (6, 2), (-6, 2),
-    (4, 5), (-4, 5), (5, 4), (-5, 4), (3, 6), (-3, 6), (6, 3), (-6, 3),
-    (0, 7), (7, 0), (1, 7), (-1, 7), (4, 6), (-4, 6), (6, 4), (-6, 4),
-    (7, 1), (-7, 1), (5, 5), (-5, 5), (2, 7), (-2, 7), (7, 2), (-7, 2),
-    (3, 7), (-3, 7), (7, 3), (-7, 3), (6, 5), (-6, 5), (5, 6), (-5, 6),
-    (8, 0), (4, 7), (-4, 7), (7, 4), (-7, 4), (8, 1), (8, 2), (6, 6),
-    (-6, 6), (2, 8), (7, 5), (-7, 5), (5, 7), (-5, 7), (8, 3), (6, 7),
-    (-6, 7), (7, 6), (-7, 6), (8, 4), (7, 7), (-7, 7), (8, 5), (8, 6),
-    (8, 7),
-)
-
-
-def _vp8l_distance(br_code: int, xsize: int) -> int:
-    if br_code > 120:
-        return br_code - 120
-    dx, dy = _VP8L_DIST_MAP[br_code - 1]
-    dist = dy * xsize + dx
-    return dist if dist >= 1 else 1
-
-
-def _vp8l_decode_image(
-    br: _VP8LBits, xsize: int, ysize: int, is_level0: bool
-) -> tuple[list[int], list]:
-    """DecodeImageStream: returns (ARGB pixel list in scan order,
-    transforms read at this level — level 0 only)."""
-    transforms: list = []
-    if is_level0:
-        seen = set()
-        while br.read(1):
-            ttype = br.read(2)
-            if ttype in seen:
-                raise ValueError("duplicate VP8L transform")
-            seen.add(ttype)
-            if ttype == 0:  # PREDICTOR
-                bits = br.read(3) + 2
-                bw = (xsize + (1 << bits) - 1) >> bits
-                bh = (ysize + (1 << bits) - 1) >> bits
-                data, _ = _vp8l_decode_image(br, bw, bh, False)
-                transforms.append(("predictor", bits, xsize, data))
-            elif ttype == 1:  # COLOR
-                bits = br.read(3) + 2
-                bw = (xsize + (1 << bits) - 1) >> bits
-                bh = (ysize + (1 << bits) - 1) >> bits
-                data, _ = _vp8l_decode_image(br, bw, bh, False)
-                transforms.append(("color", bits, xsize, data))
-            elif ttype == 2:  # SUBTRACT_GREEN
-                transforms.append(("subtract_green",))
-            else:  # COLOR_INDEXING
-                n_colors = br.read(8) + 1
-                pal_deltas, _ = _vp8l_decode_image(br, n_colors, 1, False)
-                palette = []
-                prev = 0
-                for p in pal_deltas:
-                    # per-channel cumulative sum mod 256
-                    cur = (
-                        (((p >> 24) + (prev >> 24)) & 0xFF) << 24
-                        | ((((p >> 16) & 0xFF) + ((prev >> 16) & 0xFF)) & 0xFF) << 16
-                        | ((((p >> 8) & 0xFF) + ((prev >> 8) & 0xFF)) & 0xFF) << 8
-                        | (((p & 0xFF) + (prev & 0xFF)) & 0xFF)
-                    )
-                    palette.append(cur)
-                    prev = cur
-                if n_colors <= 2:
-                    wbits = 3
-                elif n_colors <= 4:
-                    wbits = 2
-                elif n_colors <= 16:
-                    wbits = 1
-                else:
-                    wbits = 0
-                transforms.append(("palette", wbits, xsize, palette))
-                # bundling reduces the coded width for EVERYTHING after
-                xsize = (xsize + (1 << wbits) - 1) >> wbits
-
-    cache_bits = br.read(4) if br.read(1) else 0
-    if cache_bits > 11:
-        raise ValueError("bad VP8L color-cache size")
-    cache_size = (1 << cache_bits) if cache_bits else 0
-
-    meta_bits = 0
-    meta_image: list[int] | None = None
-    num_groups = 1
-    if is_level0 and br.read(1):  # meta prefix codes
-        meta_bits = br.read(3) + 2
-        mw = (xsize + (1 << meta_bits) - 1) >> meta_bits
-        mh = (ysize + (1 << meta_bits) - 1) >> meta_bits
-        meta_image, _ = _vp8l_decode_image(br, mw, mh, False)
-        num_groups = (
-            max(((p >> 8) & 0xFFFF) for p in meta_image) + 1
-        )
-
-    groups = []
-    for _ in range(num_groups):
-        green = _vp8l_read_code(br, 256 + 24 + cache_size)
-        red = _vp8l_read_code(br, 256)
-        blue = _vp8l_read_code(br, 256)
-        alpha = _vp8l_read_code(br, 256)
-        dist = _vp8l_read_code(br, 40)
-        groups.append((green, red, blue, alpha, dist))
-
-    n = xsize * ysize
-    pixels: list[int] = []
-    cache = [0] * cache_size
-    mw = ((xsize + (1 << meta_bits) - 1) >> meta_bits) if meta_bits else 0
-
-    def _insert(px: int) -> None:
-        if cache_size:
-            cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
-
-    while len(pixels) < n:
-        if meta_image is not None:
-            x, y = len(pixels) % xsize, len(pixels) // xsize
-            mp = meta_image[(y >> meta_bits) * mw + (x >> meta_bits)]
-            g_code, r_code, b_code, a_code, d_code = groups[(mp >> 8) & 0xFFFF]
-        else:
-            g_code, r_code, b_code, a_code, d_code = groups[0]
-        s = _vp8l_read_symbol(br, g_code)
-        if s < 256:  # literal
-            r = _vp8l_read_symbol(br, r_code)
-            b = _vp8l_read_symbol(br, b_code)
-            a = _vp8l_read_symbol(br, a_code)
-            px = (a << 24) | (r << 16) | (s << 8) | b
-            pixels.append(px)
-            _insert(px)
-        elif s < 256 + 24:  # LZ77 backward reference
-            length = _vp8l_prefix_value(br, s - 256)
-            dcode = _vp8l_prefix_value(br, _vp8l_read_symbol(br, d_code))
-            dist = _vp8l_distance(dcode, xsize)
-            if dist > len(pixels):
-                raise ValueError("VP8L backref before image start")
-            for _ in range(length):
-                if len(pixels) >= n:
-                    raise ValueError("VP8L backref past image end")
-                px = pixels[len(pixels) - dist]
-                pixels.append(px)
-                _insert(px)
-        else:  # color-cache reference
-            idx = s - 256 - 24
-            if idx >= cache_size:
-                raise ValueError("VP8L cache index out of range")
-            pixels.append(cache[idx])
-    return pixels, transforms
-
-
-def _vp8l_avg2(a: int, b: int) -> int:
-    return (
-        ((((a >> 24) & 0xFF) + ((b >> 24) & 0xFF)) >> 1) << 24
-        | ((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) >> 1) << 16
-        | ((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) >> 1) << 8
-        | (((a & 0xFF) + (b & 0xFF)) >> 1)
-    )
-
-
-def _vp8l_select(L: int, T: int, TL: int) -> int:
-    p = [
-        ((L >> s) & 0xFF) + ((T >> s) & 0xFF) - ((TL >> s) & 0xFF)
-        for s in (24, 16, 8, 0)
-    ]
-    pL = sum(abs(p[i] - ((L >> s) & 0xFF)) for i, s in enumerate((24, 16, 8, 0)))
-    pT = sum(abs(p[i] - ((T >> s) & 0xFF)) for i, s in enumerate((24, 16, 8, 0)))
-    return L if pL < pT else T
-
-
-def _vp8l_clamp_add_sub_full(L: int, T: int, TL: int) -> int:
-    out = 0
-    for s in (24, 16, 8, 0):
-        c = ((L >> s) & 0xFF) + ((T >> s) & 0xFF) - ((TL >> s) & 0xFF)
-        out |= (0 if c < 0 else 255 if c > 255 else c) << s
-    return out
-
-
-def _vp8l_clamp_add_sub_half(L: int, T: int, TL: int) -> int:
-    out = 0
-    for s in (24, 16, 8, 0):
-        avg = (((L >> s) & 0xFF) + ((T >> s) & 0xFF)) >> 1
-        d = avg - ((TL >> s) & 0xFF)
-        # C-style truncating division by 2 (negative rounds toward 0)
-        c = avg + (d // 2 if d >= 0 else -((-d) // 2))
-        out |= (0 if c < 0 else 255 if c > 255 else c) << s
-    return out
-
-
-def _vp8l_apply_predictor(
-    pixels: list[int], xsize: int, ysize: int, bits: int, data: list[int]
-) -> None:
-    """Inverse predictor transform, in place (residual + prediction,
-    per channel mod 256).  Border rules per spec: (0,0) predicts black,
-    the top row predicts L, the left column predicts T; TR of the
-    rightmost column is the leftmost pixel of the current row."""
-    bw = (xsize + (1 << bits) - 1) >> bits
-    black = 0xFF000000
-
-    def addpx(a: int, b: int) -> int:
-        return (
-            ((((a >> 24) + (b >> 24)) & 0xFF) << 24)
-            | (((((a >> 16) & 0xFF) + ((b >> 16) & 0xFF)) & 0xFF) << 16)
-            | (((((a >> 8) & 0xFF) + ((b >> 8) & 0xFF)) & 0xFF) << 8)
-            | (((a & 0xFF) + (b & 0xFF)) & 0xFF)
-        )
-
-    for i in range(xsize * ysize):
-        x, y = i % xsize, i // xsize
-        if x == 0 and y == 0:
-            pred = black
-        elif y == 0:
-            pred = pixels[i - 1]  # L
-        elif x == 0:
-            pred = pixels[i - xsize]  # T
-        else:
-            mode = (data[(y >> bits) * bw + (x >> bits)] >> 8) & 0xFF
-            L = pixels[i - 1]
-            T = pixels[i - xsize]
-            TL = pixels[i - xsize - 1]
-            TR = pixels[i - xsize + 1] if x + 1 < xsize else pixels[i - x]
-            if mode == 0:
-                pred = black
-            elif mode == 1:
-                pred = L
-            elif mode == 2:
-                pred = T
-            elif mode == 3:
-                pred = TR
-            elif mode == 4:
-                pred = TL
-            elif mode == 5:
-                pred = _vp8l_avg2(_vp8l_avg2(L, TR), T)
-            elif mode == 6:
-                pred = _vp8l_avg2(L, TL)
-            elif mode == 7:
-                pred = _vp8l_avg2(L, T)
-            elif mode == 8:
-                pred = _vp8l_avg2(TL, T)
-            elif mode == 9:
-                pred = _vp8l_avg2(T, TR)
-            elif mode == 10:
-                pred = _vp8l_avg2(_vp8l_avg2(L, TL), _vp8l_avg2(T, TR))
-            elif mode == 11:
-                pred = _vp8l_select(L, T, TL)
-            elif mode == 12:
-                pred = _vp8l_clamp_add_sub_full(L, T, TL)
-            elif mode == 13:
-                pred = _vp8l_clamp_add_sub_half(L, T, TL)
-            else:
-                raise ValueError(f"bad VP8L predictor mode {mode}")
-        pixels[i] = addpx(pixels[i], pred)
-
-
-def _vp8l_ctd(t: int, c: int) -> int:
-    """ColorTransformDelta: both args as int8, arithmetic >> 5."""
-    if t >= 128:
-        t -= 256
-    if c >= 128:
-        c -= 256
-    return (t * c) >> 5
-
-
-def _vp8l_apply_color(
-    pixels: list[int], xsize: int, ysize: int, bits: int, data: list[int]
-) -> None:
-    """Inverse cross-channel color transform (spec: red first, then
-    blue from the RECONSTRUCTED red)."""
-    bw = (xsize + (1 << bits) - 1) >> bits
-    for i in range(xsize * ysize):
-        x, y = i % xsize, i // xsize
-        cte = data[(y >> bits) * bw + (x >> bits)]
-        g2r, g2b, r2b = (cte) & 0xFF, (cte >> 8) & 0xFF, (cte >> 16) & 0xFF
-        px = pixels[i]
-        a, r, g, b = (px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF
-        r = (r + _vp8l_ctd(g2r, g)) & 0xFF
-        b = (b + _vp8l_ctd(g2b, g) + _vp8l_ctd(r2b, r)) & 0xFF
-        pixels[i] = (a << 24) | (r << 16) | (g << 8) | b
-
-
-def webp_to_rgb(payload: bytes):
-    """RIFF/WEBP VP8L → (h, w, 3) uint8 RGB numpy array.  Lossy VP8 and
-    extended VP8X containers raise loudly (quarantined by the batch
-    kernels); only the lossless profile decodes."""
-    import struct
-
-    import numpy as np
-
-    if not is_webp(payload):
-        raise ValueError("not a WEBP payload")
-    pos, n = 12, len(payload)
-    vp8l: bytes | None = None
-    while pos + 8 <= n:
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"VP8L":
-            vp8l = body
-            break
-        if cid in (b"VP8 ", b"VP8X"):
-            raise ValueError(
-                f"unsupported WEBP profile {cid!r} (lossless VP8L only)"
-            )
-        pos += 8 + size + (size & 1)
-    if vp8l is None or len(vp8l) < 5:
-        raise ValueError("WEBP missing VP8L chunk")
-    if vp8l[0] != 0x2F:
-        raise ValueError("bad VP8L signature")
-    br = _VP8LBits(vp8l[1:])
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    br.read(1)  # alpha hint
-    if br.read(3) != 0:
-        raise ValueError("bad VP8L version")
-    pixels, transforms = _vp8l_decode_image(br, w, h, True)
-
-    # inverse transforms in reverse read order
-    for t in reversed(transforms):
-        if t[0] == "subtract_green":
-            for i, px in enumerate(pixels):
-                g = (px >> 8) & 0xFF
-                r = (((px >> 16) & 0xFF) + g) & 0xFF
-                b = ((px & 0xFF) + g) & 0xFF
-                pixels[i] = (px & 0xFF00FF00) | (r << 16) | b
-        elif t[0] == "palette":
-            _, wbits, full_w, palette = t
-            if wbits == 0:
-                out = []
-                for px in pixels:
-                    idx = (px >> 8) & 0xFF
-                    if idx >= len(palette):
-                        raise ValueError("VP8L palette index out of range")
-                    out.append(palette[idx])
-                pixels = out
-            else:
-                px_per = 1 << wbits
-                bpp = 8 >> wbits
-                mask = (1 << bpp) - 1
-                packed_w = (full_w + px_per - 1) >> wbits
-                ysize = len(pixels) // packed_w
-                out = []
-                for y in range(ysize):
-                    row = pixels[y * packed_w : (y + 1) * packed_w]
-                    line: list[int] = []
-                    for px in row:
-                        g = (px >> 8) & 0xFF
-                        for j in range(px_per):
-                            idx = (g >> (j * bpp)) & mask
-                            if idx >= len(palette):
-                                raise ValueError(
-                                    "VP8L palette index out of range"
-                                )
-                            line.append(palette[idx])
-                    out.extend(line[:full_w])
-                pixels = out
-        elif t[0] == "predictor":
-            _, bits, t_w, data = t
-            _vp8l_apply_predictor(pixels, t_w, len(pixels) // t_w, bits, data)
-        elif t[0] == "color":
-            _, bits, t_w, data = t
-            _vp8l_apply_color(pixels, t_w, len(pixels) // t_w, bits, data)
-
-    if len(pixels) != w * h:
-        raise ValueError("VP8L decoded pixel count mismatch")
-    arr = np.array(pixels, dtype=np.uint32).reshape(h, w)
-    rgb = np.stack(
-        [(arr >> 16) & 0xFF, (arr >> 8) & 0xFF, arr & 0xFF], axis=-1
-    ).astype(np.uint8)
-    return rgb
-
-
-def decode_webp_bytes(payload: bytes) -> tuple[int, int, list[float]]:
-    """WebP-lossless → (width, height, FEATURE_DIM grid-luminance
-    features) via the SAME feature kernel as P6/PNG/GIF/JPEG, so a
-    pixel grid produces identical features from any image container
-    (pinned in tests)."""
-    rgb = webp_to_rgb(payload)
-    return (
-        rgb.shape[1],
-        rgb.shape[0],
-        _grid_luma_features(rgb.astype("int64"), 255),
-    )
-
-
-def webp_to_ppm(payload: bytes) -> bytes:
-    """Container transcode: VP8L in → equivalent P6 out, riding the
-    existing REAL resize path like PNG/GIF/JPEG."""
-    rgb = webp_to_rgb(payload)
-    header = f"P6\n{rgb.shape[1]} {rgb.shape[0]}\n255\n".encode()
-    return header + rgb.tobytes()
-
-
-# --------------------------------------------------------------------------
-# JPEG (baseline + PROGRESSIVE DCT): REAL pure-stdlib+numpy decode —
-# the dominant real-world training-corpus image format (VERDICT r12
-# item 6; progressive added r14, VERDICT r13 missing-item 4).
-# Marker/segment walk, canonical Huffman entropy decode with byte
-# un-stuffing and restart-marker handling; every scan accumulates into
-# raw per-component zigzag coefficient planes (progressive: DC
-# first/refinement with point transform, AC spectral-selection
-# first/refinement with EOB runs and correction bits per T.81 G.1.2);
-# dequantize + dezigzag + float IDCT (two 8x8 matmuls per block,
-# batched per component) once at end of frame, chroma upsampling by
-# replication, full-range BT.601 YCbCr->RGB in integer fixed point.
-# Supported profile: baseline (SOF0), extended-sequential (SOF1), and
-# progressive (SOF2) Huffman frames, 8-bit precision, 1 or 3
-# components, any sampling factors (4:4:4 / 4:2:0 / 4:2:2 / ...),
-# DRI/RSTn restarts, inter-scan DHT redefinition.  Arithmetic coding,
-# hierarchical, 12-bit, and truncated streams (including renderable
-# progressive PREFIXES — no EOI) reject LOUDLY from the direct
-# decoders and QUARANTINE in the batch kernels, per the r12 contract —
-# never misdecoded.  Derived from the public ITU-T T.81 specification;
-# no reference-repo analog exists (crypto_collector.py has no media
-# surface).
-
-
-def is_jpeg(payload: bytes) -> bool:
-    """JPEG SOI sniff (every JPEG stream starts FF D8 FF)."""
-    return payload[:3] == b"\xff\xd8\xff"
-
-
-#: zigzag scan order: _JPEG_ZIGZAG[i] = (row, col) of the i-th
-#: transmitted coefficient (T.81 figure A.6).
-_JPEG_ZIGZAG: tuple[tuple[int, int], ...] = tuple(
-    (r, c)
-    for r, c in sorted(
-        ((r, c) for r in range(8) for c in range(8)),
-        key=lambda rc: (
-            rc[0] + rc[1],
-            rc[1] if (rc[0] + rc[1]) % 2 == 0 else rc[0],
-        ),
-    )
-)
-
-
-def _jpeg_idct_basis():
-    """8x8 DCT-III basis A with A[u, x] = a(u) cos((2x+1) u pi / 16);
-    spatial block = A.T @ F @ A."""
-    import math
-
-    import numpy as np
-
-    a = np.empty((8, 8))
-    for u in range(8):
-        cu = math.sqrt(1.0 / 8.0) if u == 0 else math.sqrt(2.0 / 8.0)
-        for x in range(8):
-            a[u, x] = cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
-    return a
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded JPEG data: 0xFF00 byte
-    stuffing removed, RSTn markers surfaced via ``restart()``, any
-    other marker = end of scan data."""
-
-    def __init__(self, buf: bytes, pos: int) -> None:
-        self._buf = buf
-        self._pos = pos
-        self._acc = 0
-        self._nbits = 0
-        # zero bits injected past the terminating marker; always a
-        # suffix of the accumulator (once a marker is hit, every later
-        # fill pads).  Consuming any of them means the scan ran out of
-        # real entropy data mid-MCU — reject, don't decode zeros.
-        self._pad_bits = 0
-
-    def _fill(self) -> None:
-        b = self._buf
-        while self._nbits <= 24:
-            if self._pos >= len(b):
-                raise ValueError("truncated JPEG scan data")
-            byte = b[self._pos]
-            if byte == 0xFF:
-                nxt = b[self._pos + 1] if self._pos + 1 < len(b) else None
-                if nxt == 0x00:  # stuffed literal FF
-                    self._pos += 2
-                elif nxt is None:
-                    raise ValueError("truncated JPEG scan data")
-                else:  # a real marker terminates the entropy segment
-                    byte = None
-            else:
-                self._pos += 1
-            if byte is None:
-                # pad with zeros; bits() raises if these are consumed
-                self._acc = (self._acc << 8) & 0xFFFFFFFF
-                self._nbits += 8
-                self._pad_bits += 8
-            else:
-                self._acc = ((self._acc << 8) | byte) & 0xFFFFFFFF
-                self._nbits += 8
-
-    def bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        while self._nbits < n:
-            self._fill()
-        if self._nbits - n < self._pad_bits:
-            raise ValueError(
-                "truncated JPEG scan data: entropy segment ended mid-MCU"
-            )
-        v = (self._acc >> (self._nbits - n)) & ((1 << n) - 1)
-        self._nbits -= n
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume an RSTn marker (between restart
-        intervals)."""
-        self._acc = 0
-        self._nbits = 0
-        self._pad_bits = 0
-        b = self._buf
-        p = self._pos
-        while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0xFF:
-            p += 1  # fill bytes
-        if p + 1 >= len(b) or b[p] != 0xFF or not (
-            0xD0 <= b[p + 1] <= 0xD7
-        ):
-            raise ValueError("missing JPEG restart marker")
-        self._pos = p + 2
-
-
-def _jpeg_huff_table(counts: bytes, values: bytes) -> dict[tuple[int, int], int]:
-    """Canonical Huffman table: (code_length, code) -> decoded value
-    (T.81 annex C code assignment)."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = values[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _jpeg_decode_sym(reader: _JpegBitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.bits(1)
-        v = table.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    """EXTEND (T.81 F.2.2.1): map an s-bit magnitude to its signed
-    value."""
-    return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _jpeg_decode_block_seq(reader, coef, dct, act, dc_pred, ci):
-    """Sequential (baseline) block: DC diff + full AC band into the
-    RAW zigzag coefficient vector ``coef`` (dequantization happens once
-    at the end of the frame, shared with the progressive path)."""
-    s = _jpeg_decode_sym(reader, dct)
-    dc_pred[ci] += _jpeg_extend(reader.bits(s), s)
-    coef[0] = dc_pred[ci]
-    k = 1
-    while k < 64:
-        rs = _jpeg_decode_sym(reader, act)
-        r, size = rs >> 4, rs & 0xF
-        if size == 0:
-            if r == 15:  # ZRL: sixteen zeros
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC index overflow")
-        coef[k] = _jpeg_extend(reader.bits(size), size)
-        k += 1
-
-
-def _jpeg_decode_block_ac_first(reader, coef, act, ss, se, al, eobrun):
-    """Progressive AC first scan (Ah == 0) for one block; returns the
-    updated EOB-run counter (T.81 G.1.2.2 / libjpeg decode_mcu_AC_first
-    semantics)."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _jpeg_decode_sym(reader, act)
-        r, size = rs >> 4, rs & 0xF
-        if size == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = (1 << r) - 1
-            if r:
-                eobrun += reader.bits(r)
-            break
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC index overflow")
-        coef[k] = _jpeg_extend(reader.bits(size), size) * (1 << al)
-        k += 1
-    return eobrun
-
-
-def _jpeg_decode_block_ac_refine(reader, coef, act, ss, se, al, eobrun):
-    """Progressive AC refinement scan (Ah == Al + 1) for one block;
-    correction bits interleave with newly-significant coefficients
-    (T.81 G.1.2.3 / libjpeg decode_mcu_AC_refine semantics)."""
-    p1 = 1 << al
-    m1 = -1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _jpeg_decode_sym(reader, act)
-            r, size = rs >> 4, rs & 0xF
-            val = 0
-            if size == 0:
-                if r < 15:  # EOBn: run of end-of-bands
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += reader.bits(r)
-                    break
-                # r == 15 (ZRL): skip 16 zero-history coefficients
-            else:
-                if size != 1:
-                    raise ValueError("bad JPEG refinement magnitude")
-                val = p1 if reader.bits(1) else m1
-            # advance past r zero-history positions, emitting correction
-            # bits for every already-nonzero coefficient on the way
-            while k <= se:
-                c = int(coef[k])
-                if c != 0:
-                    if reader.bits(1) and (c & p1) == 0:
-                        coef[k] = c + (p1 if c >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val:
-                if k > se:
-                    raise ValueError("JPEG AC index overflow")
-                coef[k] = val
-            k += 1
-    if eobrun > 0:
-        # inside an EOB run: only correction bits for existing nonzeros
-        while k <= se:
-            c = int(coef[k])
-            if c != 0:
-                if reader.bits(1) and (c & p1) == 0:
-                    coef[k] = c + (p1 if c >= 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def jpeg_to_rgb(payload: bytes):
-    """REAL JPEG decode → (height, width, 3) uint8 RGB array (grayscale
-    replicates to RGB, like the PNG path).  Supports baseline (SOF0),
-    extended sequential (SOF1), and PROGRESSIVE (SOF2) Huffman frames:
-    every scan (DC first/refine, AC spectral-selection first/refine,
-    EOB runs, restarts) accumulates into raw per-component zigzag
-    coefficient planes; dequantization + IDCT run once at end of
-    frame."""
-    import struct
-
-    import numpy as np
-
-    if not is_jpeg(payload):
-        raise ValueError("not a JPEG payload")
-    qt: dict[int, "np.ndarray"] = {}
-    # Per-component quantization table, SNAPSHOTTED at the component's
-    # first scan (libjpeg's latch_quant_tables semantics): a DQT
-    # segment appearing between scans redefines the slot for LATER
-    # first-use only — it must not retroactively rescale coefficients
-    # of scans already decoded, even though dequantization physically
-    # runs once at end of frame.
-    qt_latched: dict[int, "np.ndarray"] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class 0=DC/1=AC, id)
-    frame = None  # (height, width, [(cid, h, v, tq)])
-    progressive = False
-    restart_interval = 0
-    coefs: list | None = None  # per comp: (BY, BX, 64) raw zigzag int32
-    n_scans = 0
-    saw_eoi = False
-    pos, n = 2, len(payload)
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = payload[pos + 1]
-        if marker == 0xFF:  # fill byte
-            pos += 1
-            continue
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue  # no-payload markers
-        if marker == 0xD9:  # EOI
-            saw_eoi = True
-            break
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment")
-        (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
-        seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if pq == 0:
-                    vals = np.frombuffer(
-                        seg[i : i + 64], dtype=np.uint8
-                    ).astype(np.int32)
-                    i += 64
-                else:
-                    vals = np.frombuffer(
-                        seg[i : i + 128], dtype=">u2"
-                    ).astype(np.int32)
-                    i += 128
-                qt[tq] = vals
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                counts = seg[i + 1 : i + 17]
-                nvals = sum(counts)
-                values = seg[i + 17 : i + 17 + nvals]
-                huff[(tc, th)] = _jpeg_huff_table(counts, values)
-                i += 17 + nvals
-        elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
-            if frame is not None:
-                raise ValueError("multiple JPEG frames")
-            progressive = marker == 0xC2
-            precision, height, width, ncomp = struct.unpack(
-                ">BHHB", seg[:6]
-            )
-            if precision != 8:
-                raise ValueError(
-                    f"unsupported JPEG precision {precision} (8 only)"
-                )
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq_id = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0xF, tq_id))
-            frame = (height, width, comps)
-            if ncomp not in (1, 3):
-                raise ValueError(
-                    f"unsupported JPEG component count {ncomp}"
-                )
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = (width + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-            coefs = [
-                np.zeros((mcuy * v, mcux * h, 64), dtype=np.int32)
-                for _, h, v, _ in comps
-            ]
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "unsupported JPEG coding process (baseline/extended "
-                f"sequential/progressive Huffman only, got "
-                f"SOF{marker - 0xC0})"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS — decode the scan immediately
-            if frame is None or coefs is None:
-                raise ValueError("JPEG SOS before SOF")
-            height, width, comps = frame
-            ns = seg[0]
-            cid_to_idx = {c[0]: i for i, c in enumerate(comps)}
-            scan = []
-            for s in range(ns):
-                cs, tds = seg[1 + 2 * s : 3 + 2 * s]
-                scan.append((cid_to_idx[cs], tds >> 4, tds & 0xF))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
-            for ci, _, _ in scan:
-                tq_id = comps[ci][3]
-                if ci not in qt_latched and tq_id in qt:
-                    qt_latched[ci] = qt[tq_id].copy()
-            if not progressive:
-                if ns != len(comps):
-                    raise ValueError(
-                        "unsupported JPEG scan (single interleaved "
-                        "sequential scan only)"
-                    )
-                if (ss, se, ah, al) != (0, 63, 0, 0):
-                    raise ValueError("bad sequential JPEG scan header")
-            else:
-                if ss == 0 and se != 0:
-                    raise ValueError("progressive DC scan must have Se=0")
-                if ss > 0 and ns != 1:
-                    raise ValueError(
-                        "progressive AC scan must be non-interleaved"
-                    )
-                if ss > se or se > 63:
-                    raise ValueError("bad JPEG spectral selection")
-            pos += seglen
-            reader = _JpegBitReader(payload, pos)
-            dc_pred = [0] * len(comps)
-            eobrun = 0
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = (width + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-
-            def _tables(dc_id, ac_id, need_dc, need_ac):
-                dct = huff.get((0, dc_id)) if need_dc else None
-                act = huff.get((1, ac_id)) if need_ac else None
-                if (need_dc and dct is None) or (
-                    need_ac and act is None
-                ):
-                    raise ValueError("JPEG missing Huffman table")
-                return dct, act
-
-            if progressive and ns == 1:
-                # non-interleaved: walk the component's OWN block grid
-                ci, dc_id, ac_id = scan[0]
-                _, h, v, _ = comps[ci]
-                cw = (width * h + hmax - 1) // hmax
-                ch = (height * v + vmax - 1) // vmax
-                bx_n = (cw + 7) // 8
-                by_n = (ch + 7) // 8
-                need_dc = ss == 0 and ah == 0
-                need_ac = ss > 0
-                dct, act = _tables(dc_id, ac_id, need_dc, need_ac)
-                blk = 0
-                for by in range(by_n):
-                    for bx in range(bx_n):
-                        if restart_interval and blk and (
-                            blk % restart_interval == 0
-                        ):
-                            reader.restart()
-                            dc_pred = [0] * len(comps)
-                            eobrun = 0
-                        coef = coefs[ci][by, bx]
-                        if ss == 0:
-                            if ah == 0:
-                                s = _jpeg_decode_sym(reader, dct)
-                                dc_pred[ci] += _jpeg_extend(
-                                    reader.bits(s), s
-                                )
-                                coef[0] = dc_pred[ci] << al
-                            elif reader.bits(1):
-                                coef[0] = int(coef[0]) | (1 << al)
-                        elif ah == 0:
-                            eobrun = _jpeg_decode_block_ac_first(
-                                reader, coef, act, ss, se, al, eobrun
-                            )
-                        else:
-                            eobrun = _jpeg_decode_block_ac_refine(
-                                reader, coef, act, ss, se, al, eobrun
-                            )
-                        blk += 1
-            else:
-                # interleaved MCU order (sequential full scan, or a
-                # progressive multi-component DC scan)
-                mcu_count = 0
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        if restart_interval and mcu_count and (
-                            mcu_count % restart_interval == 0
-                        ):
-                            reader.restart()
-                            dc_pred = [0] * len(comps)
-                            eobrun = 0
-                        for ci, dc_id, ac_id in scan:
-                            _, h, v, _ = comps[ci]
-                            need_dc = ss == 0 and ah == 0
-                            need_ac = not progressive
-                            dct, act = _tables(
-                                dc_id, ac_id, need_dc, need_ac
-                            )
-                            for by in range(v):
-                                for bx in range(h):
-                                    coef = coefs[ci][
-                                        my * v + by, mx * h + bx
-                                    ]
-                                    if not progressive:
-                                        _jpeg_decode_block_seq(
-                                            reader, coef, dct, act,
-                                            dc_pred, ci,
-                                        )
-                                    elif ah == 0:
-                                        s = _jpeg_decode_sym(
-                                            reader, dct
-                                        )
-                                        dc_pred[ci] += _jpeg_extend(
-                                            reader.bits(s), s
-                                        )
-                                        coef[0] = dc_pred[ci] << al
-                                    elif reader.bits(1):
-                                        coef[0] = int(coef[0]) | (
-                                            1 << al
-                                        )
-                        mcu_count += 1
-            n_scans += 1
-            # resume marker parsing after the entropy segment
-            pos = reader._pos
-            continue
-        pos += seglen
-    if frame is None or coefs is None or n_scans == 0:
-        raise ValueError("JPEG missing SOF/SOS")
-    if not saw_eoi:
-        # a progressive PREFIX is renderable by design, but the
-        # quarantine contract rejects truncated payloads loudly
-        raise ValueError("truncated JPEG: no EOI marker")
-
-    height, width, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    zz = _JPEG_ZIGZAG
-
-    # dequantize + un-zigzag + batched IDCT per component
-    A = _jpeg_idct_basis()
-    samples = []
-    for ci, (cid, h, v, tq_id) in enumerate(comps):
-        q = qt_latched.get(ci, qt.get(tq_id))
-        if q is None:
-            raise ValueError(f"JPEG missing quantization table {tq_id}")
-        deq = coefs[ci].astype(np.int64) * q[None, None, :]
-        by_n, bx_n, _ = deq.shape
-        nat = np.zeros((by_n, bx_n, 8, 8), dtype=np.float64)
-        for i in range(64):
-            r, c = zz[i]
-            nat[:, :, r, c] = deq[:, :, i]
-        p = np.einsum("ux,mnuv,vy->mnxy", A, nat, A)
-        plane = (
-            p.transpose(0, 2, 1, 3).reshape(by_n * 8, bx_n * 8)
-        )
-        plane = np.clip(np.floor(plane + 128.5), 0, 255).astype(np.int32)
-        # component resolution is ceil(width*h/hmax) x ceil(height*v/vmax)
-        cw = (width * h + hmax - 1) // hmax
-        ch = (height * v + vmax - 1) // vmax
-        plane = plane[:ch, :cw]
-        # upsample to full resolution by replication
-        if h != hmax or v != vmax:
-            if hmax % h or vmax % v:
-                raise ValueError(
-                    f"unsupported JPEG sampling ratio {h}x{v} vs "
-                    f"{hmax}x{vmax} (integer ratios only)"
-                )
-            plane = np.repeat(
-                np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1
-            )
-        samples.append(plane[:height, :width])
-
-    if len(samples) == 1:
-        g = samples[0].astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    y, cb, cr = samples
-    cb = cb - 128
-    cr = cr - 128
-    # full-range BT.601 in 16-bit fixed point (deterministic integer ops)
-    r = y + ((91881 * cr + 32768) >> 16)
-    g = y - ((22554 * cb + 46802 * cr + 32768) >> 16)
-    b = y + ((116130 * cb + 32768) >> 16)
-    rgb = np.stack(
-        [np.clip(r, 0, 255), np.clip(g, 0, 255), np.clip(b, 0, 255)],
-        axis=2,
-    ).astype(np.uint8)
-    return rgb
-
-
-def decode_jpeg_bytes(payload: bytes) -> tuple[int, int, list[float]]:
-    """JPEG → (width, height, FEATURE_DIM grid-luminance features): the
-    real decode feeding the SAME feature kernel as PPM/PNG/GIF, so a
-    pixel grid produces container-independent features (pinned in
-    tests)."""
-    rgb = jpeg_to_rgb(payload)
-    return (
-        rgb.shape[1],
-        rgb.shape[0],
-        _grid_luma_features(rgb.astype("int64"), 255),
-    )
-
-
-def jpeg_to_ppm(payload: bytes) -> bytes:
-    """Container transcode: JPEG in → equivalent P6 out, so JPEG assets
-    ride the existing REAL resize path (``resize_ppm_bytes``) like PNG
-    and GIF."""
-    rgb = jpeg_to_rgb(payload)
-    header = f"P6\n{rgb.shape[1]} {rgb.shape[0]}\n255\n".encode()
-    return header + rgb.tobytes()
-
-
 def _decode_any(payload: bytes):
-    """Container-sniffing dispatch: real WAV / PPM / PNG / GIF / JPEG
-    decode when the payload IS one of those containers; anything else is
+    """Container-sniffing dispatch: real WAV / PPM / PNG decode when
+    the payload IS one of those containers; anything else is
     QUARANTINED — ``(False, None, None, None)`` — rather than given
     fabricated features.  (Through r11 unrecognized payloads received
     deterministic sha256-derived stand-in features; that seam is
@@ -1850,7 +388,7 @@ def _decode_any(payload: bytes):
     known container but whose body is corrupt (truncated stream, bad
     header, unsupported profile) also quarantines instead of raising —
     one dirty scraped asset must not abort the Spark stage.  The
-    direct decoders (``decode_gif_bytes`` & co.) keep raising loudly
+    direct decoders (``decode_png_bytes`` & co.) keep raising loudly
     for callers who want the reason."""
     try:
         if is_wav(payload):
@@ -1859,13 +397,6 @@ def _decode_any(payload: bytes):
             return (True, *decode_ppm_bytes(payload))
         if is_png(payload):
             return (True, *decode_png_bytes(payload))
-        if is_gif(payload):
-            return (True, *decode_gif_bytes(payload))
-        if is_jpeg(payload):
-            return (True, *decode_jpeg_bytes(payload))
-        if is_webp(payload):
-            # lossless VP8L only — VP8/VP8X raise and quarantine here
-            return (True, *decode_webp_bytes(payload))
     except Exception:  # corrupt body behind a recognized magic
         pass
     return (False, None, None, None)
@@ -1874,7 +405,7 @@ def _decode_any(payload: bytes):
 def decode_image_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (asset_id, modality, payload) → decoded meta +
     features.  One output row per input row; Arrow-batched.  Recognized
-    containers (WAV/P6/PNG/GIF/JPEG) take their REAL decode path; anything
+    containers (WAV/P6/PNG) take their REAL decode path; anything
     else comes back with ``decode_ok = false`` and NULL width/height/
     features — the quarantine contract (no fabricated features)."""
     for pdf in batches:
@@ -1919,8 +450,8 @@ RESIZED_SCHEMA = T.StructType(
 def make_resize_kernel(target_w: int, target_h: int):
     """mapInPandas kernel factory: payload → payload at (target_w,
     target_h).  PPM payloads take the REAL box-average resampler
-    (``resize_ppm_bytes`` — a valid P6 comes back out); PNG and GIF
-    payloads transcode to P6 once and ride the same resampler.
+    (``resize_ppm_bytes`` — a valid P6 comes back out); PNG payloads
+    transcode to P6 once and ride the same resampler.
     Unrecognized containers come back QUARANTINED (``resize_ok =
     false``, NULL payload/width/height) — through r11 they received
     sha256-keyed stand-in bytes; that seam is retired.  The plumbing —
@@ -1938,12 +469,6 @@ def make_resize_kernel(target_w: int, target_h: int):
                 # P6: re-encoding to PNG would spend zlib time for no
                 # fidelity)
                 return resize_ppm_bytes(png_to_ppm(p), target_w, target_h)
-            if is_gif(p):
-                return resize_ppm_bytes(gif_to_ppm(p), target_w, target_h)
-            if is_jpeg(p):
-                return resize_ppm_bytes(jpeg_to_ppm(p), target_w, target_h)
-            if is_webp(p):
-                return resize_ppm_bytes(webp_to_ppm(p), target_w, target_h)
         except Exception:  # corrupt body behind a recognized magic
             pass
         return None
@@ -1989,15 +514,15 @@ FRAME_SCHEMA = T.StructType(
 
 #: Nominal frame rate for the concatenated-P6 stream container: raw P6
 #: carries no timing metadata, so frame timestamps are assigned at a
-#: fixed 25 fps (40 ms/frame) — documented, deterministic, and the
-#: convention a Y4M ``F25:1`` header would encode explicitly.
+#: fixed 25 fps (40 ms/frame) — documented and deterministic.
 _P6_STREAM_FPS = 25
 
 
 def demux_ppm_stream(payload: bytes) -> list[bytes]:
     """REAL pure-stdlib video demux: a concatenated-P6 stream (back-to-
-    back binary PPM images, the rawvideo analogue of Y4M without the
-    timing header) → one standalone, fully valid P6 payload per frame.
+    back binary PPM images, a rawvideo container without a timing
+    header) → one standalone, fully valid P6 payload per frame.  A
+    single P6 image is a 1-frame stream.
 
     Each frame is sliced off by parsing ITS OWN header (frames may
     differ in size/maxval/comments — the demuxer never assumes a
@@ -2025,371 +550,28 @@ def demux_ppm_stream(payload: bytes) -> list[bytes]:
     return frames
 
 
-def is_ppm_stream(payload: bytes) -> bool:
-    """A concatenated-P6 stream starts with a P6 frame (a single image
-    is a 1-frame stream)."""
-    return is_ppm(payload)
-
-
-def is_y4m(payload: bytes) -> bool:
-    """YUV4MPEG2 stream magic sniff."""
-    return payload.startswith(b"YUV4MPEG2 ")
-
-
-def demux_y4m(payload: bytes) -> tuple[int, int, list[bytes]]:
-    """REAL pure-stdlib+numpy Y4M video demux: a YUV4MPEG2 stream →
-    (fps_num, fps_den, [P6 frame payloads]).
-
-    The stream header carries true timing (``F<num>:<den>``) — unlike
-    the raw concatenated-P6 container — so frame timestamps are REAL
-    metadata, not a nominal convention.  Supported colorspaces: C420
-    family (chroma nearest-upsampled 2×2, the Y4M default) and C444;
-    anything else raises rather than decoding wrong colors.  Frames are
-    converted to 8-bit RGB P6 via the BT.601 limited-range integer
-    transform (the classic ``298·C + …  >> 8`` fixed-point form —
-    deterministic, no floats), so every emitted frame feeds the real
-    PPM decode/resize kernels like the P6-stream path.
-    """
-    import numpy as np
-
-    nl = payload.index(b"\n")
-    toks = payload[:nl].split(b" ")
-    if toks[0] != b"YUV4MPEG2":
-        raise ValueError("not a YUV4MPEG2 stream")
-    width = height = None
-    num, den = 25, 1
-    cs = b"420"
-    for t in toks[1:]:
-        if not t:
-            continue
-        tag, val = t[:1], t[1:]
-        if tag == b"W":
-            width = int(val)
-        elif tag == b"H":
-            height = int(val)
-        elif tag == b"F":
-            n, d = val.split(b":")
-            num, den = int(n), int(d)
-        elif tag == b"C":
-            cs = val
-    if width is None or height is None:
-        raise ValueError("Y4M header missing W or H")
-    if cs.startswith(b"420"):
-        if width % 2 or height % 2:
-            raise ValueError("C420 requires even dimensions")
-        chroma_w, chroma_h, upsample = width // 2, height // 2, True
-    elif cs.startswith(b"444"):
-        chroma_w, chroma_h, upsample = width, height, False
-    else:
-        raise ValueError(f"unsupported Y4M colorspace C{cs.decode()}")
-    frame_bytes = width * height + 2 * chroma_w * chroma_h
-
-    frames: list[bytes] = []
-    off = nl + 1
-    n = len(payload)
-    header = f"P6\n{width} {height}\n255\n".encode()
-    while off < n:
-        if not payload.startswith(b"FRAME", off):
-            raise ValueError(f"byte {off}: expected FRAME marker")
-        fe = payload.index(b"\n", off)
-        data0 = fe + 1
-        if data0 + frame_bytes > n:
-            raise ValueError(f"truncated Y4M frame at byte {off}")
-        y = np.frombuffer(payload, np.uint8, width * height, data0)
-        u = np.frombuffer(
-            payload, np.uint8, chroma_w * chroma_h, data0 + width * height
-        )
-        v = np.frombuffer(
-            payload,
-            np.uint8,
-            chroma_w * chroma_h,
-            data0 + width * height + chroma_w * chroma_h,
-        )
-        Y = y.reshape(height, width).astype(np.int32)
-        U = u.reshape(chroma_h, chroma_w).astype(np.int32)
-        V = v.reshape(chroma_h, chroma_w).astype(np.int32)
-        if upsample:
-            U = np.repeat(np.repeat(U, 2, axis=0), 2, axis=1)
-            V = np.repeat(np.repeat(V, 2, axis=0), 2, axis=1)
-        C, D, E = Y - 16, U - 128, V - 128
-        r = np.clip((298 * C + 409 * E + 128) >> 8, 0, 255)
-        g = np.clip((298 * C - 100 * D - 208 * E + 128) >> 8, 0, 255)
-        b = np.clip((298 * C + 516 * D + 128) >> 8, 0, 255)
-        rgb = np.stack([r, g, b], axis=-1).astype(np.uint8)
-        frames.append(header + rgb.tobytes())
-        off = data0 + frame_bytes
-    return num, den, frames
-
-
-#: T.81 Annex K.3 "typical" Huffman tables (K.3–K.6), as raw DHT
-#: segment payloads ``(Tc<<4|Th, BITS[16], HUFFVAL...)``.  MJPEG-in-AVI
-#: conventionally omits DHT from every frame and decoders supply these
-#: (the OpenDML convention ffmpeg and every hardware MJPEG encoder
-#: follow), so the AVI demuxer injects them into DHT-less frames before
-#: the shared JPEG decoder runs.  Transcribed from the spec here and
-#: INDEPENDENTLY in tests/test_multimodal_avi.py's encoder — a
-#: transcription error on either side fails the golden test.
-_JPEG_STD_HUFF: tuple[tuple[int, bytes, bytes], ...] = (
-    # (Tc<<4|Th, BITS, HUFFVAL)
-    (0x00,
-     bytes([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]),
-     bytes(range(12))),
-    (0x01,
-     bytes([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]),
-     bytes(range(12))),
-    (0x10,
-     bytes([0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125]),
-     bytes([
-         0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-         0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-         0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-         0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-         0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-         0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-         0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-         0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-         0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-         0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-         0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-         0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-         0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-         0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-         0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-         0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-         0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-         0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-         0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-         0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-         0xF9, 0xFA,
-     ])),
-    (0x11,
-     bytes([0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119]),
-     bytes([
-         0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-         0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-         0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-         0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-         0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-         0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-         0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-         0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-         0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-         0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-         0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-         0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-         0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-         0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-         0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-         0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-         0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-         0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-         0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-         0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-         0xF9, 0xFA,
-     ])),
-)
-
-
-def _std_dht_block(skip_slots: frozenset[int] = frozenset()) -> bytes:
-    import struct
-
-    out = bytearray()
-    for tcth, bits, vals in _JPEG_STD_HUFF:
-        if tcth in skip_slots:
-            continue
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-        out += bytes([tcth]) + bits + vals
-    return bytes(out)
-
-
-def ensure_jpeg_dht(payload: bytes) -> bytes:
-    """Inject the T.81 Annex K typical Huffman tables into a JPEG that
-    omits them (the MJPEG-in-AVI convention), immediately before the
-    first SOS.  Only the table SLOTS the frame does not define itself
-    are injected — a conforming DHT-less frame gets all four Annex-K
-    tables, a frame with a full DHT is returned unchanged, and a
-    nonstandard frame defining e.g. only DC tables gets just the
-    standard AC tables (its own tables always win their slot)."""
-    import struct
-
-    pos, n = 2, len(payload)
-    first_sos = None
-    defined: set[int] = set()
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment")
-        (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
-        if marker == 0xC4:
-            # one DHT segment may pack several tables: (Tc<<4|Th,
-            # BITS[16], sum(BITS) values) repeated to the segment end
-            t, seg_end = pos + 2, pos + seglen
-            while t < seg_end:
-                defined.add(payload[t])
-                t += 17 + sum(payload[t + 1 : t + 17])
-        if marker == 0xDA:
-            first_sos = pos - 2
-            break
-        pos += seglen
-    if first_sos is None:
-        raise ValueError("JPEG missing SOS")
-    block = _std_dht_block(frozenset(defined))
-    if not block:  # every standard slot already defined by the frame
-        return payload
-    return payload[:first_sos] + block + payload[first_sos:]
-
-
-def is_avi(payload: bytes) -> bool:
-    """RIFF/AVI signature sniff."""
-    return payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
-
-
-def demux_avi(payload: bytes) -> list[tuple[int, bytes]]:
-    """REAL pure-stdlib AVI (RIFF) demux for MJPEG video streams →
-    ``[(ts_ms, p6_bytes), ...]`` — the first genuinely COMPRESSED
-    general-purpose video container on the real-decode list (Y4M and
-    P6 streams are raw; GIF is an image format moonlighting).
-
-    Walks the RIFF chunk tree: ``hdrl``'s ``avih`` supplies the real
-    per-frame timing (dwMicroSecPerFrame), ``strl``/``strh`` must
-    declare a ``vids``/MJPG stream (anything else rejects loudly —
-    no silent misdecode of DV/rawvideo payloads), and the ``movi``
-    list's ``..dc``/``..db`` chunks are standalone JPEG frames
-    (``rec `` sub-lists are descended).  Frames ride the shared
-    :func:`jpeg_to_rgb` decoder; DHT-less frames (the dominant
-    real-world MJPEG form) get the Annex K typical tables via
-    :func:`ensure_jpeg_dht` first.  Word alignment (odd-size chunk
-    padding) per the RIFF spec.
-    """
-    import struct
-
-    import numpy as np
-
-    if not is_avi(payload):
-        raise ValueError("not an AVI payload")
-    n = len(payload)
-
-    usec_per_frame: int | None = None
-    # AVI streams are numbered by strl order in hdrl; data chunks carry
-    # that number as their two-digit prefix.  Track which stream is the
-    # MJPG video so an audio (or second video) stream's '##dc'/'##db'
-    # chunks can never interleave into the frame timeline.
-    stream_count = 0
-    vids_stream: int | None = None
-    frames_jpeg: list[bytes] = []
-
-    def _walk(start: int, end: int) -> None:
-        nonlocal usec_per_frame, stream_count, vids_stream
-        pos = start
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body0, body1 = pos + 8, pos + 8 + size
-            if body1 > end:
-                raise ValueError("truncated AVI chunk")
-            if cid == b"LIST":
-                ltype = payload[body0 : body0 + 4]
-                if ltype in (b"hdrl", b"strl", b"movi", b"rec "):
-                    _walk(body0 + 4, body1)
-                # other lists (odml, INFO) are metadata — skipped
-            elif cid == b"avih":
-                (usec_per_frame,) = struct.unpack(
-                    "<I", payload[body0 : body0 + 4]
-                )
-            elif cid == b"strh":
-                fcc_type = payload[body0 : body0 + 4]
-                fcc_handler = payload[body0 + 4 : body0 + 8]
-                if fcc_type == b"vids":
-                    if vids_stream is not None:
-                        raise ValueError(
-                            "multiple AVI video streams (one timeline "
-                            "per file; demux each stream separately)"
-                        )
-                    if fcc_handler.upper() not in (b"MJPG", b"\x00\x00\x00\x00"):
-                        raise ValueError(
-                            "unsupported AVI video codec "
-                            f"{fcc_handler!r} (MJPG only)"
-                        )
-                    vids_stream = stream_count
-                stream_count += 1
-            elif (
-                cid[2:4] in (b"dc", b"db")
-                and cid[:2].isdigit()
-                and vids_stream is not None
-                and int(cid[:2]) == vids_stream
-            ):
-                frames_jpeg.append(payload[body0:body1])
-            pos = body1 + (size & 1)  # RIFF word alignment
-
-    (riff_size,) = struct.unpack("<I", payload[4:8])
-    _walk(12, min(8 + riff_size, n))
-    if usec_per_frame is None or vids_stream is None:
-        raise ValueError("AVI missing avih header or vids/MJPG stream")
-    if not frames_jpeg:
-        raise ValueError("AVI movi list has no video frames")
-
-    out: list[tuple[int, bytes]] = []
-    for i, jp in enumerate(frames_jpeg):
-        rgb = jpeg_to_rgb(ensure_jpeg_dht(bytes(jp)))
-        header = f"P6\n{rgb.shape[1]} {rgb.shape[0]}\n255\n".encode()
-        out.append(
-            (i * int(usec_per_frame) // 1000,
-             header + np.ascontiguousarray(rgb).tobytes())
-        )
-    return out
-
-
 def sample_frames_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: one VIDEO row → N frame rows (row-expanding).
 
-    FOUR real demux paths: Y4M (``demux_y4m``, true F<num>:<den>
-    header timing), concatenated-P6 streams (``demux_ppm_stream``,
-    nominal 25 fps), animated GIF (``demux_gif``, LZW-compressed
-    frames with REAL per-frame GCE delays), and AVI/MJPEG
-    (``demux_avi``, r15: RIFF walk + per-frame JPEG decode at real
-    avih timing, Annex-K table injection for DHT-less frames) — every
-    emitted frame is a standalone valid P6 directly consumable by the
-    real decode/resize kernels.  Unrecognized containers (mp4 & friends — no ffmpeg in
-    this environment) emit ONE quarantine row (``demux_ok = false``,
-    NULL frame_idx/ts/frame) instead of the pre-r12 sha256 fake frames:
-    bad assets stay visible downstream, synthetic frames never flow.
-    The 1→N bookkeeping and bounded-memory batch discipline (frames for
-    ONE batch of inputs in memory at a time) are identical on every
-    path, which is exactly why a PyAV iterator drops in per format.
+    One real demux path: concatenated-P6 streams (``demux_ppm_stream``,
+    nominal 25 fps) — every emitted frame is a standalone valid P6
+    directly consumable by the real decode/resize kernels.  Any other
+    container emits ONE quarantine row (``demux_ok = false``, NULL
+    frame_idx/ts/frame) instead of the pre-r12 sha256 fake frames: bad
+    assets stay visible downstream, synthetic frames never flow.  The
+    1→N bookkeeping and bounded-memory batch discipline (frames for ONE
+    batch of inputs in memory at a time) are identical on every path,
+    which is exactly why a PyAV iterator drops in per format.
     """
     def _demux_one(raw: bytes):
         """[(frame_idx, ts_ms, p6_bytes), ...] for one asset, or None to
         quarantine — fully demuxed before anything is emitted, so a
         corrupt container can never leave partial frames behind."""
         try:
-            if is_y4m(raw):
-                num, den, fr = demux_y4m(raw)
-                # true container timing: i / (num/den) seconds
-                return [
-                    (i, i * 1000 * den // num, f) for i, f in enumerate(fr)
-                ]
-            if is_ppm_stream(raw):
+            if is_ppm(raw):
                 return [
                     (i, i * 1000 // _P6_STREAM_FPS, f)
                     for i, f in enumerate(demux_ppm_stream(raw))
-                ]
-            if is_gif(raw):
-                return [
-                    (i, ts, f) for i, (ts, f) in enumerate(demux_gif(raw))
-                ]
-            if is_avi(raw):
-                return [
-                    (i, ts, f) for i, (ts, f) in enumerate(demux_avi(raw))
                 ]
         except Exception:  # corrupt body behind a recognized magic
             pass

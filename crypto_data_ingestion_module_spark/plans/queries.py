@@ -670,9 +670,8 @@ FROM sess GROUP BY user_id, sid
 # A1+T3 applyInPandasWithState candle builder, oracle-paired (r16,
 # VERDICT r15 item 2): the custom stateful operator
 # (streaming/stateful.py candles_from_ticks, pytest-only through r15 —
-# the last stateful operator with a pairable path and no driver row;
-# its transformWithState twin stays protobuf-gated, COVERAGE.md) gets a
-# driver receipt via the stream_sessions_30m recipe: availableNow drain
+# the last stateful operator with a pairable path and no driver row)
+# gets a driver receipt via the stream_sessions_30m recipe: availableNow drain
 # over TWO TIME-DISJOINT ascending halves (split at the epoch-ms
 # midpoint, so batch i's min ts >= the watermark carried out of batch
 # i-1 and no real tick is ever late) plus a far-future sentinel tick
@@ -2901,8 +2900,7 @@ _register(
 # dedup_clusters stays a measured HEADLINE row in every bench).  With
 # this row the r15 streaming-receipt program closes COMPLETELY: every
 # foreachBatch module holds a paired driver row; only the wall-clock
-# live loop (not oracle-pairable by nature) and the protobuf-gated
-# transformWithState builder (COVERAGE.md residue) remain outside.
+# live loop (not oracle-pairable by nature) remains outside.
 # Third r15 addendum: stream_frequent_tokens (streaming Misra-Gries
 # partial maintenance + exact serving — the telescoped MG bound makes
 # the streamed survivor union complete for any batch split, so the

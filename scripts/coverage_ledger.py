@@ -156,28 +156,6 @@ def render() -> str:
         "  `value_quantiles_exact` and `value_deciles` are",
         "  oracle-paired (the latter in the current window).",
         "",
-        "## API-surface residue (VERDICT r14 item 5)",
-        "",
-        "- `streaming/stateful_tws.py` (`transformWithStateInPandas`",
-        "  tick→candle builder) has NO driver-facing row and cannot get",
-        "  one in this environment: the TWS Python state-server wire",
-        "  protocol requires `protobuf`, which is not installed in the",
-        "  container (and installs are out of contract), so any",
-        "  registered row would error in the driver itself — verified:",
-        "  `tests/test_pipelines_streaming.py::test_stateful_candle_",
-        "  builder_tws` is the suite's one standing skip",
-        "  (`pytest.importorskip('google.protobuf')`).  The SEMANTICS the",
-        "  module implements are fully receipted elsewhere: the",
-        "  `applyInPandasWithState` twin (`streaming/stateful.py`,",
-        "  identical contract — exactly-once bucket finalization,",
-        "  event-time close, late-tick fold-in) is pytest-pinned on the",
-        "  same fixture, and the stateful-streaming DISCIPLINE holds",
-        "  oracle-paired driver receipts via `stream_sessions_30m`",
-        "  (session_window state operator) and `stream_rollup_1h`.  The",
-        "  TWS module itself is golden-tested wherever protobuf exists",
-        "  (the test runs, not skips, on a full pyspark[connect] install)",
-        "  and carries deployment notes for the RocksDB provider swap.",
-        "",
     ]
     return "\n".join(lines)
 

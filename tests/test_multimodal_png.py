@@ -18,6 +18,7 @@ import pytest
 
 from crypto_data_ingestion_module_spark.operators.multimodal import (
     FEATURE_DIM,
+    _decode_any,
     decode_png_bytes,
     decode_ppm_bytes,
     is_png,
@@ -47,9 +48,8 @@ def _paeth(a, b, c):
 
 
 def _filter_scanlines(pixel_rows, bpp, filters):
-    """Filter one (sub-)image's scanlines with plain byte loops; the
-    previous-row context starts at zeros (each Adam7 pass filters
-    independently, exactly like a standalone image)."""
+    """Filter an image's scanlines with plain byte loops; the
+    previous-row context starts at zeros."""
     raw = bytearray()
     for y, ft in enumerate(filters):
         cur = pixel_rows[y]
@@ -81,8 +81,8 @@ def _flat_rows(pixels):
     ]
 
 
-def _assemble_png(raw, w, h, color_type, palette, interlace=0, depth=8):
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
+def _assemble_png(raw, w, h, color_type, palette):
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
     out = b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", ihdr)
     if palette is not None:
         out += _chunk(b"PLTE", bytes(c for rgb in palette for c in rgb))
@@ -100,77 +100,6 @@ def _encode_png(pixels, color_type, filters, palette=None):
     h, w = len(pixels), len(pixels[0])
     raw = _filter_scanlines(_flat_rows(pixels), channels, filters)
     return _assemble_png(raw, w, h, color_type, palette)
-
-
-#: Adam7 pass grid, spelled independently of the decoder (spec §8.2)
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _encode_png_adam7(pixels, color_type, palette=None):
-    """Independent Adam7 writer: extract each pass's sub-image, filter
-    it standalone (filter types cycle 0→4 across ALL emitted scanlines
-    so every filter appears inside passes), concatenate, set the IHDR
-    interlace flag."""
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    h, w = len(pixels), len(pixels[0])
-    raw = bytearray()
-    next_ft = 0
-    for x0, y0, xs, ys in _ADAM7:
-        sub = [row[x0::xs] for row in pixels[y0::ys]]
-        if not sub or not sub[0]:
-            continue  # empty pass emits nothing
-        filters = []
-        for _ in sub:
-            filters.append(next_ft % 5)
-            next_ft += 1
-        raw += _filter_scanlines(_flat_rows(sub), channels, filters)
-    return _assemble_png(raw, w, h, color_type, palette, interlace=1)
-
-
-def _flat_rows16(pixels):
-    """Flatten 16-bit sample tuples into big-endian BYTE rows."""
-    return [
-        [
-            b
-            for px in row
-            for s in (px if isinstance(px, tuple) else (px,))
-            for b in ((s >> 8) & 0xFF, s & 0xFF)
-        ]
-        for row in pixels
-    ]
-
-
-def _encode_png16(pixels, color_type, filters, interlace=False):
-    """Independent 16-bit writer: big-endian sample pairs, filters
-    applied at the 2-byte-per-sample pixel offset (spec §9)."""
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    bpp = channels * 2
-    h, w = len(pixels), len(pixels[0])
-    if not interlace:
-        raw = _filter_scanlines(_flat_rows16(pixels), bpp, filters)
-        return _assemble_png(raw, w, h, color_type, None, depth=16)
-    raw = bytearray()
-    next_ft = 0
-    for x0, y0, xs, ys in _ADAM7:
-        sub = [row[x0::xs] for row in pixels[y0::ys]]
-        if not sub or not sub[0]:
-            continue
-        fts = []
-        for _ in sub:
-            fts.append(next_ft % 5)
-            next_ft += 1
-        raw += _filter_scanlines(_flat_rows16(sub), bpp, fts)
-    return _assemble_png(
-        raw, w, h, color_type, None, interlace=1, depth=16
-    )
 
 
 def _gradient_rgb(w, h):
@@ -246,162 +175,63 @@ def test_gray_alpha_and_palette_color_types():
     ] == [[palette[i] for i in row] for row in idx]
 
 
-def test_adam7_interlaced_equals_progressive_free_decode():
-    """Adam7 (r15, VERDICT r14 item 4): the interlaced file's decode
-    must equal the plain encoding of the same pixels, pixel-for-pixel
-    and feature-for-feature — odd dimensions so every pass is partial
-    and pass 7 covers a different row count than pass 5."""
-    pixels = _gradient_rgb(13, 11)
-    plain = _encode_png(pixels, 2, [(y % 5) for y in range(11)])
-    lace = _encode_png_adam7(pixels, 2)
-    assert lace[16 + 12] == 1  # IHDR interlace flag actually set
-    got, want = png_to_rgb(lace), png_to_rgb(plain)
-    assert got.shape == want.shape == (11, 13, 3)
-    assert (got == want).all()
-    assert decode_png_bytes(lace) == decode_png_bytes(plain)
-
-
-def test_adam7_small_images_skip_empty_passes():
-    """Images smaller than the pass grid leave several passes empty
-    (zero scanlines, spec §8.2): 1x1 keeps only pass 1; 3x2 keeps
-    passes 1, 6 (x=1 column) and 7 (row 1)."""
-    for w, h in ((1, 1), (3, 2), (2, 3), (5, 5), (8, 8), (9, 9)):
-        pixels = _gradient_rgb(w, h)
-        lace = _encode_png_adam7(pixels, 2)
-        got = png_to_rgb(lace)
-        assert got.shape == (h, w, 3), (w, h)
-        assert [
-            [tuple(int(c) for c in got[y, x]) for x in range(w)]
-            for y in range(h)
-        ] == pixels, (w, h)
-
-
-def test_adam7_other_color_types():
-    """Interlace composes with the color-type expansions: palette
-    indices resolve through PLTE per pass; gray+alpha drops alpha."""
-    palette = [(250, 10, 5), (0, 128, 255), (77, 77, 77), (1, 2, 3)]
-    idx = [[(x * 3 + y) % 4 for x in range(10)] for y in range(9)]
-    rgb3 = png_to_rgb(
-        _encode_png_adam7([[(i,) for i in row] for row in idx], 3, palette)
-    )
-    assert [
-        [tuple(int(c) for c in rgb3[y, x]) for x in range(10)]
-        for y in range(9)
-    ] == [[palette[i] for i in row] for row in idx]
-
-    gray = [[(x * 25 + y) % 256 for x in range(10)] for y in range(9)]
-    ga = [[(g, 128 + g % 100) for g in row] for row in gray]
-    rgb4 = png_to_rgb(_encode_png_adam7(ga, 4))
-    assert [
-        [int(rgb4[y, x, 0]) for x in range(10)] for y in range(9)
-    ] == gray
-
-
-def test_adam7_truncated_or_padded_raster_rejects():
-    """Quarantine contract: an interlaced raster that isn't exactly
-    the seven passes is corrupt — reject, don't render a prefix."""
-    pixels = _gradient_rgb(9, 9)
-    lace = _encode_png_adam7(pixels, 2)
-
-    def _rebuild(raw_mutator):
-        import zlib as _z
-
-        # strip chunks, re-assemble with a mutated raster
-        raw = bytearray(_z.decompress(_idat_bytes(lace)))
-        return _assemble_png(raw_mutator(raw), 9, 9, 2, None, interlace=1)
-
-    def _idat_bytes(png):
-        pos, out = 8, bytearray()
-        while pos + 8 <= len(png):
-            (length,) = struct.unpack(">I", png[pos : pos + 4])
-            if png[pos + 4 : pos + 8] == b"IDAT":
-                out += png[pos + 8 : pos + 8 + length]
-            pos += 12 + length
-        return bytes(out)
-
-    with pytest.raises(ValueError):
-        png_to_rgb(_rebuild(lambda r: r[:-7]))  # truncated
-    with pytest.raises(ValueError, match="mismatch"):
-        png_to_rgb(_rebuild(lambda r: r + b"\x00\x00"))  # padded
-
-
-def test_16bit_depth_reduces_to_high_byte():
-    """16-bit PNG (r15): filters run at the 2-byte pixel offset; the
-    decoded image is the big-endian HIGH byte of every sample (libpng
-    strip-16 semantics) — pinned by packing a known 8-bit gradient
-    into the high bytes and junk into the low bytes."""
-    hi = _gradient_rgb(9, 10)
-    pixels16 = [
-        [
-            tuple((c << 8) | ((x * 31 + y * 7 + c) % 256) for c in px)
-            for x, px in enumerate(row)
-        ]
-        for y, row in enumerate(hi)
-    ]
-    png = _encode_png16(pixels16, 2, [0, 1, 2, 3, 4, 4, 3, 2, 1, 0])
-    rgb = png_to_rgb(png)
-    assert rgb.shape == (10, 9, 3)
-    assert [
-        [tuple(int(c) for c in rgb[y, x]) for x in range(9)]
-        for y in range(10)
-    ] == hi
-
-    # gray and gray+alpha at depth 16
-    gray = [[(x * 25 + y) % 256 for x in range(6)] for y in range(5)]
-    g16 = [[((g << 8) | 0xAB,) for g in row] for row in gray]
-    rgb0 = png_to_rgb(_encode_png16(g16, 0, [0, 1, 2, 3, 4]))
-    assert [[int(rgb0[y, x, 0]) for x in range(6)] for y in range(5)] == gray
-    ga16 = [[((g << 8) | 1, 0xFFFF) for g in row] for row in gray]
-    rgb4 = png_to_rgb(_encode_png16(ga16, 4, [4, 3, 2, 1, 0]))
-    assert [[int(rgb4[y, x, 0]) for x in range(6)] for y in range(5)] == gray
-
-
-def test_16bit_adam7_composes():
-    """Depth 16 and Adam7 together: the two orthogonal axes share the
-    byte-level filter kernel, so the interlaced 16-bit decode equals
-    the plain 8-bit decode of the high bytes."""
-    hi = _gradient_rgb(11, 7)
-    pixels16 = [
-        [tuple((c << 8) | 0x5A for c in px) for px in row] for row in hi
-    ]
-    lace16 = _encode_png16(pixels16, 2, None, interlace=True)
-    plain8 = _encode_png(hi, 2, [(y % 5) for y in range(7)])
-    assert (png_to_rgb(lace16) == png_to_rgb(plain8)).all()
-    assert decode_png_bytes(lace16) == decode_png_bytes(plain8)
-
-
-def test_16bit_palette_rejects():
-    """Spec §11.2.2: palette images allow depths 1/2/4/8 only."""
-    palette = [(1, 2, 3), (4, 5, 6)]
-    idx = [[(i % 2,) for i in range(4)] for _ in range(4)]
-    png = bytearray(_encode_png(idx, 3, [0, 0, 0, 0], palette))
-    png[16 + 8] = 16  # depth byte
-    with pytest.raises(ValueError, match="palette"):
-        png_to_rgb(bytes(png))
-
-
 def test_unsupported_profiles_reject_loudly():
     pixels = _gradient_rgb(4, 4)
-    png = bytearray(_encode_png(pixels, 2, [0, 0, 0, 0]))
-    # flip IHDR interlace byte (offset: 8 sig + 8 hdr + 12 = byte 28)
-    assert png[16 + 12] == 0  # interlace field of IHDR
-    png[16 + 12] = 1
-    # a NON-interlaced raster under an interlace flag is corrupt: the
-    # pass walk must reject it (length mismatch or bad filter), never
-    # render garbage
-    with pytest.raises(ValueError):
-        png_to_rgb(bytes(png))
-    with pytest.raises(ValueError, match="interlace"):
-        bad_lace = bytearray(_encode_png(pixels, 2, [0, 0, 0, 0]))
-        bad_lace[16 + 12] = 7  # undefined interlace method
-        png_to_rgb(bytes(bad_lace))
-    with pytest.raises(ValueError, match="bit depth"):
-        bad_depth = bytearray(_encode_png(pixels, 2, [0, 0, 0, 0]))
-        bad_depth[16 + 8] = 4  # sub-byte depths stay quarantined
-        png_to_rgb(bytes(bad_depth))
+    png = _encode_png(pixels, 2, [0, 0, 0, 0])
+    # IHDR field offsets: 8 sig + 8 chunk header, then depth at +8 and
+    # interlace at +12
+    assert png[16 + 8] == 8 and png[16 + 12] == 0
+    for offset, value, reason in (
+        (12, 1, "interlace"),  # Adam7 is not decoded
+        (12, 7, "interlace"),  # undefined interlace method
+        (8, 16, "bit depth"),  # 16-bit samples are not decoded
+        (8, 4, "bit depth"),   # nor sub-byte depths
+    ):
+        bad = bytearray(png)
+        bad[16 + offset] = value
+        with pytest.raises(ValueError, match=reason):
+            png_to_rgb(bytes(bad))
     with pytest.raises(ValueError):
         png_to_rgb(b"\x89PNG\r\n\x1a\nnot-a-chunk")
     assert not is_png(b"P6\n1 1\n255\n\x00\x00\x00")
+
+
+def test_raster_length_must_match_ihdr():
+    """Quarantine contract: a raster that isn't exactly the
+    ``height * (width * bpp + 1)`` bytes IHDR declares is corrupt —
+    truncated or padded, it rejects instead of rendering a prefix, and
+    a zero width or height rejects too."""
+    raw = _filter_scanlines(_flat_rows(_gradient_rgb(9, 9)), 3, [0] * 9)
+    assert png_to_rgb(_assemble_png(raw, 9, 9, 2, None)).shape == (9, 9, 3)
+    with pytest.raises(ValueError, match="mismatch"):
+        png_to_rgb(_assemble_png(raw[:-7], 9, 9, 2, None))  # truncated
+    with pytest.raises(ValueError, match="mismatch"):
+        png_to_rgb(_assemble_png(raw + b"\x00\x00", 9, 9, 2, None))  # padded
+    for w, h in ((0, 9), (9, 0)):
+        with pytest.raises(ValueError, match="dimensions"):
+            png_to_rgb(_assemble_png(b"", w, h, 2, None))
+    ok, width, height, feats = _decode_any(
+        _assemble_png(raw + b"\x00", 9, 9, 2, None)
+    )
+    assert (ok, width, height, feats) == (False, None, None, None)
+
+
+def test_inflate_is_bounded_by_the_declared_raster():
+    """A 1x1 IHDR over an 8 MB zero raster (an 8 KB file) is rejected
+    after inflating at most one byte past the 4-byte raster, so the
+    decode never allocates the bomb's full output."""
+    import tracemalloc
+
+    bomb = _assemble_png(bytes(8 << 20), 1, 1, 2, None)
+    assert len(bomb) < 16 << 10
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="mismatch"):
+            png_to_rgb(bomb)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
 
 
 def test_decode_assets_dispatches_png(spark):

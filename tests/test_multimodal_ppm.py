@@ -12,10 +12,10 @@ share no code.
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.multimodal import (
     FEATURE_DIM,
+    _decode_any,
     decode_assets,
     decode_ppm_bytes,
     is_ppm,
@@ -139,3 +139,15 @@ def test_ppm_decode_end_to_end_through_spark_plumbing(spark):
     )
     resized = resize_assets(assets, 3, 2).collect()[0]
     assert bytes(resized["payload"]) == resize_ppm_bytes(payload, 3, 2)
+
+
+@pytest.mark.parametrize("width", [b"-1", b"0", b"+2"])
+def test_header_rejects_signed_and_non_positive_dimensions(width):
+    """Header tokens are plain ASCII digits and dimensions are at least
+    1: a signed or zero width never yields fabricated output."""
+    payload = b"P6 " + width + b" 1 255\n" + bytes(30)
+    with pytest.raises(ValueError):
+        decode_ppm_bytes(payload)
+    with pytest.raises(ValueError):
+        resize_ppm_bytes(payload, 2, 2)
+    assert _decode_any(payload) == (False, None, None, None)

@@ -13,7 +13,6 @@ independent stdlib-only parser, so kernel and oracle share no code.
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.multimodal import (
     decode_ppm_bytes,
@@ -106,97 +105,3 @@ def test_single_image_is_a_one_frame_stream(spark):
     assert len(rows) == 1
     assert rows[0]["frame_idx"] == 0 and rows[0]["ts_ms"] == 0
     assert bytes(rows[0]["frame"]) == bytes(single)
-
-
-Y4M = os.path.join(DATA, "golden_2f_ntsc.y4m")
-
-
-def _oracle_y4m_rgb(payload):
-    """Independent pure-stdlib Y4M decode: byte loops, no numpy —
-    returns (num, den, [[(r,g,b) row-major] per frame])."""
-    nl = payload.index(b"\n")
-    hdr = payload[:nl].split(b" ")
-    w = h = None
-    num, den = 25, 1
-    for t in hdr[1:]:
-        if t[:1] == b"W":
-            w = int(t[1:])
-        elif t[:1] == b"H":
-            h = int(t[1:])
-        elif t[:1] == b"F":
-            a, b = t[1:].split(b":")
-            num, den = int(a), int(b)
-    cw, ch = w // 2, h // 2
-    frames, off = [], nl + 1
-
-    def clamp(x):
-        return 0 if x < 0 else (255 if x > 255 else x)
-
-    while off < len(payload):
-        assert payload.startswith(b"FRAME", off)
-        data0 = payload.index(b"\n", off) + 1
-        ybytes = payload[data0 : data0 + w * h]
-        ubytes = payload[data0 + w * h : data0 + w * h + cw * ch]
-        vbytes = payload[data0 + w * h + cw * ch : data0 + w * h + 2 * cw * ch]
-        px = []
-        for yy in range(h):
-            for xx in range(w):
-                Y = ybytes[yy * w + xx]
-                U = ubytes[(yy // 2) * cw + (xx // 2)]
-                V = vbytes[(yy // 2) * cw + (xx // 2)]
-                C, D, E = Y - 16, U - 128, V - 128
-                px.append(
-                    (
-                        clamp((298 * C + 409 * E + 128) >> 8),
-                        clamp((298 * C - 100 * D - 208 * E + 128) >> 8),
-                        clamp((298 * C + 516 * D + 128) >> 8),
-                    )
-                )
-        frames.append(px)
-        off = data0 + w * h + 2 * cw * ch
-    return num, den, frames
-
-
-def test_y4m_demux_matches_independent_oracle():
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        demux_y4m,
-    )
-
-    payload = open(Y4M, "rb").read()
-    onum, oden, oframes = _oracle_y4m_rgb(payload)
-    num, den, frames = demux_y4m(payload)
-    assert (num, den) == (onum, oden) == (30000, 1001)
-    assert len(frames) == 2
-    for got, want in zip(frames, oframes):
-        assert is_ppm(got)
-        # raster bytes match the byte-loop oracle pixel for pixel
-        hdr_end = got.index(b"255\n") + 4
-        raster = got[hdr_end:]
-        assert list(raster) == [v for p in want for v in p]
-        # and the emitted frame is consumable by the real image decoder
-        assert decode_ppm_bytes(got)[:2] == (6, 4)
-
-
-def test_y4m_sample_frames_uses_true_container_timing(spark):
-    payload = open(Y4M, "rb").read()
-    assets = spark.createDataFrame(
-        [(9, "video", bytearray(payload))],
-        "asset_id long, modality string, payload binary",
-    )
-    rows = sample_frames(assets).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in rows] == [0, 1]
-    # NTSC 30000/1001 fps: frame 1 at 1*1000*1001//30000 = 33 ms
-    assert [r["ts_ms"] for r in rows] == [0, 33]
-
-
-def test_y4m_rejects_unsupported_colorspace_and_truncation():
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        demux_y4m,
-    )
-
-    payload = open(Y4M, "rb").read()
-    with pytest.raises(ValueError, match="truncated"):
-        demux_y4m(payload[:-3])
-    bad = payload.replace(b"C420jpeg", b"C422tool", 1)
-    with pytest.raises(ValueError, match="unsupported"):
-        demux_y4m(bad)

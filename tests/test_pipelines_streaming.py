@@ -6,8 +6,6 @@ import datetime as dt
 import glob
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.pipelines import backfill
@@ -419,66 +417,6 @@ def test_stateful_candle_late_tick_does_not_overwrite_close(spark, tmp_path):
     r = {x.bucket_ts: x for x in spark.sql("SELECT * FROM late_close").collect()}[m0]
     assert r.close == 110.0, f"late tick overwrote close: {r.close}"
     assert (r.low, r.open, r.n_ticks) == (90.0, 100.0, 3)
-
-
-def test_stateful_candle_builder_tws(spark, tmp_path):
-    """transformWithStateInPandas variant: same exactly-once bucket
-    finalization AND event-time close semantics as the
-    applyInPandasWithState builder, via explicit event-time timers.
-
-    Runtime requires protobuf (the TWS state-server wire protocol);
-    skipped where pyspark's optional deps aren't installed."""
-    import time as _time
-
-    pytest.importorskip("google.protobuf")
-
-    from crypto_data_ingestion_module_spark.streaming.stateful_tws import (
-        candles_from_ticks_tws,
-    )
-
-    src = str(tmp_path / "ticks")
-    os.makedirs(src)
-    ddl = "symbol string, ts timestamp, price double, qty double, tick_id long"
-    m0 = dt.datetime(2024, 1, 1, 0, 0)
-
-    def write(rows):
-        spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(src)
-
-    write([("BTC", m0 + dt.timedelta(seconds=5), 10.0, 1.0, 1),
-           ("BTC", m0 + dt.timedelta(seconds=50), 12.0, 2.0, 2)])
-    write([("BTC", m0 + dt.timedelta(seconds=20), 9.0, 1.0, 3)])  # late arrival
-    write([("BTC", m0 + dt.timedelta(minutes=10), 99.0, 1.0, 4)])  # wm jump
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ticks = (
-            spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            candles_from_ticks_tws(ticks, interval_ms=60_000, lateness="10 seconds")
-            .writeStream.format("memory").queryName("tws_candles")
-            .outputMode("append").trigger(processingTime="1 second")
-            .option("checkpointLocation", str(tmp_path / "ck")).start()
-        )
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.sql("SELECT count(*) c FROM tws_candles").first().c >= 1:
-                break
-            _time.sleep(1)
-        q.stop()
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql("SELECT * FROM tws_candles").collect()
-    assert len(rows) >= 1, "no candle finalized"
-    r = {x.bucket_ts: x for x in rows}[m0]
-    # late tick (9.0 @ :20) folded in as LOW but must not become close
-    assert (r.open, r.high, r.low, r.close) == (10.0, 12.0, 9.0, 12.0)
-    assert r.volume == 4.0 and r.n_ticks == 3
 
 
 def test_stream_stream_spread_join(spark, tmp_path):

@@ -405,32 +405,3 @@ def test_p6_stream_demux_roundtrip(shapes, rnd):
         for (w, h, mv) in shapes
     ]
     assert demux_ppm_stream(b"".join(frames)) == frames
-
-
-@given(
-    st.integers(1, 4),   # half-width -> even W
-    st.integers(1, 3),   # half-height -> even H
-    st.integers(1, 4),   # n frames
-    st.integers(1, 60),  # fps num
-    st.integers(1, 3),   # fps den
-    st.randoms(use_true_random=False),
-)
-@settings(max_examples=40, deadline=None)
-def test_y4m_demux_frame_count_dims_and_timing(hw, hh, nf, num, den, rnd):
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_ppm_bytes,
-        demux_y4m,
-    )
-
-    w, h = 2 * hw, 2 * hh
-    fsz = w * h + 2 * (w // 2) * (h // 2)
-    frames = b"".join(
-        b"FRAME\n" + bytes(rnd.randrange(256) for _ in range(fsz))
-        for _ in range(nf)
-    )
-    payload = f"YUV4MPEG2 W{w} H{h} F{num}:{den} C420\n".encode() + frames
-    onum, oden, out = demux_y4m(payload)
-    assert (onum, oden) == (num, den)
-    assert len(out) == nf
-    # every emitted frame is a valid P6 at the stream's dimensions
-    assert all(decode_ppm_bytes(f)[:2] == (w, h) for f in out)

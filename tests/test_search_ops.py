@@ -227,46 +227,20 @@ def test_rrf_fuse_per_query_windows_independently(spark):
     assert set(by_q[2]) == {30, 40}
 
 
-def test_y4m_c444_colorspace(spark):
-    # C444: no chroma subsampling — planes are full-resolution
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_ppm_bytes,
-        demux_y4m,
-    )
-
-    w, h = 3, 2
-    yb = bytes(range(100, 100 + w * h))
-    ub = bytes([128] * (w * h))
-    vb = bytes([128] * (w * h))
-    payload = (
-        f"YUV4MPEG2 W{w} H{h} F25:1 C444\n".encode()
-        + b"FRAME\n" + yb + ub + vb
-    )
-    num, den, frames = demux_y4m(payload)
-    assert (num, den) == (25, 1) and len(frames) == 1
-    assert decode_ppm_bytes(frames[0])[:2] == (w, h)
-    # neutral chroma (128) means the BT.601 transform reduces to the
-    # luma ramp: R=G=B per pixel, monotone in Y
-    raster = frames[0][frames[0].index(b"255\n") + 4 :]
-    px = [tuple(raster[i * 3 : i * 3 + 3]) for i in range(w * h)]
-    assert all(r == g == b for (r, g, b) in px)
-    assert [p[0] for p in px] == sorted(p[0] for p in px)
-
-
 def test_mixed_container_batch(spark):
-    # one micro-batch holding a P6 stream, a Y4M, and an opaque payload —
-    # each takes its own path, all expansions land in one output
+    # one micro-batch holding a P6 stream, a single P6, and an opaque
+    # payload — each takes its own path, all expansions land in one output
     from crypto_data_ingestion_module_spark.operators.multimodal import (
         sample_frames,
     )
 
-    p6 = open(os.path.join(DATA_DIR, "golden_stream_3f.p6s"), "rb").read()
-    y4m = open(os.path.join(DATA_DIR, "golden_2f_ntsc.y4m"), "rb").read()
+    p6s = open(os.path.join(DATA_DIR, "golden_stream_3f.p6s"), "rb").read()
+    p6 = b"P6\n2 1\n255\n" + bytes(range(6))
     fake = b"\x00mp4ish" + bytes(range(48))
     assets = spark.createDataFrame(
         [
-            (1, "video", bytearray(p6)),
-            (2, "video", bytearray(y4m)),
+            (1, "video", bytearray(p6s)),
+            (2, "video", bytearray(p6)),
             (3, "video", bytearray(fake)),
         ],
         "asset_id long, modality string, payload binary",
@@ -275,12 +249,14 @@ def test_mixed_container_batch(spark):
     n = {}
     for r in rows:
         n[r["asset_id"]] = n.get(r["asset_id"], 0) + 1
-    assert n[1] == 3 and n[2] == 2 and n[3] == 1
+    assert n[1] == 3 and n[2] == 1 and n[3] == 1
     for r in rows:
         if r["asset_id"] == 3:  # quarantined, not faked (r12)
             assert r["demux_ok"] is False and r["frame"] is None
         else:
             assert r["demux_ok"] is True and r["frame"] is not None
+    single = [r for r in rows if r["asset_id"] == 2]
+    assert bytes(single[0]["frame"]) == p6 and single[0]["ts_ms"] == 0
 
 
 def test_retrieval_metrics_semantics(spark):
