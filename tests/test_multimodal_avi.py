@@ -1,269 +1,24 @@
-"""REAL AVI/MJPEG demux (r15, operators/multimodal.py demux_avi): the
-pure-stdlib RIFF walk + per-frame JPEG decode, pinned against an
-INDEPENDENTLY constructed AVI.
+"""AVI payloads have no demuxer in the engine: a valid AVI/MJPEG
+quarantines (``test_multimodal_quarantine``), and so must other codecs,
+multi-stream files and corrupt files behind the same RIFF/AVI magic."""
 
-The writer below lives in the TEST and shares no code with the
-demuxer: it assembles RIFF chunks (hdrl/avih, strl/strh/strf, movi)
-with struct, word-pads odd chunks by hand, and wraps frames produced
-by the independent test-side JPEG encoder.  The DHT-less tests encode
-with the TEST's own Annex-K table transcription
-(tests/test_multimodal_jpeg.py) while the demuxer injects the
-DECODER's transcription — a slip in either copy fails the golden
-comparison.
-"""
-
-import struct
-
-import pytest
-
-from crypto_data_ingestion_module_spark.operators.multimodal import (
-    demux_avi,
-    ensure_jpeg_dht,
-    is_avi,
-    jpeg_to_rgb,
+from tests.test_multimodal_quarantine import (
+    _avi_mjpeg,
+    _jpeg_8x8_gray,
+    assert_quarantined,
 )
-from tests.test_multimodal_jpeg import _encode_jpeg, _gradient
-
-
-def _chunk(cid: bytes, data: bytes) -> bytes:
-    pad = b"\x00" if len(data) & 1 else b""
-    return cid + struct.pack("<I", len(data)) + data + pad
-
-
-def _list(ltype: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", ltype + payload)
-
-
-def _encode_avi(jpeg_frames, w, h, usec_per_frame=40000,
-                handler=b"MJPG", rec_wrap=False):
-    """Independent minimal AVI writer: RIFF('AVI ') with hdrl(avih +
-    strl(strh vids/MJPG + strf BITMAPINFOHEADER)) and movi('00dc'
-    chunks).  ``rec_wrap=True`` nests the frames in a 'rec ' sub-list
-    (the interleave convention)."""
-    avih = struct.pack(
-        "<14I",
-        usec_per_frame, 0, 0, 0x10, len(jpeg_frames), 0, 1, 0, w, h,
-        0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + handler
-        + struct.pack("<IIIIIIIIII", 0, 0, 0, 1,
-                      1_000_000 // usec_per_frame or 1, 0,
-                      len(jpeg_frames), 0, 0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, w, h)
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0
-    )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
-    frames = b"".join(_chunk(b"00dc", f) for f in jpeg_frames)
-    movi = _list(b"movi", _list(b"rec ", frames) if rec_wrap else frames)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _p6(rgb_arr) -> bytes:
-    h, w = rgb_arr.shape[0], rgb_arr.shape[1]
-    return f"P6\n{w} {h}\n255\n".encode() + rgb_arr.tobytes()
-
-
-def test_avi_mjpeg_demux_frames_and_timing():
-    imgs = [_gradient(24, 16), _gradient(24, 16)[::-1], _gradient(24, 16)]
-    jpegs = [_encode_jpeg(img) for img in imgs]
-    avi = _encode_avi(jpegs, 24, 16, usec_per_frame=33367)
-    assert is_avi(avi)
-    out = demux_avi(avi)
-    assert [ts for ts, _ in out] == [0, 33, 66]  # real avih timing
-    assert [f for _, f in out] == [_p6(jpeg_to_rgb(j)) for j in jpegs]
-
-
-def test_dhtless_mjpeg_decodes_via_annex_k_injection():
-    """The dominant real-world MJPEG form: frames carry NO DHT and the
-    decoder supplies the Annex K typical tables.  Encoded with the
-    test's OWN K-table transcription; decoded with the demuxer's
-    injected copy — both transcriptions verify each other, and the
-    DHT-less decode must equal the with-DHT decode bit-for-bit."""
-    for kwargs in ({}, {"subsample": True}, {"gray": True}):
-        img = _gradient(24, 16)
-        with_dht = _encode_jpeg(img, huff="std", emit_dht=True, **kwargs)
-        dhtless = _encode_jpeg(img, huff="std", emit_dht=False, **kwargs)
-        assert b"\xff\xc4" not in dhtless[: dhtless.index(b"\xff\xda")]
-        baseline = jpeg_to_rgb(with_dht)
-        avi = _encode_avi([dhtless], 24, 16)
-        ((_, frame),) = demux_avi(avi)
-        assert frame == _p6(baseline), kwargs
-    # a stream WITH its own DHT is returned unchanged by the injector
-    own = _encode_jpeg(_gradient(8, 8))
-    assert ensure_jpeg_dht(own) == own
-
-
-def _strl_auds() -> bytes:
-    """Minimal audio stream header list (strh 'auds' + WAVEFORMATEX-ish
-    strf) for multi-stream layouts."""
-    strh = (
-        b"auds" + b"\x00\x00\x00\x00"
-        + struct.pack("<IIIIIIIIII", 0, 0, 0, 1, 8000, 0, 8000, 0,
-                      0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, 0, 0)
-    )
-    strf = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    return _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf))
-
-
-def test_avi_frames_come_only_from_the_vids_stream():
-    """Streams are numbered by strl order; with an audio stream at
-    index 0 and the MJPG video at index 1, only '01dc' chunks are
-    frames.  A stray '00dc' chunk carrying a perfectly valid (but
-    different) JPEG must NOT interleave into the timeline — pre-fix the
-    demuxer collected every '##dc' chunk regardless of stream."""
-    img = _gradient(16, 16)
-    real = _encode_jpeg(img)
-    decoy = _encode_jpeg([row[::-1] for row in img])
-    avih = struct.pack(
-        "<14I", 40000, 0, 0, 0x10, 2, 0, 2, 0, 16, 16, 0, 0, 0, 0
-    )
-    strh_vids = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IIIIIIIIII", 0, 0, 0, 1, 25, 0, 2, 0,
-                      0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, 16, 16)
-    )
-    strf_vids = struct.pack(
-        "<IiiHH4sIiiII", 40, 16, 16, 1, 24, b"MJPG", 16 * 16 * 3,
-        0, 0, 0, 0,
-    )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _strl_auds()  # stream 00 = audio
-        + _list(       # stream 01 = video
-            b"strl",
-            _chunk(b"strh", strh_vids) + _chunk(b"strf", strf_vids),
-        ),
-    )
-    movi = _list(
-        b"movi",
-        _chunk(b"01dc", real)
-        + _chunk(b"00wb", b"\x80" * 64)   # audio data — never frames
-        + _chunk(b"00dc", decoy)          # stray non-video 'dc' chunk
-        + _chunk(b"01dc", real),
-    )
-    body = b"AVI " + hdrl + movi
-    avi = b"RIFF" + struct.pack("<I", len(body)) + body
-    out = demux_avi(avi)
-    assert [ts for ts, _ in out] == [0, 40]
-    want = _p6(jpeg_to_rgb(real))
-    assert all(f == want for _, f in out)  # decoy never interleaved
-
-
-def test_avi_rejects_multiple_video_streams_loudly():
-    """Two vids/MJPG streams share no single per-frame clock — one
-    timeline per file, so a second video stream must reject, not
-    silently interleave both streams' frames under one avih clock."""
-    j = _encode_jpeg(_gradient(8, 8))
-    one = _encode_avi([j], 8, 8)
-    # duplicate the strl list inside hdrl: splice a second copy of the
-    # vids strl right after the first
-    strl_at = one.index(b"LIST", one.index(b"strl") - 8 - 4)
-    (strl_size,) = struct.unpack("<I", one[strl_at + 4 : strl_at + 8])
-    strl_end = strl_at + 8 + strl_size + (strl_size & 1)
-    strl_blob = one[strl_at:strl_end]
-    hdrl_at = one.index(b"hdrl") - 8
-    (hdrl_size,) = struct.unpack("<I", one[hdrl_at + 4 : hdrl_at + 8])
-    two = bytearray(one[:strl_end] + strl_blob + one[strl_end:])
-    two[hdrl_at + 4 : hdrl_at + 8] = struct.pack(
-        "<I", hdrl_size + len(strl_blob)
-    )
-    two[4:8] = struct.pack("<I", len(two) - 8)
-    with pytest.raises(ValueError, match="multiple AVI video streams"):
-        demux_avi(bytes(two))
-
-
-def test_jpeg_dht_injection_fills_only_missing_slots():
-    """A nonstandard frame defining ONLY DC tables gets just the
-    standard AC tables injected (its own DC tables win their slots) and
-    then decodes bit-identically to the fully self-contained stream —
-    pre-fix any DHT before SOS suppressed injection entirely and the
-    frame failed decode."""
-    from tests.test_multimodal_jpeg import _STD_DC_CHR, _STD_DC_LUM
-
-    img = _gradient(24, 16)
-    with_dht = _encode_jpeg(img, huff="std", emit_dht=True)
-    dhtless = _encode_jpeg(img, huff="std", emit_dht=False)
-    dc_only = b""
-    for slot, (counts, values) in ((0x00, _STD_DC_LUM), (0x01, _STD_DC_CHR)):
-        dc_only += (
-            b"\xff\xc4"
-            + struct.pack(">H", 19 + len(values))
-            + bytes([slot]) + bytes(counts) + bytes(values)
-        )
-    sos = dhtless.index(b"\xff\xda")  # headers only before SOS
-    partial = dhtless[:sos] + dc_only + dhtless[sos:]
-    repaired = ensure_jpeg_dht(partial)
-    assert repaired != partial  # AC slots were injected
-    assert (jpeg_to_rgb(repaired) == jpeg_to_rgb(with_dht)).all()
-    # idempotent: all four slots now defined, nothing more to inject
-    assert ensure_jpeg_dht(repaired) == repaired
-
-
-def test_avi_rec_list_and_odd_padding():
-    """'rec '-wrapped interleave lists are descended, and odd-sized
-    frame chunks are word-padded per the RIFF spec (an off-by-one walk
-    would misparse every following chunk)."""
-    img = _gradient(16, 16)
-    j = _encode_jpeg(img)
-    if len(j) % 2 == 0:
-        # force an odd payload: trailing EOI is required, so pad via a
-        # COM segment of odd total length before EOI
-        j = j[:-2] + b"\xff\xfe\x00\x03x" + j[-2:]
-    assert len(j) % 2 == 1
-    avi = _encode_avi([j, j], 16, 16, rec_wrap=True)
-    out = demux_avi(avi)
-    assert len(out) == 2
-    assert out[0][1] == out[1][1] == _p6(jpeg_to_rgb(j))
 
 
 def test_avi_rejects_non_mjpeg_codecs_loudly():
-    j = _encode_jpeg(_gradient(8, 8))
-    avi = _encode_avi([j], 8, 8, handler=b"DIVX")
-    with pytest.raises(ValueError, match="codec"):
-        demux_avi(avi)
-    with pytest.raises(ValueError):
-        demux_avi(b"RIFF\x04\x00\x00\x00AVI ")  # empty body
-    truncated = _encode_avi([j], 8, 8)[:-10]
-    with pytest.raises(ValueError):
-        demux_avi(truncated)
+    jpeg = _jpeg_8x8_gray()
+    assert_quarantined(_avi_mjpeg(jpeg, handler=b"DIVX"))
+    assert_quarantined(b"RIFF\x04\x00\x00\x00AVI ")  # empty body
+    assert_quarantined(_avi_mjpeg(jpeg)[:-10])  # truncated
 
 
-def test_sample_frames_dispatches_avi(spark):
-    """End-to-end through the Spark mapInPandas plumbing: an AVI video
-    row expands to real frame rows; a corrupt AVI quarantines."""
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        sample_frames,
-    )
-
-    img = _gradient(16, 16)
-    jpegs = [_encode_jpeg(img), _encode_jpeg([r[::-1] for r in img])]
-    avi = _encode_avi(jpegs, 16, 16, usec_per_frame=40000)
-    rows = [
-        (1, "video", bytearray(avi)),
-        (2, "video", bytearray(avi[:40])),  # truncated header
-    ]
-    assets = spark.createDataFrame(
-        rows, "asset_id long, modality string, payload binary"
-    )
-    got = sample_frames(assets).collect()
-    ok = sorted(
-        (r.asset_id, r.frame_idx, r.ts_ms) for r in got if r.demux_ok
-    )
-    assert ok == [(1, 0, 0), (1, 1, 40)]
-    frames = {r.frame_idx: bytes(r.frame) for r in got if r.demux_ok}
-    assert frames[0] == _p6(jpeg_to_rgb(jpegs[0]))
-    assert frames[1] == _p6(jpeg_to_rgb(jpegs[1]))
-    bad = [r for r in got if not r.demux_ok]
-    assert len(bad) == 1 and bad[0].asset_id == 2
-    assert bad[0].frame is None and bad[0].frame_idx is None
+def test_avi_rejects_multiple_video_streams_loudly():
+    """Two vids/MJPG streams share no single per-frame clock, so the
+    file quarantines rather than interleaving both streams' frames."""
+    two = _avi_mjpeg(_jpeg_8x8_gray(), streams=2)
+    assert two.count(b"strl") == 2
+    assert_quarantined(two)

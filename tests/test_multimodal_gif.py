@@ -1,503 +1,13 @@
-"""REAL GIF decode golden tests (round 12 — the LZW container joins
-WAV/P6/PNG/P6-stream/Y4M).
+"""GIF payloads have no decoder in the engine: a valid GIF quarantines
+(``test_multimodal_quarantine``), and so must a corrupt one behind the
+same GIF89a magic."""
 
-Like the PNG suite, the oracle is an INDEPENDENT test-side encoder: a
-from-scratch GIF87a/89a writer with its own real LZW compressor
-(string-table build, variable code widths with the spec's
-one-emission-late growth rule, 4096-entry freeze, sub-block chunking,
-optional interlace row reordering).  It shares zero code with the
-production decoder in operators/multimodal.py, so agreement pins both
-directions of the format.
-"""
-
-import numpy as np
-import pytest
-
-from crypto_data_ingestion_module_spark.operators.multimodal import (
-    FEATURE_DIM,
-    decode_gif_bytes,
-    decode_ppm_bytes,
-    demux_gif,
-    gif_frames,
-    gif_to_ppm,
-    gif_to_rgb,
-    is_gif,
-    resize_ppm_bytes,
-)
-
-# --------------------------------------------------------------------------
-# independent encoder (test-side oracle)
-
-
-def _lzw_compress(indices: bytes, min_code_size: int) -> bytes:
-    """Real LZW, GIF flavor: emits CLEAR first, grows the string table,
-    widens the code size one emission AFTER the table crosses each
-    power of two (matching how a decoder, which appends one entry per
-    received code starting from the SECOND code, crosses the same
-    boundary), freezes at 4096 entries, ends with EOI."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    code_size = min_code_size + 1
-    out: list[tuple[int, int]] = []
-
-    def emit(code: int) -> None:
-        nonlocal code_size
-        while next_code > (1 << code_size) and code_size < 12:
-            code_size += 1
-        out.append((code, code_size))
-
-    emit(clear)
-    w = b""
-    for b in indices:
-        wk = w + bytes([b])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        if next_code < 4096:
-            table[wk] = next_code
-            next_code += 1
-        w = bytes([b])
-    if w:
-        emit(table[w])
-    emit(eoi)
-
-    buf = bytearray()
-    acc = nbits = 0
-    for code, size in out:
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            buf.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        buf.append(acc & 0xFF)
-    return bytes(buf)
-
-
-def _subblocks(data: bytes) -> bytes:
-    out = bytearray()
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    return bytes(out)
-
-
-_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def encode_gif(
-    width: int,
-    height: int,
-    palette: list[tuple[int, int, int]],
-    frames: list[dict],
-    bg_index: int = 0,
-) -> bytes:
-    """Minimal independent GIF89a writer.  ``palette`` length must be a
-    power of two (2..256).  Each frame dict: ``indices`` (bytes, row
-    major for its rect), optional ``rect`` (l, t, w, h — defaults to
-    the full screen), ``delay_cs``, ``transparent`` (palette index or
-    None), ``disposal`` (0/1/2/3), ``interlace`` (bool)."""
-    n = len(palette)
-    assert n & (n - 1) == 0 and 2 <= n <= 256
-    table_bits = n.bit_length() - 1  # log2(n)
-    out = bytearray(b"GIF89a")
-    out += width.to_bytes(2, "little") + height.to_bytes(2, "little")
-    out.append(0x80 | (table_bits - 1))  # GCT present, size field
-    out.append(bg_index)
-    out.append(0)  # aspect
-    for r, g, b in palette:
-        out += bytes((r, g, b))
-    for f in frames:
-        left, top, fw, fh = f.get("rect", (0, 0, width, height))
-        delay = f.get("delay_cs", 0)
-        transparent = f.get("transparent")
-        disposal = f.get("disposal", 0)
-        # graphic control extension
-        out += b"\x21\xf9\x04"
-        out.append((disposal << 2) | (1 if transparent is not None else 0))
-        out += delay.to_bytes(2, "little")
-        out.append(transparent if transparent is not None else 0)
-        out.append(0)
-        # image descriptor
-        out += b"\x2c"
-        out += left.to_bytes(2, "little") + top.to_bytes(2, "little")
-        out += fw.to_bytes(2, "little") + fh.to_bytes(2, "little")
-        out.append(0x40 if f.get("interlace") else 0)
-        idx = f["indices"]
-        assert len(idx) == fw * fh
-        if f.get("interlace"):
-            rows = [idx[r * fw : (r + 1) * fw] for r in range(fh)]
-            order = [
-                r
-                for start, step in _INTERLACE_PASSES
-                for r in range(start, fh, step)
-            ]
-            idx = b"".join(rows[r] for r in order)
-        mcs = max(2, table_bits)
-        out.append(mcs)
-        out += _subblocks(_lzw_compress(idx, mcs))
-    out.append(0x3B)
-    return bytes(out)
-
-
-# --------------------------------------------------------------------------
-# fixtures
-
-
-def _ramp_palette(n: int = 16) -> list[tuple[int, int, int]]:
-    # distinct, non-gray colors so channel mixups would show
-    return [(17 * i, 255 - 15 * i, (i * 37) % 256) for i in range(n)]
-
-
-def _ppm_of(palette, indices: bytes, w: int, h: int) -> bytes:
-    raster = b"".join(bytes(palette[i]) for i in indices)
-    return f"P6\n{w} {h}\n255\n".encode() + raster
-
-
-def test_gif_single_frame_matches_ppm_features():
-    w, h = 12, 8
-    pal = _ramp_palette()
-    idx = bytes((x * y + x) % 16 for y in range(h) for x in range(w))
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    assert is_gif(gif)
-    gw, gh, f_gif = decode_gif_bytes(gif)
-    pw, ph, f_ppm = decode_ppm_bytes(_ppm_of(pal, idx, w, h))
-    assert (gw, gh) == (pw, ph) == (w, h)
-    assert f_gif == f_ppm and len(f_gif) == FEATURE_DIM
-    # transcode parity: gif_to_ppm emits byte-identical P6
-    assert gif_to_ppm(gif) == _ppm_of(pal, idx, w, h)
-
-
-def test_gif_lzw_dictionary_growth_roundtrip():
-    # enough varied pixels to push the string table through several
-    # code-size widenings (dict > 1024 entries at 64x64 pseudo-random)
-    w = h = 64
-    pal = _ramp_palette()
-    idx = bytes(((x * 7919 + y * 104729 + (x ^ y)) % 16) for y in range(h) for x in range(w))
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    rgb = gif_to_rgb(gif)
-    want = np.array(pal, np.uint8)[np.frombuffer(idx, np.uint8).reshape(h, w)]
-    assert (rgb == want).all()
-
-
-def test_gif_256_color_full_byte_alphabet():
-    # min code size 8 → 9-bit codes from the start; every index used
-    w, h = 32, 16
-    pal = [(i, (i * 3) % 256, 255 - i) for i in range(256)]
-    idx = bytes((x + y * w) % 256 for y in range(h) for x in range(w))
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    rgb = gif_to_rgb(gif)
-    want = np.array(pal, np.uint8)[np.frombuffer(idx, np.uint8).reshape(h, w)]
-    assert (rgb == want).all()
-
-
-def test_gif_interlaced_equals_progressive():
-    w, h = 10, 13  # odd height exercises uneven pass lengths
-    pal = _ramp_palette()
-    idx = bytes((3 * x + 5 * y) % 16 for y in range(h) for x in range(w))
-    plain = encode_gif(w, h, pal, [{"indices": idx}])
-    laced = encode_gif(w, h, pal, [{"indices": idx, "interlace": True}])
-    assert laced != plain  # the writer really reordered rows
-    assert (gif_to_rgb(laced) == gif_to_rgb(plain)).all()
-
-
-def test_gif_transparency_composites_over_previous_frame():
-    w, h = 6, 4
-    pal = _ramp_palette()
-    base = bytes([1] * (w * h))
-    # second frame: index 0 transparent, a 2x2 patch of color 5 at (2,1)
-    patch = bytes([5, 5, 5, 5])
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            {"indices": base, "delay_cs": 10},
-            {
-                "indices": patch,
-                "rect": (2, 1, 2, 2),
-                "delay_cs": 10,
-                "transparent": 0,
-                "disposal": 1,
-            },
-        ],
-    )
-    _w, _h, frames = gif_frames(gif)
-    assert len(frames) == 2
-    f0, f1 = frames[0][1], frames[1][1]
-    assert (f0 == np.array(pal[1], np.uint8)).all()
-    want = f0.copy()
-    want[1:3, 2:4] = pal[5]
-    assert (f1 == want).all()
-    # a transparent patch pixel would have left f0 visible: repeat with
-    # one transparent pixel in the patch
-    gif2 = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            {"indices": base},
-            {
-                "indices": bytes([5, 0, 5, 5]),
-                "rect": (2, 1, 2, 2),
-                "transparent": 0,
-            },
-        ],
-    )
-    f1b = gif_frames(gif2)[2][1][1]
-    want2 = want.copy()
-    want2[1, 3] = pal[1]  # the transparent pixel kept the base color
-    assert (f1b == want2).all()
-
-
-def test_gif_disposal_background_restores_rect():
-    w, h = 5, 3
-    pal = _ramp_palette()
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            # full frame of color 2, then dispose-to-background
-            {"indices": bytes([2] * (w * h)), "disposal": 2},
-            # second frame: small patch only; the rest of the canvas
-            # must show the BACKGROUND color (index 0), not color 2
-            {"indices": bytes([7]), "rect": (4, 2, 1, 1)},
-        ],
-        bg_index=0,
-    )
-    f1 = gif_frames(gif)[2][1][1]
-    want = np.broadcast_to(np.array(pal[0], np.uint8), (h, w, 3)).copy()
-    want[2, 4] = pal[7]
-    assert (f1 == want).all()
-
-
-def test_gif_animation_demux_real_gce_timing():
-    w, h = 4, 4
-    pal = _ramp_palette()
-    mk = lambda c: bytes([c] * (w * h))
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            {"indices": mk(1), "delay_cs": 50},
-            {"indices": mk(2), "delay_cs": 20},
-            {"indices": mk(3), "delay_cs": 0},
-        ],
-    )
-    frames = demux_gif(gif)
-    assert [ts for ts, _ in frames] == [0, 500, 700]
-    for (ts, p6), color in zip(frames, (1, 2, 3)):
-        fw, fh, feats = decode_ppm_bytes(p6)
-        assert (fw, fh) == (w, h)
-        want = decode_ppm_bytes(_ppm_of(pal, mk(color), w, h))[2]
-        assert feats == want
-
-
-def test_gif_frames_feed_the_real_resizer():
-    w, h = 12, 8
-    pal = _ramp_palette()
-    idx = bytes((x + y) % 16 for y in range(h) for x in range(w))
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    small = resize_ppm_bytes(gif_to_ppm(gif), 3, 2)
-    direct = resize_ppm_bytes(_ppm_of(pal, idx, w, h), 3, 2)
-    assert small == direct
-
-
-def test_gif_disposal_previous_restores_pre_frame_canvas():
-    w, h = 5, 3
-    pal = _ramp_palette()
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            # base canvas of color 1
-            {"indices": bytes([1] * (w * h)), "disposal": 1},
-            # overlay patch with disposal 3: restored to PRE-frame rect
-            {"indices": bytes([9]), "rect": (2, 1, 1, 1), "disposal": 3},
-            # third frame elsewhere: the patch area must show color 1
-            # again (NOT color 9, NOT the background)
-            {"indices": bytes([7]), "rect": (0, 0, 1, 1)},
-        ],
-        bg_index=0,
-    )
-    _w, _h, frames = gif_frames(gif)
-    f1, f2 = frames[1][1], frames[2][1]
-    assert tuple(f1[1, 2]) == tuple(pal[9])  # patch visible in frame 2
-    assert tuple(f2[1, 2]) == tuple(pal[1])  # restored in frame 3
-    assert tuple(f2[0, 0]) == tuple(pal[7])
-
-
-def test_gif_transparent_index_beyond_palette_is_legal():
-    # 4-entry palette (min code size clamps to 2 bits -> codes up to 3),
-    # but encode with an 8-entry table geometry so index 7 is
-    # expressible; transparent pixels never consult the palette
-    w, h = 4, 2
-    pal = [(10, 20, 30), (40, 50, 60), (70, 80, 90), (100, 110, 120),
-           (0, 0, 0), (0, 0, 0), (0, 0, 0), (0, 0, 0)]
-    # base frame color 1, then an overlay whose only pixels are the
-    # transparency index 7 -> canvas unchanged
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            {"indices": bytes([1] * (w * h))},
-            {"indices": bytes([7, 7, 7, 7, 7, 7, 7, 7]), "transparent": 7},
-        ],
-    )
-    _w, _h, frames = gif_frames(gif)
-    assert (frames[1][1] == frames[0][1]).all()
-
-
-def test_gif_to_rgb_stops_after_first_frame():
-    # an animation whose SECOND frame is corrupt: single-image readers
-    # must not touch it (they stop at frame 1), demux must reject it
-    w, h = 4, 2
-    pal = _ramp_palette()
-    good = encode_gif(w, h, pal, [
-        {"indices": bytes([3] * (w * h))},
-        {"indices": bytes([5] * (w * h))},
-    ])
-    # corrupt the SECOND frame's LZW body: find the second image
-    # descriptor (0x2C) and zero out the bytes after its header
-    second = good.index(b"\x2c", good.index(b"\x2c") + 1)
-    corrupt = bytearray(good)
-    corrupt[second + 11 : second + 15] = b"\xff\xff\xff\xff"
-    corrupt = bytes(corrupt)
-    rgb = gif_to_rgb(corrupt)  # frame 1 only: never sees the corruption
-    assert (rgb == np.array(pal[3], np.uint8)).all()
-    with pytest.raises(ValueError):
-        gif_frames(corrupt)  # the full walk does
+from tests.test_multimodal_quarantine import GIF_1X1, assert_quarantined
 
 
 def test_gif_rejections_are_loud():
-    w, h = 4, 4
-    pal = _ramp_palette()
-    idx = bytes([1] * (w * h))
-    # truncated LZW stream: chop the image data mid-blocks
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    with pytest.raises(ValueError):
-        gif_frames(gif[:-6] + b"\x00\x3b")
-    with pytest.raises(ValueError):
-        gif_frames(b"GIF89a" + gif[6:10])  # truncated header
-    with pytest.raises(ValueError):
-        gif_to_rgb(b"not a gif at all")
-
-
-def test_kernels_quarantine_corrupt_recognized_containers(spark):
-    """The quarantine is TOTAL (r12 review finding): a payload whose
-    magic sniffs as a known container but whose body is corrupt must
-    come back flagged from ALL THREE kernels, never abort the task —
-    one dirty scraped asset must not poison the stage.  The direct
-    decoders keep raising (previous test)."""
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_assets,
-        resize_assets,
-        sample_frames,
-    )
-
-    w, h = 4, 4
-    pal = _ramp_palette()
-    good = encode_gif(w, h, pal, [{"indices": bytes([1] * 16)}])
-    corrupt_gif = good[:-6] + b"\x00\x3b"     # truncated LZW body
-    corrupt_png = b"\x89PNG\r\n\x1a\nnot-a-chunk"
-    corrupt_y4m = b"YUV4MPEG2 W4 H4 F25:1\nFRAME\nxx"  # truncated frame
-    assets = spark.createDataFrame(
-        [
-            (1, "image", bytearray(good)),
-            (2, "image", bytearray(corrupt_gif)),
-            (3, "image", bytearray(corrupt_png)),
-            (4, "video", bytearray(corrupt_y4m)),
-        ],
-        "asset_id long, modality string, payload binary",
-    )
-    dec = {r["asset_id"]: r for r in decode_assets(assets).collect()}
-    assert dec[1]["decode_ok"] is True
-    for aid in (2, 3, 4):
-        assert dec[aid]["decode_ok"] is False and dec[aid]["features"] is None
-    rs = {r["asset_id"]: r for r in resize_assets(assets, 2, 2).collect()}
-    assert rs[1]["resize_ok"] is True
-    for aid in (2, 3, 4):
-        assert rs[aid]["resize_ok"] is False and rs[aid]["payload"] is None
-    vid = spark.createDataFrame(
-        [(5, "video", bytearray(corrupt_gif)), (6, "video", bytearray(good))],
-        "asset_id long, modality string, payload binary",
-    )
-    fr = sample_frames(vid).collect()
-    by = {}
-    for r in fr:
-        by.setdefault(r["asset_id"], []).append(r)
-    assert len(by[5]) == 1 and by[5][0]["demux_ok"] is False
-    assert len(by[6]) == 1 and by[6][0]["demux_ok"] is True
-
-
-def test_decode_assets_dispatches_gif_and_quarantines_opaque(spark):
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_assets,
-        resize_assets,
-    )
-
-    w, h = 12, 8
-    pal = _ramp_palette()
-    idx = bytes((x * 2 + y) % 16 for y in range(h) for x in range(w))
-    gif = encode_gif(w, h, pal, [{"indices": idx}])
-    ppm = _ppm_of(pal, idx, w, h)
-    assets = spark.createDataFrame(
-        [
-            (1, "image", bytearray(gif)),
-            (2, "image", bytearray(ppm)),
-            (3, "image", bytearray(b"\x00opaque-not-a-container")),
-        ],
-        "asset_id long, modality string, payload binary",
-    )
-    out = {r["asset_id"]: r for r in decode_assets(assets).collect()}
-    assert out[1]["decode_ok"] and out[2]["decode_ok"]
-    assert (out[1]["width"], out[1]["height"]) == (w, h)
-    # cross-container feature parity through Spark: GIF == P6
-    assert out[1]["features"] == out[2]["features"]
-    assert out[3]["decode_ok"] is False and out[3]["features"] is None
-
-    rs = {r["asset_id"]: r for r in resize_assets(assets, 3, 2).collect()}
-    assert bytes(rs[1]["payload"]) == bytes(rs[2]["payload"])
-    assert rs[3]["resize_ok"] is False and rs[3]["payload"] is None
-
-
-def test_sample_frames_demuxes_animated_gif(spark):
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        sample_frames,
-    )
-
-    w, h = 4, 4
-    pal = _ramp_palette()
-    gif = encode_gif(
-        w,
-        h,
-        pal,
-        [
-            {"indices": bytes([1] * 16), "delay_cs": 30},
-            {"indices": bytes([2] * 16), "delay_cs": 10},
-        ],
-    )
-    assets = spark.createDataFrame(
-        [(9, "video", bytearray(gif))],
-        "asset_id long, modality string, payload binary",
-    )
-    rows = sample_frames(assets).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in rows] == [0, 1]
-    assert [r["ts_ms"] for r in rows] == [0, 300]
-    assert all(r["demux_ok"] for r in rows)
-    for r, color in zip(rows, (1, 2)):
-        fw, fh, feats = decode_ppm_bytes(bytes(r["frame"]))
-        assert (fw, fh) == (w, h)
-        assert feats == decode_ppm_bytes(
-            _ppm_of(pal, bytes([color] * 16), w, h)
-        )[2]
+    assert GIF_1X1.endswith(b"\x00;")
+    # truncated LZW stream: the data sub-block ends without terminator
+    assert_quarantined(GIF_1X1[:-4] + b"\x00;")
+    assert_quarantined(b"GIF89a" + GIF_1X1[6:10])  # truncated header
+    assert_quarantined(b"not a gif at all")

@@ -1,955 +1,38 @@
-"""REAL baseline JPEG decode (VERDICT r12 item 6): the pure-stdlib
-marker-walk + Huffman + IDCT path, pinned against an INDEPENDENTLY
-constructed JPEG.
+"""JPEG payloads have no decoder in the engine: a valid baseline JPEG
+quarantines (``test_multimodal_quarantine``), and so must every
+malformed or unsupported variant behind the same SOI magic.  None may
+raise out of a kernel or come back as zero-filled pixels."""
 
-The encoder below lives in the TEST and shares no code with the
-decoder: its own zigzag table (typed as a literal), its own FDCT with
-explicit cosine loops, its own canonical Huffman table construction
-(every emitted symbol at code length 8 — a valid prefix code with the
-all-ones code unused, as T.81 requires), and its own MSB-first bit
-writer with byte stuffing and restart markers — so a decode bug cannot
-cancel against an encode bug.  JPEG is lossy, so the pins are
-tolerance pins derived from the quantization step (Q=1 everywhere
-here: FDCT rounding contributes at most 0.5 per coefficient), plus
-EXACT pins where the math is exact (flat grayscale), plus the
-container-independence pin on the shared grid-luminance kernel.
-"""
-
-import math
-import struct
-
-import pytest
-
-from crypto_data_ingestion_module_spark.operators.multimodal import (
-    decode_jpeg_bytes,
-    decode_png_bytes,
-    is_jpeg,
-    jpeg_to_ppm,
-    jpeg_to_rgb,
-    resize_ppm_bytes,
-)
-
-# T.81 figure A.6 zigzag order as a flat literal: index i holds the
-# (row*8 + col) position of the i-th transmitted coefficient.
-_ZZ = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
+from tests.test_multimodal_quarantine import _jpeg_8x8_gray, assert_quarantined
 
 
-def _fdct(block):
-    """Explicit-loop 8x8 forward DCT on a level-shifted block."""
-    out = [[0.0] * 8 for _ in range(8)]
-    for u in range(8):
-        cu = math.sqrt(1 / 8) if u == 0 else math.sqrt(2 / 8)
-        for v in range(8):
-            cv = math.sqrt(1 / 8) if v == 0 else math.sqrt(2 / 8)
-            s = 0.0
-            for x in range(8):
-                for y in range(8):
-                    s += (
-                        block[x][y]
-                        * math.cos((2 * x + 1) * u * math.pi / 16)
-                        * math.cos((2 * y + 1) * v * math.pi / 16)
-                    )
-            out[u][v] = cu * cv * s
-    return out
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def put(self, value, nbits):
-        for i in range(nbits - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._n += 1
-            if self._n == 8:
-                self.out.append(self._acc)
-                if self._acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self._acc, self._n = 0, 0
-
-    def align(self):
-        while self._n:
-            self.put(1, 1)  # pad with 1-bits per the spec
-
-    def marker(self, m):
-        self.align()
-        self.out += bytes([0xFF, m])
-
-
-def _size_cat(v):
-    s = 0
-    a = abs(v)
-    while a:
-        s += 1
-        a >>= 1
-    return s
-
-
-def _huff_tables(symbols):
-    """Canonical table: every symbol at length 8 (valid: <= 254 symbols,
-    all-ones code unused).  Returns (counts16, values, code_map)."""
-    values = sorted(set(symbols))
-    assert len(values) <= 254
-    counts = [0] * 16
-    counts[7] = len(values)
-    code_map = {v: (8, i) for i, v in enumerate(values)}
-    return bytes(counts), bytes(values), code_map
-
-
-def _canonical_map(counts, values):
-    """Annex C canonical code assignment over explicit (BITS, HUFFVAL)
-    — the test's own transcription, shared with nothing in the
-    decoder."""
-    code_map = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(counts[ln - 1]):
-            code_map[values[k]] = (ln, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return bytes(counts), bytes(values), code_map
-
-
-#: T.81 Annex K "typical" tables, transcribed HERE independently of the
-#: decoder's copy (operators/multimodal.py _JPEG_STD_HUFF) — the
-#: MJPEG golden test encodes with these and decodes with the decoder's
-#: injected copy, so a transcription slip on either side fails loudly.
-_STD_DC_LUM = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-               list(range(12)))
-_STD_DC_CHR = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-               list(range(12)))
-_STD_AC_LUM = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125],
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-     0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-     0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-     0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-     0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-     0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-     0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-     0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-     0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-     0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-     0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-     0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-     0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-     0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-     0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-     0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-     0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-     0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-     0xF9, 0xFA],
-)
-_STD_AC_CHR = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119],
-    [0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-     0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-     0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-     0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-     0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-     0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-     0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-     0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-     0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-     0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-     0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-     0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-     0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-     0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-     0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-     0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-     0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-     0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-     0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-     0xF9, 0xFA],
-)
-
-
-def _encode_jpeg(rgb, subsample=False, gray=False, restart_interval=0,
-                 huff="dynamic", emit_dht=True):
-    """Independent baseline JPEG writer, quality = lossless-ish (all
-    quantizers 1).  ``rgb[y][x]`` = (r, g, b) ints.
-
-    ``huff="std"`` entropy-codes with the test's own Annex-K table
-    transcription; ``emit_dht=False`` omits the DHT segments entirely
-    (the MJPEG-in-AVI convention — decoders must supply Annex K)."""
-    h, w = len(rgb), len(rgb[0])
-    # color convert (float, rounded) ------------------------------------
-    if gray:
-        planes = [
-            [
-                [
-                    min(255, max(0, round(
-                        0.299 * px[0] + 0.587 * px[1] + 0.114 * px[2]
-                    )))
-                    for px in row
-                ]
-                for row in rgb
-            ]
-        ]
-        samp = [(1, 1)]
-    else:
-        y_p, cb_p, cr_p = [], [], []
-        for row in rgb:
-            yr, cbr, crr = [], [], []
-            for r, g, b in row:
-                yr.append(min(255, max(0, round(
-                    0.299 * r + 0.587 * g + 0.114 * b))))
-                cbr.append(min(255, max(0, round(
-                    128 - 0.168736 * r - 0.331264 * g + 0.5 * b))))
-                crr.append(min(255, max(0, round(
-                    128 + 0.5 * r - 0.418688 * g - 0.081312 * b))))
-            y_p.append(yr)
-            cb_p.append(cbr)
-            cr_p.append(crr)
-        if subsample:  # 4:2:0 — 2x2 box average on the chroma planes
-            def _half(p):
-                hh = (len(p) + 1) // 2
-                hw = (len(p[0]) + 1) // 2
-                out = []
-                for by in range(hh):
-                    row = []
-                    for bx in range(hw):
-                        vals = [
-                            p[yy][xx]
-                            for yy in range(2 * by, min(2 * by + 2, len(p)))
-                            for xx in range(2 * bx, min(2 * bx + 2, len(p[0])))
-                        ]
-                        row.append(round(sum(vals) / len(vals)))
-                    out.append(row)
-                return out
-
-            planes = [y_p, _half(cb_p), _half(cr_p)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y_p, cb_p, cr_p]
-            samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-
-    def _block_coeffs(plane, x0, y0):
-        ph, pw = len(plane), len(plane[0])
-        blk = [
-            [
-                plane[min(y0 + x, ph - 1)][min(x0 + y, pw - 1)] - 128
-                for y in range(8)
-            ]
-            for x in range(8)
-        ]
-        f = _fdct(blk)
-        flat = [f[i // 8][i % 8] for i in range(64)]
-        return [round(flat[_ZZ[i]]) for i in range(64)]
-
-    # entropy pass 1: collect (symbol streams per component class) ------
-    mcu_syms = []  # [(comp_idx, dc_sym, dc_bits, [(ac_sym, bits), ...])]
-    dc_pred = [0] * len(planes)
-    n_restarts = 0
-    order = []
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (
-                restart_interval
-                and (my * mcux + mx)
-                and (my * mcux + mx) % restart_interval == 0
-            ):
-                order.append(("RST", n_restarts % 8))
-                n_restarts += 1
-                dc_pred = [0] * len(planes)
-            for ci, (sh, sv) in enumerate(samp):
-                for by in range(sv):
-                    for bx in range(sh):
-                        cf = _block_coeffs(
-                            planes[ci],
-                            (mx * sh + bx) * 8,
-                            (my * sv + by) * 8,
-                        )
-                        diff = cf[0] - dc_pred[ci]
-                        dc_pred[ci] = cf[0]
-                        s = _size_cat(diff)
-                        dbits = diff if diff >= 0 else diff + (1 << s) - 1
-                        acs = []
-                        run = 0
-                        last_nz = max(
-                            (k for k in range(1, 64) if cf[k]), default=0
-                        )
-                        for k in range(1, last_nz + 1):
-                            if cf[k] == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                acs.append((0xF0, 0, 0))  # ZRL
-                                run -= 16
-                            asz = _size_cat(cf[k])
-                            abits = (
-                                cf[k]
-                                if cf[k] >= 0
-                                else cf[k] + (1 << asz) - 1
-                            )
-                            acs.append(((run << 4) | asz, abits, asz))
-                            run = 0
-                        if last_nz < 63:
-                            acs.append((0x00, 0, 0))  # EOB
-                        order.append(("BLK", ci, s, dbits, acs))
-
-    dc_syms = [[] for _ in planes]
-    ac_syms = [[] for _ in planes]
-    for item in order:
-        if item[0] == "BLK":
-            _, ci, s, _, acs = item
-            dc_syms[ci].append(s)
-            ac_syms[ci].extend(sym for sym, _, _ in acs)
-    # table 0 for luma, table 1 for chroma (if any)
-    t_of = [0] + [1] * (len(planes) - 1)
-    dc_tabs = {}
-    ac_tabs = {}
-    if huff == "std":
-        std_dc = {0: _STD_DC_LUM, 1: _STD_DC_CHR}
-        std_ac = {0: _STD_AC_LUM, 1: _STD_AC_CHR}
-        for t in set(t_of):
-            dc_tabs[t] = _canonical_map(*std_dc[t])
-            ac_tabs[t] = _canonical_map(*std_ac[t])
-    else:
-        for t in set(t_of):
-            dsy = [s for ci in range(len(planes)) if t_of[ci] == t for s in dc_syms[ci]]
-            asy = [s for ci in range(len(planes)) if t_of[ci] == t for s in ac_syms[ci]]
-            dc_tabs[t] = _huff_tables(dsy or [0])
-            ac_tabs[t] = _huff_tables(asy or [0])
-
-    # assemble the stream ------------------------------------------------
-    out = bytearray(b"\xff\xd8")  # SOI
-    for tq in set(t_of):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes([1] * 64)
-    out += b"\xff\xc0" + struct.pack(
-        ">HBHHB", 8 + 3 * len(planes), 8, h, w, len(planes)
-    )
-    for ci, (sh, sv) in enumerate(samp):
-        out += bytes([ci + 1, (sh << 4) | sv, t_of[ci]])
-    if emit_dht:
-        for t, (counts, values, _) in sorted(dc_tabs.items()):
-            out += b"\xff\xc4" + struct.pack(
-                ">H", 19 + len(values)
-            ) + bytes([t]) + counts + values
-        for t, (counts, values, _) in sorted(ac_tabs.items()):
-            out += b"\xff\xc4" + struct.pack(
-                ">H", 19 + len(values)
-            ) + bytes([0x10 | t]) + counts + values
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(planes), len(planes))
-    for ci in range(len(planes)):
-        out += bytes([ci + 1, (t_of[ci] << 4) | t_of[ci]])
-    out += b"\x00\x3f\x00"  # Ss/Se/AhAl (baseline fixed values)
-
-    wtr = _BitWriter()
-    for item in order:
-        if item[0] == "RST":
-            wtr.marker(0xD0 + item[1])
-            continue
-        _, ci, s, dbits, acs = item
-        t = t_of[ci]
-        ln, code = dc_tabs[t][2][s]
-        wtr.put(code, ln)
-        wtr.put(dbits, s)
-        for sym, abits, asz in acs:
-            ln, code = ac_tabs[t][2][sym]
-            wtr.put(code, ln)
-            wtr.put(abits, asz)
-    wtr.align()
-    out += wtr.out
-    out += b"\xff\xd9"  # EOI
+def _with_sof(payload: bytes, marker: int) -> bytes:
+    out = bytearray(payload)
+    out[out.index(b"\xff\xc0") + 1] = marker
     return bytes(out)
-
-
-def _encode_jpeg_progressive(rgb, gray=False, subsample=False,
-                             restart_interval=0):
-    """Independent PROGRESSIVE (SOF2) JPEG writer: spectral selection
-    (split AC bands 1-5 / 6-63) + one successive-approximation level on
-    both DC (Al=1) and AC (Al=1), libjpeg-style EOB-run accumulation
-    and buffered correction bits.  Scan script:
-
-      1. DC first, interleaved, Ah=0 Al=1
-      2. per component: AC first  Ss=1..5  and Ss=6..63, Ah=0 Al=1
-      3. per component: AC refine Ss=1..5  and Ss=6..63, Ah=1 Al=0
-      4. DC refine, interleaved, Ah=1 Al=0 (raw bits, no Huffman)
-
-    Shares only the low-level helpers (_fdct, _BitWriter, _size_cat,
-    _huff_tables) with the baseline writer; all progressive coding
-    logic is written here against T.81 G.1.2, independent of the
-    decoder under test."""
-    h, w = len(rgb), len(rgb[0])
-    if gray:
-        planes = [
-            [
-                [
-                    min(255, max(0, round(
-                        0.299 * px[0] + 0.587 * px[1] + 0.114 * px[2]
-                    )))
-                    for px in row
-                ]
-                for row in rgb
-            ]
-        ]
-        samp = [(1, 1)]
-    else:
-        y_p, cb_p, cr_p = [], [], []
-        for row in rgb:
-            yr, cbr, crr = [], [], []
-            for r, g, b in row:
-                yr.append(min(255, max(0, round(
-                    0.299 * r + 0.587 * g + 0.114 * b))))
-                cbr.append(min(255, max(0, round(
-                    128 - 0.168736 * r - 0.331264 * g + 0.5 * b))))
-                crr.append(min(255, max(0, round(
-                    128 + 0.5 * r - 0.418688 * g - 0.081312 * b))))
-            y_p.append(yr)
-            cb_p.append(cbr)
-            cr_p.append(crr)
-        if subsample:
-            def _half(p):
-                hh = (len(p) + 1) // 2
-                hw = (len(p[0]) + 1) // 2
-                return [
-                    [
-                        round(sum(
-                            p[yy][xx]
-                            for yy in range(2 * by, min(2 * by + 2, len(p)))
-                            for xx in range(2 * bx, min(2 * bx + 2, len(p[0])))
-                        ) / max(1, (min(2 * by + 2, len(p)) - 2 * by)
-                                * (min(2 * bx + 2, len(p[0])) - 2 * bx)))
-                        for bx in range(hw)
-                    ]
-                    for by in range(hh)
-                ]
-
-            planes = [y_p, _half(cb_p), _half(cr_p)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y_p, cb_p, cr_p]
-            samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-
-    def _block_coeffs(plane, x0, y0):
-        ph, pw = len(plane), len(plane[0])
-        blk = [
-            [
-                plane[min(y0 + x, ph - 1)][min(x0 + y, pw - 1)] - 128
-                for y in range(8)
-            ]
-            for x in range(8)
-        ]
-        f = _fdct(blk)
-        flat = [f[i // 8][i % 8] for i in range(64)]
-        return [round(flat[_ZZ[i]]) for i in range(64)]
-
-    # quantized (q=1) zigzag coefficients on the MCU-padded block grid
-    blocks = []  # blocks[ci][by][bx] -> cf[64]
-    for ci, (sh, sv) in enumerate(samp):
-        by_n, bx_n = mcuy * sv, mcux * sh
-        blocks.append([
-            [_block_coeffs(planes[ci], bx * 8, by * 8)
-             for bx in range(bx_n)]
-            for by in range(by_n)
-        ])
-
-    # ---- scan item generators: ("sym", s) / ("bits", v, n) /
-    # ("rst", m) — restart markers cycle 0-7 per scan, resetting DC
-    # predictors, EOB runs, and bit alignment on both sides ----------
-    def _dc_first_items(al):
-        items = []
-        dc_pred = [0] * len(planes)
-        nrst = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                mcu = my * mcux + mx
-                if restart_interval and mcu and (
-                    mcu % restart_interval == 0
-                ):
-                    items.append(("rst", nrst % 8))
-                    nrst += 1
-                    dc_pred = [0] * len(planes)
-                for ci, (sh, sv) in enumerate(samp):
-                    for by in range(sv):
-                        for bx in range(sh):
-                            v = blocks[ci][my * sv + by][mx * sh + bx][0]
-                            v >>= al  # arithmetic shift per T.81 DC pt
-                            diff = v - dc_pred[ci]
-                            dc_pred[ci] = v
-                            s = _size_cat(diff)
-                            dbits = (
-                                diff if diff >= 0
-                                else diff + (1 << s) - 1
-                            )
-                            items.append(("sym", s))
-                            items.append(("bits", dbits, s))
-        return items
-
-    def _dc_refine_items(al):
-        items = []
-        nrst = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                mcu = my * mcux + mx
-                if restart_interval and mcu and (
-                    mcu % restart_interval == 0
-                ):
-                    items.append(("rst", nrst % 8))
-                    nrst += 1
-                for ci, (sh, sv) in enumerate(samp):
-                    for by in range(sv):
-                        for bx in range(sh):
-                            v = blocks[ci][my * sv + by][mx * sh + bx][0]
-                            items.append(("bits", (v >> al) & 1, 1))
-        return items
-
-    def _comp_grid(ci):
-        sh, sv = samp[ci]
-        cw = (w * sh + hmax - 1) // hmax
-        ch = (h * sv + vmax - 1) // vmax
-        return (ch + 7) // 8, (cw + 7) // 8
-
-    def _flush_eob(state, items):
-        n = state["eobrun"]
-        if n == 0:
-            return
-        r = n.bit_length() - 1
-        items.append(("sym", r << 4))
-        if r:
-            items.append(("bits", n - (1 << r), r))
-        items.extend(state["pending"])
-        state["eobrun"] = 0
-        state["pending"] = []
-
-    def _ac_first_items(ci, ss, se, al):
-        items = []
-        state = {"eobrun": 0, "pending": []}
-        by_n, bx_n = _comp_grid(ci)
-        nrst = 0
-        for by in range(by_n):
-            for bx in range(bx_n):
-                blk = by * bx_n + bx
-                if restart_interval and blk and (
-                    blk % restart_interval == 0
-                ):
-                    _flush_eob(state, items)
-                    items.append(("rst", nrst % 8))
-                    nrst += 1
-                cf = blocks[ci][by][bx]
-                t = [abs(cf[k]) >> al for k in range(64)]
-                kend = max(
-                    (k for k in range(ss, se + 1) if t[k]), default=0
-                )
-                if kend < ss:  # whole band zero at this precision
-                    state["eobrun"] += 1
-                    if state["eobrun"] == 0x7FFF:
-                        _flush_eob(state, items)
-                    continue
-                _flush_eob(state, items)
-                r = 0
-                for k in range(ss, kend + 1):
-                    if t[k] == 0:
-                        r += 1
-                        continue
-                    while r > 15:
-                        items.append(("sym", 0xF0))
-                        r -= 16
-                    size = t[k].bit_length()
-                    vs = t[k] if cf[k] > 0 else -t[k]
-                    abits = vs if vs >= 0 else vs + (1 << size) - 1
-                    items.append(("sym", (r << 4) | size))
-                    items.append(("bits", abits, size))
-                    r = 0
-                if kend < se:
-                    state["eobrun"] += 1
-                    if state["eobrun"] == 0x7FFF:
-                        _flush_eob(state, items)
-        _flush_eob(state, items)
-        return items
-
-    def _ac_refine_items(ci, ss, se, al):
-        items = []
-        state = {"eobrun": 0, "pending": []}
-        by_n, bx_n = _comp_grid(ci)
-        nrst = 0
-        for by in range(by_n):
-            for bx in range(bx_n):
-                blk = by * bx_n + bx
-                if restart_interval and blk and (
-                    blk % restart_interval == 0
-                ):
-                    _flush_eob(state, items)
-                    items.append(("rst", nrst % 8))
-                    nrst += 1
-                cf = blocks[ci][by][bx]
-                t = [abs(cf[k]) >> al for k in range(64)]
-                eob = ss - 1
-                for k in range(ss, se + 1):
-                    if t[k] == 1:  # newly significant this pass
-                        eob = k
-                r = 0
-                br = []  # correction bits buffered inside this block
-                for k in range(ss, se + 1):
-                    if t[k] == 0:
-                        r += 1
-                        continue
-                    while r > 15 and k <= eob:
-                        _flush_eob(state, items)
-                        items.append(("sym", 0xF0))
-                        r -= 16
-                        items.extend(br)
-                        br = []
-                    if t[k] > 1:  # already significant: correction bit
-                        br.append(("bits", t[k] & 1, 1))
-                        continue
-                    _flush_eob(state, items)
-                    items.append(("sym", (r << 4) | 1))
-                    items.append(("bits", 1 if cf[k] > 0 else 0, 1))
-                    items.extend(br)
-                    br = []
-                    r = 0
-                if r > 0 or br:
-                    state["eobrun"] += 1
-                    state["pending"].extend(br)
-                    if state["eobrun"] == 0x7FFF or len(
-                        state["pending"]
-                    ) > 900:
-                        _flush_eob(state, items)
-        _flush_eob(state, items)
-        return items
-
-    # ---- scan script -------------------------------------------------
-    # (items, scan_comps, Ss, Se, AhAl, needs_huff_class)
-    scans = [(_dc_first_items(1), list(range(len(planes))), 0, 0,
-              (0 << 4) | 1, 0)]
-    for ci in range(len(planes)):
-        scans.append((_ac_first_items(ci, 1, 5, 1), [ci], 1, 5,
-                      (0 << 4) | 1, 1))
-        scans.append((_ac_first_items(ci, 6, 63, 1), [ci], 6, 63,
-                      (0 << 4) | 1, 1))
-    for ci in range(len(planes)):
-        scans.append((_ac_refine_items(ci, 1, 5, 0), [ci], 1, 5,
-                      (1 << 4) | 0, 1))
-        scans.append((_ac_refine_items(ci, 6, 63, 0), [ci], 6, 63,
-                      (1 << 4) | 0, 1))
-    scans.append((_dc_refine_items(0), list(range(len(planes))), 0, 0,
-                  (1 << 4) | 0, None))
-
-    # ---- assemble ----------------------------------------------------
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0]) + bytes(
-        [1] * 64
-    )
-    out += b"\xff\xc2" + struct.pack(
-        ">HBHHB", 8 + 3 * len(planes), 8, h, w, len(planes)
-    )
-    for ci, (sh, sv) in enumerate(samp):
-        out += bytes([ci + 1, (sh << 4) | sv, 0])
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    for items, scomps, ss, se, ahal, hclass in scans:
-        syms = [it[1] for it in items if it[0] == "sym"]
-        if hclass is not None:
-            counts, values, code_map = _huff_tables(syms or [0])
-            out += b"\xff\xc4" + struct.pack(
-                ">H", 19 + len(values)
-            ) + bytes([(hclass << 4) | 0]) + counts + values
-        out += b"\xff\xda" + struct.pack(
-            ">HB", 6 + 2 * len(scomps), len(scomps)
-        )
-        for ci in scomps:
-            out += bytes([ci + 1, 0x00])
-        out += bytes([ss, se, ahal])
-        wtr = _BitWriter()
-        for it in items:
-            if it[0] == "sym":
-                ln, code = code_map[it[1]]
-                wtr.put(code, ln)
-            elif it[0] == "rst":
-                wtr.marker(0xD0 + it[1])
-            else:
-                _, v, nb = it
-                wtr.put(v, nb)
-        wtr.align()
-        out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _gradient(w, h):
-    return [
-        [((x * 255) // max(w - 1, 1), (y * 255) // max(h - 1, 1), 128)
-         for x in range(w)]
-        for y in range(h)
-    ]
-
-
-def _max_err(rgb_a, rgb_b):
-    return max(
-        abs(int(rgb_a[y][x][c]) - int(rgb_b[y, x, c]))
-        for y in range(len(rgb_a))
-        for x in range(len(rgb_a[0]))
-        for c in range(3)
-    )
-
-
-def test_flat_grayscale_decodes_exactly():
-    img = [[(77, 77, 77)] * 16 for _ in range(16)]
-    payload = _encode_jpeg(img, gray=True)
-    assert is_jpeg(payload)
-    rgb = jpeg_to_rgb(payload)
-    assert rgb.shape == (16, 16, 3)
-    assert (rgb == 77).all()
-
-
-def test_flat_color_within_color_roundtrip_error():
-    img = [[(200, 40, 90)] * 16 for _ in range(16)]
-    rgb = jpeg_to_rgb(_encode_jpeg(img))
-    assert rgb.shape == (16, 16, 3)
-    assert _max_err(img, rgb) <= 2  # YCbCr int roundtrip only
-
-
-def test_gradient_within_quantization_error():
-    img = _gradient(24, 16)  # non-multiple-of-8 width: edge replication
-    rgb = jpeg_to_rgb(_encode_jpeg(img))
-    assert rgb.shape == (16, 24, 3)
-    assert _max_err(img, rgb) <= 4  # Q=1: FDCT rounding alone
-
-
-def test_chroma_subsampling_420_luma_survives():
-    img = _gradient(16, 16)
-    rgb = jpeg_to_rgb(_encode_jpeg(img, subsample=True))
-    assert rgb.shape == (16, 16, 3)
-    for y in range(16):
-        for x in range(16):
-            want = (
-                299 * img[y][x][0] + 587 * img[y][x][1] + 114 * img[y][x][2]
-            )
-            got = (
-                299 * int(rgb[y, x, 0])
-                + 587 * int(rgb[y, x, 1])
-                + 114 * int(rgb[y, x, 2])
-            )
-            # luma is full-resolution; only chroma error leaks through
-            # the RGB roundtrip
-            assert abs(want - got) <= 6000, (x, y, want, got)
-
-
-def test_restart_markers_decode_identically():
-    img = _gradient(32, 24)
-    plain = jpeg_to_rgb(_encode_jpeg(img))
-    rst = jpeg_to_rgb(_encode_jpeg(img, restart_interval=2))
-    assert (plain == rst).all()
-
-
-def test_features_and_transcode_ride_shared_kernels():
-    img = [[(9, 9, 9)] * 16 for _ in range(16)]
-    payload = _encode_jpeg(img, gray=True)
-    w, h, feats = decode_jpeg_bytes(payload)
-    assert (w, h) == (16, 16)
-    # container independence: the same flat pixels through the PNG path
-    from tests.test_multimodal_png import _encode_png
-
-    png = _encode_png(
-        [[(9, 9, 9)] * 16 for _ in range(16)], 2, [0] * 16
-    )
-    assert decode_png_bytes(png)[2] == feats
-    # transcode onto the REAL resizer
-    ppm = jpeg_to_ppm(payload)
-    resized = resize_ppm_bytes(ppm, 4, 4)
-    assert resized.startswith(b"P6\n4 4\n255\n")
 
 
 def test_unsupported_profiles_reject_loudly():
-    img = _gradient(16, 16)
-    payload = bytearray(_encode_jpeg(img))
-    sof = payload.find(b"\xff\xc0")
-    payload[sof + 1] = 0xC3  # rewrite SOF0 -> SOF3 (lossless)
-    with pytest.raises(ValueError, match="coding process"):
-        jpeg_to_rgb(bytes(payload))
-    # SOF0 -> SOF2: now a structurally invalid PROGRESSIVE stream (a
-    # full-band Ss=0..Se=63 scan is illegal in a progressive frame) —
-    # must reject, not misdecode (r14: progressive is supported)
-    payload[sof + 1] = 0xC2
-    with pytest.raises(ValueError, match="Se=0"):
-        jpeg_to_rgb(bytes(payload))
-    with pytest.raises(ValueError):  # truncated entropy stream
-        jpeg_to_rgb(_encode_jpeg(img)[:-40])
-
-
-def test_progressive_equals_baseline_grayscale():
-    """All scans of a progressive stream reconstruct the SAME quantized
-    coefficients the baseline stream carries (successive approximation
-    is exact once every refinement lands), so the two decodes must be
-    bit-identical."""
-    img = _gradient(24, 16)
-    prog = _encode_jpeg_progressive(img, gray=True)
-    assert is_jpeg(prog) and prog[3] != 0xC0
-    a = jpeg_to_rgb(prog)
-    b = jpeg_to_rgb(_encode_jpeg(img, gray=True))
-    assert a.shape == b.shape == (16, 24, 3)
-    assert (a == b).all()
-
-
-def test_progressive_equals_baseline_color():
-    img = _gradient(16, 24)
-    a = jpeg_to_rgb(_encode_jpeg_progressive(img))
-    b = jpeg_to_rgb(_encode_jpeg(img))
-    assert a.shape == (24, 16, 3)
-    assert (a == b).all()
-    assert _max_err(img, a) <= 4
-
-
-def test_progressive_equals_baseline_420_subsampled():
-    img = _gradient(24, 24)
-    a = jpeg_to_rgb(_encode_jpeg_progressive(img, subsample=True))
-    b = jpeg_to_rgb(_encode_jpeg(img, subsample=True))
-    assert a.shape == (24, 24, 3)
-    assert (a == b).all()
-
-
-def test_progressive_flat_blocks_exercise_eob_runs():
-    """A mostly-flat image makes long EOB runs (whole AC bands zero
-    across consecutive blocks) — the EOBn accumulation path on both
-    sides; one busy corner block breaks the run mid-scan."""
-    img = [[(90, 90, 90)] * 40 for _ in range(40)]
-    for y in range(8):
-        for x in range(8):
-            img[y][x] = (255 if (x + y) % 2 else 0,) * 3
-    a = jpeg_to_rgb(_encode_jpeg_progressive(img, gray=True))
-    b = jpeg_to_rgb(_encode_jpeg(img, gray=True))
-    assert (a == b).all()
-
-
-def test_progressive_restart_markers_decode_identically():
-    """Restart markers inside progressive scans (DC interleaved: every
-    2 MCUs; AC non-interleaved: every 2 blocks) reset DC predictors,
-    EOB runs, and bit alignment on both sides — output must equal the
-    restart-free progressive and the baseline decode."""
-    img = _gradient(32, 24)
-    a = jpeg_to_rgb(_encode_jpeg_progressive(img, restart_interval=2))
-    b = jpeg_to_rgb(_encode_jpeg_progressive(img))
-    c = jpeg_to_rgb(_encode_jpeg(img))
-    assert (a == b).all() and (a == c).all()
-    d = jpeg_to_rgb(
-        _encode_jpeg_progressive(img, subsample=True, restart_interval=3)
-    )
-    e = jpeg_to_rgb(_encode_jpeg(img, subsample=True))
-    assert (d == e).all()
-
-
-def test_fill_bytes_before_markers_decode_identically():
-    """T.81 B.1.1.2 allows any number of 0xFF fill bytes before a
-    marker.  The marker walk must skip them wherever they appear —
-    between the scans of a progressive file and before EOI — and the
-    decode must be byte-identical to the fill-free file (ADVICE r14
-    regression pin)."""
-    import re
-
-    img = _gradient(24, 16)
-    buf = _encode_jpeg_progressive(img)
-    base = jpeg_to_rgb(buf)
-    sos = [m.start() for m in re.finditer(b"\xff\xda", buf)]
-    assert len(sos) > 2
-    # fill bytes before an inter-scan marker AND before EOI
-    filled = buf[: sos[1]] + b"\xff\xff\xff" + buf[sos[1] : -2]
-    filled += b"\xff\xff" + buf[-2:]
-    assert (jpeg_to_rgb(filled) == base).all()
-
-
-def test_dqt_redefinition_after_scan_is_not_retroactive():
-    """A DQT segment between scans (or after the last scan) redefines
-    the table slot for LATER first-use only; components latch their
-    quantization table at their first scan (libjpeg latch semantics),
-    so already-decoded scans must not be rescaled by the new table
-    even though dequantization physically runs at end of frame."""
-    img = _gradient(24, 16)
-    for buf in (_encode_jpeg_progressive(img), _encode_jpeg(img)):
-        base = jpeg_to_rgb(buf)
-        # redefine table 0 (and 1 if referenced) to all-255 junk
-        junk = b""
-        for tq in (0, 1):
-            junk += b"\xff\xdb" + (2 + 65).to_bytes(2, "big")
-            junk += bytes([tq]) + b"\xff" * 64
-        assert buf.endswith(b"\xff\xd9")
-        poisoned = buf[:-2] + junk + buf[-2:]
-        assert (jpeg_to_rgb(poisoned) == base).all()
-
-
-def test_progressive_truncated_scan_rejects():
-    img = _gradient(16, 16)
-    prog = _encode_jpeg_progressive(img, gray=True)
-    with pytest.raises(ValueError):
-        jpeg_to_rgb(prog[: len(prog) // 2])
+    jpeg = _jpeg_8x8_gray()
+    assert_quarantined(_with_sof(jpeg, 0xC3))  # lossless coding process
+    # progressive frame with a full-band Ss=0..Se=63 scan: structurally
+    # invalid, never misdecoded
+    assert_quarantined(_with_sof(jpeg, 0xC2))
+    assert_quarantined(jpeg[:-3])  # entropy stream and EOI cut off
 
 
 def test_entropy_cut_before_eoi_rejects_not_zero_fills():
-    """Remove entropy bytes but KEEP the EOI marker: the bit reader
-    pads zeros at the marker, and consuming any padded bit must raise
-    (quarantine contract) — not silently decode zeros into pixels."""
-    img = _gradient(32, 32)
-    payload = _encode_jpeg(img)
-    assert payload.endswith(b"\xff\xd9")
-    cut = payload[:-42] + payload[-2:]
-    with pytest.raises(ValueError):
-        jpeg_to_rgb(cut)
+    """Remove the entropy bytes but KEEP the EOI marker: the payload
+    quarantines instead of decoding padded zeros into pixels."""
+    jpeg = _jpeg_8x8_gray()
+    assert jpeg.endswith(b"\xff\xd9")
+    assert_quarantined(jpeg[:-3] + jpeg[-2:])
 
 
-def test_decode_assets_dispatches_jpeg(spark):
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_assets,
-    )
-
-    img = [[(50, 100, 150)] * 16 for _ in range(16)]
-    good = _encode_jpeg(img)
-    prog = _encode_jpeg_progressive(img)
-    corrupt = good[:30]  # sniffs as JPEG, truncated body
-    prog_prefix = prog[: len(prog) - 20]  # progressive missing tail/EOI
-    df = spark.createDataFrame(
-        [
-            (1, "image", bytearray(good)),
-            (2, "image", bytearray(corrupt)),
-            (3, "image", bytearray(prog)),
-            (4, "image", bytearray(prog_prefix)),
-        ],
-        "asset_id long, modality string, payload binary",
-    )
-    rows = {r["asset_id"]: r for r in decode_assets(df).collect()}
-    assert rows[1]["decode_ok"] and rows[1]["width"] == 16
-    assert not rows[2]["decode_ok"] and rows[2]["width"] is None
-    # progressive decodes through the same Arrow kernel (r14)
-    assert rows[3]["decode_ok"] and rows[3]["width"] == 16
-    # a renderable progressive PREFIX still quarantines (no EOI)
-    assert not rows[4]["decode_ok"]
-
-
-def test_resize_kernel_accepts_jpeg(spark):
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        resize_assets,
-    )
-
-    img = _gradient(16, 16)
-    df = spark.createDataFrame(
-        [(7, "image", bytearray(_encode_jpeg(img)))],
-        "asset_id long, modality string, payload binary",
-    )
-    row = resize_assets(df, 8, 8).collect()[0]
-    assert row["resize_ok"] and row["width"] == 8
-    assert bytes(row["payload"]).startswith(b"P6\n8 8\n255\n")
+def test_progressive_truncated_scan_rejects():
+    # progressive DC-first scan header (Ss=Se=0), then the stream ends
+    jpeg = _with_sof(_jpeg_8x8_gray(), 0xC2)
+    sos = jpeg.index(b"\xff\xda")
+    prog = jpeg[: sos + 4] + b"\x01\x01\x00\x00\x00\x00" + b"\x7f\xff\xd9"
+    assert_quarantined(prog)
+    assert_quarantined(prog[: sos + 10])

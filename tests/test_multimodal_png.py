@@ -196,6 +196,19 @@ def test_unsupported_profiles_reject_loudly():
     assert not is_png(b"P6\n1 1\n255\n\x00\x00\x00")
 
 
+def test_16bit_palette_rejects():
+    """Spec §11.2.2: palette images allow depths 1/2/4/8 only; 16-bit
+    samples are not decoded here at all, so the file rejects on depth
+    and quarantines in the kernels."""
+    palette = [(1, 2, 3), (4, 5, 6)]
+    idx = [[(i % 2,) for i in range(4)] for _ in range(4)]
+    png = bytearray(_encode_png(idx, 3, [0, 0, 0, 0], palette))
+    png[16 + 8] = 16  # depth byte
+    with pytest.raises(ValueError, match="bit depth"):
+        png_to_rgb(bytes(png))
+    assert _decode_any(bytes(png)) == (False, None, None, None)
+
+
 def test_raster_length_must_match_ihdr():
     """Quarantine contract: a raster that isn't exactly the
     ``height * (width * bpp + 1)`` bytes IHDR declares is corrupt —

@@ -12,10 +12,15 @@ import os
 import struct
 import zlib
 
+import pandas as pd
+
 from crypto_data_ingestion_module_spark.operators.multimodal import (
     decode_assets,
+    decode_image_batch,
+    make_resize_kernel,
     resize_assets,
     sample_frames,
+    sample_frames_batch,
 )
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
@@ -55,16 +60,16 @@ def _jpeg_8x8_gray() -> bytes:
     )
 
 
-def _avi_mjpeg(frame: bytes) -> bytes:
+def _avi_mjpeg(frame: bytes, handler: bytes = b"MJPG", streams: int = 1) -> bytes:
     def chunk(cid, data):
         return cid + struct.pack("<I", len(data)) + data + b"\x00" * (len(data) & 1)
 
+    strl = chunk(b"LIST", b"strl" + chunk(b"strh", b"vids" + handler + bytes(48)))
     body = (
         b"AVI "
         + chunk(b"LIST", b"hdrl"
                 + chunk(b"avih", struct.pack("<I", 40000) + bytes(52))
-                + chunk(b"LIST", b"strl"
-                        + chunk(b"strh", b"vidsMJPG" + bytes(48))))
+                + strl * streams)
         + chunk(b"LIST", b"movi" + chunk(b"00dc", frame))
     )
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -80,6 +85,21 @@ GIF_1X1 = (
     b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
     b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;"
 )
+
+
+def assert_quarantined(payload: bytes) -> None:
+    """Run one payload through the batch functions the three kernels
+    hand to ``mapInPandas`` (a one-row pandas batch, no Spark job) and
+    assert each flags it with NULL outputs."""
+    pdf = pd.DataFrame(
+        {"asset_id": [1], "modality": ["video"], "payload": [payload]}
+    )
+    (dec,) = decode_image_batch(iter([pdf]))
+    assert not dec["decode_ok"][0] and dec["features"][0] is None
+    (rs,) = make_resize_kernel(2, 2)(iter([pdf]))
+    assert not rs["resize_ok"][0] and rs["payload"][0] is None
+    (fr,) = sample_frames_batch(iter([pdf]))
+    assert len(fr) == 1 and not fr["demux_ok"][0] and fr["frame"][0] is None
 
 
 def test_dropped_formats_quarantine_in_all_three_kernels(spark):

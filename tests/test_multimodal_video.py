@@ -71,6 +71,18 @@ def test_demux_rejects_truncated_and_foreign_bytes():
         demux_ppm_stream(payload + b"JUNKJUNK")
 
 
+def test_y4m_rejects_unsupported_colorspace_and_truncation():
+    """Y4M has no demuxer here: the committed golden file, a truncated
+    copy and a copy with an unsupported colorspace all quarantine."""
+    from tests.test_multimodal_quarantine import assert_quarantined
+
+    payload = open(os.path.join(DATA, "golden_2f_ntsc.y4m"), "rb").read()
+    assert payload.startswith(b"YUV4MPEG2 ") and b"C420jpeg" in payload
+    assert_quarantined(payload)
+    assert_quarantined(payload[:-3])
+    assert_quarantined(payload.replace(b"C420jpeg", b"C422tool", 1))
+
+
 def test_sample_frames_expands_real_stream_end_to_end(spark):
     # 1→N through the Spark kernel: the P6 stream expands to its TRUE
     # frame count at the documented 25 fps timestamps; a non-P6 payload

@@ -1,648 +1,20 @@
-"""REAL WebP-lossless decode (r16, operators/multimodal.py
-webp_to_rgb): pinned against an INDEPENDENTLY written VP8L encoder.
+"""WebP payloads have no decoder in the engine: a valid lossless (VP8L)
+WebP quarantines (``test_multimodal_quarantine``), and so do lossy VP8,
+extended VP8X and corrupt VP8L files behind the same RIFF/WEBP magic."""
 
-The writer below lives in the TEST and shares no code with the
-decoder: its bit packing, canonical-Huffman construction, prefix-coded
-LZ77 values, transform residuals, and 2D distance table are all its
-own transcription of the public WebP Lossless Bitstream Specification
-(RFC 9649) — a transcription slip on either side fails the golden
-pixel comparison against the raw raster the encoder was fed.
-"""
-
-import heapq
 import struct
 
-import pytest
-
-from crypto_data_ingestion_module_spark.operators.multimodal import (
-    decode_ppm_bytes,
-    decode_webp_bytes,
-    is_webp,
-    webp_to_ppm,
-    webp_to_rgb,
-)
+from tests.test_multimodal_quarantine import WEBP_LOSSLESS, assert_quarantined
 
 
-# ---------------------------------------------------------------------------
-# independent encoder
-# ---------------------------------------------------------------------------
-
-class _W:
-    """LSB-first bit writer (VP8L bit order)."""
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def put(self, v: int, n: int) -> None:
-        for i in range(n):
-            self.bits.append((v >> i) & 1)
-
-    def bytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for j, bit in enumerate(self.bits[i : i + 8]):
-                b |= bit << j
-            out.append(b)
-        return bytes(out)
-
-
-def _huff_lengths(freqs: dict[int, int]) -> dict[int, int]:
-    """Deterministic Huffman code lengths (complete Kraft codes)."""
-    items = sorted((f, s) for s, f in freqs.items() if f > 0)
-    if len(items) == 1:
-        return {items[0][1]: 0}  # single-symbol degenerate code
-    heap = [(f, i, (s,)) for i, (f, s) in enumerate(items)]
-    heapq.heapify(heap)
-    nxt = len(heap)
-    depth: dict[int, int] = {s: 0 for _, _, (s,) in [(0, 0, (x[2][0],)) for x in heap]}
-    depth = {s: 0 for _, s in items}
-    while len(heap) > 1:
-        f1, _, s1 = heapq.heappop(heap)
-        f2, _, s2 = heapq.heappop(heap)
-        for s in s1 + s2:
-            depth[s] += 1
-        heapq.heappush(heap, (f1 + f2, nxt, s1 + s2))
-        nxt += 1
-    return depth
-
-
-def _canon(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """Canonical code assignment (DEFLATE order), sym -> (len, code)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    for ln in range(1, max(lengths.values()) + 1):
-        for s in sorted(s for s, v in lengths.items() if v == ln):
-            out[s] = (ln, code)
-            code += 1
-        code <<= 1
-    return out
-
-
-def _emit(w: _W, codes: dict, sym: int) -> None:
-    ln, code = codes[sym]
-    for i in range(ln - 1, -1, -1):  # MSB first (tree-walk order)
-        w.put((code >> i) & 1, 1)
-
-
-_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
-
-
-def _write_code(w: _W, freqs: dict[int, int], alphabet: int, zero_runs=False):
-    """Write one prefix code, returning sym -> (len, code) for emission."""
-    used = sorted(s for s, f in freqs.items() if f > 0)
-    if len(used) == 1:
-        w.put(1, 1)  # simple
-        w.put(0, 1)  # 1 symbol
-        s = used[0]
-        if s > 1:
-            w.put(1, 1)
-            w.put(s, 8)
-        else:
-            w.put(0, 1)
-            w.put(s, 1)
-        return {s: (0, 0)}
-    if len(used) == 2:
-        w.put(1, 1)  # simple
-        w.put(1, 1)  # 2 symbols
-        s0, s1 = used
-        if s0 > 1:
-            w.put(1, 1)
-            w.put(s0, 8)
-        else:
-            w.put(0, 1)
-            w.put(s0, 1)
-        w.put(s1, 8)
-        return {s0: (1, 0), s1: (1, 1)}
-    lengths = _huff_lengths(freqs)
-    seq = [lengths.get(s, 0) for s in range(alphabet)]
-    # optionally compress zero runs with codes 17 (3-10) / 18 (11-138)
-    tokens: list[tuple[int, int, int]] = []  # (clc_sym, extra, extra_bits)
-    i = 0
-    while i < len(seq):
-        if zero_runs and seq[i] == 0:
-            j = i
-            while j < len(seq) and seq[j] == 0:
-                j += 1
-            run = j - i
-            while run >= 3:
-                if run >= 11:
-                    r = min(run, 138)
-                    tokens.append((18, r - 11, 7))
-                else:
-                    r = min(run, 10)
-                    tokens.append((17, r - 3, 3))
-                run -= r
-            for _ in range(run):
-                tokens.append((0, 0, 0))
-            i = j
-        else:
-            tokens.append((seq[i], 0, 0))
-            i += 1
-    clc_freq: dict[int, int] = {}
-    for t, _, _ in tokens:
-        clc_freq[t] = clc_freq.get(t, 0) + 1
-    clc_len = _huff_lengths(clc_freq)
-    if any(v > 7 for v in clc_len.values()):
-        raise AssertionError("CLC too deep for this test input")
-    w.put(0, 1)  # not simple
-    w.put(19 - 4, 4)  # write all 19 CLC slots
-    for s in _CLC_ORDER:
-        w.put(clc_len.get(s, 0), 3)
-    if len(clc_len) == 1:
-        clc_codes = {next(iter(clc_len)): (0, 0)}
-    else:
-        clc_codes = _canon(clc_len)
-    w.put(0, 1)  # no max_symbol bound
-    for t, extra, ebits in tokens:
-        _emit(w, clc_codes, t)
-        if ebits:
-            w.put(extra, ebits)
-    return _canon(lengths)
-
-
-def _prefix_encode(v: int) -> tuple[int, int, int]:
-    """value -> (prefix_code, extra, extra_bits) — brute-force inverse
-    of the spec's PrefixCodedValue, independent of the decoder."""
-    if v <= 4:
-        return (v - 1, 0, 0)
-    for code in range(4, 40):
-        eb = (code - 2) >> 1
-        off = (2 + (code & 1)) << eb
-        if off + 1 <= v <= off + (1 << eb):
-            return (code, v - off - 1, eb)
-    raise AssertionError(v)
-
-
-#: the test's OWN transcription of the 2D distance map (spec order)
-_DIST2D = [
-    (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0), (1, 2), (-1, 2),
-    (2, 1), (-2, 1), (2, 2), (-2, 2), (0, 3), (3, 0), (1, 3), (-1, 3),
-]
-
-
-def _dist_code(dist: int, xsize: int, allow_2d=True) -> int:
-    if allow_2d:
-        for i, (dx, dy) in enumerate(_DIST2D):
-            if dy * xsize + dx == dist:
-                return i + 1
-    return dist + 120
-
-
-def _write_image_stream(
-    w: _W,
-    tokens: list,
-    xsize: int,
-    cache_bits: int = 0,
-    is_level0: bool = True,
-    group_of=None,
-    meta_bits: int = 0,
-    n_groups: int = 1,
-    header_written: bool = False,
-):
-    """Entropy-coded image data: color-cache bit, (optional meta codes
-    written by the caller), per-group prefix codes, token emission."""
-    if not header_written:
-        if cache_bits:
-            w.put(1, 1)
-            w.put(cache_bits, 4)
-        else:
-            w.put(0, 1)
-        if is_level0:
-            w.put(0, 1)  # no meta prefix codes
-    cache = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    gfreq = [dict() for _ in range(n_groups)]
-    rfreq = [dict() for _ in range(n_groups)]
-    bfreq = [dict() for _ in range(n_groups)]
-    afreq = [dict() for _ in range(n_groups)]
-    dfreq = [dict() for _ in range(n_groups)]
-
-    def bump(d, k):
-        d[k] = d.get(k, 0) + 1
-
-    for idx, tok in enumerate(tokens):
-        g = group_of(idx) if group_of else 0
-        if tok[0] == "lit":
-            _, a, r, gg, b = tok
-            bump(gfreq[g], gg)
-            bump(rfreq[g], r)
-            bump(bfreq[g], b)
-            bump(afreq[g], a)
-        elif tok[0] == "copy":
-            _, length, dcode = tok
-            bump(gfreq[g], 256 + _prefix_encode(length)[0])
-            bump(dfreq[g], _prefix_encode(dcode)[0])
-        else:  # cache
-            bump(gfreq[g], 256 + 24 + tok[1])
-    codes = []
-    for g in range(n_groups):
-        if not dfreq[g]:
-            dfreq[g] = {0: 1}  # unused but a code must be present
-        codes.append(
-            (
-                _write_code(w, gfreq[g], cache, zero_runs=True),
-                _write_code(w, rfreq[g], 256, zero_runs=True),
-                _write_code(w, bfreq[g], 256, zero_runs=True),
-                _write_code(w, afreq[g], 256, zero_runs=True),
-                _write_code(w, dfreq[g], 40),
-            )
-        )
-    for idx, tok in enumerate(tokens):
-        gc, rc, bc, ac, dc = codes[group_of(idx) if group_of else 0]
-        if tok[0] == "lit":
-            _, a, r, gg, b = tok
-            _emit(w, gc, gg)
-            _emit(w, rc, r)
-            _emit(w, bc, b)
-            _emit(w, ac, a)
-        elif tok[0] == "copy":
-            _, length, dcode = tok
-            pc, extra, ebits = _prefix_encode(length)
-            _emit(w, gc, 256 + pc)
-            w.put(extra, ebits)
-            pc, extra, ebits = _prefix_encode(dcode)
-            _emit(w, dc, pc)
-            w.put(extra, ebits)
-        else:
-            _emit(w, gc, 256 + 24 + tok[1])
-
-
-def _lit(px: int):
-    return (
-        "lit",
-        (px >> 24) & 0xFF,
-        (px >> 16) & 0xFF,
-        (px >> 8) & 0xFF,
-        px & 0xFF,
-    )
-
-
-def _wrap_riff(vp8l_payload: bytes, chunk=b"VP8L") -> bytes:
-    body = chunk + struct.pack("<I", len(vp8l_payload)) + vp8l_payload
-    if len(vp8l_payload) & 1:
-        body += b"\x00"
+def _wrap_riff(payload: bytes, chunk: bytes = b"VP8L") -> bytes:
+    body = chunk + struct.pack("<I", len(payload)) + payload
+    body += b"\x00" * (len(payload) & 1)
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
 
 
-def _encode_simple(pixels: list[int], xsize: int, ysize: int, **kw) -> bytes:
-    """Literal/LZ77/cache VP8L stream with no transforms."""
-    w = _W()
-    w.put(xsize - 1, 14)
-    w.put(ysize - 1, 14)
-    w.put(0, 1)  # alpha hint
-    w.put(0, 3)  # version
-    w.put(0, 1)  # no transforms
-    _write_image_stream(w, kw.pop("tokens"), xsize, **kw)
-    return _wrap_riff(b"\x2f" + w.bytes())
-
-
-def _rgb(pixels: list[int], xsize: int):
-    rows = []
-    for i in range(0, len(pixels), xsize):
-        rows.append(
-            [
-                ((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF)
-                for p in pixels[i : i + xsize]
-            ]
-        )
-    return rows
-
-
-def _assert_pixels(payload: bytes, pixels: list[int], xsize: int):
-    got = webp_to_rgb(payload)
-    want = _rgb(pixels, xsize)
-    assert got.shape == (len(want), xsize, 3)
-    for y, row in enumerate(want):
-        for x, (r, g, b) in enumerate(row):
-            assert tuple(got[y, x]) == (r, g, b), (x, y)
-
-
-def _argb(r, g, b, a=0xFF):
-    return (a << 24) | (r << 16) | (g << 8) | b
-
-
-def _gradient(w, h):
-    return [
-        _argb((x * 37) % 256, (y * 53) % 256, (x * 11 + y * 7) % 256)
-        for y in range(h)
-        for x in range(w)
-    ]
-
-
-# ---------------------------------------------------------------------------
-# golden tests
-# ---------------------------------------------------------------------------
-
-def test_literals_simple_codes():
-    """2-symbol channels → the 'simple' prefix-code form end-to-end."""
-    px = [_argb(10, 20, 30), _argb(200, 20, 30), _argb(10, 20, 30),
-          _argb(200, 20, 30)]
-    payload = _encode_simple(px, 2, 2, tokens=[_lit(p) for p in px])
-    assert is_webp(payload)
-    _assert_pixels(payload, px, 2)
-
-
-def test_literals_full_huffman_with_zero_runs():
-    """>2 symbols per channel → code-length-coded codes, exercising the
-    17/18 zero-run repeats in the code-length stream."""
-    px = _gradient(13, 9)
-    payload = _encode_simple(px, 13, 9, tokens=[_lit(p) for p in px])
-    _assert_pixels(payload, px, 13)
-
-
-def test_lz77_plain_and_2d_distances():
-    """Backward references via both plain (code>120) and 2D
-    neighborhood distance codes — both tables transcribed on both
-    sides; the pixel compare catches a slip in either."""
-    xsize = 8
-    row = [_argb(i * 3, 7, 255 - i * 3) for i in range(xsize)]
-    px = row * 5  # 5 identical rows
-    tokens = [_lit(p) for p in row]
-    # row 1 via 2D code (0,1) -> dist = xsize
-    tokens.append(("copy", xsize, _dist_code(xsize, xsize, allow_2d=True)))
-    # rows 2-3 via plain distance code
-    tokens.append(("copy", 2 * xsize, _dist_code(xsize, xsize, allow_2d=False)))
-    # row 4: copy with dist 1 via 2D code (1,0): repeat first pixel...
-    tokens.append(("copy", xsize, _dist_code(xsize, xsize, allow_2d=True)))
-    payload = _encode_simple(px, xsize, 5, tokens=tokens)
-    _assert_pixels(payload, px, xsize)
-
-
-def test_color_cache():
-    """Literal once, cache hits after: the (0x1e35a7bd * argb) >> shift
-    slot arithmetic must match on both sides."""
-    cache_bits = 4
-    a = _argb(12, 34, 56)
-    b = _argb(200, 100, 50)
-    px = [a, b, a, b, a, b]
-
-    def slot(p):
-        return ((0x1E35A7BD * p) & 0xFFFFFFFF) >> (32 - cache_bits)
-
-    assert slot(a) != slot(b)  # make the test meaningful
-    tokens = [_lit(a), _lit(b), ("cache", slot(a)), ("cache", slot(b)),
-              ("cache", slot(a)), ("cache", slot(b))]
-    payload = _encode_simple(px, 3, 2, tokens=tokens, cache_bits=cache_bits)
-    _assert_pixels(payload, px, 3)
-
-
-def test_subtract_green_transform():
-    px = _gradient(7, 5)
-    w = _W()
-    w.put(6, 14)
-    w.put(4, 14)
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)  # transform present
-    w.put(2, 2)  # SUBTRACT_GREEN
-    w.put(0, 1)  # no more transforms
-    toks = []
-    for p in px:
-        g = (p >> 8) & 0xFF
-        r = (((p >> 16) & 0xFF) - g) & 0xFF
-        b = ((p & 0xFF) - g) & 0xFF
-        toks.append(_lit((p & 0xFF000000) | (r << 16) | (g << 8) | b))
-    _write_image_stream(w, toks, 7)
-    _assert_pixels(_wrap_riff(b"\x2f" + w.bytes()), px, 7)
-
-
-def _encode_palette(px, xsize, ysize, palette):
-    """Color-indexing transform, including sub-byte bundling."""
-    n = len(palette)
-    wbits = 3 if n <= 2 else 2 if n <= 4 else 1 if n <= 16 else 0
-    w = _W()
-    w.put(xsize - 1, 14)
-    w.put(ysize - 1, 14)
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)  # transform
-    w.put(3, 2)  # COLOR_INDEXING
-    w.put(n - 1, 8)
-    # palette image: delta-coded per channel, 1 x n, level>0
-    deltas = []
-    prev = 0
-    for c in palette:
-        d = (
-            ((((c >> 24) - (prev >> 24)) & 0xFF) << 24)
-            | (((((c >> 16) & 0xFF) - ((prev >> 16) & 0xFF)) & 0xFF) << 16)
-            | (((((c >> 8) & 0xFF) - ((prev >> 8) & 0xFF)) & 0xFF) << 8)
-            | ((((c & 0xFF) - (prev & 0xFF)) & 0xFF))
-        )
-        deltas.append(d)
-        prev = c
-    _write_image_stream(
-        w, [_lit(d) for d in deltas], n, is_level0=False
-    )
-    w.put(0, 1)  # no more transforms
-    # index image (possibly bundled) — indices in GREEN channel
-    idx_of = {c: i for i, c in enumerate(palette)}
-    if wbits == 0:
-        toks = [_lit(_argb(0, idx_of[p], 0, 0)) for p in px]
-        packed_w = xsize
-    else:
-        per = 1 << wbits
-        bpp = 8 >> wbits
-        packed_w = (xsize + per - 1) >> wbits
-        toks = []
-        for y in range(ysize):
-            row = px[y * xsize : (y + 1) * xsize]
-            for i in range(packed_w):
-                g = 0
-                for j in range(per):
-                    xi = i * per + j
-                    if xi < xsize:
-                        g |= idx_of[row[xi]] << (j * bpp)
-                toks.append(_lit(_argb(0, g, 0, 0)))
-    _write_image_stream(w, toks, packed_w)
-    return _wrap_riff(b"\x2f" + w.bytes())
-
-
-def test_palette_unbundled():
-    palette = [_argb(i * 12, 255 - i * 10, i * 5) for i in range(20)]
-    px = [palette[(x + 2 * y) % 20] for y in range(6) for x in range(9)]
-    _assert_pixels(_encode_palette(px, 9, 6, palette), px, 9)
-
-
-def test_palette_bundled_4_colors():
-    palette = [_argb(0, 0, 0), _argb(255, 0, 0), _argb(0, 255, 0),
-               _argb(0, 0, 255)]
-    px = [palette[(x * y + x) % 4] for y in range(7) for x in range(11)]
-    _assert_pixels(_encode_palette(px, 11, 7, palette), px, 11)
-
-
-def test_palette_bundled_2_colors():
-    palette = [_argb(255, 255, 255), _argb(0, 0, 0)]
-    px = [palette[(x ^ y) & 1] for y in range(5) for x in range(19)]
-    _assert_pixels(_encode_palette(px, 19, 5, palette), px, 19)
-
-
-def test_predictor_transform():
-    """Predictor transform with mixed modes per block (block size 4):
-    mode 0 (black), 1 (L), 2 (T) — residuals computed by the test's own
-    forward pass, border rules included."""
-    xsize, ysize, bits = 8, 6, 2
-    px = _gradient(xsize, ysize)
-    bw = (xsize + 3) >> 2
-    bh = (ysize + 3) >> 2
-    modes = [[1, 2][(bx + by) % 2] for by in range(bh) for bx in range(bw)]
-
-    def sub(a, b):
-        return (
-            ((((a >> 24) - (b >> 24)) & 0xFF) << 24)
-            | (((((a >> 16) & 0xFF) - ((b >> 16) & 0xFF)) & 0xFF) << 16)
-            | (((((a >> 8) & 0xFF) - ((b >> 8) & 0xFF)) & 0xFF) << 8)
-            | ((((a & 0xFF) - (b & 0xFF)) & 0xFF))
-        )
-
-    res = []
-    for i, p in enumerate(px):
-        x, y = i % xsize, i // xsize
-        if x == 0 and y == 0:
-            pred = 0xFF000000
-        elif y == 0:
-            pred = px[i - 1]
-        elif x == 0:
-            pred = px[i - xsize]
-        else:
-            m = modes[(y >> bits) * bw + (x >> bits)]
-            pred = px[i - 1] if m == 1 else px[i - xsize]
-        res.append(sub(p, pred))
-
-    w = _W()
-    w.put(xsize - 1, 14)
-    w.put(ysize - 1, 14)
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)  # transform
-    w.put(0, 2)  # PREDICTOR
-    w.put(bits - 2, 3)
-    _write_image_stream(
-        w, [_lit(_argb(0, m, 0, 0)) for m in modes], bw, is_level0=False
-    )
-    w.put(0, 1)  # no more transforms
-    _write_image_stream(w, [_lit(r) for r in res], xsize)
-    _assert_pixels(_wrap_riff(b"\x2f" + w.bytes()), px, xsize)
-
-
-def test_color_transform():
-    """Cross-channel color transform with a fixed element; forward
-    residuals use the spec's ORIGINAL-red convention so the decoder's
-    reconstructed-red inverse must agree."""
-    xsize, ysize, bits = 6, 4, 3  # one block covers the image
-    px = _gradient(xsize, ysize)
-    g2r, g2b, r2b = 48, 224, 16  # 224 = -32 as int8
-
-    def delta(t, c):
-        if t >= 128:
-            t -= 256
-        if c >= 128:
-            c -= 256
-        return (t * c) >> 5
-
-    res = []
-    for p in px:
-        a, r, g, b = (p >> 24) & 0xFF, (p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF
-        rr = (r - delta(g2r, g)) & 0xFF
-        bb = (b - delta(g2b, g) - delta(r2b, r)) & 0xFF
-        res.append((a << 24) | (rr << 16) | (g << 8) | bb)
-
-    w = _W()
-    w.put(xsize - 1, 14)
-    w.put(ysize - 1, 14)
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)  # transform
-    w.put(1, 2)  # COLOR
-    w.put(bits - 2, 3)
-    cte = _argb(r2b, g2b, g2r, 0)  # red=r2b, green=g2b, blue=g2r
-    _write_image_stream(w, [_lit(cte)], 1, is_level0=False)
-    w.put(0, 1)
-    _write_image_stream(w, [_lit(r) for r in res], xsize)
-    _assert_pixels(_wrap_riff(b"\x2f" + w.bytes()), px, xsize)
-
-
-def test_meta_huffman_groups():
-    """Two prefix-code groups selected by an entropy image (meta bits
-    2 → 4-pixel blocks): left half literal-codes, right half too, but
-    with DIFFERENT code tables — group routing must follow the
-    (red<<8)|green meta pixel."""
-    xsize, ysize, mbits = 8, 4, 2
-    px = [
-        _argb(10 + (x % 4), 100, 200) if x < 4 else _argb(250 - (x % 4), 5, 40)
-        for y in range(ysize)
-        for x in range(xsize)
-    ]
-    mw = (xsize + 3) >> 2
-    mh = (ysize + 3) >> 2
-    meta = [0 if bx == 0 else 1 for _ in range(mh) for bx in range(mw)]
-
-    w = _W()
-    w.put(xsize - 1, 14)
-    w.put(ysize - 1, 14)
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(0, 1)  # no transforms
-    w.put(0, 1)  # no color cache
-    w.put(1, 1)  # meta prefix codes present
-    w.put(mbits - 2, 3)
-    # entropy image: meta index in (red<<8)|green -> green channel here
-    _write_image_stream(
-        w, [_lit(_argb(0, m, 0, 0)) for m in meta], mw, is_level0=False
-    )
-
-    def group_of(i):
-        x = i % xsize
-        return meta[(i // xsize >> mbits) * mw + (x >> mbits)]
-
-    _write_image_stream(
-        w,
-        [_lit(p) for p in px],
-        xsize,
-        is_level0=True,
-        group_of=group_of,
-        meta_bits=mbits,
-        n_groups=2,
-        header_written=True,  # cache bit + meta header written above
-    )
-    _assert_pixels(_wrap_riff(b"\x2f" + w.bytes()), px, xsize)
-
-
 def test_vp8_and_vp8x_quarantine_loudly():
-    with pytest.raises(ValueError, match="VP8"):
-        webp_to_rgb(_wrap_riff(b"\x00" * 20, chunk=b"VP8 "))
-    with pytest.raises(ValueError, match="VP8X"):
-        webp_to_rgb(_wrap_riff(b"\x00" * 10, chunk=b"VP8X"))
-    with pytest.raises(ValueError):
-        webp_to_rgb(_wrap_riff(b"\x2f\x00"))  # truncated VP8L
-
-
-def test_features_container_independent_and_batch_quarantine(spark):
-    """decode_webp_bytes must equal the P6 features for the same
-    raster, and the Spark batch kernel must decode VP8L while
-    quarantining VP8X — the engine-level contract."""
-    from crypto_data_ingestion_module_spark.operators.multimodal import (
-        decode_assets,
-    )
-
-    px = _gradient(12, 10)
-    payload = _encode_simple(px, 12, 10, tokens=[_lit(p) for p in px])
-    ppm = webp_to_ppm(payload)
-    w1, h1, f1 = decode_webp_bytes(payload)
-    w2, h2, f2 = decode_ppm_bytes(ppm)
-    assert (w1, h1) == (w2, h2) == (12, 10)
-    assert f1 == f2
-
-    rows = [
-        (1, "image", bytearray(payload)),
-        (2, "image", bytearray(_wrap_riff(b"\x00" * 16, chunk=b"VP8X"))),
-    ]
-    assets = spark.createDataFrame(
-        rows, "asset_id long, modality string, payload binary"
-    )
-    got = {r.asset_id: r for r in decode_assets(assets).collect()}
-    assert got[1].decode_ok and (got[1].width, got[1].height) == (12, 10)
-    assert not got[2].decode_ok and got[2].features is None
-
-
-if __name__ == "__main__":
-    raise SystemExit(pytest.main([__file__, "-q"]))
+    assert_quarantined(_wrap_riff(b"\x00" * 20, chunk=b"VP8 "))
+    assert_quarantined(_wrap_riff(b"\x00" * 10, chunk=b"VP8X"))
+    assert_quarantined(_wrap_riff(b"\x2f\x00"))  # truncated VP8L
+    assert_quarantined(WEBP_LOSSLESS[:-4])  # VP8L bitstream cut short
