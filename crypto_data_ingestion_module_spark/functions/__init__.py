@@ -3,20 +3,3 @@
 Everything here returns Column expressions that stay inside whole-stage
 codegen — no Python UDFs.
 """
-
-from crypto_data_ingestion_module_spark.functions.timeutil import (  # noqa: F401
-    bucket_start,
-    epoch_ms,
-    from_epoch_ms,
-    from_epoch_s,
-    interval_ms_col,
-    parse_interval_ms,
-    should_collect,
-)
-from crypto_data_ingestion_module_spark.functions.symbols import (  # noqa: F401
-    to_binanceus,
-    to_bitfinex,
-    to_bitstamp,
-    to_coinbase,
-    to_kucoin,
-)

@@ -35,8 +35,7 @@ crash is then safe by case analysis:
 All three lakes hash-bucket their rows by join key (``pmod(xxhash64
 (key), n_buckets)`` partition column), so at scale each delta join
 reads only the buckets the batch touches and the storage layout is
-co-partitioned on the join key — the bucketed-join discipline of
-sinks/bucketed.py applied to view maintenance.
+co-partitioned on the join key.
 """
 
 from __future__ import annotations

@@ -250,9 +250,9 @@ def ann_ivfpq_topk(
     oracle-checkable.
 
     At rest the corpus would carry (list_id, m byte codes) per vector —
-    the ~32x-compressed form — bucketed by list_id
-    (``sinks.ann_lake``); at query time only probed lists' codes are
-    joined and no corpus vector is ever touched.
+    the ~32x-compressed form that ``streaming.ann_stream`` appends to a
+    lake partitioned by list_id; at query time only probed lists' codes
+    are joined and no corpus vector is ever touched.
     """
     from crypto_data_ingestion_module_spark.operators.similarity import (
         _ivf_probe_lists,

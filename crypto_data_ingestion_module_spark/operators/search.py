@@ -5,8 +5,7 @@ Spark shape: the index is ``explode(words) → groupBy(doc, term)`` — the
 same equi-join-on-term skeleton as the shingle-based dedup join
 (operators/text_dedup.py), so it scales identically: the shuffle carries
 postings (term, doc, tf), never documents, and a query touches only its
-terms' posting lists.  At rest the postings table would be written
-bucketed by term (sinks/bucketed.py) making the query join shuffle-free.
+terms' posting lists.
 
 Scoring is "BM25-lite": the classic tf-saturation × rational-idf form
 
@@ -206,9 +205,7 @@ def phrase_topk_docs(
     postings (``lead(term)`` within doc — one shuffle by doc_id, no
     positional self-join); the phrase shortlist is a bounded
     ``n_phrases``-row broadcast, so the hit count re-joins the bigram
-    stream shuffle-free on the broadcast side.  At 100 TB the postings
-    table is the at-rest artifact (bucketed by doc_id) and this is one
-    window + one hash-agg over it — documents are never rescanned.
+    stream shuffle-free on the broadcast side.
 
     Returns (w1, w2, doc_id, hits, rank).
     """
@@ -217,71 +214,11 @@ def phrase_topk_docs(
     )
 
 
-def store_positional_postings(
-    docs: DataFrame,
-    table: str,
-    num_buckets: int = 32,
-    path: str | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize the positional posting list as the AT-REST phrase
-    index: bucketed by ``doc_id`` and sorted by (doc_id, pos), so the
-    adjacency window (``lead(term)`` partitioned by doc, ordered by
-    pos) runs with NO Exchange and NO Sort on the postings side — the
-    write paid the shuffle once; every phrase query after it is
-    shuffle-free up to the bounded phrase-level aggregation (pinned by
-    the plan-shape pytest).  Documents are never stored, never
-    rescanned."""
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        write_bucketed,
-    )
-
-    write_bucketed(
-        positional_postings(docs, text_col, id_col),
-        table,
-        ["doc_id"],
-        num_buckets=num_buckets,
-        sort_cols=["doc_id", "pos"],
-        path=path,
-    )
-
-
-def append_positional_postings(
-    docs: DataFrame,
-    table: str,
-    num_buckets: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Incremental index maintenance: append a NEW batch of documents'
-    postings into the existing bucketed table (same bucket spec, so the
-    catalog keeps the co-location guarantee and served phrase queries
-    stay shuffle-free).  Correct for APPEND-ONLY corpora — new doc_ids
-    land in their buckets alongside the old; a re-ingested doc_id would
-    duplicate its postings (use the snapshot lake's keyed upsert for
-    corrected documents)."""
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        write_bucketed,
-    )
-
-    write_bucketed(
-        positional_postings(docs, text_col, id_col),
-        table,
-        ["doc_id"],
-        num_buckets=num_buckets,
-        sort_cols=["doc_id", "pos"],
-        mode="append",
-    )
-
-
 def phrase_topk_from_postings(
     postings: DataFrame, n_phrases: int = 5, topk: int = 10
 ) -> DataFrame:
     """The phrase query over an existing (doc_id, pos, term) posting
-    frame — inline or read back from the bucketed at-rest index (same
-    answer either way; the stored form skips the tokenize AND the
-    window shuffle).
+    frame (:func:`positional_postings`).
 
     The phrase shortlist is a global top-``n_phrases``: distinct
     bigrams GROW with the corpus, so the single-partition ranking

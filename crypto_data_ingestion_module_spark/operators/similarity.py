@@ -624,8 +624,8 @@ def seeded_bucket_udf(n_tables: int, n_planes: int, dim: int):
     """Arrow-batched md5-seeded Rademacher bucket assignment: one
     ``array<long>`` of ``n_tables`` bucket ids per vector.  Exact-integer
     projections (see :func:`ann_lsh_seed_topk`'s parity note), so the
-    assignment is identical wherever it runs — per query, or once at
-    write time for the at-rest index (``sinks.ann_lake``)."""
+    assignment is identical wherever it runs — for the corpus and for
+    the queries alike."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -926,10 +926,9 @@ def ann_ivf_seed_topk(
     kernel closure; the corpus streams through ONE ``mapInPandas`` pass
     that assigns each row's list (integer matmul argmax) and reranks it
     against only the queries probing that list, emitting per-batch
-    partial top-k.  No corpus shuffle, no crossJoin blowup; at rest the
-    corpus would be bucketed by ``list_id`` (``sinks.bucketed``) so the
-    scan itself prunes to probed lists.  Bit-identical to the relational
-    twin below (``vectorized=False``) — pinned in tests.
+    partial top-k.  No corpus shuffle, no crossJoin blowup.
+    Bit-identical to the relational twin below (``vectorized=False``) —
+    pinned in tests.
 
     Relational-twin shape (what the SQL oracle describes):
     - Seed selection is a global top-``n_lists`` by hash —
@@ -1043,8 +1042,7 @@ def ivf_seed_assign(
     vectorized: bool = False,
 ) -> DataFrame:
     """Seeded-IVF inverted-list assignment of a whole corpus:
-    (nid, list_id, nv, nnorm) — the at-rest index form
-    ``sinks.ann_lake.write_ivf_index`` buckets by ``list_id``.
+    (nid, list_id, nv, nnorm).
 
     ``vectorized=True`` collects the ``n_lists`` seed centroids (bounded
     by contract) into a closure and assigns each corpus row with one
@@ -1121,9 +1119,7 @@ def semantic_near_dup_pairs(
     stage is an equi-self-join on ``list_id``, so candidate volume is
     Σ|list|² instead of n² — and ``n_lists`` scales WITH the corpus
     (n_lists ∝ n keeps expected list size, and therefore per-list work,
-    constant).  At rest the assignment is exactly what
-    ``sinks.ann_lake.write_ivf_index`` buckets by, making the self-join
-    co-partitioned and shuffle-free.
+    constant).
 
     Every stage is relational with fixed-point dots — the DuckDB oracle
     hash-checks clustering AND pair selection end-to-end.

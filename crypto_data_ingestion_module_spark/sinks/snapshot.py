@@ -47,6 +47,7 @@ import json
 import uuid
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,9 +219,8 @@ def _write_data_files(
     of MANY partitions and holds one open writer per directory it
     touches (memory + tiny flushes; a 2,400-partition bootstrap
     measured 2x slower).  Clustered, each task streams its partitions
-    sequentially, one writer at a time.  Layout-managing callers
-    (compaction, OPTIMIZE ZORDER) pass ``cluster=False`` — they already
-    arranged the rows and a re-shuffle would destroy the z-clustering.
+    sequentially, one writer at a time.  Compaction passes
+    ``cluster=False``: it already arranged the rows by partition.
     """
     batch_dir = f"data/{uuid.uuid4().hex}"
     out = f"{root.rstrip('/')}/{batch_dir}"
@@ -381,10 +381,9 @@ def _file_time_stats(
     for r in df.groupBy("_f").agg(
         F.min("_us").alias("lo"), F.max("_us").alias("hi")
     ).collect():
-        p = r["_f"]
-        if "://" in p:
-            p = p.split("://", 1)[1]
-            p = p[p.index("/"):] if not p.startswith("/") else p
+        # input_file_name() is a percent-encoded URI; the manifest names
+        # files by their decoded path (``_write_data_files``)
+        p = unquote(urlsplit(r["_f"]).path)
         rel = p[len(base_abs):].lstrip("/")
         out[rel] = {"ts_min_us": int(r["lo"]), "ts_max_us": int(r["hi"])}
     return out
@@ -473,99 +472,21 @@ def snapshot_files_in_range(
     return sorted(out)
 
 
-def _file_col_stats(
-    spark: SparkSession, root: str, files: list[str], cols: Sequence[str]
-) -> dict:
-    """Generic per-file [min, max] for ``cols`` (numeric axes), stored
-    under the ``cols`` key of each file's stats entry — the off-axis
-    data-skipping companion to the time stats.  One bounded aggregate
-    over exactly the given files."""
-    if not files or not cols:
-        return {}
-    from crypto_data_ingestion_module_spark.sinks.zorder import _axis
-
-    Path, fs = _fs(spark, root)
-    base_abs = fs.makeQualified(Path(root)).toUri().getPath()
-    df = _read_files(spark, root, files)
-    aggs = []
-    for c in cols:
-        a = _axis(df, c)
-        aggs += [F.min(a).alias(f"_lo_{c}"), F.max(a).alias(f"_hi_{c}")]
-    out = {}
-    rows = (
-        df.select(F.input_file_name().alias("_f"), *[F.col(c) for c in cols])
-        .groupBy("_f")
-        .agg(*aggs)
-        .collect()
-    )
-    for r in rows:
-        p = r["_f"]
-        if "://" in p:
-            p = p.split("://", 1)[1]
-            p = p[p.index("/"):] if not p.startswith("/") else p
-        rel = p[len(base_abs):].lstrip("/")
-        out[rel] = {
-            "cols": {c: [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in cols}
-        }
-    return out
-
-
-def snapshot_files_matching(
-    spark: SparkSession,
-    root: str,
-    predicates: dict,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Multi-column data skipping through the manifest's generic column
-    stats: keep files whose [min, max] box intersects the predicate box
-    on every predicated column (conservative when stats are absent).
-    Returns (kept files, total files)."""
-    v = current_version(spark, root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no snapshot versions under {root}")
-    man = read_manifest(spark, root, v)
-    stats = man.get("file_stats", {})
-    keep, total = [], 0
-    for fl in man["partitions"].values():
-        for f in fl:
-            total += 1
-            st = (stats.get(f) or {}).get("cols", {})
-            ok = True
-            for c, (lo, hi) in predicates.items():
-                b = st.get(c)
-                if b is None or b[0] is None or b[1] is None:
-                    continue
-                flo, fhi = float(b[0]), float(b[1])
-                if (hi is not None and flo > float(hi)) or (
-                    lo is not None and fhi < float(lo)
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.append(f)
-    return sorted(keep), total
-
-
 def read_snapshot(
     spark: SparkSession,
     root: str,
     version: int | None = None,
     time_range: tuple | None = None,
     ts_col: str = "timestamp",
-    predicates: dict | None = None,
 ) -> DataFrame:
     """Reader entry point: pointer → manifest → exact file set.
 
+    ``version`` time-travels to an older retained manifest.
     ``time_range=(lo, hi)`` (datetimes or epoch micros, inclusive)
     prunes the file list through the manifest's per-file min/max stats
     BEFORE any scan is planned — the Iceberg-style data-skipping path —
     then applies the exact predicate, so results equal a full read +
     filter while IO is bounded by the files that can match.
-
-    ``predicates={col: (lo, hi)}`` prunes through the GENERIC column
-    stats a z-order optimize records (``optimize_snapshot_zorder``) —
-    same contract, any stat-covered dimension; open bounds are None.
-    Values are on the raw column axis (epoch micros for temporals).
     """
     v = current_version(spark, root) if version is None else version
     if v is None:
@@ -581,33 +502,15 @@ def read_snapshot(
     def _rd(fl):
         return _read_files(spark, root, fl, sch, pcols)
 
-    if time_range is None and not predicates:
+    if time_range is None:
         return _rd(snapshot_files(spark, root, v))
-    if time_range is not None:
-        files = set(snapshot_files_in_range(spark, root, time_range, v))
-    else:
-        files = set(snapshot_files(spark, root, v))
-    if predicates:
-        by_cols, _ = snapshot_files_matching(spark, root, predicates, v)
-        files &= set(by_cols)
+    files = snapshot_files_in_range(spark, root, time_range, v)
     if not files:
         full = _rd(snapshot_files(spark, root, v))
         return full.filter(F.lit(False))
-    df = _rd(sorted(files))
-    if time_range is not None:
-        lo, hi = _to_micros(time_range[0]), _to_micros(time_range[1])
-        us = F.unix_micros(F.col(ts_col))
-        df = df.filter((us >= F.lit(lo)) & (us <= F.lit(hi)))
-    if predicates:
-        from crypto_data_ingestion_module_spark.sinks.zorder import _axis
-
-        for c, (lo, hi) in predicates.items():
-            a = _axis(df, c)
-            if lo is not None:
-                df = df.filter(a >= float(lo))
-            if hi is not None:
-                df = df.filter(a <= float(hi))
-    return df
+    lo, hi = _to_micros(time_range[0]), _to_micros(time_range[1])
+    us = F.unix_micros(F.col(ts_col))
+    return _rd(files).filter((us >= F.lit(lo)) & (us <= F.lit(hi)))
 
 
 def _check_partition_cols(manifest: dict, partition_cols: Sequence[str]) -> None:
@@ -1334,122 +1237,6 @@ def _snapshot_delete_once(
     return v + 1, int(n_deleted)
 
 
-def snapshot_changes(
-    spark: SparkSession,
-    root: str,
-    from_version: int,
-    to_version: int,
-    key_cols: Sequence[str] = LOGICAL_KEY,
-    partition_cols: Sequence[str] = PARTITION_COLS,
-    ignore_cols: Sequence[str] = (INGEST_SEQ,),
-) -> DataFrame:
-    """Change-data feed between two snapshot versions: every row keyed by
-    ``key_cols`` that was inserted, updated, or deleted, tagged with a
-    ``_change_type`` column (``insert`` / ``update_postimage`` /
-    ``delete`` — the Delta CDF vocabulary; updates carry the POST image).
-
-    Manifest-pruned: only the partitions whose file lists DIFFER between
-    the two manifests are read (a layout-only rewrite of identical
-    content — compact/zorder — still reads those partitions but yields
-    zero change rows, since the diff is by row content).  Incremental
-    consumers poll this instead of re-scanning the lake — the reader
-    face of the same incrementality the writers get from
-    ``snapshot_merge_partitions``.
-    """
-    if to_version < from_version:
-        raise ValueError("to_version must be >= from_version")
-    man_a = read_manifest(spark, root, from_version)
-    man_b = read_manifest(spark, root, to_version)
-    pa, pb = man_a["partitions"], man_b["partitions"]
-    changed = {
-        k
-        for k in set(pa) | set(pb)
-        if sorted(pa.get(k, [])) != sorted(pb.get(k, []))
-    }
-    schema = _manifest_schema(spark, root, man_b, to_version)
-    old = _conform(
-        _read_touched(spark, root, man_a, changed, schema), schema
-    )
-    new = _conform(
-        _read_touched(spark, root, man_b, changed, schema), schema
-    )
-    keys = list(key_cols)
-    payload = [c for c in [f.name for f in schema.fields] if c not in keys]
-    # the comparison struct excludes bookkeeping columns (_ingest_seq by
-    # default): a re-upsert of byte-identical business rows must emit no
-    # update_postimage; the emitted _image still carries every column
-    cmp_cols = [c for c in payload if c not in set(ignore_cols)]
-    o = old.select(
-        *keys, F.struct(*payload).alias("_old"),
-        F.struct(*cmp_cols).alias("_oldc"),
-    )
-    n = new.select(
-        *keys, F.struct(*payload).alias("_new"),
-        F.struct(*cmp_cols).alias("_newc"),
-    )
-    j = o.join(n, keys, "full_outer")
-    return (
-        j.withColumn(
-            "_change_type",
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .when(F.col("_new").isNull(), F.lit("delete"))
-            .when(~F.col("_oldc").eqNullSafe(F.col("_newc")),
-                  F.lit("update_postimage")),
-        )
-        .filter(F.col("_change_type").isNotNull())
-        .select(
-            *keys,
-            F.coalesce(F.col("_new"), F.col("_old")).alias("_image"),
-            "_change_type",
-        )
-        .select(*keys, "_image.*", "_change_type")
-    )
-
-
-def snapshot_restore(
-    spark: SparkSession, root: str, version: int, retries: int = 2
-) -> int:
-    """RESTORE: make an old version the new head by committing its
-    manifest (partitions, stats, schema, partition_cols) as version
-    N+1 — no data movement at all, since files are immutable; the only
-    thing that changes is the pointer.  The replay ledger and
-    arrival-order high-water are kept from the CURRENT head, not the
-    restore target: a batch applied after the target was committed is
-    still applied-history (its data is being deliberately rolled back;
-    re-delivering it must not silently re-commit), and future upserts
-    must keep superseding.  Needs the target manifest still retained
-    (i.e. not vacuumed)."""
-    last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        head = current_version(spark, root)
-        if head is None:
-            raise FileNotFoundError(f"no snapshot versions under {root}")
-        target = read_manifest(spark, root, version)
-        cur = read_manifest(spark, root, head)
-        new_manifest = {
-            "version": head + 1,
-            "partitions": target["partitions"],
-            "file_stats": target.get("file_stats", {}),
-        }
-        for k in ("schema", "partition_cols"):
-            if target.get(k) is not None:
-                new_manifest[k] = target[k]
-        for k in (
-            "applied_ids",
-            "applied_ids_evicted",
-            "applied_ids_frozen_n",
-            "max_ingest_seq",
-        ):
-            if cur.get(k) is not None:
-                new_manifest[k] = cur[k]
-        try:
-            commit_version(spark, root, new_manifest, head + 1)
-            return head + 1
-        except CommitConflict as e:
-            last = e
-    raise last
-
-
 def compact_snapshot(
     spark: SparkSession,
     root: str,
@@ -1508,8 +1295,9 @@ def compact_snapshot(
 
 
 def _carry_extras(manifest: dict, new_manifest: dict) -> dict:
-    """Layout-only commits (compact, zorder) must not lose the logical
-    manifest state: table schema, replay ledger, arrival high-water."""
+    """Commits that rewrite files without a new table frame (compact,
+    delete) must not lose the logical manifest state: table schema,
+    replay ledger, arrival high-water."""
     for k in (
         "schema",
         "partition_cols",
@@ -1521,93 +1309,6 @@ def _carry_extras(manifest: dict, new_manifest: dict) -> dict:
         if manifest.get(k) is not None:
             new_manifest.setdefault(k, manifest[k])
     return new_manifest
-
-
-def optimize_snapshot_zorder(
-    spark: SparkSession,
-    root: str,
-    zcols: Sequence[str],
-    files_per_partition: int = 4,
-    partition_cols: Sequence[str] = PARTITION_COLS,
-    ts_col: str = "timestamp",
-    retries: int = 2,
-) -> int:
-    """OPTIMIZE ZORDER BY for the snapshot lake (optimistic retry: losing
-    a version race to a concurrent upsert recomputes the layout against
-    the new snapshot, same as ``snapshot_upsert``).
-
-    Rewrites every partition's content clustered on the z-curve of
-    ``zcols`` (bit-interleaved, ``sinks.zorder``) and commits a version
-    whose manifest carries generic per-file column stats for those
-    columns — after which ``read_snapshot(predicates=...)`` skips files
-    on ANY z-dimension, not just time.  Content is row-identical (only
-    layout changes); readers keep snapshot isolation throughout and old
-    versions keep time-traveling.
-
-    Layout: one range shuffle on (partition_cols, z) so each task holds
-    a contiguous z-slab of one hive partition — within a partition,
-    files cover disjoint z-ranges, which is what makes the stat boxes
-    tight.  ``files_per_partition`` scales the task count.
-    """
-    last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _optimize_zorder_once(
-                spark, root, zcols, files_per_partition, partition_cols, ts_col
-            )
-        except CommitConflict as e:
-            last = e
-    raise last
-
-
-def _optimize_zorder_once(
-    spark: SparkSession,
-    root: str,
-    zcols: Sequence[str],
-    files_per_partition: int,
-    partition_cols: Sequence[str],
-    ts_col: str,
-) -> int:
-    from crypto_data_ingestion_module_spark.sinks.zorder import (
-        column_bounds,
-        zorder_key,
-    )
-
-    v = current_version(spark, root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot versions under {root}")
-    manifest = read_manifest(spark, root, v)
-    n_parts = max(1, len(manifest["partitions"]))
-    df = _read_files(spark, root, snapshot_files(spark, root, v))
-    bounds = column_bounds(df, zcols)
-    z = zorder_key(df, zcols, bounds=bounds)
-    clustered = (
-        df.withColumn("_z", z)
-        .repartitionByRange(
-            n_parts * files_per_partition,
-            *[F.col(c) for c in partition_cols],
-            F.col("_z"),
-        )
-        .sortWithinPartitions(*partition_cols, "_z")
-        .drop("_z")
-    )
-    new_files = _write_data_files(spark, clustered, root, partition_cols, cluster=False)
-    parts: dict[str, list[str]] = {}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = _file_time_stats(spark, root, new_files, ts_col=ts_col)
-    for f, cst in _file_col_stats(spark, root, new_files, zcols).items():
-        stats.setdefault(f, {}).update(cst)
-    commit_version(
-        spark,
-        root,
-        _carry_extras(
-            manifest,
-            {"version": v + 1, "partitions": parts, "file_stats": stats},
-        ),
-        v + 1,
-    )
-    return v + 1
 
 
 def vacuum(spark: SparkSession, root: str, keep: int = 1) -> list[str]:

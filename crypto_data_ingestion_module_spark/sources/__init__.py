@@ -1,10 +1,2 @@
 """Sources: venue configuration dimension, raw-payload normalizers, fetch
 task manifests, and the (mockable) exchange fetch layer."""
-
-from crypto_data_ingestion_module_spark.sources.venues import (  # noqa: F401
-    availability_df,
-    venue_config_df,
-)
-from crypto_data_ingestion_module_spark.sources.manifest import (  # noqa: F401
-    backfill_manifest,
-)

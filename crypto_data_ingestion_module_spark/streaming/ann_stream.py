@@ -1,9 +1,9 @@
 """Incremental ANN-index maintenance: stream embeddings into an IVF-PQ
 index lake.
 
-The serving index (sinks/ann_lake) was batch-built; a growing corpus
-needs its index to grow WITHOUT retraining or re-encoding what is
-already indexed.  Standard discipline (FAISS/Milvus alike): the
+A growing corpus needs its IVF-PQ index to grow WITHOUT retraining or
+re-encoding what is already indexed.  Standard discipline (FAISS/Milvus
+alike): the
 quantizers are FROZEN — coarse centroids and PQ codebooks come from a
 reference corpus and are retrained offline when drift warrants — and
 each arriving batch is encoded against them and appended to its lists.

@@ -13,7 +13,7 @@ from crypto_data_ingestion_module_spark.operators.decontam import (
     decontaminate,
 )
 from crypto_data_ingestion_module_spark.operators.sampling import mixture_sample
-from crypto_data_ingestion_module_spark.sinks.bucketed import physical_plan
+from tests.conftest import physical_plan
 
 
 def _docs(spark, rows):

@@ -175,7 +175,7 @@ def test_near_dup_block_is_distributed_and_self_consistent(spark):
     from crypto_data_ingestion_module_spark.operators.similarity import (
         near_dup_pairs,
     )
-    from crypto_data_ingestion_module_spark.sinks.bucketed import physical_plan
+    from tests.conftest import physical_plan
 
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     multi = near_dup_pairs(emb, threshold=0.42, stage1="block", block_rows=64)
@@ -199,7 +199,7 @@ def test_near_dup_auto_stage1_selection(spark):
     from crypto_data_ingestion_module_spark.operators.similarity import (
         near_dup_pairs,
     )
-    from crypto_data_ingestion_module_spark.sinks.bucketed import physical_plan
+    from tests.conftest import physical_plan
 
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     # small corpus, generous budget -> block kernel (applyInPandas GEMM)
@@ -252,7 +252,7 @@ def test_stratified_reservoir_plan_and_determinism(spark):
     from crypto_data_ingestion_module_spark.operators.sampling import (
         stratified_reservoir,
     )
-    from crypto_data_ingestion_module_spark.sinks.bucketed import physical_plan
+    from tests.conftest import physical_plan
 
     ev = load_table(spark, SF_SMALL, "events")
     s = stratified_reservoir(ev, ["event_type"], 20, id_col="event_id")

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.clustering import kmeans_lloyd
 from crypto_data_ingestion_module_spark.plans.queries import QUERY_SPECS
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, physical_plan
 
 
 def _run(spark, name):
@@ -121,10 +121,6 @@ def test_indicator_plans_single_exchange(spark):
     """The scale claim of the indicator family: one shuffle on
     event_type shared by the lag and trailing windows — no second
     Exchange sneaks in — and the events scan is column-pruned."""
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        physical_plan,
-    )
-
     for name in ("rolling_volatility_24", "bollinger_breakouts_20", "rsi_14"):
         plan = physical_plan(QUERY_SPECS[name].spark(spark, SF_SMALL))
         assert _n_exchanges(plan) == 1, (name, plan)
@@ -134,10 +130,6 @@ def test_indicator_plans_single_exchange(spark):
 def test_vwap_plan_is_partial_final_agg(spark):
     """VWAP is one hash aggregate: exactly one Exchange (partial agg
     runs map-side before it)."""
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        physical_plan,
-    )
-
     plan = physical_plan(QUERY_SPECS["vwap_1h"].spark(spark, SF_SMALL))
     assert _n_exchanges(plan) == 1, plan
 

@@ -107,3 +107,28 @@ def test_driver_bench_artifact_headline_fallback(tmp_path):
     # sweep has no counterpart in the driver artifact: must not crash,
     # must still diff the headline
     assert "comparing headline timings" in res.stdout
+
+
+def test_reach_reports_only_the_def_no_root_reaches(tmp_path):
+    """reach.py on a three-file tree: the root calls ``a``, ``a`` calls
+    ``b``, nothing calls ``c`` — only ``c`` is reported."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text(
+        "def a():\n    return b()\n\n\n"
+        "def b():\n    return 1\n\n\n"
+        "def c():\n    return 2\n"
+    )
+    (tmp_path / "bench.py").write_text("from pkg.mod import a\n\na()\n")
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "reach.py"), str(tmp_path)],
+        capture_output=True,
+        text=True,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.splitlines() == [
+        f"{os.path.join('pkg', 'mod.py')}: 2 lines",
+        "  c (2)",
+        "total: 2 lines in 1 test-only top-level defs",
+    ]

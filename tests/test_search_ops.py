@@ -71,51 +71,6 @@ def test_rrf_fuse_tie_breaks_by_id(spark):
     ]
 
 
-def test_phrase_query_from_bucketed_postings_lake(spark, tmp_path):
-    """The at-rest phrase index: postings bucketed by doc_id and sorted
-    by (doc_id, pos) serve the SAME answer as the inline query, and the
-    adjacency window runs with NO Exchange and NO Sort on the postings
-    side (the write paid the shuffle once)."""
-    from pyspark.sql import Window
-
-    from crypto_data_ingestion_module_spark.operators.search import (
-        phrase_topk_docs,
-        phrase_topk_from_postings,
-        store_positional_postings,
-    )
-    from crypto_data_ingestion_module_spark.session import load_table
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        physical_plan,
-        read_bucketed,
-    )
-    from tests.conftest import SF_SMALL
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    table = "phrase_postings_t"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    store_positional_postings(
-        docs, table, num_buckets=8, path=str(tmp_path / "postings")
-    )
-    postings = read_bucketed(spark, table)
-
-    served = sorted(
-        map(tuple, phrase_topk_from_postings(postings).collect())
-    )
-    inline = sorted(map(tuple, phrase_topk_docs(docs).collect()))
-    assert served == inline and served
-
-    # plan pin: the window stage over the bucketed read needs neither an
-    # Exchange nor a Sort — bucket spec + in-bucket sort satisfy it
-    windowed = postings.withColumn(
-        "w2",
-        F.lead("term").over(Window.partitionBy("doc_id").orderBy("pos")),
-    )
-    plan = physical_plan(windowed)
-    assert "Exchange" not in plan, plan
-    assert "WindowExec" in plan or "Window" in plan
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_mmr_skips_the_near_duplicate(spark):
     """The point of MMR: with two near-identical top candidates, the
     second pick must be the DIVERSE vector, not the twin."""
@@ -149,48 +104,6 @@ def test_mmr_skips_the_near_duplicate(spark):
     short = mmr_select(tiny, 0, m=8, k=5).collect()
     assert sorted(r["nid"] for r in short) == [1, 2]
     assert sorted(r["rank"] for r in short) == [1, 2]
-
-
-def test_incremental_postings_append_serves_the_union(spark, tmp_path):
-    """Append-only index maintenance: postings appended for a new doc
-    batch serve the same phrase answer as a from-scratch index over the
-    union, and the adjacency window stays Exchange-free."""
-    from pyspark.sql import Window
-
-    from crypto_data_ingestion_module_spark.operators.search import (
-        append_positional_postings,
-        phrase_topk_docs,
-        phrase_topk_from_postings,
-        store_positional_postings,
-    )
-    from crypto_data_ingestion_module_spark.session import load_table
-    from crypto_data_ingestion_module_spark.sinks.bucketed import (
-        physical_plan,
-        read_bucketed,
-    )
-    from tests.conftest import SF_SMALL
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    table = "phrase_postings_incr_t"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    store_positional_postings(
-        old, table, num_buckets=8, path=str(tmp_path / "p")
-    )
-    append_positional_postings(new, table, num_buckets=8)
-
-    postings = read_bucketed(spark, table)
-    served = sorted(map(tuple, phrase_topk_from_postings(postings).collect()))
-    scratch = sorted(map(tuple, phrase_topk_docs(docs).collect()))
-    assert served == scratch and served
-
-    windowed = postings.withColumn(
-        "w2",
-        F.lead("term").over(Window.partitionBy("doc_id").orderBy("pos")),
-    )
-    assert "Exchange" not in physical_plan(windowed)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_rrf_fuse_per_query_windows_independently(spark):

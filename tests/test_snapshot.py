@@ -368,63 +368,43 @@ def test_time_range_read_prunes_files_via_manifest_stats(spark, tmp_path):
     assert set(empty.columns) == set(read_snapshot(spark, root).columns)
 
 
-def test_optimize_zorder_prunes_off_axis(spark, tmp_path):
-    """OPTIMIZE ZORDER: row-identical content, a new stat-covered
-    version, and file skipping on a non-time dimension (close price) —
-    the off-axis pruning the time-only stats cannot give."""
+def test_file_stats_keyed_by_manifest_name_under_escaped_paths(spark, tmp_path):
+    """The stats key of every file equals its manifest name even when the
+    root and a partition value need percent-encoding in a URI (a space
+    here): keys taken from the encoded URI matched no file, and the
+    time-range read silently kept every file."""
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        optimize_snapshot_zorder,
-        snapshot_files_matching,
+        snapshot_files_in_range,
     )
 
-    rows = []
-    for sym in ("BTC-USDT", "ETH-USDT"):
-        for i in range(400):
-            # price decorrelated from time: a time-sorted layout leaves
-            # every file spanning nearly the full price range
-            price = float((i * 7919) % 1000)
-            ts = T0 + dt.timedelta(minutes=3 * i)
-            rows.append((price, 1.0, ts, sym, "coinbase", "15m"))
-    df = _candles(spark, rows)
-    root = str(tmp_path / "snap")
-    v1 = snapshot_upsert(spark, df, root)
-    before = _state(read_snapshot(spark, root))
-
-    v2 = optimize_snapshot_zorder(
-        spark, root, zcols=["timestamp", "close"], files_per_partition=8
-    )
-    assert v2 == v1 + 1
-
-    # layout-only change: content identical, old version still readable
-    assert _state(read_snapshot(spark, root)) == before
-    assert _state(read_snapshot(spark, root, version=v1)) == before
-
-    # off-axis skipping: close in [100.5, 200.5] (close = open + 0.5)
-    kept, total = snapshot_files_matching(
-        spark, root, {"close": (100.5, 200.5)}
-    )
-    assert total > 8
-    assert len(kept) < total, (len(kept), total)
-
-    got = read_snapshot(spark, root, predicates={"close": (100.5, 200.5)})
-    want = read_snapshot(spark, root).filter(
-        F.col("close").between(100.5, 200.5)
-    )
-    assert _state(got) == _state(want)
-    assert got.count() > 0
-
-    # combined time + column pruning stays exact
-    got2 = read_snapshot(
+    root = str(tmp_path / "lake dir")
+    snapshot_upsert(
         spark,
+        _candles(
+            spark,
+            [
+                (100.0, 1.0, T0, "BTC USDT", "coinbase", "15m"),
+                (110.0, 1.5, T1, "BTC USDT", "coinbase", "15m"),
+                (200.0, 2.0, T2, "BTC USDT", "coinbase", "15m"),
+                (50.0, 2.0, T2, "ETH-USDT", "coinbase", "15m"),
+            ],
+        ),
         root,
-        time_range=(T0, T0 + dt.timedelta(hours=6)),
-        predicates={"close": (100.5, 200.5)},
     )
-    want2 = want.filter(
-        (F.col("timestamp") >= T0)
-        & (F.col("timestamp") <= T0 + dt.timedelta(hours=6))
+    files = snapshot_files(spark, root)
+    assert set(read_manifest(spark, root, 1)["file_stats"]) == set(files)
+
+    hour = (
+        dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc),
+        dt.datetime(2024, 1, 1, 1, tzinfo=dt.timezone.utc),
     )
-    assert _state(got2) == _state(want2)
+    kept = snapshot_files_in_range(spark, root, hour)
+    assert 0 < len(kept) < len(files)
+    got = _state(read_snapshot(spark, root, time_range=hour))
+    assert [(s, ts) for s, _, ts, _, _ in got] == [
+        ("BTC USDT", T0),
+        ("BTC USDT", T1),
+    ]
 
 
 def test_schema_evolution_additive(spark, tmp_path):
@@ -474,44 +454,6 @@ def test_schema_evolution_additive(spark, tmp_path):
     ).withColumn("trade_count", F.lit("oops"))
     with pytest.raises(TypeError, match="type changes"):
         snapshot_upsert(spark, bad, root)
-
-
-def test_optimize_zorder_retries_lost_race(spark, tmp_path, monkeypatch):
-    """An optimize losing the version race to a concurrent upsert retries
-    against the new snapshot instead of failing (and the final layout
-    contains the racer's rows)."""
-    import crypto_data_ingestion_module_spark.sinks.snapshot as S
-
-    root = str(tmp_path / "snap")
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-    )
-
-    real_commit = S.commit_version
-    fired = {"done": False}
-
-    def racing_commit(spark_, root_, manifest, version):
-        if not fired["done"]:
-            fired["done"] = True
-            # a concurrent upsert wins version 2 first
-            snapshot_upsert(
-                spark,
-                _candles(
-                    spark, [(555.0, 5.0, T1, "BTC-USDT", "coinbase", "15m")]
-                ),
-                root,
-            )
-        return real_commit(spark_, root_, manifest, version)
-
-    monkeypatch.setattr(S, "commit_version", racing_commit)
-    v = S.optimize_snapshot_zorder(
-        spark, root, zcols=["timestamp", "close"], files_per_partition=2
-    )
-    assert v == 3  # upsert took 2, the optimize retried into 3
-    got = _state(read_snapshot(spark, root))
-    assert any(ts == T1 and o == 555.0 for (_, _, ts, o, _) in got)
 
 
 def test_applied_id_ledger_skips_replay(spark, tmp_path):
@@ -717,123 +659,6 @@ def test_snapshot_delete_null_predicate_keeps_row(spark, tmp_path):
     assert read_snapshot(spark, root).count() == 1
 
 
-def test_snapshot_changes_cdc_feed(spark, tmp_path):
-    """CDC between versions: inserts/updates/deletes tagged with the
-    post-image; layout-only commits yield zero change rows."""
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        compact_snapshot,
-        snapshot_changes,
-        snapshot_delete,
-    )
-
-    root = str(tmp_path / "snap")
-    v1 = snapshot_upsert(
-        spark,
-        _candles(
-            spark,
-            [
-                (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-                (50.0, 2.0, T0, "ETH-USDT", "coinbase", "15m"),
-            ],
-        ),
-        root,
-    )
-    # v2: update BTC@T0, insert BTC@T1; ETH partition untouched
-    v2 = snapshot_upsert(
-        spark,
-        _candles(
-            spark,
-            [
-                (200.0, 9.0, T0, "BTC-USDT", "coinbase", "15m"),
-                (110.0, 1.0, T1, "BTC-USDT", "coinbase", "15m"),
-            ],
-        ),
-        root,
-    )
-    ch = {
-        (r.symbol, r.timestamp): (r._change_type, r.open)
-        for r in snapshot_changes(spark, root, v1, v2).collect()
-    }
-    assert ch == {
-        ("BTC-USDT", T0): ("update_postimage", 200.0),
-        ("BTC-USDT", T1): ("insert", 110.0),
-    }
-
-    # v3: delete ETH row
-    v3, n = snapshot_delete(spark, root, F.col("symbol") == "ETH-USDT")
-    assert n == 1
-    ch = {
-        (r.symbol, r.timestamp): r._change_type
-        for r in snapshot_changes(spark, root, v2, v3).collect()
-    }
-    assert ch == {("ETH-USDT", T0): "delete"}
-
-    # v1 -> v3 composes: ETH delete + BTC update + BTC insert
-    ch = {
-        (r.symbol, r.timestamp): r._change_type
-        for r in snapshot_changes(spark, root, v1, v3).collect()
-    }
-    assert ch == {
-        ("ETH-USDT", T0): "delete",
-        ("BTC-USDT", T0): "update_postimage",
-        ("BTC-USDT", T1): "insert",
-    }
-
-    # layout-only commit: partitions rewritten, but NO content change
-    v4 = compact_snapshot(spark, root, max_files_per_partition=0)
-    if v4 is not None:
-        assert snapshot_changes(spark, root, v3, v4).count() == 0
-
-
-def test_snapshot_restore_rolls_back_without_data_movement(spark, tmp_path):
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        snapshot_changes,
-        snapshot_restore,
-    )
-
-    root = str(tmp_path / "snap")
-    v1 = snapshot_upsert(
-        spark,
-        _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="b1",
-    )
-    before = _state(read_snapshot(spark, root))
-    v2 = snapshot_upsert(
-        spark,
-        _candles(spark, [(999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="b2",
-    )
-    v3 = snapshot_restore(spark, root, v1)
-    assert v3 == v2 + 1
-    assert _state(read_snapshot(spark, root)) == before
-    # the rolled-back content is still time-travelable at v2
-    assert _state(read_snapshot(spark, root, version=v2)) != before
-    # CDC across the restore shows the revert as an update back
-    ch = snapshot_changes(spark, root, v2, v3).collect()
-    assert {r._change_type for r in ch} == {"update_postimage"}
-    assert ch[0].open == 100.0
-    # the ledger survives the restore: replaying b2 after the rollback
-    # is a no-op — its data was REMOVED deliberately, not lost
-    out = snapshot_upsert(
-        spark,
-        _candles(spark, [(999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="b2",
-    )
-    assert out == v3
-    assert _state(read_snapshot(spark, root)) == before
-    # a genuinely NEW batch still supersedes (seq high-water kept)
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(111.0, 2.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="b3",
-    )
-    assert [r[3] for r in _state(read_snapshot(spark, root))] == [111.0]
-
-
 def test_append_widens_schema_and_refuses_retype(spark, tmp_path):
     """ADVICE r5 (medium): the append path honors the same additive
     schema-evolution contract as upsert — new columns reach the manifest
@@ -900,22 +725,6 @@ def test_append_advances_seq_high_water(spark, tmp_path):
     )
     got = {r.timestamp: r.open for r in read_snapshot(spark, root).collect()}
     assert got[T1] == 999.0
-
-
-def test_cdc_ignores_ingest_seq_bookkeeping(spark, tmp_path):
-    """ADVICE r5: re-upserting byte-identical business rows bumps only
-    _ingest_seq; the CDC feed must emit zero logical changes."""
-    from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_changes
-
-    root = str(tmp_path / "snap")
-    rows = [
-        (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
-        (50.0, 2.0, T0, "ETH-USDT", "coinbase", "15m"),
-    ]
-    v1 = snapshot_upsert(spark, _candles(spark, rows), root)
-    v2 = snapshot_upsert(spark, _candles(spark, rows), root)
-    assert v2 == v1 + 1  # files did change (new _ingest_seq stamps)
-    assert snapshot_changes(spark, root, v1, v2).count() == 0
 
 
 def test_delete_threads_ts_col_for_rewritten_file_stats(spark, tmp_path):
