@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     current_version,
     evaluated_once,
+    read_manifest,
     read_snapshot,
+    snapshot_group_stats,
     snapshot_upsert,
 )
 from crypto_data_ingestion_module_spark.sources.fetch import (
@@ -27,6 +29,8 @@ from crypto_data_ingestion_module_spark.sources.manifest import (
     backfill_manifest,
     incremental_manifest,
 )
+from crypto_data_ingestion_module_spark.sources.venues import values_sql
+from crypto_data_ingestion_module_spark.streaming.metrics import log_event
 
 
 def curate_and_shard(
@@ -100,6 +104,45 @@ def curate_and_shard(
     )
 
 
+#: The key of a backfill's progress rows, each a partition column of
+#: the candle lake.
+SERIES = ("symbol", "interval", "exchange")
+
+
+def _local_progress(spark: SparkSession, stats: dict) -> DataFrame:
+    """``snapshot_group_stats`` output as the progress table: a ``VALUES``
+    relation built on the driver, read without a job.  Its columns have
+    the scan's nullability: the NULL row, filtered out again, makes the
+    key and timestamp columns nullable, and ``n_candles``, a count, is
+    not."""
+    rows = [(*key, hi, n) for key, (hi, n) in stats.items()]
+    local = values_sql([*rows, (None,) * 5], "symbol, `interval`, exchange, us, n")
+    return spark.sql(
+        "SELECT CAST(symbol AS STRING) AS symbol,"
+        " CAST(`interval` AS STRING) AS `interval`,"
+        " CAST(exchange AS STRING) AS exchange,"
+        " timestamp_micros(CAST(us AS BIGINT)) AS last_collected_ts,"
+        " CAST(coalesce(n, 0) AS BIGINT) AS n_candles"
+        f" FROM ({local}) WHERE n IS NOT NULL"
+    )
+
+
+def _progress(
+    spark: SparkSession, lake_root: str, version: int
+) -> tuple[DataFrame, str]:
+    """Per-series ``last_collected_ts`` and ``n_candles`` of a committed
+    version, and their source: ``"manifest"`` when every live file has
+    stats, else ``"scan"`` (the same aggregate over the lake)."""
+    stats = snapshot_group_stats(read_manifest(spark, lake_root, version), SERIES)
+    if stats is not None:
+        return _local_progress(spark, stats), "manifest"
+    progress = read_snapshot(spark, lake_root, version).groupBy(*SERIES).agg(
+        F.max("timestamp").alias("last_collected_ts"),
+        F.count(F.lit(1)).alias("n_candles"),
+    )
+    return progress, "scan"
+
+
 def backfill(
     spark: SparkSession,
     symbols_df: DataFrame,
@@ -115,8 +158,9 @@ def backfill(
     candles → keep-last MERGE into the lake.
 
     Returns (progress, quarantine): the per-(symbol, interval, exchange)
-    max collected timestamp (the reference's ``last_collected_ts`` state,
-    500-512/652) and the failed-task side channel.
+    max collected timestamp and candle count (the reference's
+    ``last_collected_ts`` state, 500-512/652) and the failed-task side
+    channel.
 
     One evaluation per batch: the fetched pages are evaluated once
     (``sinks.snapshot.evaluated_once``), so each manifest page is
@@ -139,13 +183,30 @@ def backfill(
     (crypto_collector.py:481-520).  ``incremental=False`` re-fetches the
     full range (corrections sweep: keep-last MERGE makes it safe).
 
+    Watermarks and progress are bookkeeping, which the reference keeps
+    as in-memory state and this engine reads from metadata: both come
+    from the committed version's manifest (per-file max timestamp and
+    row count, ``sinks.snapshot.snapshot_group_stats``), so the work
+    before the fetch and after the commit is metadata reads plus one
+    broadcast join, and ``progress`` is a local relation.  A lake with
+    files written before the manifest recorded row counts is scanned
+    instead, until those files are rewritten.  Each call logs one ``backfill`` record
+    (``streaming.metrics.log_event``) naming the watermark and progress
+    sources (``"manifest"``, or ``"scan"`` when the lake was scanned),
+    the committed version and the quarantined page count.
+
     ``normalizer`` must match the adapter's page layout: the mock layout
     for :class:`MockExchangeAdapter`, ``normalize_real_pages`` for real
     venue payloads — a mismatch scrambles OHLC column order silently.
     """
     manifest = backfill_manifest(spark, symbols_df, intervals_df, end_ms)
-    if incremental and current_version(spark, lake_root) is not None:
-        manifest = incremental_manifest(manifest, read_snapshot(spark, lake_root))
+    before = current_version(spark, lake_root)
+    watermark_source = "manifest"
+    if incremental and before is not None:
+        watermarks, watermark_source = _progress(spark, lake_root, before)
+        manifest = incremental_manifest(
+            manifest, watermarks.withColumnRenamed("last_collected_ts", "timestamp")
+        )
     raw = fetch_pages(spark, manifest, adapter, pacing=pacing)
 
     # one evaluation of the fetched pages feeds both the committed
@@ -157,18 +218,18 @@ def backfill(
         candles = normalizer(pages).drop("_ingest_seq")
         version = snapshot_upsert(spark, candles, lake_root)
         failed = quarantined(pages)
-        quarantine = spark.createDataFrame(failed.collect(), failed.schema)
+        failed_rows = failed.collect()
+        quarantine = spark.createDataFrame(failed_rows, failed.schema)
 
-    if version is not None:
-        lake = read_snapshot(spark, lake_root, version)
-    else:  # nothing fetched into a new lake: no version was committed
-        lake = spark.createDataFrame([], candles.schema)
-
-    progress = (
-        lake.groupBy("symbol", "interval", "exchange")
-        .agg(
-            F.max("timestamp").alias("last_collected_ts"),
-            F.count(F.lit(1)).alias("n_candles"),
-        )
+    if version is None:  # nothing fetched into a new lake: no version
+        progress, progress_source = _local_progress(spark, {}), "manifest"
+    else:
+        progress, progress_source = _progress(spark, lake_root, version)
+    log_event(
+        "backfill",
+        watermark_source=watermark_source,
+        progress_source=progress_source,
+        version=version if version != before else "empty batch",
+        quarantined=len(failed_rows),
     )
     return progress, quarantine

@@ -44,6 +44,7 @@ delivery comes from one place: the manifest's ``applied_ids`` ledger.
 from __future__ import annotations
 
 import json
+import re
 import uuid
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
@@ -141,9 +142,50 @@ def _partition_of(rel_file: str, partition_cols: Sequence[str]) -> str:
     return "/".join(parts)
 
 
+#: The characters Spark's ``ExternalCatalogUtils.escapePathName``
+#: percent-encodes in a Hive partition directory name (the POSIX set:
+#: Windows adds space, ``<``, ``>`` and ``|``), and the directory name of
+#: a NULL or empty value.
+_PATH_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in s)
+
+
+def _unescape_path_name(s: str) -> str:
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), s)
+
+
 def _partition_key(row, partition_cols: Sequence[str]) -> str:
-    """A row's partition values as the manifest's ``c=v/...`` key."""
-    return "/".join(f"{c}={row[c]}" for c in partition_cols)
+    """A row's partition values as the manifest's ``c=v/...`` key: the
+    directory names ``partitionBy`` writes.  The values must be the
+    columns cast to string in Spark (``_partition_strings``), as the
+    writer casts them."""
+    return "/".join(
+        f"{_escape_path_name(c)}="
+        + (_escape_path_name(row[c]) if row[c] else _DEFAULT_PARTITION)
+        for c in partition_cols
+    )
+
+
+def _partition_strings(partition_cols: Sequence[str]) -> list:
+    return [F.col(c).cast("string").alias(c) for c in partition_cols]
+
+
+def _partition_values(key: str) -> dict[str, str | None]:
+    """The inverse of :func:`_partition_key`: a manifest key's decoded
+    values by column, NULL for the default partition."""
+    out: dict[str, str | None] = {}
+    for part in key.split("/"):
+        c, _, v = part.partition("=")
+        out[_unescape_path_name(c)] = (
+            None if v == _DEFAULT_PARTITION else _unescape_path_name(v)
+        )
+    return out
 
 
 @contextmanager
@@ -183,7 +225,7 @@ def _touched_partitions(
     """The partitions ``df`` lands in and its max ``_ingest_seq`` (None
     without the column), from one small aggregate job.  An empty set
     means an empty batch."""
-    grouped = df.groupBy(*partition_cols)
+    grouped = df.groupBy(*_partition_strings(partition_cols))
     has_seq = INGEST_SEQ in df.columns
     rows = (
         grouped.agg(F.max(INGEST_SEQ).alias("_hi")) if has_seq else grouped.count()
@@ -365,9 +407,10 @@ def snapshot_files(spark: SparkSession, root: str,
 def _file_time_stats(
     spark: SparkSession, root: str, files: list[str], ts_col: str = "timestamp"
 ) -> dict:
-    """Per-file min/max of ``ts_col`` in epoch micros — the data-skipping
+    """Per-file min/max of ``ts_col`` in epoch micros and row count — the
     statistics the manifest carries so time-range readers prune the file
-    list driver-side (manifest-only; no parquet footer is opened).  One
+    list driver-side and per-series progress is answered without a scan
+    (:func:`snapshot_group_stats`; no parquet footer is opened).  One
     bounded aggregate job over exactly the NEW files of a commit."""
     if not files:
         return {}
@@ -379,13 +422,19 @@ def _file_time_stats(
     )
     out = {}
     for r in df.groupBy("_f").agg(
-        F.min("_us").alias("lo"), F.max("_us").alias("hi")
+        F.min("_us").alias("lo"),
+        F.max("_us").alias("hi"),
+        F.count(F.lit(1)).alias("n"),
     ).collect():
         # input_file_name() is a percent-encoded URI; the manifest names
         # files by their decoded path (``_write_data_files``)
         p = unquote(urlsplit(r["_f"]).path)
         rel = p[len(base_abs):].lstrip("/")
-        out[rel] = {"ts_min_us": int(r["lo"]), "ts_max_us": int(r["hi"])}
+        out[rel] = {
+            "ts_min_us": int(r["lo"]),
+            "ts_max_us": int(r["hi"]),
+            "rows": int(r["n"]),
+        }
     return out
 
 
@@ -470,6 +519,38 @@ def snapshot_files_in_range(
             ):
                 out.append(f)
     return sorted(out)
+
+
+def snapshot_group_stats(
+    manifest: dict, group_cols: Sequence[str]
+) -> dict[tuple, tuple[int, int]] | None:
+    """Per group of partition columns, ``(max ts_max_us, sum rows)`` over
+    the manifest's live files: ``max(timestamp)`` and ``count(*)`` of the
+    snapshot grouped by ``group_cols``, answered from the manifest alone.
+
+    Keys are tuples of the decoded partition values in ``group_cols``
+    order, as strings (None for NULL; an empty string shares the NULL
+    directory, as in any Hive layout, and reads as None here).  Returns
+    None when any live file
+    lacks stats or a row count (manifests written before ``rows`` was
+    recorded); the caller then scans.
+    """
+    stats = manifest.get("file_stats", {})
+    out: dict[tuple, tuple[int, int]] = {}
+    for part, files in manifest["partitions"].items():
+        values = _partition_values(part)
+        if not set(group_cols) <= values.keys():
+            raise ValueError(
+                f"{list(group_cols)} are not all partition columns of {part!r}"
+            )
+        key = tuple(values[c] for c in group_cols)
+        for f in files:
+            st = stats.get(f)
+            if st is None or "rows" not in st:
+                return None
+            hi, n = out.get(key, (st["ts_max_us"], 0))
+            out[key] = (max(hi, st["ts_max_us"]), n + st["rows"])
+    return out
 
 
 def read_snapshot(
@@ -1186,7 +1267,7 @@ def _snapshot_delete_once(
         _partition_key(r, partition_cols)
         for r in read_snapshot(spark, root, v)
         .filter(predicate)
-        .select(*partition_cols)
+        .select(*_partition_strings(partition_cols))
         .distinct()
         .collect()
     }

@@ -43,8 +43,11 @@ def backfill_manifest(
     venue = venue_config_df(spark)
     avail = availability_df(spark)
 
+    # broadcast the intervals: a plain crossJoin of two parallelized
+    # local lists plans a CartesianProduct, one task per pair of input
+    # partitions, each re-running the Python RDDs it reads
     grid = (
-        symbols_df.crossJoin(intervals_df)
+        symbols_df.crossJoin(F.broadcast(intervals_df))
         .withColumn(
             "days_per_chunk",
             F.greatest(

@@ -62,10 +62,14 @@ AVAILABILITY: list[tuple[str, str, int]] = [
 ]
 
 
-def _values_sql(rows: list[tuple], cols: str) -> str:
+def values_sql(rows: list[tuple], cols: str) -> str:
+    """A ``VALUES`` literal table: Spark plans it as a JVM-local relation."""
+
     def lit(v) -> str:
+        if v is None:
+            return "NULL"
         if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         if isinstance(v, float):
             return f"CAST({v!r} AS DOUBLE)"
         if isinstance(v, int):
@@ -84,13 +88,15 @@ AVAIL_COLS = "exchange, symbol, available_from_ms"
 
 def venue_config_df(spark: SparkSession) -> DataFrame:
     """The venue×interval config dim (JVM-side literal relation)."""
-    return spark.sql(_values_sql(VENUE_INTERVALS, VENUE_COLS))
+    return spark.sql(values_sql(VENUE_INTERVALS, VENUE_COLS))
 
 
 def availability_df(spark: SparkSession) -> DataFrame:
-    return spark.sql(_values_sql(AVAILABILITY, AVAIL_COLS))
+    return spark.sql(values_sql(AVAILABILITY, AVAIL_COLS))
 
 
 def oracle_values(rows: list[tuple], cols: str) -> str:
-    """Same literal table as ANSI SQL for the DuckDB oracle."""
-    return _values_sql(rows, cols).replace("`interval`", '"interval"')
+    """Same literal table as ANSI SQL for the DuckDB oracle (the venue
+    constants hold no quote or backslash, which Spark escapes
+    differently)."""
+    return values_sql(rows, cols).replace("`interval`", '"interval"')

@@ -13,7 +13,9 @@ Mapping:
   :func:`watermark_dedup` is the bounded-state in-stream alternative
   (``dropDuplicatesWithinWatermark``)
 - progress state (T3): the streaming checkpoint owns offsets; the lake's
-  watermark table (max ts per key) is derivable at any time
+  watermark table (max ts and row count per series) is read from the
+  snapshot manifest's file stats, without a scan
+  (``sinks.snapshot.snapshot_group_stats``)
 
 The exact wall-clock boundary alignment of the reference (ceil to the
 next 15-minute mark) is stricter than Spark's phase-free processing-time

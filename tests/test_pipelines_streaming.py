@@ -801,3 +801,117 @@ def test_backfill_is_watermark_incremental(spark, tmp_path):
         for r in read_snapshot(spark, fresh_lake).collect()
     }
     assert got == want
+
+
+def _backfill_records(caplog) -> list[dict]:
+    import json
+
+    return [
+        json.loads(r.getMessage()[len("backfill "):])
+        for r in caplog.records
+        if r.getMessage().startswith("backfill {")
+    ]
+
+
+def test_backfill_reads_no_lake_file_around_the_fetch(spark, tmp_path, monkeypatch):
+    """On a lake whose files all carry stats, a cold and a no-op backfill
+    take their watermarks and progress from the manifest: with the lake
+    reader disabled both still succeed, and the progress they return is
+    a local relation, not a file scan."""
+    from crypto_data_ingestion_module_spark import pipelines
+    from tests.conftest import physical_plan
+
+    def no_scan(*args, **kwargs):
+        raise AssertionError("backfill scanned the lake")
+
+    monkeypatch.setattr(pipelines, "read_snapshot", no_scan)
+    lake = str(tmp_path / "lake")
+    end_ms = START_MS + 3 * DAY_MS
+    for _ in ("cold", "no-op"):
+        progress, _ = backfill(
+            spark, _symbols(spark), _intervals(spark), end_ms,
+            MockExchangeAdapter(), lake,
+        )
+        plan = physical_plan(progress)
+        assert "FileScan" not in plan and "LocalTableScan" in plan, plan
+        got = {(r.symbol, r.interval, r.exchange): r.n_candles for r in progress.collect()}
+        assert got[("BTC-USDT", "6h", "kucoin")] == 12
+        assert got[("BTC-USDT", "1d", "kucoin")] == 3
+    monkeypatch.undo()
+    want = (
+        read_snapshot(spark, lake)
+        .groupBy("symbol", "interval", "exchange")
+        .agg(
+            F.max("timestamp").alias("last_collected_ts"),
+            F.count(F.lit(1)).alias("n_candles"),
+        )
+    )
+    assert sorted(progress.collect()) == sorted(want.collect())
+    assert progress.schema == want.schema
+
+
+def test_backfill_logs_one_record_per_call(spark, tmp_path, caplog):
+    """Each backfill call logs where its watermarks and progress came
+    from, the version it committed and its quarantined page count."""
+    import logging
+
+    caplog.set_level(logging.INFO, logger="crypto_data_ingestion_module_spark")
+    lake = str(tmp_path / "lake")
+    end_ms = START_MS + 2 * DAY_MS
+    for _ in range(2):
+        backfill(
+            spark, _symbols(spark), _intervals(spark), end_ms,
+            MockExchangeAdapter(fail_on=frozenset({"kucoin"})), lake,
+        )
+    cold, noop = _backfill_records(caplog)
+    for record in (cold, noop):
+        assert record["watermark_source"] == record["progress_source"] == "manifest"
+    assert (cold["version"], cold["quarantined"]) == (1, 2)
+    # the re-run fetches only the failed venue's pages, which fail again
+    assert (noop["version"], noop["quarantined"]) == ("empty batch", 2)
+
+
+def test_backfill_scans_a_lake_without_row_counts(spark, tmp_path, caplog):
+    """A lake whose manifest lacks a file's row count (written before the
+    count was recorded) keeps the scan, with the same answer."""
+    import logging
+
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        commit_version,
+        read_manifest,
+    )
+
+    caplog.set_level(logging.INFO, logger="crypto_data_ingestion_module_spark")
+    lake = str(tmp_path / "lake")
+    end_ms = START_MS + 2 * DAY_MS
+    args = (_symbols(spark), _intervals(spark), end_ms, MockExchangeAdapter(), lake)
+    first = sorted(backfill(spark, *args)[0].collect())
+    legacy = read_manifest(spark, lake, 1)
+    for st in legacy["file_stats"].values():
+        del st["rows"]
+        break
+    legacy["version"] = 2
+    commit_version(spark, lake, legacy, 2)
+
+    progress, _ = backfill(spark, *args)
+    assert sorted(progress.collect()) == first
+    record = _backfill_records(caplog)[-1]
+    assert record["watermark_source"] == record["progress_source"] == "scan"
+
+
+def test_backfill_manifest_broadcasts_the_grid(spark):
+    """The symbol x interval grid of two parallelized local lists is a
+    broadcast nested-loop join, not a CartesianProduct whose every task
+    re-runs both inputs' Python RDDs."""
+    from crypto_data_ingestion_module_spark.sources.manifest import (
+        backfill_manifest,
+    )
+    from tests.conftest import physical_plan
+
+    manifest = backfill_manifest(
+        spark, _symbols(spark), _intervals(spark), START_MS + 3 * DAY_MS
+    )
+    assert manifest.count() > 0
+    plan = physical_plan(manifest)
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan

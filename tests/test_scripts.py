@@ -132,3 +132,25 @@ def test_reach_reports_only_the_def_no_root_reaches(tmp_path):
         "  c (2)",
         "total: 2 lines in 1 test-only top-level defs",
     ]
+
+
+def test_every_plans_module_imports_first():
+    """Each plan module imports on its own in a fresh interpreter: they
+    read rows ``plans.queries`` registers before importing them, so the
+    package loads the registry first."""
+    for mod in ("curation", "extensions", "indicators", "funnel", "relational"):
+        res = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                f"import crypto_data_ingestion_module_spark.plans.{mod}\n"
+                "from crypto_data_ingestion_module_spark.plans.queries import "
+                "QUERY_SPECS\n"
+                "print(len(QUERY_SPECS))",
+            ],
+            capture_output=True,
+            text=True,
+            cwd=REPO,
+        )
+        assert res.returncode == 0, (mod, res.stderr[-2000:])
+        assert int(res.stdout.split()[-1]) > 0, mod

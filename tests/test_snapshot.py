@@ -1244,3 +1244,167 @@ def test_publish_if_absent_never_replaces_a_landed_manifest(spark, tmp_path):
     final2 = Path(f"{vdir}/v00000002.json")
     _publish_if_absent(spark, fs, tmp2, final2)
     assert open(f"{vdir}/v00000002.json", "rb").read() == b'{"winner": "C"}'
+
+
+def test_partition_key_matches_the_directories_partitionBy_writes(
+    spark, tmp_path
+):
+    """The manifest keys of touched partitions are built on the driver;
+    they must equal the directory names Spark's writer escapes, for every
+    ASCII character, NULL and the empty string."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        _partition_key,
+        _partition_values,
+    )
+
+    values = [f"a{chr(c)}b" for c in range(1, 128)]
+    values += ["BTC/USDT", "é/ü", "", None]
+    out = str(tmp_path / "escaped")
+    spark.createDataFrame(
+        [(v, i) for i, v in enumerate(values)], "p string, i int"
+    ).write.partitionBy("p").parquet(out)
+    written = {d for d in os.listdir(out) if d.startswith("p=")}
+    assert written == {_partition_key({"p": v}, ["p"]) for v in values}
+    for v in values:
+        # NULL and the empty string share the default partition
+        assert _partition_values(_partition_key({"p": v}, ["p"])) == {
+            "p": v or None
+        }
+
+
+def test_upsert_and_delete_find_escaped_and_null_partitions(spark, tmp_path):
+    """A second keep-last upsert of the same key replaces the first even
+    when the partition value is Hive-escaped in the path (``BTC/USDT``,
+    the ccxt symbol format) or NULL; keyed by the raw value, the old
+    file stayed live next to its rewrite and the key was stored twice.
+    Delete finds those partitions too."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        snapshot_delete,
+    )
+
+    root = str(tmp_path / "snap")
+    symbols = ["BTC/USDT", "BTC:USDT", None, "BTC-USDT"]
+    for open_ in (100.0, 200.0):
+        for sym in symbols:
+            snapshot_upsert(
+                spark, _candles(spark, [(open_, 1.0, T0, sym, "cb", "15m")]), root
+            )
+    got = sorted(
+        (r.symbol or "", r.open)
+        for r in read_snapshot(spark, root).select("symbol", "open").collect()
+    )
+    assert got == sorted((s or "", 200.0) for s in symbols)
+
+    _, n = snapshot_delete(
+        spark, root, F.col("symbol").isNull() | (F.col("symbol") == "BTC/USDT")
+    )
+    assert n == 2
+    left = {r.symbol for r in read_snapshot(spark, root).collect()}
+    assert left == {"BTC:USDT", "BTC-USDT"}
+
+
+def _scan_group_stats(spark, root, cols):
+    """``snapshot_group_stats`` computed the slow way: a lake scan."""
+    return {
+        tuple(r[c] for c in cols): (r.hi, r.n)
+        for r in read_snapshot(spark, root)
+        .groupBy(*cols)
+        .agg(
+            F.max(F.unix_micros("timestamp")).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+
+
+def test_group_stats_equal_a_scan_after_every_kind_of_commit(spark, tmp_path):
+    """Per-series max timestamp and row count from the manifest alone
+    equal the grouped scan after a cold backfill, a keep-last upsert that
+    rewrites partitions, an append that adds a second file to one,
+    compaction and a delete."""
+    from crypto_data_ingestion_module_spark.pipelines import SERIES, backfill
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        compact_snapshot,
+        snapshot_append,
+        snapshot_delete,
+        snapshot_group_stats,
+    )
+    from crypto_data_ingestion_module_spark.sources.fetch import (
+        MockExchangeAdapter,
+    )
+
+    start_ms = 1_704_067_200_000  # T0
+    root = str(tmp_path / "lake")
+
+    def check():
+        man = read_manifest(spark, root, current_version(spark, root))
+        for cols in (SERIES, ("exchange",), PARTITION_COLS):
+            assert snapshot_group_stats(man, cols) == _scan_group_stats(
+                spark, root, cols
+            ), cols
+
+    backfill(
+        spark,
+        spark.createDataFrame([("BTC-USDT", start_ms)], "symbol string, start_ms long"),
+        spark.createDataFrame([("6h", 4)], "interval string, candles_per_day long"),
+        start_ms + 2 * 86_400_000,
+        MockExchangeAdapter(),
+        root,
+    )
+    check()
+    snapshot_upsert(
+        spark,
+        _candles(
+            spark,
+            [
+                (999.0, 1.0, T0, "BTC-USDT", "kucoin", "6h"),  # correction
+                (5.0, 1.0, T0, "ETH/USDT", "kucoin", "6h"),  # new series
+            ],
+        ),
+        root,
+    )
+    check()
+    snapshot_append(
+        spark,
+        root,
+        read_snapshot(spark, root)
+        .filter((F.col("exchange") == "kucoin") & (F.col("symbol") == "BTC-USDT"))
+        .withColumn("timestamp", F.col("timestamp") + F.expr("INTERVAL 1 MINUTE")),
+        PARTITION_COLS,
+    )
+    check()
+    assert compact_snapshot(spark, root) is not None
+    check()
+    _, n = snapshot_delete(spark, root, F.col("symbol") == "ETH/USDT")
+    assert n == 1
+    check()
+
+
+def test_group_stats_fall_back_without_row_counts(spark, tmp_path):
+    """A live file without ``rows`` (a manifest written before the count
+    was recorded) makes the helper answer None, so callers scan."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        snapshot_group_stats,
+    )
+
+    root = str(tmp_path / "snap")
+    snapshot_upsert(
+        spark,
+        _candles(
+            spark,
+            [
+                (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
+                (110.0, 1.5, T2, "BTC-USDT", "coinbase", "15m"),
+            ],
+        ),
+        root,
+    )
+    man = read_manifest(spark, root, 1)
+    assert snapshot_group_stats(man, ["symbol"]) == _scan_group_stats(
+        spark, root, ["symbol"]
+    )
+    del man["file_stats"][snapshot_files(spark, root)[0]]["rows"]
+    assert snapshot_group_stats(man, ["symbol"]) is None
+    with pytest.raises(ValueError, match="partition columns"):
+        snapshot_group_stats(read_manifest(spark, root, 1), ["open"])
