@@ -1,7 +1,7 @@
 """Time/interval expressions.
 
 Reference semantics covered here (crypto_collector.py citations):
-- epoch ms/s ↔ timestamp conversions (122, 204, 281, 360, 450, 480, 502)
+- timestamp → epoch ms (480, 502, 567)
 - interval string parse ``'15m'`` → ms, default 15m (741-752)
 - interval → native-unit lookups (68-75, 160-166, 238-243, 315-321, 408-416)
 - boundary gating: collect 1h at minute 0, 4h at hour%4==0, 6h at hour%6==0,
@@ -83,18 +83,6 @@ def epoch_ms(ts: Column | str) -> Column:
     return F.unix_millis(c)
 
 
-def from_epoch_ms(ms: Column | str) -> Column:
-    """epoch ms → timestamp (P3; reference 281, 450 — Bitfinex/Binance)."""
-    c = F.col(ms) if isinstance(ms, str) else ms
-    return F.timestamp_millis(c.cast("long"))
-
-
-def from_epoch_s(s: Column | str) -> Column:
-    """epoch seconds → timestamp (P3; reference 122, 204, 360)."""
-    c = F.col(s) if isinstance(s, str) else s
-    return F.timestamp_seconds(c.cast("long"))
-
-
 def bucket_start(ts: Column | str, interval_ms: int | Column) -> Column:
     """Tumbling-window start: floor the epoch-ms to the interval grid.
 
@@ -104,21 +92,6 @@ def bucket_start(ts: Column | str, interval_ms: int | Column) -> Column:
     ivl = F.lit(interval_ms) if isinstance(interval_ms, int) else interval_ms
     ms = epoch_ms(ts)
     return F.timestamp_millis((F.floor(ms / ivl) * ivl).cast("long"))
-
-
-def next_boundary_ms(now_ms: int, interval_ms: int = 900_000) -> int:
-    """Next exact wall-clock interval boundary strictly after ``now_ms``
-    (reference alignment ``ceil(now/900)*900``, 664-667).  Already on a
-    boundary → the NEXT one (the reference sleeps ≥1 cycle)."""
-    return (now_ms // interval_ms + 1) * interval_ms
-
-
-def sleep_to_boundary_s(now_ms: int, interval_ms: int = 900_000) -> float:
-    """Seconds until the next boundary — drives a boundary-aligned
-    start for deployments that need the reference's exact phase (T2).
-    Spark's processing-time trigger is epoch-aligned in steady state;
-    only the first batch fires unaligned — see streaming.triggers."""
-    return (next_boundary_ms(now_ms, interval_ms) - now_ms) / 1000.0
 
 
 def should_collect_ms(boundary_ms: int, interval: str) -> bool:

@@ -2,9 +2,10 @@
 
 Completes the repo's incremental-materialization triad: aggregates
 re-merge algebraic partials (operators/rollup.py), dedup/fingerprint
-joins new batches against an immutable index (operators/incremental.py)
-— and JOIN views use the classic bag-algebra delta rule here: for an
-inner equi-join view ``J = A ⋈ B`` under append-only batches,
+joins new batches against an immutable index
+(``text_dedup.incremental_minhash_md5_pairs``) — and JOIN views use
+the classic bag-algebra delta rule here: for an inner equi-join view
+``J = A ⋈ B`` under append-only batches,
 
     ΔJ = ΔA ⋈ B  ∪all  A ⋈ ΔB  ∪all  ΔA ⋈ ΔB
 

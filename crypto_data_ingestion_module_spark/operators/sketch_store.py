@@ -3,8 +3,8 @@
 The 100 TB monitoring pattern is not "sketch the whole fact per query" —
 it is a daily job that stores each day's BOUNDED partial in the lake and
 a reader that merges partials over any date range without touching the
-fact again.  All three sketch families the repo computes are mergeable
-by construction; this module adds the missing persistence half:
+fact again.  Every sketch family stored here is mergeable by
+construction; this module adds the missing persistence half:
 
 * **Misra-Gries heavy hitters** — per-(stratum, partition) k-counter
   partials.  Each partial under-counts an item by at most
@@ -14,22 +14,20 @@ by construction; this module adds the missing persistence half:
   lower bound — the same completeness argument as the single-query
   two-pass recipe in ``operators/sketch.py``, now across stored daily
   partials.  The exact second pass is unchanged.
-* **HyperLogLog distinct** — per-(stratum, group) Datasketches HLL
-  binaries (``hll_sketch_agg``).  HLL merge is register-wise max:
-  associative, commutative, lossless at equal lgConfigK, so the
-  merged-over-range estimate EQUALS the recompute-from-scratch estimate
-  bit-for-bit (pinned in tests, not just bounded).
 * **Fixed-grid histograms (quantiles)** — per-stratum bucket counts.
   Counts sum exactly, so range-merged quantile estimates equal the
   from-scratch histogram's, and sit within one bucket width of the true
   quantile.
 
-Storage is the repo's snapshot lake (``sinks/snapshot.py``): each
+Storage is the repo's snapshot lake (``sinks/snapshot.py``): each MG
 day/stratum batch is one ``snapshot_append`` with an ``applied_id``, so
-a replayed daily job commits nothing, readers get snapshot isolation,
-and the partial tables inherit time travel + vacuum.  Partials are
-partitioned by the stratum column — a range read prunes to the touched
-partitions through the manifest, never scanning the fact.
+a replayed daily job commits nothing; the families without an exact
+second pass (KMV, Count-Min) are rebuilt whole through the
+fingerprint-gated :func:`refresh_partials_overwrite`.  Readers get
+snapshot isolation, and the partial tables inherit time travel +
+vacuum.  Partials are partitioned by the stratum column — a range read
+prunes to the touched partitions through the manifest, never scanning
+the fact.
 
 The reference has no sketch surface at all (crypto_collector.py keeps
 plain pandas frames); this is capability extension in the SURVEY §2.5 /
@@ -184,69 +182,6 @@ def frequent_items_exact_from_partials(
 
 
 # ---------------------------------------------------------------------------
-# HLL distinct partials
-# ---------------------------------------------------------------------------
-
-_HLL_LGK = 12
-
-
-def hll_partials(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    stratum: str = "day",
-    lgk: int = _HLL_LGK,
-) -> DataFrame:
-    """Per-(stratum, groups) Datasketches HLL binaries + exact row
-    counts — the stored unit of mergeable count-distinct."""
-    return df.groupBy(stratum, *group_cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("hll"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def store_hll_partials(
-    spark: SparkSession,
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    root: str,
-    stratum: str = "day",
-    lgk: int = _HLL_LGK,
-    applied_id: str | None = None,
-) -> int:
-    return snapshot_append(
-        spark,
-        root,
-        hll_partials(df, value_col, group_cols, stratum, lgk),
-        partition_cols=(stratum,),
-        applied_id=applied_id,
-    )
-
-
-def approx_distinct_over_range(
-    spark: SparkSession,
-    root: str,
-    group_cols: Sequence[str],
-    strata: Sequence[str] | None = None,
-    stratum: str = "day",
-) -> DataFrame:
-    """Merged count-distinct over any stored range: one register-wise
-    HLL union per group — never re-reads the fact.  Equals the
-    from-scratch estimate exactly (HLL merge is lossless at equal
-    lgConfigK; pinned in tests)."""
-    p = read_snapshot(spark, root)
-    if strata is not None:
-        p = p.where(F.col(stratum).isin(list(strata)))
-    return p.groupBy(*group_cols).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("hll")).alias(
-            "approx_distinct"
-        ),
-        F.sum("n_rows").alias("n_rows"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Fixed-grid histogram partials (mergeable quantiles)
 # ---------------------------------------------------------------------------
 
@@ -285,26 +220,6 @@ def histogram_partials(
         df.where(F.col(col).isNotNull())
         .groupBy(F.col(stratum), bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def store_histogram_partials(
-    spark: SparkSession,
-    df: DataFrame,
-    col: str,
-    root: str,
-    lo: float,
-    hi: float,
-    bins: int,
-    stratum: str = "day",
-    applied_id: str | None = None,
-) -> int:
-    return snapshot_append(
-        spark,
-        root,
-        histogram_partials(df, col, lo, hi, bins, stratum),
-        partition_cols=(stratum,),
-        applied_id=applied_id,
     )
 
 
@@ -352,8 +267,8 @@ def quantiles_from_histogram(
 
 # ---------------------------------------------------------------------------
 # KMV (bottom-k θ-sketch) partials — the third stored sketch family.
-# Unlike the HLL rows above, the merged KMV estimate is oracle-pairable
-# (md5 order statistics + exact integer division, operators/sketch.py).
+# The merged KMV estimate is oracle-pairable (md5 order statistics +
+# exact integer division, operators/sketch.py).
 # ---------------------------------------------------------------------------
 
 
@@ -372,28 +287,6 @@ def kmv_partials(
     )
     return kmv_bottom_k(src, col, k, (stratum,)).select(
         stratum, "item", "h"
-    )
-
-
-def store_kmv_partials(
-    spark: SparkSession,
-    df: DataFrame,
-    col: str,
-    root: str,
-    stratum: str = "day",
-    k: int = 64,
-    applied_id: str | None = None,
-) -> int:
-    """Append a batch's bottom-k partials to the KMV lake (replay-immune
-    via ``applied_id``).  Batches may cover overlapping strata: the
-    range reader below re-ranks the union, and bottom-k of a union of
-    bottom-k partials equals bottom-k of the full data."""
-    return snapshot_append(
-        spark,
-        root,
-        kmv_partials(df, col, stratum, k=k),
-        partition_cols=(stratum,),
-        applied_id=applied_id,
     )
 
 
@@ -451,26 +344,6 @@ def cm_sketch_partials(
         )
         .groupBy(stratum, "s", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def store_cm_partials(
-    spark: SparkSession,
-    df: DataFrame,
-    col: str,
-    root: str,
-    stratum: str = "day",
-    depth: int = 4,
-    width: int = 512,
-    applied_id: str | None = None,
-) -> int:
-    """Append a batch's CM counter partials (replay-immune)."""
-    return snapshot_append(
-        spark,
-        root,
-        cm_sketch_partials(df, col, stratum, depth, width),
-        partition_cols=(stratum,),
-        applied_id=applied_id,
     )
 
 
@@ -537,11 +410,11 @@ def refresh_partials_overwrite(
     (asserted) — the gate splits the newest applied_id on the first
     ``'#'`` to recover the fingerprint, so an embedded ``'#'`` would
     never match and force a full rebuild on every call.  Likewise, do
-    NOT mix append-maintained writers (the streaming maintainers, whose
-    applied_ids are batch ids, not ``fp#v`` pairs) with this
-    refresh gate on one lake root: an append's id at the ledger head
-    never matches any fingerprint, so every refresh after an append
-    rebuilds from scratch — wasteful, though never incorrect.
+    NOT mix append writers (``snapshot_append``, whose applied_ids are
+    batch ids, not ``fp#v`` pairs) with this refresh gate on one lake
+    root: an append's id at the ledger head never matches any
+    fingerprint, so every refresh after an append rebuilds from scratch
+    — wasteful, though never incorrect.
     """
     assert "#" not in fingerprint, (
         "refresh_partials_overwrite: '#' is reserved as the "

@@ -336,7 +336,7 @@ def minhash_band_rows(
     This is also the PERSISTED shape for incremental dedup: a batch's
     band rows appended to a fingerprint lake make every future batch's
     near-dup check an equi-join against this table instead of a
-    recompute over the full corpus (see ``operators.incremental``).
+    recompute over the full corpus.
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, shingle_n, text_col, id_col)
@@ -678,7 +678,8 @@ def incremental_simhash_pairs(
     fingerprints, so batch-by-batch ingestion finds EXACTLY the pairs
     :func:`simhash_hamming_pairs` finds over the union — recall 1 stays
     recall 1 incrementally (same argument as the MinHash path in
-    ``operators.incremental``, pinned by the streaming-curation test).
+    :func:`incremental_minhash_md5_pairs`, pinned by the
+    streaming-curation test).
     """
     fp = simhash60_md5_kernel(new_docs, text_col, id_col).localCheckpoint(
         eager=True
@@ -978,8 +979,7 @@ def incremental_minhash_md5_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Check a new batch against an accumulated md5-MinHash band index —
     the :func:`incremental_simhash_pairs` move on the oracle-pairable
-    MinHash family (the xxhash64 twin lives in
-    ``operators/incremental.py``).
+    MinHash family.
 
     Returns ``(pairs, new_band_rows)`` with the
     :func:`minhash_lsh_pairs_md5` output contract.  Band keys are pure

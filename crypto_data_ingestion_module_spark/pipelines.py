@@ -33,77 +33,6 @@ from crypto_data_ingestion_module_spark.sources.venues import values_sql
 from crypto_data_ingestion_module_spark.streaming.metrics import log_event
 
 
-def curate_and_shard(
-    spark: SparkSession,
-    docs: DataFrame,
-    benchmark: DataFrame | None,
-    work_dir: str,
-    num_shards: int = 16,
-    quality_min: float = 0.5,
-    decontam_n: int = 4,
-    mixture_caps: dict[str, int] | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """The LLM-training-data pipeline end-to-end, one call:
-
-    decontaminate (vs ``benchmark``) → quality gate → exact-dedup reps →
-    near-dup cluster reps (SimHash Hamming pairs → connected components,
-    materialized to ``{work_dir}/clusters``) → optional per-source
-    mixture caps → seeded-shuffle shards at ``{work_dir}/shards``.
-
-    Returns the shard manifest.  Every stage is the already-tested
-    operator; this function is the composition a user actually runs, and
-    each intermediate that a 100 TB run would materialize (cluster
-    assignments, the shard files) IS materialized — nothing recomputes.
-    """
-    import os
-
-    from crypto_data_ingestion_module_spark.operators.curation import (
-        materialize_clusters,
-        read_clusters,
-    )
-    from crypto_data_ingestion_module_spark.operators.decontam import (
-        decontaminate,
-    )
-    from crypto_data_ingestion_module_spark.operators.sampling import (
-        mixture_sample,
-    )
-    from crypto_data_ingestion_module_spark.operators.text_dedup import (
-        simhash_hamming_pairs,
-    )
-    from crypto_data_ingestion_module_spark.sinks.shards import (
-        write_training_shards,
-    )
-    from crypto_data_ingestion_module_spark.functions import text as TX
-
-    clean = docs if benchmark is None else decontaminate(
-        docs, benchmark, n=decontam_n
-    )
-    quality = clean.filter(TX.quality_score("text") >= quality_min)
-    exact_reps = quality.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    survivors = quality.join(exact_reps.select("doc_id"), "doc_id", "semi")
-
-    cluster_path = os.path.join(work_dir, "clusters")
-    materialize_clusters(
-        survivors, simhash_hamming_pairs(survivors), cluster_path
-    )
-    reps = read_clusters(spark, cluster_path).filter("is_rep").select("doc_id")
-    curated = survivors.join(reps, "doc_id", "semi")
-
-    if mixture_caps is not None:
-        curated = mixture_sample(
-            curated, "source", mixture_caps, id_col="doc_id", seed=seed
-        ).drop("sample_rank")
-
-    return write_training_shards(
-        curated,
-        os.path.join(work_dir, "shards"),
-        num_shards=num_shards,
-        id_col="doc_id",
-        seed=seed,
-    )
-
-
 #: The key of a backfill's progress rows, each a partition column of
 #: the candle lake.
 SERIES = ("symbol", "interval", "exchange")
@@ -189,11 +118,12 @@ def backfill(
     row count, ``sinks.snapshot.snapshot_group_stats``), so the work
     before the fetch and after the commit is metadata reads plus one
     broadcast join, and ``progress`` is a local relation.  A lake with
-    files written before the manifest recorded row counts is scanned
-    instead, until those files are rewritten.  Each call logs one ``backfill`` record
-    (``streaming.metrics.log_event``) naming the watermark and progress
-    sources (``"manifest"``, or ``"scan"`` when the lake was scanned),
-    the committed version and the quarantined page count.
+    files written before the manifest recorded row counts, or with a
+    NULL or empty series value, is scanned instead.  Each call logs one
+    ``backfill`` record (``streaming.metrics.log_event``) naming the
+    watermark and progress sources (``"manifest"``, or ``"scan"`` when
+    the lake was scanned), the committed version and the quarantined
+    page count.
 
     ``normalizer`` must match the adapter's page layout: the mock layout
     for :class:`MockExchangeAdapter`, ``normalize_real_pages`` for real

@@ -1674,7 +1674,7 @@ SELECT * FROM (
 # text, CC min-label, quality predicate) is a deterministic function
 # of the full document set — so the final curated table is
 # batch-split-INDEPENDENT and equals the one-shot composition.
-# Semantics note (deliberate, matches curate_and_shard): the quality
+# Semantics note (deliberate): the quality
 # gate runs BEFORE fingerprinting, so near-dup pairs are found among
 # quality survivors — unlike curated_corpus, which clusters the full
 # corpus and gates quality last.  The oracle below encodes the
@@ -1683,7 +1683,8 @@ SELECT * FROM (
 # per-batch filter, oracle-receipted by decontaminate_docs) is off
 # here to keep the row's axis the stateful curation machinery.
 # Crash-replay idempotence (batch_id dynamic-partition overwrite) and
-# the shard-cut equality stay pytest-pinned (tests/test_curate_stream).
+# the decontaminated settle equality stay pytest-pinned
+# (tests/test_curate_stream).
 # 100 TB shape: per batch the band probe equi-joins the batch's rows
 # against the index on (band, bv) — never all-pairs, never a corpus
 # rescan; the settle reads the docs lake once plus the pair LOG
@@ -1835,8 +1836,6 @@ _MA_WIN = (
 
 
 def _returns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared with the streaming twin (streaming/analytics.py) — batch and
-    # stream are asserted equal on the same ticks in pytest
     from crypto_data_ingestion_module_spark.streaming.analytics import (
         returns_ma_batch,
     )

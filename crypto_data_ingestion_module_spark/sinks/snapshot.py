@@ -529,11 +529,11 @@ def snapshot_group_stats(
     snapshot grouped by ``group_cols``, answered from the manifest alone.
 
     Keys are tuples of the decoded partition values in ``group_cols``
-    order, as strings (None for NULL; an empty string shares the NULL
-    directory, as in any Hive layout, and reads as None here).  Returns
-    None when any live file
-    lacks stats or a row count (manifests written before ``rows`` was
-    recorded); the caller then scans.
+    order, as strings.  Returns None, and the caller then scans, when
+    any live file lacks stats or a row count (manifests written before
+    ``rows`` was recorded), or when a group value is NULL or empty:
+    Hive writes both to the default-partition directory, so the
+    manifest cannot tell them apart, while the files keep them distinct.
     """
     stats = manifest.get("file_stats", {})
     out: dict[tuple, tuple[int, int]] = {}
@@ -544,6 +544,8 @@ def snapshot_group_stats(
                 f"{list(group_cols)} are not all partition columns of {part!r}"
             )
         key = tuple(values[c] for c in group_cols)
+        if None in key:
+            return None
         for f in files:
             st = stats.get(f)
             if st is None or "rows" not in st:

@@ -107,96 +107,6 @@ def backfill_manifest(
     return tasks
 
 
-def repair_manifest(
-    spark: SparkSession,
-    lake: DataFrame,
-    max_chunk_candles: int = 300,
-) -> DataFrame:
-    """Gap-repair planner (T1+T4 composition): find every missing
-    interval bucket in the candle lake and emit the fetch manifest that
-    closes the gaps.
-
-    Per (symbol, interval, exchange) series: the expected grid spans the
-    series' OWN [min, max] timestamps (a series never demands data
-    outside what some fetch already proved exists); missing buckets are
-    the grid anti-joined against the stored candles; runs of consecutive
-    missing buckets coalesce into chunks (gaps-and-islands on
-    ``bucket - row_number * interval``), split so no chunk asks for more
-    than ``max_chunk_candles`` candles (the page-cap discipline of
-    ``backfill_manifest``).  Output schema is identical to
-    ``backfill_manifest`` — feed it to ``fetch_pages`` + the lake upsert
-    and re-run until empty (the reference's repair loop,
-    crypto_collector.py:626-657, as a declarative fixpoint).
-
-    Scale: one lake scan (column-pruned to the key + timestamp), one
-    grid explode bounded by the series spans, one anti-join and one
-    window per series — no driver-side state, no per-gap round trips.
-    """
-    from crypto_data_ingestion_module_spark.functions.timeutil import (
-        interval_ms_col,
-    )
-    from pyspark.sql import Window
-
-    keys = ["symbol", "interval", "exchange"]
-    ivl = interval_ms_col(F.col("interval"))
-    present = lake.select(
-        *keys,
-        (
-            F.floor(F.unix_micros("timestamp") / 1000 / ivl) * ivl
-        ).alias("bucket_ms"),
-    ).distinct()
-    spans = present.groupBy(*keys).agg(
-        F.min("bucket_ms").alias("_lo"), F.max("bucket_ms").alias("_hi")
-    )
-    expected = spans.withColumn(
-        "bucket_ms",
-        F.explode(F.sequence(F.col("_lo"), F.col("_hi"), ivl)),
-    ).select(*keys, "bucket_ms")
-    missing = expected.join(present, [*keys, "bucket_ms"], "left_anti")
-
-    w = Window.partitionBy(*keys).orderBy("bucket_ms")
-    runs = (
-        missing.withColumn(
-            "_grp", F.col("bucket_ms") - F.row_number().over(w) * ivl
-        )
-        .groupBy(*keys, "_grp")
-        .agg(
-            F.min("bucket_ms").alias("run_start_ms"),
-            (F.max("bucket_ms") + ivl).alias("run_end_ms"),
-        )
-    )
-    # split long runs so each chunk fits one page budget
-    chunk_ms = (F.lit(max_chunk_candles) * ivl).cast("long")
-    chunks = (
-        runs.withColumn(
-            "chunk_start_ms",
-            F.explode(
-                F.sequence(
-                    F.col("run_start_ms"), F.col("run_end_ms") - 1, chunk_ms
-                )
-            ),
-        )
-        .withColumn(
-            "chunk_end_ms",
-            F.least(F.col("chunk_start_ms") + chunk_ms, F.col("run_end_ms")),
-        )
-        .select(*keys, "chunk_start_ms", "chunk_end_ms")
-    )
-    venue = venue_config_df(spark)
-    return (
-        chunks.join(F.broadcast(venue), ["exchange", "interval"], "inner")
-        .select(
-            "symbol",
-            "interval",
-            "exchange",
-            "native_interval",
-            "page_limit",
-            "chunk_start_ms",
-            "chunk_end_ms",
-        )
-    )
-
-
 def incremental_manifest(
     manifest: DataFrame,
     lake: DataFrame,
@@ -210,8 +120,7 @@ def incremental_manifest(
     are already collected and drop out entirely; a chunk straddling the
     watermark starts at the first uncollected bucket.  Series absent
     from the lake keep their full range.  A re-run over an up-to-date
-    lake therefore fetches NOTHING — the backfill is a fixpoint, like
-    ``repair_manifest``.
+    lake therefore fetches NOTHING — the backfill is a fixpoint.
     """
     from crypto_data_ingestion_module_spark.functions.timeutil import (
         interval_ms_col,

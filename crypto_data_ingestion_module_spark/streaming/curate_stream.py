@@ -1,9 +1,8 @@
-"""Streaming curation: the full curate-and-shard path run incrementally.
+"""Streaming curation: decontaminate → quality gate → exact-dedup reps →
+near-dup cluster reps, run incrementally.
 
-``pipelines.curate_and_shard`` is the batch composition (decontaminate →
-quality gate → exact-dedup reps → near-dup cluster reps → mixture caps →
-shards).  This module is its streaming face: documents arrive as a
-stream, each micro-batch pays only O(batch + collisions) —
+Documents arrive as a stream and each micro-batch pays only
+O(batch + collisions) —
 
 - decontamination and the quality gate are stateless per-document
   filters (the benchmark n-gram set is fixed), so they run inside the
@@ -16,7 +15,7 @@ stream, each micro-batch pays only O(batch + collisions) —
 - exact dedup and cluster-representative election are GLOBAL minima
   (min doc id per text / per component) that a later batch can overturn
   — a smaller-id duplicate arriving re-elects its group's rep.  They are
-  therefore settled once at :func:`finalize_curated` from the
+  therefore settled once at :func:`settle_curated` from the
   accumulated lakes: one hash-aggregate + a connected-components run
   over the PAIR LOG (edges only, never the corpus) — exactly the
   compact-on-read step a 100 TB incremental pipeline runs before each
@@ -29,9 +28,10 @@ overwrite, so a replayed micro-batch replaces exactly its own output —
 idempotent by partition, the same recovery contract as the pair log in
 ``streaming.dedup_stream``.
 
-The equality contract — ``finalize_curated`` over a streamed corpus ==
-``curate_and_shard`` over the same docs in one batch, shard-for-shard —
-is pinned by ``tests/test_curate_stream.py``.
+The equality contract — :func:`settle_curated` over a streamed corpus
+== the same stages over the same docs in one batch — is the
+``stream_curated_corpus`` registry row's oracle and is pinned by
+``tests/test_curate_stream.py``.
 """
 
 from __future__ import annotations
@@ -45,12 +45,8 @@ from pyspark.sql.streaming import StreamingQuery
 from crypto_data_ingestion_module_spark.functions import text as TX
 from crypto_data_ingestion_module_spark.operators.decontam import decontaminate
 from crypto_data_ingestion_module_spark.operators.graph import assign_clusters
-from crypto_data_ingestion_module_spark.operators.sampling import mixture_sample
 from crypto_data_ingestion_module_spark.operators.text_dedup import (
     incremental_simhash_pairs,
-)
-from crypto_data_ingestion_module_spark.sinks.shards import (
-    write_training_shards,
 )
 
 DOCS_SUBDIR = "docs"
@@ -181,25 +177,3 @@ def settle_curated(
     )
     return survivors.join(reps, id_col, "semi")
 
-
-def finalize_curated(
-    spark: SparkSession,
-    lake_root: str,
-    shards_dir: str,
-    num_shards: int = 16,
-    mixture_caps: dict[str, int] | None = None,
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """:func:`settle_curated` + mixture caps + training shards; returns
-    the shard manifest (the ``curate_and_shard`` equality contract)."""
-    curated = settle_curated(spark, lake_root, id_col=id_col)
-
-    if mixture_caps is not None:
-        curated = mixture_sample(
-            curated, "source", mixture_caps, id_col=id_col, seed=seed
-        ).drop("sample_rank")
-
-    return write_training_shards(
-        curated, shards_dir, num_shards=num_shards, id_col=id_col, seed=seed
-    )

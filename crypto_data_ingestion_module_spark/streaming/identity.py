@@ -28,19 +28,6 @@ a consumer absorbs that depends on its merge algebra:
 * keep-last upsert — idempotent by key: absorbed.
 * MG partials — a duplicate partial only WIDENS the pass-1 candidate
   set; the exact second pass keeps the answer correct: absorbed.
-* HLL partials — register-wise max is idempotent: absorbed.
-* KMV partials — bottom-k min-rank is idempotent (re-appending the
-  same hashes changes no order statistic): absorbed.
-* **Count-Min partials are NOT double-append-safe**: counters are
-  sums, so a double-appended CM partial inflates every estimate built
-  from it, and CM has no exact second pass to absorb the error.  No
-  live exposure exists (every CM lake postdates this fix, so no
-  path-only CM ledger ids were ever written), and the documented
-  recovery is the family's fingerprint-keyed OVERWRITE refresh
-  (``operators/sketch_store.refresh_partials_overwrite``): the next
-  refresh REPLACES the lake's entire content, healing any inflated
-  partials — pinned by ``tests/test_sketch_stream.py``
-  (``test_cm_double_append_inflates_and_overwrite_refresh_heals``).
 
 The same transition window re-opens at the r10→r11 URI-parsing upgrade
 (ADVICE r11): checkpoints addressed as ``file:`` URIs with
@@ -50,9 +37,7 @@ prefix-strip, read no metadata marker, and used path-only identity.
 urlparse/unquote now resolves them to the real local path, so those
 streams FIND their metadata marker and change qid across this upgrade —
 one batch replayed exactly across the boundary can append twice, with
-the same per-consumer algebra as above (keep-last/MG/HLL/KMV absorb it;
-Count-Min lakes written through such a checkpoint URI should take one
-fingerprint-keyed overwrite refresh after upgrading).  Plain paths and
+the same per-consumer algebra as above.  Plain paths and
 ``file:/...``/``file:///...`` URIs without percent-encoding are
 unaffected (byte-identical identity before and after).
 """

@@ -78,41 +78,3 @@ def cross_venue_spread(
         ).alias("spread_bps"),
     )
 
-
-def spread_stream_to_lake(
-    spreads: DataFrame,
-    lake_root: str,
-    checkpoint: str,
-    available_now: bool = True,
-    data_type: str = "spread",
-):
-    """MERGE the live spread stream into the partitioned lake.
-
-    Reuses the canonical lake layout by shaping each spread row as a
-    candle-keyed record: ``exchange`` is the ordered venue pair (one
-    partition per pair), ``timestamp`` the bucket start.  Re-delivered
-    buckets (checkpoint replay, corrected candles) resolve keep-last via
-    the same MERGE as every other lake writer.
-    """
-    from crypto_data_ingestion_module_spark.streaming.live import (
-        stream_upsert_to_lake,
-    )
-
-    shaped = spreads.select(
-        "symbol",
-        "interval",
-        F.lit(data_type).alias("data_type"),
-        F.concat_ws("|", "exchange_a", "exchange_b").alias("exchange"),
-        F.col("bucket_ts").alias("timestamp"),
-        "close_a",
-        "close_b",
-        "spread",
-        "spread_bps",
-    )
-    return stream_upsert_to_lake(
-        shaped.sparkSession,
-        shaped,
-        lake_root,
-        checkpoint,
-        available_now=available_now,
-    )

@@ -10,8 +10,8 @@ Mapping:
   running the same fetch kernel and MERGE upsert as the batch path —
   one code path for both drive modes
 - late/re-delivered data (T4): the MERGE accepts unbounded lateness;
-  :func:`watermark_dedup` is the bounded-state in-stream alternative
-  (``dropDuplicatesWithinWatermark``)
+  the ``stream_dedup_within_watermark`` registry row is the
+  bounded-state in-stream alternative (``dropDuplicatesWithinWatermark``)
 - progress state (T3): the streaming checkpoint owns offsets; the lake's
   watermark table (max ts and row count per series) is read from the
   snapshot manifest's file stats, without a scan
@@ -41,72 +41,6 @@ from crypto_data_ingestion_module_spark.sources.fetch import (
     fetch_pages,
     normalize_mock_pages,
 )
-
-
-def stream_upsert_to_lake(
-    spark: SparkSession,
-    source: DataFrame,
-    lake_root: str,
-    checkpoint: str,
-    available_now: bool = True,
-    key_cols: Sequence[str] = ("symbol", "interval", "data_type", "exchange", "timestamp"),
-) -> StreamingQuery:
-    """Stream canonical candles into the lake via foreachBatch MERGE.
-
-    Each micro-batch is one snapshot-isolated commit; the checkpoint's
-    micro-batch id is the manifest ``applied_id``, so a replay after
-    checkpoint recovery commits NOTHING instead of leaning on keep-last
-    coincidence — true exactly-once from at-least-once delivery.  An
-    empty micro-batch commits nothing either.  Readers use
-    ``sinks.snapshot.read_snapshot`` and never see a half-applied batch.
-    """
-    from crypto_data_ingestion_module_spark.streaming.identity import (
-        stream_qid,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # the ledger id is (stream, batch) — Delta's txnAppId
-        # discipline; resolved inside the sink so the checkpoint's
-        # creation marker is folded in (see streaming/identity.py)
-        qid = stream_qid(checkpoint)
-        # batch_seq defaults to lake-max+1: monotone regardless of what
-        # seq domain earlier writers used (a raw batch_id like 0,1,2
-        # could never supersede epoch-scale seqs already in the lake)
-        clean = (
-            batch_df.drop("_ingest_seq")
-            if "_ingest_seq" in batch_df.columns
-            else batch_df
-        )
-        snapshot_upsert(
-            batch_df.sparkSession,
-            clean,
-            lake_root,
-            key_cols=key_cols,
-            applied_id=f"stream-{qid}-batch-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
-
-
-def watermark_dedup(
-    stream: DataFrame,
-    ts_col: str = "timestamp",
-    keys: Sequence[str] = ("symbol", "interval", "exchange", "timestamp"),
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """Bounded-state in-stream dedup (T4): accept each logical key once
-    within the watermark horizon.  State size is bounded by ``lateness``
-    — the 100 TB-safe alternative to unbounded MERGE corrections."""
-    return stream.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
 
 
 def live_collection_stream(

@@ -1,21 +1,16 @@
 """Streaming sketch-partial maintenance: continuously append bounded
-Misra-Gries / HyperLogLog partials to the sketch-partial lake
+Misra-Gries partials to the sketch-partial lake
 (operators/sketch_store.py) from a structured stream.
 
 The batch shape of the store is a daily job; the 100 TB monitoring
 reality is a CONTINUOUS feed where each micro-batch contributes its own
 bounded partial and readers merge over any range without ever touching
-the fact.  Both sketch families tolerate arbitrary re-batching:
-
-* MG — a micro-batch partial is just one more stored partial; the
-  telescoped completeness bound (summed deficit <= n_range/(k+1) over
-  ALL stored partials of the range) is batching-independent, so
-  ``frequent_items_exact_from_partials`` over streamed partials EQUALS
-  the one-shot two-pass operator over the union (pinned in tests).
-* HLL — register-wise max union is associative/commutative/lossless at
-  equal lgConfigK, so the merged estimate equals the from-scratch
-  sketch of the union regardless of how rows were split into batches
-  (pinned bit-for-bit in tests).
+the fact.  MG tolerates arbitrary re-batching: a micro-batch partial is
+just one more stored partial, and the telescoped completeness bound
+(summed deficit <= n_range/(k+1) over ALL stored partials of the range)
+is batching-independent, so ``frequent_items_exact_from_partials`` over
+streamed partials EQUALS the one-shot two-pass operator over the union
+(the ``stream_frequent_tokens`` registry row and pinned in tests).
 
 foreachBatch per micro-batch: one ``snapshot_append`` with a
 stream-scoped ``applied_id`` (``streaming.identity.stream_qid`` + batch
@@ -32,13 +27,10 @@ extension.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from crypto_data_ingestion_module_spark.operators.sketch_store import (
-    store_hll_partials,
     store_mg_partials,
 )
 from crypto_data_ingestion_module_spark.streaming.identity import stream_qid
@@ -78,168 +70,3 @@ def stream_mg_partials(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_hll_partials(
-    source: DataFrame,
-    root: str,
-    checkpoint: str,
-    value_col: str,
-    group_cols: Sequence[str],
-    stratum: str = "day",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the HLL count-distinct partial lake from a stream: each
-    micro-batch appends one sketch row per (stratum, groups) it touched;
-    range readers union registers across ALL stored rows, so per-batch
-    splitting is invisible to the merged estimate."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        store_hll_partials(
-            batch_df.sparkSession,
-            batch_df,
-            value_col,
-            list(group_cols),
-            root,
-            stratum=stratum,
-            applied_id=f"hll-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_kmv_partials(
-    source: DataFrame,
-    root: str,
-    checkpoint: str,
-    col: str,
-    stratum: str = "day",
-    k: int = 64,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the KMV bottom-k partial lake from a stream: each
-    micro-batch appends its own ≤ strata×k partial rows; the range
-    reader re-ranks the union, and bottom-k merging is batching-
-    independent, so streamed estimates equal one-shot estimates
-    (pinned in tests) — and, uniquely among the streamed sketches,
-    remain oracle-pairable."""
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        store_kmv_partials,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        store_kmv_partials(
-            batch_df.sparkSession,
-            batch_df,
-            col,
-            root,
-            stratum=stratum,
-            k=k,
-            applied_id=f"kmv-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_cm_partials(
-    source: DataFrame,
-    root: str,
-    checkpoint: str,
-    col: str,
-    stratum: str = "day",
-    depth: int = 4,
-    width: int = 512,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the Count-Min partial lake from a stream: each
-    micro-batch appends its own bounded counter rows; range readers sum
-    per (s, b) — CM merge is plain addition, so batching is invisible
-    to the merged estimates (pinned in tests)."""
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        store_cm_partials,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        store_cm_partials(
-            batch_df.sparkSession,
-            batch_df,
-            col,
-            root,
-            stratum=stratum,
-            depth=depth,
-            width=width,
-            applied_id=f"cm-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_histogram_partials(
-    source: DataFrame,
-    root: str,
-    checkpoint: str,
-    col: str,
-    lo: float,
-    hi: float,
-    bins: int,
-    stratum: str = "day",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the fixed-grid histogram partial lake from a stream —
-    the fifth and last stored sketch family gains its continuous
-    maintainer.  Bucket counts sum exactly, so per-micro-batch
-    splitting is invisible to merged quantile estimates
-    (``quantiles_from_histogram`` over streamed partials EQUALS the
-    one-shot histogram's — pinned in tests), and a double-appended
-    batch is guarded by the stream-scoped applied_id like every other
-    family.  The grid (lo, hi, bins) is part of the lake's semantic
-    version: partials from different grids must never share a root."""
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        store_histogram_partials,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        store_histogram_partials(
-            batch_df.sparkSession,
-            batch_df,
-            col,
-            root,
-            lo,
-            hi,
-            bins,
-            stratum=stratum,
-            applied_id=f"hist-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,6 +1,6 @@
 """Streaming curation (streaming/curate_stream.py): micro-batched
-decontam → quality → incremental near-dup, finalized to shards, must
-equal the one-shot batch ``curate_and_shard`` on the same documents."""
+decontam → quality → incremental near-dup, settled once, must equal the
+same stages run in one batch on the same documents."""
 
 import glob
 import os
@@ -9,15 +9,15 @@ from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.functions import text as TX
 from crypto_data_ingestion_module_spark.operators.decontam import decontaminate
+from crypto_data_ingestion_module_spark.operators.graph import assign_clusters
 from crypto_data_ingestion_module_spark.operators.text_dedup import (
     simhash_hamming_pairs,
 )
-from crypto_data_ingestion_module_spark.pipelines import curate_and_shard
 from crypto_data_ingestion_module_spark.session import load_table
 from crypto_data_ingestion_module_spark.streaming.curate_stream import (
-    finalize_curated,
     read_curate_docs,
     read_curate_pairs,
+    settle_curated,
     stream_curate_ingest,
 )
 from tests.conftest import SF_SMALL
@@ -36,20 +36,21 @@ def test_stream_curation_equals_batch(spark, tmp_path):
     docs = load_table(spark, SF_SMALL, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    caps = {"src0": 20, "src1": 20, "src2": 20}
 
-    # ---- batch reference
-    work_b = str(tmp_path / "batch")
-    curate_and_shard(
-        spark,
-        train,
-        bench,
-        work_b,
-        num_shards=8,
-        quality_min=0.5,
-        mixture_caps=caps,
+    # ---- batch reference: the same stages over all docs at once
+    quality = decontaminate(train, bench, n=4).filter(
+        TX.quality_score("text") >= 0.5
     )
-    batch_shards = spark.read.parquet(work_b + "/shards")
+    exact_reps = quality.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    survivors = quality.join(exact_reps.select("doc_id"), "doc_id", "semi")
+    reps = (
+        assign_clusters(survivors, simhash_hamming_pairs(survivors))
+        .filter("is_rep")
+        .select("doc_id")
+    )
+    batch_curated = {
+        r.doc_id for r in survivors.join(reps, "doc_id", "semi").collect()
+    }
 
     # ---- streamed: HIGH ids first so later batches carry SMALLER ids
     # that overturn earlier exact/cluster representatives
@@ -83,11 +84,8 @@ def test_stream_curation_equals_batch(spark, tmp_path):
     assert batches == {0, 1, 2}
 
     # the accumulated docs lake is exactly the decontaminated+gated set
-    expect_docs = decontaminate(train, bench, n=4).filter(
-        TX.quality_score("text") >= 0.5
-    )
     assert {r.doc_id for r in read_curate_docs(spark, lake).collect()} == {
-        r.doc_id for r in expect_docs.collect()
+        r.doc_id for r in quality.collect()
     }
 
     # incremental recall 1: the accumulated pair log equals the
@@ -98,23 +96,10 @@ def test_stream_curation_equals_batch(spark, tmp_path):
     }
     want_pairs = {
         (r.id_a, r.id_b, r.hamming)
-        for r in simhash_hamming_pairs(expect_docs).collect()
+        for r in simhash_hamming_pairs(quality).collect()
     }
     assert got_pairs == want_pairs
 
-    # finalize == batch pipeline, shard-for-shard
-    shards_dir = str(tmp_path / "stream_shards")
-    manifest = finalize_curated(
-        spark, lake, shards_dir, num_shards=8, mixture_caps=caps
-    )
-    assert manifest.count() == 8
-    stream_shards = spark.read.parquet(shards_dir)
-    a = {
-        (r.shard, r.doc_id)
-        for r in batch_shards.select("shard", "doc_id").collect()
-    }
-    b = {
-        (r.shard, r.doc_id)
-        for r in stream_shards.select("shard", "doc_id").collect()
-    }
-    assert a == b and len(a) > 0
+    # settle == batch composition, document for document
+    got = {r.doc_id for r in settle_curated(spark, lake).collect()}
+    assert got == batch_curated and len(got) > 0

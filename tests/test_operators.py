@@ -246,35 +246,3 @@ def test_merge_keep_last_successive_corrections(spark):
         corrected, spark.createDataFrame([(1, 75.0)], "k long, v double"), ["k"]
     )
     assert {r.k: r.v for r in third.collect()} == {1: 75.0}
-
-
-def test_boundary_aligned_start():
-    """Runner sleeps to the exact next boundary, then starts the query
-    with the matching processing-time trigger (T2 phase alignment)."""
-    from crypto_data_ingestion_module_spark.streaming.triggers import (
-        start_boundary_aligned,
-    )
-
-    slept, started = [], []
-
-    def fake_start(trigger):
-        started.append(trigger)
-        return "QUERY"
-
-    q, boundary = start_boundary_aligned(
-        fake_start,
-        interval_ms=900_000,
-        now_ms_fn=lambda: 1_700_000_123_456,  # mid-cycle instant
-        sleep_fn=slept.append,
-    )
-    assert q == "QUERY" and started == ["900000 milliseconds"]
-    assert boundary == 1_700_000_100_000 + 900_000  # ceil to next 15m grid
-    assert slept == [(boundary - 1_700_000_123_456) / 1000.0]
-    # already exactly on a boundary -> next one (reference sleeps >= 1 cycle)
-    _, b2 = start_boundary_aligned(
-        fake_start,
-        interval_ms=900_000,
-        now_ms_fn=lambda: boundary,
-        sleep_fn=slept.append,
-    )
-    assert b2 == boundary + 900_000

@@ -1,6 +1,6 @@
 """End-to-end pipeline + streaming tests (SURVEY §5.4): backfill with mock
-exchange, quarantine, streaming upsert idempotence, watermark dedup,
-live-cycle gating."""
+exchange, quarantine, live-cycle gating, stateful candles, the
+stream-stream spread join and streaming sessions."""
 
 import datetime as dt
 import glob
@@ -13,8 +13,6 @@ from crypto_data_ingestion_module_spark.sinks.snapshot import read_snapshot
 from crypto_data_ingestion_module_spark.sources.fetch import MockExchangeAdapter
 from crypto_data_ingestion_module_spark.streaming.live import (
     live_collection_stream,
-    stream_upsert_to_lake,
-    watermark_dedup,
 )
 
 DAY_MS = 86_400_000
@@ -140,58 +138,6 @@ _CANDLE_SCHEMA_DDL = (
     "timestamp timestamp, symbol string, exchange string, interval string, "
     "data_type string"
 )
-
-
-def test_stream_upsert_idempotent_replay(spark, tmp_path):
-    src = str(tmp_path / "incoming")
-    lake = str(tmp_path / "lake")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    t0 = dt.datetime(2024, 1, 1, 0, 0)
-    t1 = dt.datetime(2024, 1, 1, 0, 15)
-
-    spark.createDataFrame(_candle_rows([t0, t1], 100.0), _CANDLE_SCHEMA_DDL).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(_CANDLE_SCHEMA_DDL).parquet(src)
-    q = stream_upsert_to_lake(spark, stream, lake, ckpt, available_now=True)
-    q.awaitTermination(120)
-    assert read_snapshot(spark, lake).count() == 2
-
-    # second file: corrects t0, adds t2 — incremental batch via checkpoint
-    t2 = dt.datetime(2024, 1, 1, 0, 30)
-    spark.createDataFrame(_candle_rows([t0, t2], 500.0), _CANDLE_SCHEMA_DDL).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q = stream_upsert_to_lake(spark, stream, lake, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    got = {r.timestamp: r.open for r in read_snapshot(spark, lake).collect()}
-    assert got == {t0: 500.0, t1: 100.0, t2: 500.0}
-
-
-def test_watermark_dedup_stream(spark, tmp_path):
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    t0 = dt.datetime(2024, 1, 1, 0, 0)
-    rows = _candle_rows([t0, t0, t0], 100.0)  # same key delivered 3×
-    spark.createDataFrame(rows, _CANDLE_SCHEMA_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(_CANDLE_SCHEMA_DDL).parquet(src)
-    deduped = watermark_dedup(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("wm_dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM wm_dedup_out").collect()
-    assert len(out) == 1  # bounded-state dedup kept exactly one
 
 
 def test_live_collection_cycle(spark, tmp_path):
@@ -499,175 +445,6 @@ def test_stream_stream_spread_join(spark, tmp_path):
     assert removed > 0, "watermark never evicted join state"
 
 
-def test_spread_stream_merges_to_lake(spark, tmp_path):
-    """Live spread results MERGE into the partitioned lake; re-delivered
-    buckets resolve keep-last (idempotent checkpoint replay)."""
-    from crypto_data_ingestion_module_spark.streaming.join import (
-        cross_venue_spread,
-        spread_stream_to_lake,
-    )
-
-    left_src = str(tmp_path / "cb")
-    right_src = str(tmp_path / "ku")
-    os.makedirs(left_src)
-    os.makedirs(right_src)
-    t0 = dt.datetime(2024, 1, 1, 0, 0)
-    t1 = dt.datetime(2024, 1, 1, 0, 15)
-
-    def cand(ts, close, exch):
-        return [
-            (close - 0.5, close + 1, close - 1, close, 1.0, ts,
-             "BTC-USDT", exch, "15m", "spot")
-        ]
-
-    spark.createDataFrame(
-        cand(t0, 42000.0, "coinbase") + cand(t1, 42100.0, "coinbase"),
-        _CANDLE_SCHEMA_DDL,
-    ).coalesce(1).write.mode("append").parquet(left_src)
-    spark.createDataFrame(
-        cand(t0, 42050.0, "kucoin") + cand(t1, 42110.0, "kucoin"),
-        _CANDLE_SCHEMA_DDL,
-    ).coalesce(1).write.mode("append").parquet(right_src)
-
-    lake = str(tmp_path / "lake")
-    for ck in ("ck1", "ck2"):  # second run: fresh checkpoint re-delivers
-        left = spark.readStream.schema(_CANDLE_SCHEMA_DDL).parquet(left_src)
-        right = spark.readStream.schema(_CANDLE_SCHEMA_DDL).parquet(right_src)
-        spreads = cross_venue_spread(left, right)
-        q = spread_stream_to_lake(
-            spreads, lake, str(tmp_path / ck), available_now=True
-        )
-        q.awaitTermination(120)
-
-    out = read_snapshot(spark, lake)
-    got = {r.timestamp: (r.exchange, r.spread) for r in out.collect()}
-    assert got == {
-        t0: ("coinbase|kucoin", -50.0),
-        t1: ("coinbase|kucoin", -10.0),
-    }
-
-
-def test_streaming_returns_ma_matches_batch(spark, tmp_path):
-    """Streaming candle analytics parity (r2 verdict item 8): ticks →
-    stateful candle builder → stateful lag/MA must emit BIT-IDENTICAL
-    ret/ma4 to the batch window-function plan (returns_ma_batch — the
-    same expressions the registered candle_returns_ma query runs) over
-    the candles of the same ticks."""
-    import time as _time
-
-    from crypto_data_ingestion_module_spark.operators.resample import (
-        resample_ohlcv,
-    )
-    from crypto_data_ingestion_module_spark.streaming.analytics import (
-        returns_ma_batch,
-        returns_ma_stream,
-    )
-    from crypto_data_ingestion_module_spark.streaming.stateful import (
-        candles_from_ticks,
-    )
-
-    src = str(tmp_path / "ticks")
-    os.makedirs(src)
-    ddl = "symbol string, ts timestamp, price double, qty double, tick_id long"
-    m0 = dt.datetime(2024, 1, 1, 0, 0)
-
-    # 2 symbols × 6 one-minute buckets, 2 ticks each, unique event times
-    rows = []
-    tid = 0
-    for s_i, sym in enumerate(("BTC", "ETH")):
-        for b in range(6):
-            for j, price in enumerate(
-                (100.0 + 7 * b + 13 * s_i, 101.5 + 5 * b - 3 * s_i)
-            ):
-                tid += 1
-                rows.append(
-                    (
-                        sym,
-                        m0 + dt.timedelta(minutes=b, seconds=10 + 20 * j + s_i),
-                        price,
-                        1.0,
-                        tid,
-                    )
-                )
-    spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(src)
-    # watermark advancer far past every bucket end (its own bucket never
-    # finalizes; comparison is restricted to the first 6 buckets)
-    spark.createDataFrame(
-        [("BTC", m0 + dt.timedelta(hours=2), 1.0, 1.0, 10**6),
-         ("ETH", m0 + dt.timedelta(hours=2), 1.0, 1.0, 10**6 + 1)],
-        ddl,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    # Spark forbids chaining two applyInPandasWithState operators in one
-    # query — so run the production topology: candle builder stream →
-    # parquet candle store → analytics stream (exactly the reference's
-    # live loop shape: collect to the lake, analyze from the lake).
-    ticks = (
-        spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    candle_store = str(tmp_path / "candle_store")
-    candles = candles_from_ticks(ticks, interval_ms=60_000, lateness="5 seconds")
-    q1 = (
-        candles.writeStream.format("parquet")
-        .option("path", candle_store)
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .start()
-    )
-    candle_ddl = (
-        "symbol string, bucket_ts timestamp, open double, high double, "
-        "low double, close double, volume double, n_ticks long"
-    )
-    candle_stream = spark.readStream.schema(candle_ddl).parquet(candle_store)
-    analytics = returns_ma_stream(candle_stream, n=4, key_col="symbol")
-    q2 = (
-        analytics.writeStream.format("memory")
-        .queryName("stream_returns")
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        if spark.sql("SELECT count(*) c FROM stream_returns").first().c >= 12:
-            break
-        _time.sleep(1)
-    q1.stop()
-    q2.stop()
-    got = {
-        (r.symbol, r.bucket_ts): (r.close, r.ret, r.ma4)
-        for r in spark.sql("SELECT * FROM stream_returns").collect()
-        if r.bucket_ts < m0 + dt.timedelta(minutes=6)
-    }
-    assert len(got) == 12, f"expected 12 finalized analytic rows, got {len(got)}"
-
-    # batch twin on the SAME ticks: batch resample (close = max_by event
-    # time, volume = qty sum) then the registered query's expressions
-    batch_ticks = spark.createDataFrame(rows, ddl)
-    batch_candles = resample_ohlcv(
-        batch_ticks,
-        interval_ms=60_000,
-        keys=["symbol"],
-        ts_col="ts",
-        open_col="price",
-        high_col="price",
-        low_col="price",
-        close_col="price",
-        volume_col="qty",
-        tiebreak_col="tick_id",
-        exact_sums=True,
-    )
-    want = {
-        (r.symbol, r.bucket_ts): (r.close, r.ret, r.ma4)
-        for r in returns_ma_batch(
-            batch_candles, n=4, key_col="symbol"
-        ).collect()
-    }
-    assert got == want  # bit-identical closes, returns, moving averages
-
-
 def test_streaming_sessions_match_batch(spark, tmp_path):
     """Native session_window streaming sessionization: finalized sessions
     must equal the registered batch query's rows for every session the
@@ -897,6 +674,47 @@ def test_backfill_scans_a_lake_without_row_counts(spark, tmp_path, caplog):
     assert sorted(progress.collect()) == first
     record = _backfill_records(caplog)[-1]
     assert record["watermark_source"] == record["progress_source"] == "scan"
+
+
+def test_backfill_progress_keeps_empty_and_null_series_apart(spark, tmp_path):
+    """Hive writes an empty-string and a NULL partition value to the same
+    default-partition directory name, so the manifest cannot tell the two
+    apart; the scan reads the values each file stores.  Progress over a
+    lake holding an empty-string series and a NULL series must equal the
+    scan row for row."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_upsert
+
+    lake = str(tmp_path / "lake")
+    args = (
+        _symbols(spark), _intervals(spark), START_MS + DAY_MS,
+        MockExchangeAdapter(), lake,
+    )
+    backfill(spark, *args)
+    stored = read_snapshot(spark, lake).drop("_ingest_seq")
+    # different venues, so the two series never share a directory
+    odd = (
+        stored.filter(F.col("exchange") == "coinbase")
+        .withColumn("symbol", F.lit(""))
+        .unionByName(
+            stored.filter(F.col("exchange") == "bitstamp")
+            .withColumn("symbol", F.lit(None).cast("string"))
+        )
+    )
+    snapshot_upsert(spark, odd, lake)
+
+    progress, _ = backfill(spark, *args)
+    want = (
+        read_snapshot(spark, lake)
+        .groupBy("symbol", "interval", "exchange")
+        .agg(
+            F.max("timestamp").alias("last_collected_ts"),
+            F.count(F.lit(1)).alias("n_candles"),
+        )
+    )
+    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
+    got = sorted(progress.collect(), key=key)
+    assert got == sorted(want.collect(), key=key)
+    assert {r.symbol for r in got} >= {"", None}
 
 
 def test_backfill_manifest_broadcasts_the_grid(spark):

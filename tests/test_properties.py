@@ -11,10 +11,8 @@ from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.functions.timeutil import (
     bucket_start,
-    next_boundary_ms,
     parse_interval_ms,
     parse_native_interval_ms,
-    sleep_to_boundary_s,
 )
 
 _UNIT_MS = {"s": 1_000, "m": 60_000, "h": 3_600_000, "d": 86_400_000}
@@ -42,18 +40,6 @@ def test_native_forms_agree(v, u):
 def test_parse_interval_never_raises(s):
     out = parse_interval_ms(s)
     assert out > 0  # unknown → 15m default, never an exception
-
-
-@given(
-    now=st.integers(min_value=0, max_value=4_000_000_000_000),
-    ivl=st.sampled_from([60_000, 900_000, 3_600_000, 21_600_000, 86_400_000]),
-)
-def test_boundary_properties(now, ivl):
-    b = next_boundary_ms(now, ivl)
-    assert b > now  # strictly in the future
-    assert b % ivl == 0  # exactly on the grid
-    assert b - now <= ivl  # within one interval
-    assert 0 < sleep_to_boundary_s(now, ivl) <= ivl / 1000.0
 
 
 @settings(deadline=None, max_examples=5)

@@ -8,6 +8,7 @@ headline blocks (ADVICE r7, scripts/perf_diff.py:62).
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import subprocess
@@ -132,6 +133,59 @@ def test_reach_reports_only_the_def_no_root_reaches(tmp_path):
         "  c (2)",
         "total: 2 lines in 1 test-only top-level defs",
     ]
+
+
+#: Package defs that only tests reach, per ``scripts/reach.py``, by file
+#: under the package.  Wiring one into a pipeline or deleting it shrinks
+#: the set (then drop it here); a new test-only def fails the test below.
+TEST_ONLY_DEFS = {
+    "operators/curation.py": ("materialize_clusters", "read_clusters"),
+    "operators/dedup.py": ("dedup_keep_last_window",),
+    "operators/graph.py": ("_is_star_forest",),
+    "operators/ivm.py": ("recompute_join",),
+    "operators/linear.py": ("perceptron_margin",),
+    "operators/multimodal.py": (
+        "is_wav", "decode_wav_bytes", "is_ppm", "_parse_ppm_header",
+        "_grid_luma_features", "decode_ppm_bytes", "resize_ppm_bytes",
+        "is_png", "_png_unfilter", "png_to_rgb", "decode_png_bytes",
+        "png_to_ppm", "_decode_any", "decode_image_batch", "decode_assets",
+        "make_resize_kernel", "resize_assets", "demux_ppm_stream",
+        "sample_frames_batch", "sample_frames", "documents_as_assets",
+    ),
+    "operators/quantize.py": ("dequantize",),
+    "operators/rollup.py": ("cascade_partials",),
+    "operators/sampling.py": ("stratified_fractions",),
+    "operators/similarity.py": ("lsh_bucket",),
+    "operators/text_dedup.py": ("char_shingles", "word_shingles", "_hash_i"),
+    "plans/extensions.py": ("_curated_q_inline",),
+    "plans/queries.py": ("dsum_wide",),
+    "session.py": ("load_tables", "register_views"),
+    "sinks/snapshot.py": ("init_snapshot_lake", "compact_snapshot"),
+    "sources/derivatives.py": ("derivatives_scan", "options_scan"),
+    "sources/http.py": ("RecordedTransport",),
+    "streaming/metrics.py": ("IngestProgressListener", "register_listener"),
+}
+
+
+def test_test_only_defs_do_not_grow():
+    """reach.py on this repo finds no test-only def outside the pinned
+    set: code only the tests call does not come back."""
+    spec = importlib.util.spec_from_file_location(
+        "reach", os.path.join(REPO, "scripts", "reach.py")
+    )
+    reach = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(reach)
+    found = {
+        (rel.replace(os.sep, "/"), name)
+        for rel, defs in reach.scan(REPO).items()
+        for name, _ in defs
+    }
+    pinned = {
+        (f"crypto_data_ingestion_module_spark/{rel}", name)
+        for rel, names in TEST_ONLY_DEFS.items()
+        for name in names
+    }
+    assert found <= pinned, sorted(found - pinned)
 
 
 def test_every_plans_module_imports_first():

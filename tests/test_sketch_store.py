@@ -2,25 +2,27 @@
 daily partials whose range merge EQUALS recompute-from-scratch — the
 100 TB monitoring discipline (VERDICT r6 item 5)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.sketch import (
     frequent_items_exact,
 )
 from crypto_data_ingestion_module_spark.operators.sketch_store import (
-    approx_distinct_over_range,
+    cm_estimates_over_range,
+    cm_sketch_partials,
     frequent_items_exact_from_partials,
     histogram_partials,
+    kmv_distinct_over_range,
+    kmv_partials,
     quantiles_from_histogram,
-    store_histogram_partials,
-    store_hll_partials,
+    refresh_partials_overwrite,
     store_mg_partials,
 )
 from crypto_data_ingestion_module_spark.session import load_table
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     current_version,
     read_snapshot,
+    snapshot_append,
 )
 from tests.conftest import SF_SMALL
 
@@ -151,94 +153,34 @@ def test_histogram_out_of_range_mass_is_visible(spark, tmp_path):
     assert sum(hist.values()) == len(rows)
 
 
-def test_hll_range_merge_equals_recompute(spark, tmp_path):
-    """HLL merge is register-wise max — lossless at equal lgK: the
-    estimate served from stored per-day partials equals the from-scratch
-    sketch of the same rows, for the full range AND a sub-range."""
-    ev = _events_with_day(spark)
-    root = str(tmp_path / "hll")
-    days = sorted(r.day for r in ev.select("day").distinct().collect())
-    for day in days:
-        store_hll_partials(
-            spark,
-            ev.where(F.col("day") == day),
-            "user_id",
-            ["event_type"],
-            root,
-            stratum="day",
-            applied_id=f"hll-{day}",
-        )
-
-    def direct(frame):
-        return {
-            (r.event_type, r.approx, r.n_rows)
-            for r in frame.groupBy("event_type")
-            .agg(
-                F.hll_sketch_estimate(
-                    F.hll_sketch_agg("user_id", F.lit(12))
-                ).alias("approx"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-            .collect()
-        }
-
-    merged_all = {
-        (r.event_type, r.approx_distinct, r.n_rows)
-        for r in approx_distinct_over_range(
-            spark, root, ["event_type"]
-        ).collect()
-    }
-    assert merged_all == direct(ev)
-
-    sub = days[: max(1, len(days) // 2)]
-    merged_sub = {
-        (r.event_type, r.approx_distinct, r.n_rows)
-        for r in approx_distinct_over_range(
-            spark, root, ["event_type"], strata=sub
-        ).collect()
-    }
-    assert merged_sub == direct(ev.where(F.col("day").isin(sub)))
-
-    # the estimate is also close to truth (sanity on the rsd contract)
-    exact = {
-        r.event_type: r.d
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("d"))
-        .collect()
-    }
-    for et, est, _ in merged_all:
-        assert est == pytest.approx(exact[et], rel=0.05)
-
-
 def test_histogram_quantiles_merge_equals_scratch_and_bounds_error(
     spark, tmp_path
 ):
+    """Per-day bucket counts stored by the overwrite refresh merge into
+    the same quantiles as one histogram over all rows, and each estimate
+    sits within one bucket width of the exact quantile."""
     ev = _events_with_day(spark)
     lo, hi, bins = 0.0, 1000.0, 200
     root = str(tmp_path / "hist")
-    days = sorted(r.day for r in ev.select("day").distinct().collect())
-    for day in days:
-        store_histogram_partials(
-            spark,
-            ev.where(F.col("day") == day),
-            "value",
-            root,
-            lo,
-            hi,
-            bins,
-            stratum="day",
-            applied_id=f"h-{day}",
-        )
+    refresh_partials_overwrite(
+        spark,
+        root,
+        "hist-v1",
+        lambda: histogram_partials(ev, "value", lo, hi, bins, stratum="day"),
+        ("day",),
+    )
     stored = read_snapshot(spark, root)
+    assert stored.select("day").distinct().count() > 1
     qs = [0.25, 0.5, 0.9, 0.99]
     merged = {
         r.q: r.estimate
         for r in quantiles_from_histogram(stored, qs, lo, hi, bins).collect()
     }
+    one_stratum = ev.withColumn("all", F.lit("all"))
     scratch = {
         r.q: r.estimate
         for r in quantiles_from_histogram(
-            histogram_partials(ev, "value", lo, hi, bins, stratum="day"),
+            histogram_partials(one_stratum, "value", lo, hi, bins, "all"),
             qs,
             lo,
             hi,
@@ -258,14 +200,11 @@ def test_histogram_quantiles_merge_equals_scratch_and_bounds_error(
 
 
 def test_kmv_partials_merge_equals_one_shot(spark, tmp_path):
-    # Store three overlapping batches; the range estimate must equal
-    # the one-shot estimate over the union of the fact rows.
+    # Per-stratum bottom-k partials: the range estimate re-ranks them and
+    # must equal the one-shot estimate over the fact rows, both merged
+    # across strata and per stratum.
     from crypto_data_ingestion_module_spark.operators.sketch import (
         kmv_distinct_estimate,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        kmv_distinct_over_range,
-        store_kmv_partials,
     )
 
     root = str(tmp_path / "kmv")
@@ -273,16 +212,10 @@ def test_kmv_partials_merge_equals_one_shot(spark, tmp_path):
         (F.col("id") % 3).cast("string").alias("day"),
         (F.col("id") % 997).cast("string").alias("u"),
     )
-    for i in range(3):
-        store_kmv_partials(
-            spark,
-            full.filter(F.col("id") % 3 == i),
-            "u",
-            root,
-            stratum="day",
-            k=64,
-            applied_id=f"b{i}",
-        )
+    refresh_partials_overwrite(
+        spark, root, "kmv-v1", lambda: kmv_partials(full, "u", "day", k=64),
+        ("day",),
+    )
     got = kmv_distinct_over_range(spark, root, k=64).collect()[0]
     want = kmv_distinct_estimate(full, "u", 64).collect()[0]
     assert got["distinct_est"] == want["distinct_est"]
@@ -304,27 +237,6 @@ def test_kmv_partials_merge_equals_one_shot(spark, tmp_path):
     assert got_s == want_s
 
 
-def test_kmv_store_replay_immune(spark, tmp_path):
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        kmv_distinct_over_range,
-        store_kmv_partials,
-    )
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-    )
-
-    root = str(tmp_path / "kmvr")
-    df = spark.range(500).select(
-        F.lit("d0").alias("day"), F.col("id").cast("string").alias("u")
-    )
-    store_kmv_partials(spark, df, "u", root, applied_id="batch-1")
-    v = current_version(spark, root)
-    est = kmv_distinct_over_range(spark, root).collect()
-    store_kmv_partials(spark, df, "u", root, applied_id="batch-1")  # replay
-    assert current_version(spark, root) == v
-    assert kmv_distinct_over_range(spark, root).collect() == est
-
-
 # ---------------------------------------------------------------------------
 # Count-Min partial lake
 # ---------------------------------------------------------------------------
@@ -335,26 +247,16 @@ def test_cm_partials_range_estimates_equal_from_scratch(spark, tmp_path):
         cm_counters,
         cm_point_estimates,
     )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        cm_estimates_over_range,
-        store_cm_partials,
-    )
 
     root = str(tmp_path / "cm")
     full = spark.range(4000).select(
         (F.col("id") % 4).cast("string").alias("day"),
         (F.col("id") % 311).cast("string").alias("u"),
     )
-    for i in range(3):
-        store_cm_partials(
-            spark,
-            full.filter(F.col("id") % 3 == i),
-            "u",
-            root,
-            stratum="day",
-            width=128,
-            applied_id=f"b{i}",
-        )
+    refresh_partials_overwrite(
+        spark, root, "cm-v1",
+        lambda: cm_sketch_partials(full, "u", "day", 4, 128), ("day",),
+    )
     items = full.select("u").distinct()
     got = {
         r["item"]: r["cm_est"]
@@ -388,6 +290,65 @@ def test_cm_partials_range_estimates_equal_from_scratch(spark, tmp_path):
         ).collect()
     }
     assert got_d0 == want_d0
+
+
+def test_cm_double_append_inflates_and_overwrite_refresh_heals(
+    spark, tmp_path
+):
+    """Count-Min counters are SUMS, so one batch appended twice under two
+    different applied_ids inflates every estimate built from the lake —
+    unlike KMV's min or MG's exact second pass, nothing absorbs it.  The
+    family's fingerprint-keyed OVERWRITE refresh replaces the lake's
+    entire content and heals the inflation."""
+    from crypto_data_ingestion_module_spark.operators.sketch import (
+        cm_counters,
+        cm_point_estimates,
+    )
+
+    ev = load_table(spark, SF_SMALL, "events").select(
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        F.col("event_type").alias("u"),
+    )
+    root = str(tmp_path / "cm_double")
+    for applied_id in ("cm-oldqid-0", "cm-newqid-0"):
+        snapshot_append(
+            spark,
+            root,
+            cm_sketch_partials(ev, "u", "day", 4, 64),
+            partition_cols=("day",),
+            applied_id=applied_id,
+        )
+    items = ev.select("u").distinct()
+    want = {
+        r["item"]: r["cm_est"]
+        for r in cm_point_estimates(
+            cm_counters(ev, "u", width=64), items, "u", width=64
+        ).collect()
+    }
+    doubled = {
+        r["item"]: r["cm_est"]
+        for r in cm_estimates_over_range(
+            spark, root, items, "u", width=64
+        ).collect()
+    }
+    # the unguarded double-append IS wrong: every count doubles
+    assert doubled == {k: 2 * v for k, v in want.items()}
+    assert doubled != want
+
+    refresh_partials_overwrite(
+        spark,
+        root,
+        "cm-freshfp",
+        lambda: cm_sketch_partials(ev, "u", "day", 4, 64),
+        partition_cols=("day",),
+    )
+    healed = {
+        r["item"]: r["cm_est"]
+        for r in cm_estimates_over_range(
+            spark, root, items, "u", width=64
+        ).collect()
+    }
+    assert healed == want
 
 
 def test_kmv_overwrite_refresh_replaces_stale_partials(spark, tmp_path):

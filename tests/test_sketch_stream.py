@@ -11,7 +11,6 @@ from crypto_data_ingestion_module_spark.operators.sketch import (
     frequent_items_exact,
 )
 from crypto_data_ingestion_module_spark.operators.sketch_store import (
-    approx_distinct_over_range,
     frequent_items_exact_from_partials,
     store_mg_partials,
 )
@@ -22,7 +21,6 @@ from crypto_data_ingestion_module_spark.sinks.snapshot import (
     read_snapshot,
 )
 from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-    stream_hll_partials,
     stream_mg_partials,
 )
 from tests.conftest import SF_SMALL
@@ -127,51 +125,6 @@ def test_streamed_mg_partials_answer_equals_one_shot(spark, tmp_path):
         applied_id=read_manifest(spark, root, v)["applied_ids"][0],
     )
     assert current_version(spark, root) == v
-
-
-def test_streamed_hll_partials_equal_from_scratch_sketch(spark, tmp_path):
-    ev = load_table(spark, SF_SMALL, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    in_dir = str(tmp_path / "in")
-    _write_batches(ev, tmp_path, in_dir, "event_id")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    root = str(tmp_path / "hll")
-    q = stream_hll_partials(
-        src,
-        root,
-        str(tmp_path / "ck"),
-        "user_id",
-        ["event_type"],
-        stratum="day",
-    )
-    q.awaitTermination(120)
-
-    merged = {
-        (r.event_type, r.approx_distinct, r.n_rows)
-        for r in approx_distinct_over_range(
-            spark, root, ["event_type"]
-        ).collect()
-    }
-    want = {
-        (r.event_type, r.approx, r.n_rows)
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(12))
-            ).alias("approx"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
-    }
-    # register-wise max union is lossless: streamed == from-scratch,
-    # bit-for-bit, regardless of the micro-batch split
-    assert merged == want
 
 
 def test_recreated_checkpoint_path_gets_fresh_stream_identity(
@@ -315,375 +268,3 @@ def test_checkpoint_restart_resumes_without_double_append(spark, tmp_path):
         for r in frequent_items_exact(fact, "tok", k=K).collect()
     ]
     assert got == want and got
-
-
-def test_streamed_kmv_estimate_equals_one_shot(spark, tmp_path):
-    from crypto_data_ingestion_module_spark.operators.sketch import (
-        kmv_distinct_estimate,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        kmv_distinct_over_range,
-    )
-    from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-        stream_kmv_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.col("user_id").cast("string").alias("u"),
-    ).withColumn("split_key", F.abs(F.xxhash64("u", "day")))
-    in_dir = str(tmp_path / "kin")
-    _write_batches(ev, tmp_path, in_dir, "split_key")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    root = str(tmp_path / "kmvlake")
-    q = stream_kmv_partials(src, root, str(tmp_path / "kck"), "u", k=32)
-    q.awaitTermination(120)
-
-    streamed = kmv_distinct_over_range(spark, root, k=32).collect()[0]
-    oneshot = kmv_distinct_estimate(ev, "u", 32).collect()[0]
-    assert streamed["distinct_est"] == oneshot["distinct_est"]
-
-    # restart from the same checkpoint: nothing new, nothing appended
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-    )
-
-    v = current_version(spark, root)
-    q2 = stream_kmv_partials(src, root, str(tmp_path / "kck"), "u", k=32)
-    q2.awaitTermination(120)
-    assert current_version(spark, root) == v
-
-
-def test_streamed_cm_estimates_equal_one_shot(spark, tmp_path):
-    from crypto_data_ingestion_module_spark.operators.sketch import (
-        cm_counters,
-        cm_point_estimates,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        cm_estimates_over_range,
-    )
-    from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-        stream_cm_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.col("event_type").alias("u"),
-    ).withColumn("split_key", F.abs(F.xxhash64("u", "day")))
-    in_dir = str(tmp_path / "cmin")
-    _write_batches(ev, tmp_path, in_dir, "split_key")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    root = str(tmp_path / "cmlake")
-    q = stream_cm_partials(src, root, str(tmp_path / "cmck"), "u", width=64)
-    q.awaitTermination(120)
-
-    items = ev.select("u").distinct()
-    streamed = {
-        r["item"]: r["cm_est"]
-        for r in cm_estimates_over_range(
-            spark, root, items, "u", width=64
-        ).collect()
-    }
-    oneshot = {
-        r["item"]: r["cm_est"]
-        for r in cm_point_estimates(
-            cm_counters(ev, "u", width=64), items, "u", width=64
-        ).collect()
-    }
-    assert streamed == oneshot
-
-
-def test_cm_double_append_inflates_and_overwrite_refresh_heals(
-    spark, tmp_path
-):
-    """Pin the CM upgrade-boundary contract (VERDICT r9 item 2):
-    Count-Min counters are SUMS, so a batch double-appended across a
-    stream-identity upgrade (same rows, two different applied_ids)
-    inflates every estimate built from the lake — unlike KMV's min /
-    HLL's max / MG's exact second pass, nothing absorbs it.  The
-    documented recovery is the family's fingerprint-keyed OVERWRITE
-    refresh, which replaces the lake's entire content and heals the
-    inflation."""
-    from crypto_data_ingestion_module_spark.operators.sketch import (
-        cm_counters,
-        cm_point_estimates,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        cm_estimates_over_range,
-        cm_sketch_partials,
-        refresh_partials_overwrite,
-        store_cm_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.col("event_type").alias("u"),
-    )
-    root = str(tmp_path / "cm_double")
-    # the same batch lands twice under two stream identities — exactly
-    # what one replayed batch across the qid upgrade boundary does
-    store_cm_partials(
-        spark, ev, "u", root, stratum="day", width=64,
-        applied_id="cm-oldqid-0",
-    )
-    store_cm_partials(
-        spark, ev, "u", root, stratum="day", width=64,
-        applied_id="cm-newqid-0",
-    )
-    items = ev.select("u").distinct()
-    want = {
-        r["item"]: r["cm_est"]
-        for r in cm_point_estimates(
-            cm_counters(ev, "u", width=64), items, "u", width=64
-        ).collect()
-    }
-    doubled = {
-        r["item"]: r["cm_est"]
-        for r in cm_estimates_over_range(
-            spark, root, items, "u", width=64
-        ).collect()
-    }
-    # the unguarded double-append IS wrong: every count doubles
-    assert doubled == {k: 2 * v for k, v in want.items()}
-    assert doubled != want
-
-    # the overwrite refresh replaces the whole lake content and heals
-    refresh_partials_overwrite(
-        spark,
-        root,
-        "cm-freshfp",
-        lambda: cm_sketch_partials(ev, "u", "day", 4, 64),
-        partition_cols=("day",),
-    )
-    healed = {
-        r["item"]: r["cm_est"]
-        for r in cm_estimates_over_range(
-            spark, root, items, "u", width=64
-        ).collect()
-    }
-    assert healed == want
-
-
-def test_kmv_checkpoint_restart_resumes_without_double_append(
-    spark, tmp_path
-):
-    """VERDICT r9 item 7: kill-mid-stream restart parity for an
-    overwrite-refresh family — stop the KMV stream after >=1 committed
-    batch, restart from the same checkpoint, and verify the ledger
-    holds exactly one commit per micro-batch and the served estimate
-    equals the one-shot sketch."""
-    import time as _time
-
-    from crypto_data_ingestion_module_spark.operators.sketch import (
-        kmv_distinct_estimate,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        kmv_distinct_over_range,
-    )
-    from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-        stream_kmv_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.col("user_id").alias("u"),
-    ).withColumn("split_key", F.abs(F.xxhash64("u")))
-    in_dir = str(tmp_path / "in")
-    _write_batches(ev, tmp_path, in_dir, "split_key", n=3)
-    root = str(tmp_path / "kmv")
-    ck = str(tmp_path / "ck")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = stream_kmv_partials(
-        src, root, ck, "u", stratum="day", k=32, available_now=False
-    )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        v = current_version(spark, root)
-        if v is not None and v >= 1:
-            break
-        _time.sleep(0.2)
-    q.stop()
-    assert current_version(spark, root) >= 1
-
-    q2 = stream_kmv_partials(
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir),
-        root,
-        ck,
-        "u",
-        stratum="day",
-        k=32,
-    )
-    v_final = _settled_version(spark, root, q2)
-    assert v_final >= 2  # >=1 pre-kill commit and >=1 post-restart
-    ids = read_manifest(spark, root, v_final)["applied_ids"]
-    assert len(set(ids)) == len(ids)  # no double-append, ever
-    got = kmv_distinct_over_range(spark, root, k=32).collect()[0]
-    want = kmv_distinct_estimate(ev, "u", 32).collect()[0]
-    assert got["distinct_est"] == want["distinct_est"]
-
-
-def test_histogram_checkpoint_restart_resumes_without_double_append(
-    spark, tmp_path
-):
-    """VERDICT r10 item 7: the histogram family gets the same
-    kill-mid-stream restart coverage as MG/KMV — stop after >=1
-    committed batch, restart from the same checkpoint, and verify the
-    ledger never double-appends and the served quantiles equal the
-    one-shot histogram's bit-for-bit."""
-    import time as _time
-
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        histogram_partials,
-        quantiles_from_histogram,
-    )
-    from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-        stream_histogram_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"), "value"
-    ).withColumn("split_key", F.abs(F.xxhash64("value", "day")))
-    in_dir = str(tmp_path / "in")
-    _write_batches(ev, tmp_path, in_dir, "split_key", n=3)
-    root = str(tmp_path / "hist")
-    ck = str(tmp_path / "ck")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = stream_histogram_partials(
-        src, root, ck, "value", 0.0, 1024.0, 128, stratum="day",
-        available_now=False,
-    )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        v = current_version(spark, root)
-        if v is not None and v >= 1:
-            break
-        _time.sleep(0.2)
-    q.stop()
-    assert current_version(spark, root) >= 1
-
-    q2 = stream_histogram_partials(
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir),
-        root,
-        ck,
-        "value",
-        0.0,
-        1024.0,
-        128,
-        stratum="day",
-    )
-    v_final = _settled_version(spark, root, q2)
-    assert v_final >= 2
-    ids = read_manifest(spark, root, v_final)["applied_ids"]
-    assert len(set(ids)) == len(ids)  # no double-append, ever
-
-    qs = (0.5, 0.9, 0.99)
-    streamed = {
-        r["q"]: r["estimate"]
-        for r in quantiles_from_histogram(
-            read_snapshot(spark, root), qs, 0.0, 1024.0, 128
-        ).collect()
-    }
-    oneshot = {
-        r["q"]: r["estimate"]
-        for r in quantiles_from_histogram(
-            histogram_partials(ev, "value", 0.0, 1024.0, 128),
-            qs,
-            0.0,
-            1024.0,
-            128,
-        ).collect()
-    }
-    assert streamed == oneshot and len(streamed) == 3
-
-
-def test_streamed_histogram_quantiles_equal_one_shot(spark, tmp_path):
-    # The fifth stored family's continuous maintainer: bucket counts
-    # sum exactly, so quantiles served from STREAMED per-micro-batch
-    # partials equal the one-shot histogram's bit-for-bit, and a
-    # replayed batch appends nothing.
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        histogram_partials,
-        quantiles_from_histogram,
-    )
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        read_snapshot,
-    )
-    from crypto_data_ingestion_module_spark.streaming.sketch_stream import (
-        stream_histogram_partials,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"), "value"
-    ).withColumn("split_key", F.abs(F.xxhash64("value", "day")))
-    in_dir = str(tmp_path / "in")
-    _write_batches(ev, tmp_path, in_dir, "split_key", n=3)
-    root = str(tmp_path / "hist")
-    ck = str(tmp_path / "ck")
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = stream_histogram_partials(
-        src, root, ck, "value", 0.0, 1024.0, 128, stratum="day"
-    )
-    q.awaitTermination(120)
-
-    qs = (0.5, 0.9, 0.99)
-    streamed = {
-        r["q"]: r["estimate"]
-        for r in quantiles_from_histogram(
-            read_snapshot(spark, root), qs, 0.0, 1024.0, 128
-        ).collect()
-    }
-    oneshot = {
-        r["q"]: r["estimate"]
-        for r in quantiles_from_histogram(
-            histogram_partials(ev, "value", 0.0, 1024.0, 128), qs, 0.0, 1024.0, 128
-        ).collect()
-    }
-    assert streamed == oneshot and len(streamed) == 3
-
-    # replayed batch appends nothing (stream-scoped applied_id)
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-    )
-    from crypto_data_ingestion_module_spark.operators.sketch_store import (
-        store_histogram_partials,
-    )
-    from crypto_data_ingestion_module_spark.streaming.identity import (
-        stream_qid,
-    )
-
-    v = current_version(spark, root)
-    qid = stream_qid(ck)
-    store_histogram_partials(
-        spark, ev, "value", root, 0.0, 1024.0, 128, stratum="day",
-        applied_id=f"hist-{qid}-0",
-    )
-    assert current_version(spark, root) == v
