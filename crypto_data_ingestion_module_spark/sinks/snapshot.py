@@ -15,12 +15,19 @@ directories; they resolve a MANIFEST through a version log:
       _versions/v00000001.json                            (the log)
       _versions/v00000002.json
 
-* Data files are write-once: an upsert writes the re-merged content of the
-  touched partitions as NEW files under a fresh ``data/<uuid>/`` dir and
-  never mutates or deletes live files.
+* Data files are write-once: every commit writes NEW files under a fresh
+  ``data/<uuid>/`` dir and never mutates or deletes live files.  A
+  keep-last upsert appends: it writes the batch plus the re-merged
+  content of only those live files a batch key can collide with (the
+  file's manifest ``[ts_min_us, ts_max_us]`` holds a batch timestamp of
+  its partition), and carries every other file over unchanged.  A live
+  cycle whose candles all lie past the partition's newest file reads no
+  data file at all.  A partition that reaches
+  ``MAX_FILES_PER_PARTITION`` files is rewritten whole by the next
+  upsert that lands in it, which bounds the files a reader opens.
 * A manifest (one JSON version file) lists every data file of the
   snapshot, grouped by partition.  The NEW manifest = previous manifest
-  minus the touched partitions' entries, plus the new files.
+  minus the rewritten files, plus the new files.
 * Commit = making ``v{N+1}.json`` visible in one atomic step: the content
   is written to a hidden temp name and RENAMED to its final name (rename
   of a fully-written file is atomic on HDFS/POSIX).  Readers list
@@ -37,12 +44,14 @@ directories; they resolve a MANIFEST through a version log:
   manifest references.
 
 At 100 TB the manifest is bounded by file count, not rows, and the upsert
-writes only the touched partitions.  Exactly-once under at-least-once
-delivery comes from one place: the manifest's ``applied_ids`` ledger.
+reads and writes only the files its keys can collide with.  Exactly-once
+under at-least-once delivery comes from one place: the manifest's
+``applied_ids`` ledger.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import uuid
@@ -81,6 +90,13 @@ def _with_date(df: DataFrame) -> DataFrame:
 #: keep-last upsert semantics absorb and append-only callers must treat
 #: as the documented contract.  Monkeypatch for tests.
 APPLIED_IDS_RETAIN = 512
+
+#: A touched partition already holding this many live files is rewritten
+#: whole by the upsert that lands in it.  Appending upserts add one file
+#: per commit, so without a cap a 15-minute live series would leave 96
+#: one-row files per day; the cap bounds the files a reader opens per
+#: partition and the manifest size, at one rewrite per this-many commits.
+MAX_FILES_PER_PARTITION = 16
 
 
 def _applied_ids_next(
@@ -220,18 +236,57 @@ def evaluated_once(df: DataFrame) -> Iterator[DataFrame]:
 
 
 def _touched_partitions(
-    df: DataFrame, partition_cols: Sequence[str]
-) -> tuple[set[str], int | None]:
-    """The partitions ``df`` lands in and its max ``_ingest_seq`` (None
-    without the column), from one small aggregate job.  An empty set
-    means an empty batch."""
-    grouped = df.groupBy(*_partition_strings(partition_cols))
-    has_seq = INGEST_SEQ in df.columns
+    df: DataFrame, partition_cols: Sequence[str], ts_col: str | None = "timestamp"
+) -> dict[str, dict]:
+    """Per partition directory ``df`` lands in, from one aggregate over one
+    exchange: ``ts_min_us``/``ts_max_us`` of ``ts_col`` (None without the
+    column or without a non-NULL value), ``null_ts`` (some row has a NULL
+    ``ts_col``), ``rows`` (distinct ``ts_col`` values, which is the row
+    count after keep-last when the key is the partition columns plus
+    ``ts_col``) and ``seq`` (max ``_ingest_seq``, None without the
+    column).  An empty dict means an empty batch.
+
+    Values that share one directory name (``''`` and NULL both write to
+    the default partition) fold into one entry."""
+    names = list(partition_cols)
+    us = F.unix_micros(F.col(ts_col)) if ts_col in df.columns else F.lit(None)
+    seq = F.col(INGEST_SEQ) if INGEST_SEQ in df.columns else F.lit(None)
     rows = (
-        grouped.agg(F.max(INGEST_SEQ).alias("_hi")) if has_seq else grouped.count()
-    ).collect()
-    hi = max((int(r["_hi"] or 0) for r in rows), default=0) if has_seq else None
-    return {_partition_key(r, partition_cols) for r in rows}, hi
+        df.select(
+            *_partition_strings(partition_cols),
+            us.cast("long").alias("_us"),
+            seq.cast("long").alias("_seq"),
+        )
+        .repartition(*names)
+        .groupBy(*names, "_us")
+        .agg(F.max("_seq").alias("_seq"))
+        .groupBy(*names)
+        .agg(
+            F.min("_us").alias("lo"),
+            F.max("_us").alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.count("_us").alias("n_ts"),
+            F.max("_seq").alias("seq"),
+        )
+        .collect()
+    )
+    groups: dict[str, list] = {}
+    for r in rows:
+        groups.setdefault(_partition_key(r, partition_cols), []).append(r)
+
+    def fold(rs, field, agg):
+        return agg((r[field] for r in rs if r[field] is not None), default=None)
+
+    return {
+        key: {
+            "ts_min_us": fold(rs, "lo", min),
+            "ts_max_us": fold(rs, "hi", max),
+            "null_ts": any(r["n"] > r["n_ts"] for r in rs),
+            "rows": sum(r["n"] for r in rs),
+            "seq": fold(rs, "seq", max),
+        }
+        for key, rs in groups.items()
+    }
 
 
 #: Partition values are DUPLICATED into the data files under this prefix
@@ -261,8 +316,9 @@ def _write_data_files(
     of MANY partitions and holds one open writer per directory it
     touches (memory + tiny flushes; a 2,400-partition bootstrap
     measured 2x slower).  Clustered, each task streams its partitions
-    sequentially, one writer at a time.  Compaction passes
-    ``cluster=False``: it already arranged the rows by partition.
+    sequentially, one writer at a time.  The upsert passes
+    ``cluster=False``: its keep-last merge already hash-partitioned and
+    sorted the rows by partition key.
     """
     batch_dir = f"data/{uuid.uuid4().hex}"
     out = f"{root.rstrip('/')}/{batch_dir}"
@@ -405,18 +461,25 @@ def snapshot_files(spark: SparkSession, root: str,
 
 
 def _file_time_stats(
-    spark: SparkSession, root: str, files: list[str], ts_col: str = "timestamp"
+    spark: SparkSession,
+    root: str,
+    files: list[str],
+    schema,
+    partition_cols: Sequence[str],
+    ts_col: str = "timestamp",
 ) -> dict:
     """Per-file min/max of ``ts_col`` in epoch micros and row count — the
     statistics the manifest carries so time-range readers prune the file
     list driver-side and per-series progress is answered without a scan
     (:func:`snapshot_group_stats`; no parquet footer is opened).  One
-    bounded aggregate job over exactly the NEW files of a commit."""
-    if not files:
+    bounded aggregate over exactly the given NEW files of a commit, read
+    with the committed table ``schema`` (a StructType), so no footer job
+    infers it.  Empty when ``schema`` has no ``ts_col``."""
+    if not files or ts_col not in schema.fieldNames():
         return {}
     Path, fs = _fs(spark, root)
     base_abs = fs.makeQualified(Path(root)).toUri().getPath()
-    df = _read_files(spark, root, files).select(
+    df = _read_files(spark, root, files, schema, partition_cols).select(
         F.input_file_name().alias("_f"),
         F.unix_micros(F.col(ts_col)).alias("_us"),
     )
@@ -692,97 +755,30 @@ def _manifest_schema(spark: SparkSession, root: str, manifest: dict, version: in
     ).schema
 
 
-def _read_touched(
+def _partition_files(manifest: dict, keys: set[str]) -> list[str]:
+    """The live files of the partitions named by ``keys``."""
+    return sorted(
+        f for part, fl in manifest["partitions"].items() if part in keys for f in fl
+    )
+
+
+def _read_live(
     spark: SparkSession,
     root: str,
     manifest: dict,
-    touched_keys: set[str],
+    files: list[str],
     schema,
 ) -> DataFrame:
-    """Manifest-pruned read: ONLY the files of the touched partitions —
-    the upsert's input never scales with snapshot size, only with the
-    partitions the batch lands in.  Conformed to the table schema so
-    pre-evolution files union cleanly."""
-    files = [
-        f
-        for part, fl in manifest["partitions"].items()
-        if part in touched_keys
-        for f in fl
-    ]
+    """Manifest-pruned read of exactly ``files`` — a write's input never
+    scales with snapshot size, only with the files it must rewrite.
+    Conformed to the table schema so pre-evolution files union cleanly."""
     if not files:
-        return _conform(
-            spark.createDataFrame([], schema), schema
-        )
-    pcols = manifest.get("partition_cols")
-    if manifest.get("schema") and pcols:
-        return _conform(
-            _read_files(spark, root, sorted(files), schema, pcols), schema
-        )
-    return _conform(_read_files(spark, root, sorted(files)), schema)
-
-
-def _stats_for(
-    spark: SparkSession, root: str, files: list[str], df: DataFrame, ts_col: str
-) -> dict:
-    return (
-        _file_time_stats(spark, root, files, ts_col=ts_col)
-        if ts_col in df.columns
-        else {}
+        return _conform(spark.createDataFrame([], schema), schema)
+    explicit = schema if manifest.get("schema") else None
+    return _conform(
+        _read_files(spark, root, files, explicit, manifest.get("partition_cols")),
+        schema,
     )
-
-
-def init_snapshot_lake(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    partition_cols: Sequence[str] = PARTITION_COLS,
-    applied_id: str | None = None,
-) -> int | None:
-    """Bootstrap version 1 from an initial batch, evaluated once
-    (:func:`evaluated_once`).  An empty batch writes nothing, commits no
-    version and returns None."""
-    with evaluated_once(df) as batch:
-        return _init_snapshot_lake(spark, batch, root, partition_cols, applied_id)
-
-
-def _init_snapshot_lake(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    partition_cols: Sequence[str],
-    applied_id: str | None,
-) -> int | None:
-    df = _with_date(df)
-    if INGEST_SEQ not in df.columns:
-        df = df.withColumn(INGEST_SEQ, F.lit(0).cast("long"))
-    touched, seq_max = _touched_partitions(df, partition_cols)
-    if not touched:
-        return None
-    files = _write_data_files(spark, df, root, partition_cols)
-    parts: dict[str, list[str]] = {}
-    for f in files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    commit_version(
-        spark,
-        root,
-        {
-            "version": 1,
-            "partitions": parts,
-            "file_stats": _file_time_stats(spark, root, files),
-            "schema": df.schema.jsonValue(),
-            "partition_cols": list(partition_cols),
-            "applied_ids": [applied_id] if applied_id else [],
-            # stamp the horizon bookkeeping from birth: a manifest
-            # WITHOUT these keys is how _applied_ids_next recognizes a
-            # pre-horizon legacy ledger (sorted ids) that must be frozen
-            # rather than truncated
-            "applied_ids_evicted": 0,
-            "applied_ids_frozen_n": 0,
-            "max_ingest_seq": seq_max,
-        },
-        1,
-    )
-    return 1
 
 
 def snapshot_merge_partitions(
@@ -855,7 +851,9 @@ def _snapshot_merge_once(
         man1 = {
             "version": 1,
             "partitions": parts,
-            "file_stats": _stats_for(spark, root, files, merged, ts_col),
+            "file_stats": _file_time_stats(
+                spark, root, files, merged.schema, partition_cols, ts_col
+            ),
             "schema": merged.schema.jsonValue(),
             "partition_cols": list(partition_cols),
             "applied_ids": [applied_id] if applied_id else [],
@@ -877,11 +875,13 @@ def _snapshot_merge_once(
     # `incoming` is consumed twice below (touched-keys collect, then the
     # merge+write job): snapshot_merge_partitions hands it over cut
     # (evaluated_once), so the batch's plan runs once
-    touched_keys, _ = _touched_partitions(incoming, partition_cols)
+    touched_keys = set(_touched_partitions(incoming, partition_cols, ts_col=None))
     if not touched_keys:
         return v
     schema = _manifest_schema(spark, root, manifest, v)
-    current_touched = _read_touched(spark, root, manifest, touched_keys, schema)
+    current_touched = _read_live(
+        spark, root, manifest, _partition_files(manifest, touched_keys), schema
+    )
     merged = merge_fn(current_touched, incoming)
     new_files = _write_data_files(spark, merged, root, partition_cols)
 
@@ -898,7 +898,11 @@ def _snapshot_merge_once(
         for f, st in manifest.get("file_stats", {}).items()
         if f in kept
     }
-    stats.update(_stats_for(spark, root, new_files, merged, ts_col))
+    stats.update(
+        _file_time_stats(
+            spark, root, new_files, merged.schema, partition_cols, ts_col
+        )
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     new_manifest = {
         "version": v + 1,
@@ -970,7 +974,9 @@ def _snapshot_append_once(
     for f in new_files:
         parts.setdefault(_partition_of(f, partition_cols), []).append(f)
     stats = dict(manifest.get("file_stats", {}))
-    stats.update(_stats_for(spark, root, new_files, df, ts_col))
+    stats.update(
+        _file_time_stats(spark, root, new_files, evolved, partition_cols, ts_col)
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     new_manifest = {
         "version": v + 1,
@@ -1045,7 +1051,9 @@ def _snapshot_overwrite_once(
     new_manifest = {
         "version": (v or 0) + 1,
         "partitions": parts,
-        "file_stats": _stats_for(spark, root, new_files, df, ts_col),
+        "file_stats": _file_time_stats(
+            spark, root, new_files, df.schema, partition_cols, ts_col
+        ),
         "schema": df.schema.jsonValue(),
         "partition_cols": list(partition_cols),
         "applied_ids": applied,
@@ -1073,6 +1081,12 @@ def snapshot_upsert(
 ) -> int | None:
     """Keep-last MERGE with snapshot isolation and optimistic retry.
 
+    Keys are deduplicated within a partition (``key_cols`` plus
+    ``partition_cols``; for the candle lake the same thing, since
+    ``date`` is derived from ``timestamp``), the most recently arrived
+    row winning.  The first call on a new lake bootstraps version 1
+    through the same commit, against an empty manifest.
+
     A concurrent writer winning the version race surfaces as the
     ``commit_version`` conflict error; the losing upsert is safely
     recomputed against the NEW current snapshot (its orphaned data
@@ -1087,60 +1101,110 @@ def snapshot_upsert(
     One evaluation per batch: ``incoming`` is cut once for all attempts
     (:func:`evaluated_once`), so the committed rows, the touched
     partitions and the sequence high-water mark all come from the same
-    evaluation, and a fetched batch requests each page once.  An empty
-    batch runs no write job and commits no version (its ``applied_id``
-    is not recorded); the call returns the current version, None when
-    there is no lake yet.
+    evaluation, and a fetched batch requests each page once.  Its
+    per-partition time range and key count (:func:`_touched_partitions`)
+    are aggregated once too, by the first attempt the ledger does not
+    skip.  An empty batch runs no write job and commits no version (its
+    ``applied_id`` is not recorded); the call returns the current
+    version, None when there is no lake yet.
     """
     last: CommitConflict | None = None
-    with evaluated_once(incoming) as batch:
+    with evaluated_once(_with_date(incoming)) as batch:
+        touched = functools.cache(lambda: _touched_partitions(batch, partition_cols))
         for _ in range(retries + 1):
             try:
                 return _snapshot_upsert_once(
-                    spark, batch, root, key_cols, partition_cols, batch_seq,
-                    applied_id,
+                    spark, batch, touched, root, key_cols, partition_cols,
+                    batch_seq, applied_id,
                 )
             except CommitConflict as e:
                 last = e
     raise last
 
 
+def _files_to_rewrite(
+    manifest: dict, touched: dict[str, dict], append_ok: bool
+) -> list[str]:
+    """The live files an upsert of a batch with these touched-partition
+    stats must read and rewrite; every other file is carried over.
+
+    With ``append_ok`` (the key is the partition columns plus
+    ``timestamp``) a batch key can only collide with a file of its own
+    partition whose ``[ts_min_us, ts_max_us]`` holds the key's timestamp,
+    so a partition rewrites only the files whose range meets the batch's
+    ``[ts_min_us, ts_max_us]`` there, plus files without stats.  A
+    partition rewrites all its files without ``append_ok``, when the batch
+    holds a NULL timestamp there, or once it holds
+    ``MAX_FILES_PER_PARTITION`` files."""
+    stats = manifest.get("file_stats", {})
+    out: list[str] = []
+    for part, t in touched.items():
+        files = manifest.get("partitions", {}).get(part, [])
+        if (
+            not append_ok
+            or t["null_ts"]
+            or len(files) >= MAX_FILES_PER_PARTITION
+        ):
+            out += files
+            continue
+        for f in files:
+            st = stats.get(f)
+            if st is None or (
+                st["ts_min_us"] <= t["ts_max_us"]
+                and st["ts_max_us"] >= t["ts_min_us"]
+            ):
+                out.append(f)
+    return sorted(out)
+
+
 def _snapshot_upsert_once(
     spark: SparkSession,
     incoming: DataFrame,
+    touched,
     root: str,
-    key_cols: Sequence[str] = LOGICAL_KEY,
-    partition_cols: Sequence[str] = PARTITION_COLS,
-    batch_seq: int | None = None,
-    applied_id: str | None = None,
+    key_cols: Sequence[str],
+    partition_cols: Sequence[str],
+    batch_seq: int | None,
+    applied_id: str | None,
 ) -> int | None:
     """One optimistic attempt of the keep-last MERGE.
 
-    Reads ONLY the current snapshot's touched partitions — the file list
-    comes from the manifest (``_read_touched``), so the merge input is
-    bounded by the partitions the batch lands in, never snapshot size.
-    The table schema and the arrival-order high-water mark are manifest
-    fields too (``schema``, ``max_ingest_seq``) — no footer reads, no
-    full-lake aggregate on the hot path (legacy manifests without them
-    fall back to one full read).  A crash before ``commit_version``
-    leaves unreferenced data files (garbage, collected by ``vacuum``)
-    and an unchanged live snapshot.  Returns the committed version (the
-    current one for an empty batch).
+    ``touched()`` returns the batch's :func:`_touched_partitions`.  The
+    files to rewrite come from the manifest (:func:`_files_to_rewrite`),
+    so the merge input is bounded by the files the batch can collide
+    with, never by snapshot size: a batch past every partition's newest
+    file reads none.  The rewritten files and the batch go through ONE
+    shuffle — hash-partitioned by the partition columns, deduplicated
+    and sorted inside those partitions, written without another
+    exchange.  A partition that read no file and landed in one new file
+    takes that file's stats from ``touched()``; other new files get one
+    stats aggregate.  The table schema and the arrival-order high-water
+    mark are manifest fields too (``schema``, ``max_ingest_seq``) — no
+    footer reads, no full-lake aggregate on the hot path (legacy
+    manifests without them fall back to one full read).  A crash before
+    ``commit_version`` leaves unreferenced data files (garbage, collected
+    by ``vacuum``) and an unchanged live snapshot.  Returns the committed
+    version (the current one, None without a lake, for an empty batch).
     """
+    from pyspark.sql import types as T
+
     v = current_version(spark, root)
-    if v is None:
-        return _init_snapshot_lake(
-            spark, incoming, root, partition_cols, applied_id
-        )
-    manifest = read_manifest(spark, root, v)
+    manifest = read_manifest(spark, root, v) if v is not None else {}
     _check_partition_cols(manifest, partition_cols)
     if applied_id is not None and applied_id in manifest.get("applied_ids", []):
         return v
+    parts_now = touched()
+    if not parts_now:
+        return v
 
-    incoming = _with_date(incoming)
-    cur_schema = _manifest_schema(spark, root, manifest, v)
+    if v is None:
+        cur_schema = T.StructType([])
+    else:
+        cur_schema = _manifest_schema(spark, root, manifest, v)
     if batch_seq is None:
-        if manifest.get("max_ingest_seq") is not None:
+        if v is None:
+            batch_seq = 0
+        elif manifest.get("max_ingest_seq") is not None:
             batch_seq = int(manifest["max_ingest_seq"]) + 1
         else:
             row = (
@@ -1161,41 +1225,66 @@ def _snapshot_upsert_once(
     # a migration, not an upsert.
     evolved = _evolve_schema(cur_schema, incoming.schema)
 
-    touched_keys, seq_now = _touched_partitions(incoming, partition_cols)
-    if not touched_keys:
-        return v
-    current_touched = _read_touched(
-        spark, root, manifest, touched_keys, cur_schema
-    )
+    append_ok = "timestamp" in key_cols and set(key_cols) <= {
+        *partition_cols, "timestamp"
+    }
+    rewrite = _files_to_rewrite(manifest, parts_now, append_ok)
+    union = _conform(incoming, evolved)
+    if rewrite:
+        union = _conform(
+            _read_live(spark, root, manifest, rewrite, cur_schema), evolved
+        ).unionByName(union)
+    names = list(partition_cols)
     merged = dedup_keep_last(
-        _conform(current_touched, evolved).unionByName(
-            _conform(incoming, evolved)
-        ),
-        keys=list(key_cols),
+        union.repartition(*names),
+        # partition columns first: the aggregate's sort then also serves
+        # the clustered write
+        keys=list(dict.fromkeys([*partition_cols, *key_cols])),
         order_col=INGEST_SEQ,
+    ).sortWithinPartitions(*names)
+    new_files = _write_data_files(
+        spark, merged, root, partition_cols, cluster=False
     )
-    new_files = _write_data_files(spark, merged, root, partition_cols)
 
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
+    dropped = set(rewrite)
+    read_parts = {_partition_of(f, partition_cols) for f in rewrite}
+    parts: dict[str, list[str]] = {}
+    for part, fl in manifest.get("partitions", {}).items():
+        left = [f for f in fl if f not in dropped]
+        if left:
+            parts[part] = left
     kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
     stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
+        f: st for f, st in manifest.get("file_stats", {}).items() if f in kept
     }
-    stats.update(_file_time_stats(spark, root, new_files))
+    landed: dict[str, list[str]] = {}
+    for f in new_files:
+        landed.setdefault(_partition_of(f, partition_cols), []).append(f)
+    scan: list[str] = []
+    for part, fl in landed.items():
+        parts.setdefault(part, []).extend(fl)
+        t = parts_now[part]
+        if (
+            append_ok
+            and t["ts_min_us"] is not None
+            and part not in read_parts
+            and len(fl) == 1
+        ):
+            stats[fl[0]] = {
+                "ts_min_us": t["ts_min_us"],
+                "ts_max_us": t["ts_max_us"],
+                "rows": t["rows"],
+            }
+        else:
+            scan += fl
+    stats.update(_file_time_stats(spark, root, scan, evolved, partition_cols))
+    seqs = [t["seq"] for t in parts_now.values() if t["seq"] is not None]
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     commit_version(
         spark,
         root,
         {
-            "version": v + 1,
+            "version": (v or 0) + 1,
             "partitions": parts,
             "file_stats": stats,
             "schema": evolved.jsonValue(),
@@ -1204,12 +1293,13 @@ def _snapshot_upsert_once(
             "applied_ids_evicted": evicted,
             "applied_ids_frozen_n": frozen,
             "max_ingest_seq": max(
-                int(manifest.get("max_ingest_seq") or 0), seq_now
+                int(manifest.get("max_ingest_seq") or 0),
+                max(seqs) if seqs else batch_seq,
             ),
         },
-        v + 1,
+        (v or 0) + 1,
     )
-    return v + 1
+    return (v or 0) + 1
 
 
 def snapshot_delete(
@@ -1276,8 +1366,8 @@ def _snapshot_delete_once(
     if not touched_keys:
         return v, 0
     schema = _manifest_schema(spark, root, manifest, v)
-    current_touched = _read_touched(
-        spark, root, manifest, touched_keys, schema
+    current_touched = _read_live(
+        spark, root, manifest, _partition_files(manifest, touched_keys), schema
     ).localCheckpoint(eager=True)
     kept = current_touched.filter(
         ~F.coalesce(predicate, F.lit(False))
@@ -1298,7 +1388,9 @@ def _snapshot_delete_once(
         for f, st in manifest.get("file_stats", {}).items()
         if f in kept_files
     }
-    stats.update(_stats_for(spark, root, new_files, kept, ts_col))
+    stats.update(
+        _file_time_stats(spark, root, new_files, schema, partition_cols, ts_col)
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     commit_version(
         spark,
@@ -1320,67 +1412,10 @@ def _snapshot_delete_once(
     return v + 1, int(n_deleted)
 
 
-def compact_snapshot(
-    spark: SparkSession,
-    root: str,
-    max_files_per_partition: int = 1,
-    partition_cols: Sequence[str] = PARTITION_COLS,
-) -> int | None:
-    """OPTIMIZE for the snapshot lake: rewrite partitions whose file
-    count exceeds ``max_files_per_partition`` as fresh merged files and
-    commit a new version swapping only those partitions' manifest
-    entries.  Readers keep full snapshot isolation throughout (the old
-    version's files are untouched until ``vacuum``); content is
-    byte-identical because only file layout changes.
-
-    Returns the committed version, or None if nothing breached.
-    """
-    v = current_version(spark, root)
-    if v is None:
-        return None
-    manifest = read_manifest(spark, root, v)
-    breached = {
-        part: files
-        for part, files in manifest["partitions"].items()
-        if len(files) > max_files_per_partition
-    }
-    if not breached:
-        return None
-    doomed = _read_files(
-        spark, root, [f for fl in breached.values() for f in fl]
-    )
-    compacted = doomed.repartition(*[F.col(c) for c in partition_cols])
-    new_files = _write_data_files(spark, compacted, root, partition_cols, cluster=False)
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in breached
-    }
-    kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
-    }
-    stats.update(_file_time_stats(spark, root, new_files))
-    commit_version(
-        spark,
-        root,
-        _carry_extras(
-            manifest,
-            {"version": v + 1, "partitions": parts, "file_stats": stats},
-        ),
-        v + 1,
-    )
-    return v + 1
-
-
 def _carry_extras(manifest: dict, new_manifest: dict) -> dict:
-    """Commits that rewrite files without a new table frame (compact,
-    delete) must not lose the logical manifest state: table schema,
-    replay ledger, arrival high-water."""
+    """A commit that rewrites files without a new table frame (delete)
+    must not lose the logical manifest state: table schema, replay
+    ledger, arrival high-water."""
     for k in (
         "schema",
         "partition_cols",

@@ -8,7 +8,11 @@ Mapping:
 - per-interval gating (719-739) → ``should_collect`` on the boundary
 - fetch + normalize + keep-last save (693 → 523-558) → ``foreachBatch``
   running the same fetch kernel and MERGE upsert as the batch path —
-  one code path for both drive modes
+  one code path for both drive modes.  Where the reference reads and
+  overwrites the whole day-file every cycle (542-556), a cycle whose
+  candles all lie past the stored ones is an append: it writes one new
+  file per touched partition and reads none
+  (``sinks.snapshot.snapshot_upsert``)
 - late/re-delivered data (T4): the MERGE accepts unbounded lateness;
   the ``stream_dedup_within_watermark`` registry row is the
   bounded-state in-stream alternative (``dropDuplicatesWithinWatermark``)
@@ -78,7 +82,12 @@ def live_collection_stream(
 
     def _cycle(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        max_ts = batch_df.agg(F.max("timestamp")).first()[0]
+        # the newest tick, as one TakeOrderedAndProject job (a global
+        # max() plans an aggregate over an exchange: two jobs)
+        top = batch_df.select("timestamp").orderBy(
+            F.desc_nulls_last("timestamp")
+        ).first()
+        max_ts = top[0] if top is not None else None
         if max_ts is None:  # no ticks in this micro-batch
             return
         boundary_ms = (

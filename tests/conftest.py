@@ -19,3 +19,19 @@ def physical_plan(df) -> str:
 def spark():
     s = get_spark("tests", cpus=8)
     yield s
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted through a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

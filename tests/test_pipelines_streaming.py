@@ -733,3 +733,42 @@ def test_backfill_manifest_broadcasts_the_grid(spark):
     plan = physical_plan(manifest)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan, plan
+
+
+def test_live_cycle_runs_at_most_six_jobs(spark, tmp_path):
+    """One live cycle over a backfilled lake whose candles lie past every
+    stored one is an append: the tick max, the fetch cut, the touched
+    aggregate and the clustered write, at most 6 jobs in the query's job
+    group (11 when each cycle re-read and rewrote its day partitions and
+    read the new files back for their stats)."""
+    import json
+
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        current_version,
+        read_manifest,
+    )
+
+    lake = str(tmp_path / "lake")
+    intervals = spark.createDataFrame(
+        [("15m", 96), ("1h", 24)], "interval string, candles_per_day long"
+    )
+    backfill(spark, _symbols(spark), intervals, START_MS + DAY_MS, MockExchangeAdapter(), lake)
+    boundary_ms = START_MS + DAY_MS + 3_600_000  # 01:00 next day: 15m and 1h open
+    ticks = tmp_path / "ticks"
+    ticks.mkdir()
+    stamp = dt.datetime.fromtimestamp(boundary_ms / 1000, dt.timezone.utc)
+    (ticks / "tick.json").write_text(
+        json.dumps({"timestamp": stamp.strftime("%Y-%m-%dT%H:%M:%S.000Z")}) + "\n"
+    )
+    q = live_collection_stream(
+        spark, MockExchangeAdapter(), ["BTC-USDT"], ["15m", "1h"], lake,
+        str(tmp_path / "ckpt"), tick_seconds=900, available_now=True,
+        ticks=spark.readStream.schema("timestamp timestamp").json(str(ticks)),
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    man = read_manifest(spark, lake, current_version(spark, lake))
+    assert f"cycle-{boundary_ms}" in man["applied_ids"]
+    assert read_snapshot(spark, lake).count() == 5 * (96 + 24) + 5 * 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 6, len(jobs)

@@ -160,7 +160,6 @@ TEST_ONLY_DEFS = {
     "plans/extensions.py": ("_curated_q_inline",),
     "plans/queries.py": ("dsum_wide",),
     "session.py": ("load_tables", "register_views"),
-    "sinks/snapshot.py": ("init_snapshot_lake", "compact_snapshot"),
     "sources/derivatives.py": ("derivatives_scan", "options_scan"),
     "sources/http.py": ("RecordedTransport",),
     "streaming/metrics.py": ("IngestProgressListener", "register_listener"),

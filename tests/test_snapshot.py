@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     commit_version,
     current_version,
-    init_snapshot_lake,
     read_manifest,
     read_snapshot,
     snapshot_files,
@@ -174,7 +173,7 @@ def test_reader_sees_old_or_new_never_mixed(spark, tmp_path):
 
 def test_concurrent_commit_detected(spark, tmp_path):
     root = str(tmp_path / "snap")
-    init_snapshot_lake(
+    snapshot_upsert(
         spark,
         _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
         root,
@@ -211,66 +210,55 @@ def test_vacuum_drops_only_unreferenced(spark, tmp_path):
         read_manifest(spark, root, 1)
 
 
-def test_compact_snapshot_preserves_content_and_isolation(spark, tmp_path):
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        compact_snapshot,
-    )
+def _append_files(spark, root, first, n):
+    """Upserts of the 15m candles ``first`` .. ``first + n - 1`` of the T0
+    day of one series, one per commit: each lies past the day's newest
+    candle, so each commit appends one file."""
+    for i in range(first, first + n):
+        snapshot_upsert(
+            spark,
+            _candles(
+                spark,
+                [(100.0 + i, 1.0, T0 + dt.timedelta(minutes=15 * i),
+                  "BTC-USDT", "coinbase", "15m")],
+            ),
+            root,
+            applied_id=f"a{i}",
+        )
 
+
+def test_file_cap_rewrite_preserves_content_and_isolation(
+    spark, tmp_path, monkeypatch
+):
+    """Appending upserts add one file per commit until a partition holds
+    MAX_FILES_PER_PARTITION files; the next upsert landing there rewrites
+    them all into one file.  Re-delivering a stored candle at the cap
+    leaves the content unchanged, no partition ever exceeds the cap, and
+    the pre-rewrite version still reads intact."""
+    import crypto_data_ingestion_module_spark.sinks.snapshot as snap
+
+    monkeypatch.setattr(snap, "MAX_FILES_PER_PARTITION", 3)
     root = str(tmp_path / "snap")
-    # Build a version whose 20240101 partition holds files from two
-    # separate write batches (the many-tasks-per-partition layout a
-    # large write produces): two data batches, one stitched manifest.
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        PARTITION_COLS,
-        _partition_of,
-        _write_data_files,
-    )
-
-    def _prep(df, seq):
-        return df.withColumn(
-            "date", F.date_format("timestamp", "yyyyMMdd")
-        ).withColumn("_ingest_seq", F.lit(seq).cast("long"))
-
-    f1 = _write_data_files(
-        spark,
-        _prep(
-            _candles(
-                spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]
-            ),
-            0,
-        ),
-        root,
-        PARTITION_COLS,
-    )
-    f2 = _write_data_files(
-        spark,
-        _prep(
-            _candles(
-                spark, [(110.0, 1.5, T1, "BTC-USDT", "coinbase", "15m")]
-            ),
-            0,
-        ),
-        root,
-        PARTITION_COLS,
-    )
-    parts = {}
-    for f in f1 + f2:
-        parts.setdefault(_partition_of(f, PARTITION_COLS), []).append(f)
-    commit_version(spark, root, {"version": 1, "partitions": parts}, 1)
+    _append_files(spark, root, 0, 3)
+    v = current_version(spark, root)
+    (files,) = read_manifest(spark, root, v)["partitions"].values()
+    assert len(files) == 3
     before = _state(read_snapshot(spark, root))
-    man1 = read_manifest(spark, root, 1)
-    assert any(len(fl) > 1 for fl in man1["partitions"].values())
 
-    v = compact_snapshot(spark, root, max_files_per_partition=1)
-    assert v == 2
-    # content byte-identical, layout compacted to one file per partition
+    redelivered = _candles(
+        spark, [(101.0, 1.0, T1, "BTC-USDT", "coinbase", "15m")]
+    )
+    assert snapshot_upsert(spark, redelivered, root) == v + 1
+    man = read_manifest(spark, root, v + 1)
+    (rewritten,) = man["partitions"].values()
+    assert len(rewritten) == 1 and not set(rewritten) & set(files)
     assert _state(read_snapshot(spark, root)) == before
-    man = read_manifest(spark, root, 2)
-    assert all(len(fl) == 1 for fl in man["partitions"].values())
-    # the pre-compaction snapshot still reads intact (isolation)
-    assert _state(read_snapshot(spark, root, version=1)) == before
-    # idempotent: nothing left to compact
-    assert compact_snapshot(spark, root, max_files_per_partition=1) is None
+    assert _state(read_snapshot(spark, root, version=v)) == before
+    # below the cap again: the next later candle appends
+    _append_files(spark, root, 3, 5)
+    for version in range(1, current_version(spark, root) + 1):
+        parts = read_manifest(spark, root, version)["partitions"]
+        assert all(len(fl) <= 3 for fl in parts.values()), version
 
 
 def test_snapshot_upsert_retries_on_lost_commit_race(spark, tmp_path, monkeypatch):
@@ -297,7 +285,7 @@ def test_snapshot_upsert_retries_on_lost_commit_race(spark, tmp_path, monkeypatc
         if fired["n"] == 0:
             fired["n"] += 1
             # another writer wins version 2 first
-            snap._snapshot_upsert_once(sp, competitor, r, batch_seq=7)
+            snap.snapshot_upsert(sp, competitor, r, batch_seq=7)
         return real_commit(sp, r, manifest, version)
 
     monkeypatch.setattr(snap, "commit_version", racing_commit)
@@ -489,12 +477,18 @@ def test_applied_id_ledger_skips_replay(spark, tmp_path):
 
 
 def test_upsert_merge_input_is_manifest_pruned(spark, tmp_path):
-    """The keep-last merge reads ONLY the touched partitions' files: pin
-    via _read_touched.inputFiles() ⊆ the touched partition's manifest
-    entry, and untouched partitions keep byte-identical manifest rows."""
+    """The keep-last merge reads ONLY the live files a batch key can
+    collide with: its own partition's files whose manifest ts range
+    meets the batch's.  Pin the file selection, the read's
+    inputFiles(), and that untouched partitions keep byte-identical
+    manifest rows."""
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        _files_to_rewrite,
         _manifest_schema,
-        _read_touched,
+        _read_live,
+        _touched_partitions,
+        _with_date,
     )
 
     root = str(tmp_path / "snap")
@@ -514,14 +508,23 @@ def test_upsert_merge_input_is_manifest_pruned(spark, tmp_path):
     m1 = read_manifest(spark, root, v1)
     assert len(m1["partitions"]) == 3
 
-    touched = {
-        p for p in m1["partitions"] if p.startswith("symbol=ETH-USDT")
-    }
-    schema = _manifest_schema(spark, root, m1, v1)
-    pruned = _read_touched(spark, root, m1, touched, schema)
+    def touched(ts):
+        batch = _candles(spark, [(55.0, 2.0, ts, "ETH-USDT", "coinbase", "15m")])
+        return _touched_partitions(_with_date(batch), PARTITION_COLS)
+
+    (eth,) = [p for p in m1["partitions"] if p.startswith("symbol=ETH-USDT")]
+    # a correction of the stored ETH candle collides with that file only
+    rewrite = _files_to_rewrite(m1, touched(T0), append_ok=True)
+    assert rewrite == m1["partitions"][eth]
+    pruned = _read_live(
+        spark, root, m1, rewrite, _manifest_schema(spark, root, m1, v1)
+    )
     got_files = {f.split(root, 1)[1].lstrip("/") for f in pruned.inputFiles()}
-    want_files = {f for p in touched for f in m1["partitions"][p]}
-    assert got_files == want_files  # nothing outside the touched partition
+    assert got_files == set(rewrite)
+    # a later candle of the same day collides with nothing; without the
+    # partition-plus-timestamp key the whole partition is read
+    assert _files_to_rewrite(m1, touched(T1), append_ok=True) == []
+    assert _files_to_rewrite(m1, touched(T1), append_ok=False) == rewrite
 
     # and after an ETH-only upsert the other partitions' entries survive
     snapshot_upsert(
@@ -531,19 +534,124 @@ def test_upsert_merge_input_is_manifest_pruned(spark, tmp_path):
     )
     m2 = read_manifest(spark, root, current_version(spark, root))
     for p, files in m1["partitions"].items():
-        if p in touched:
+        if p == eth:
             assert m2["partitions"][p] != files
         else:
             assert m2["partitions"][p] == files
 
 
-def test_manifest_tracks_schema_and_seq_high_water(spark, tmp_path):
+def test_first_commit_keeps_last_like_any_other(spark, tmp_path):
+    """A batch holding one key twice stores it once, with the same row,
+    whether it bootstraps a new lake or lands in an existing one: the
+    bootstrap once wrote such a batch without keep-last and stored 2."""
+    dup = [
+        (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
+        (200.0, 2.0, T0, "BTC-USDT", "coinbase", "15m"),
+    ]
+    fresh, existing = str(tmp_path / "fresh"), str(tmp_path / "existing")
+    snapshot_upsert(spark, _candles(spark, dup), fresh)
+    snapshot_upsert(
+        spark, _candles(spark, [(1.0, 1.0, T2, "BTC-USDT", "coinbase", "15m")]), existing
+    )
+    snapshot_upsert(spark, _candles(spark, dup), existing)
+
+    def at_t0(root):
+        return _state(read_snapshot(spark, root).filter(F.col("timestamp") == T0))
+
+    assert len(at_t0(fresh)) == 1
+    assert at_t0(fresh) == at_t0(existing)
+    (st,) = read_manifest(spark, fresh, 1)["file_stats"].values()
+    assert st["rows"] == 1
+
+
+def test_appending_upsert_opens_no_existing_file(spark, tmp_path, monkeypatch):
+    """A batch past every stored candle of its partition reads no data
+    file: it writes its rows as a new file and takes the file's stats
+    from the batch aggregate.  A late correction opens only the file
+    whose ts range covers it."""
+    import crypto_data_ingestion_module_spark.sinks.snapshot as snap
+
+    root = str(tmp_path / "snap")
+    snapshot_upsert(
+        spark,
+        _candles(
+            spark,
+            [
+                (100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m"),
+                (110.0, 1.0, T1, "BTC-USDT", "coinbase", "15m"),
+            ],
+        ),
+        root,
+    )
+    (first,) = snapshot_files(spark, root)
+    opened: list[str] = []
+    real = snap._read_files
+
+    def spy(spark_, root_, files, *args, **kwargs):
+        opened.extend(files)
+        return real(spark_, root_, files, *args, **kwargs)
+
+    monkeypatch.setattr(snap, "_read_files", spy)
+    later = T1 + dt.timedelta(minutes=15)
+    snapshot_upsert(
+        spark, _candles(spark, [(120.0, 1.0, later, "BTC-USDT", "coinbase", "15m")]), root
+    )
+    assert opened == []
+    (appended,) = set(snapshot_files(spark, root)) - {first}
+    st = read_manifest(spark, root, 2)["file_stats"][appended]
+    us = int(later.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
+    assert st == {"ts_min_us": us, "ts_max_us": us, "rows": 1}
+
+    snapshot_upsert(
+        spark, _candles(spark, [(999.0, 9.0, T1, "BTC-USDT", "coinbase", "15m")]), root
+    )
+    # of the live files only the covering one is read; the rest of
+    # ``opened`` is the stats read of the rewritten file
+    assert set(opened) & {first, appended} == {first}
+    monkeypatch.undo()
+    got = {r.timestamp: r.open for r in read_snapshot(spark, root).collect()}
+    assert got == {T0: 100.0, T1: 999.0, later: 120.0}
+    assert appended in snapshot_files(spark, root)
+
+
+def test_file_time_stats_runs_no_footer_job(spark, tmp_path):
+    """The stats aggregate reads the new files with the table schema: a
+    3-file call runs only the aggregate's own jobs, no schema-merging
+    footer job."""
+    from pyspark.sql import types as T
+
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        _file_time_stats,
+    )
+    from tests.conftest import count_jobs
+
+    root = str(tmp_path / "snap")
+    days = [T0 + dt.timedelta(days=d) for d in range(3)]
+    snapshot_upsert(
+        spark,
+        _candles(spark, [(1.0, 1.0, ts, "BTC-USDT", "coinbase", "15m") for ts in days]),
+        root,
+    )
+    man = read_manifest(spark, root, 1)
+    files = snapshot_files(spark, root)
+    assert len(files) == 3
+    stats, jobs = count_jobs(
+        spark,
+        lambda: _file_time_stats(
+            spark, root, files, T.StructType.fromJson(man["schema"]),
+            man["partition_cols"],
+        ),
+    )
+    assert stats == man["file_stats"]
+    assert jobs <= 2, jobs
+
+
+def test_manifest_tracks_schema_and_seq_high_water(spark, tmp_path, monkeypatch):
     """The manifest carries the table schema and the arrival high-water
     mark, so the hot upsert path needs no footer reads and no full-lake
-    max() scan; layout-only commits carry both forward."""
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        compact_snapshot,
-    )
+    max() scan; a commit that rewrites a partition at the file cap
+    carries both forward."""
+    import crypto_data_ingestion_module_spark.sinks.snapshot as snap
 
     root = str(tmp_path / "snap")
     snapshot_upsert(
@@ -564,22 +672,23 @@ def test_manifest_tracks_schema_and_seq_high_water(spark, tmp_path):
     names = {f["name"] for f in man["schema"]["fields"]}
     assert {"symbol", "timestamp", "open", "_ingest_seq", "date"} <= names
 
-    # fragment the lake so compaction has something to do, then verify
-    # the layout-only commit preserved the logical manifest state
-    snapshot_upsert(
+    # a cap-triggered rewrite of the T0 day carries the ledger, the
+    # schema and a monotone seq high-water
+    monkeypatch.setattr(snap, "MAX_FILES_PER_PARTITION", 2)
+    (day,) = man["partitions"].values()
+    assert len(day) == 2  # the second batch appended
+    v3 = snapshot_upsert(
         spark,
-        _candles(spark, [(102.0, 1.0, T2, "BTC-USDT", "coinbase", "15m")]),
+        _candles(spark, [(102.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
         root,
         applied_id="c",
     )
-    compacted = compact_snapshot(spark, root, max_files_per_partition=0)
-    if compacted is not None:
-        man2 = read_manifest(spark, root, compacted)
-        assert man2["applied_ids"] == ["a", "b", "c"]
-        assert man2["max_ingest_seq"] == man["max_ingest_seq"] + 1 or (
-            man2["max_ingest_seq"] >= man["max_ingest_seq"]
-        )
-        assert man2["schema"] is not None
+    man3 = read_manifest(spark, root, v3)
+    (day3,) = man3["partitions"].values()
+    assert len(day3) == 1
+    assert man3["applied_ids"] == ["a", "b", "c"]
+    assert man3["max_ingest_seq"] == man["max_ingest_seq"] + 1
+    assert man3["schema"] == man["schema"]
 
 
 def test_snapshot_delete_rewrites_only_matching_partitions(spark, tmp_path):
@@ -1317,15 +1426,18 @@ def _scan_group_stats(spark, root, cols):
     }
 
 
-def test_group_stats_equal_a_scan_after_every_kind_of_commit(spark, tmp_path):
+def test_group_stats_equal_a_scan_after_every_kind_of_commit(
+    spark, tmp_path, monkeypatch
+):
     """Per-series max timestamp and row count from the manifest alone
     equal the grouped scan after a cold backfill, a keep-last upsert that
-    rewrites partitions, an append that adds a second file to one,
-    compaction and a delete."""
+    rewrites partitions, an append that adds a second file to one, an
+    appending upsert, a late correction that rewrites only the file it
+    collides with, a rewrite at the file cap and a delete."""
+    import crypto_data_ingestion_module_spark.sinks.snapshot as snap
     from crypto_data_ingestion_module_spark.pipelines import SERIES, backfill
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
         PARTITION_COLS,
-        compact_snapshot,
         snapshot_append,
         snapshot_delete,
         snapshot_group_stats,
@@ -1374,8 +1486,30 @@ def test_group_stats_equal_a_scan_after_every_kind_of_commit(spark, tmp_path):
         PARTITION_COLS,
     )
     check()
-    assert compact_snapshot(spark, root) is not None
+    kucoin = "symbol=BTC-USDT/interval=6h/data_type=spot/exchange=kucoin/date=20240101"
+
+    def day_files():
+        man = read_manifest(spark, root, current_version(spark, root))
+        return man["partitions"][kucoin]
+
+    late = T0 + dt.timedelta(hours=23)
+    held = day_files()
+    def upsert_late(open_):
+        snapshot_upsert(
+            spark, _candles(spark, [(open_, 1.0, late, "BTC-USDT", "kucoin", "6h")]), root
+        )
+
+    upsert_late(7.0)
     check()
+    (appended,) = set(day_files()) - set(held)
+    assert set(held) < set(day_files())
+    upsert_late(8.0)
+    check()
+    assert set(held) < set(day_files()) and appended not in day_files()
+    monkeypatch.setattr(snap, "MAX_FILES_PER_PARTITION", len(day_files()))
+    upsert_late(9.0)
+    check()
+    assert len(day_files()) == 1
     _, n = snapshot_delete(spark, root, F.col("symbol") == "ETH/USDT")
     assert n == 1
     check()
