@@ -1,11 +1,14 @@
 """Snapshot-isolated lake: versioned manifests + an atomic version log.
 
-The candle lake (K1/K2: the reference's partitioned day-files and
-keep-last MERGE, crypto_collector.py:514-558), the rollup partials, the
-streamed dedup fingerprint index and pair log, and the streamed ANN index
-all commit through this one protocol.  The
-reference overwrites its day-file in place (542-556): one process, no
-concurrent readers, and a kill mid-write truncates the file.
+Every table this engine keeps commits through this one protocol, each
+writer a thin attempt over one shared transaction (``_transact``): the
+candle lake (K1/K2: the reference's partitioned day-files and keep-last
+MERGE, crypto_collector.py:514-558) by ``snapshot_upsert``, the rollup
+partials by ``snapshot_merge_partitions``, the sketch, IVM and streamed
+ANN stores by ``snapshot_append``, and served artifacts by
+``snapshot_overwrite``; ``snapshot_delete`` removes rows.  The reference
+overwrites its day-file in place (542-556): one process, no concurrent
+readers, and a kill mid-write truncates the file.
 
 This module gives the standard 100 TB answer — readers never list data
 directories; they resolve a MANIFEST through a version log:
@@ -55,8 +58,9 @@ import functools
 import json
 import re
 import uuid
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
+from typing import Any, NamedTuple
 from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -301,6 +305,32 @@ def _touched_partitions(
 _PCOPY = "__pv_"
 
 
+def _dir_values(df: DataFrame, partition_cols: Sequence[str]) -> list:
+    """Each partition column's directory value, a string one with ``''``
+    as NULL: Hive names both directories ``__HIVE_DEFAULT_PARTITION__``,
+    so a task holding both as distinct values would open that
+    directory's file twice under one name."""
+    from pyspark.sql import types as T
+
+    strings = {
+        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
+    }
+    return [
+        F.nullif(F.col(c), F.lit("")) if c in strings else F.col(c)
+        for c in partition_cols
+    ]
+
+
+def _dir_columns(df: DataFrame, partition_cols: Sequence[str]) -> DataFrame:
+    """``df`` ready for a ``partitionBy`` write: each partition column
+    copied into the file (``_PCOPY``, which keeps ``''`` and NULL apart)
+    and replaced by its directory value (:func:`_dir_values`)."""
+    return df.withColumns(
+        {_PCOPY + c: F.col(c) for c in partition_cols}
+        | dict(zip(partition_cols, _dir_values(df, partition_cols)))
+    )
+
+
 def _write_data_files(
     spark: SparkSession,
     df: DataFrame,
@@ -311,21 +341,20 @@ def _write_data_files(
     """Write ``df`` as immutable data files under a fresh batch dir;
     return their root-relative paths.
 
-    ``cluster=True`` (default): repartition+sort rows by partition key
-    before the dynamic write — without this every task interleaves rows
-    of MANY partitions and holds one open writer per directory it
-    touches (memory + tiny flushes; a 2,400-partition bootstrap
-    measured 2x slower).  Clustered, each task streams its partitions
-    sequentially, one writer at a time.  The upsert passes
-    ``cluster=False``: its keep-last merge already hash-partitioned and
-    sorted the rows by partition key.
+    ``cluster=True`` (default): apply :func:`_dir_columns`, then
+    repartition+sort rows by partition key before the dynamic write —
+    without this every task interleaves rows of MANY partitions and
+    holds one open writer per directory it touches (memory + tiny
+    flushes; a 2,400-partition bootstrap measured 2x slower).
+    Clustered, each task streams its partitions sequentially, one writer
+    at a time.  The upsert passes ``cluster=False``: it applied
+    :func:`_dir_columns` itself, and its keep-last merge already
+    hash-partitioned and sorted the rows by the directory values.
     """
     batch_dir = f"data/{uuid.uuid4().hex}"
     out = f"{root.rstrip('/')}/{batch_dir}"
-    for c in partition_cols:
-        df = df.withColumn(_PCOPY + c, F.col(c))
     if cluster:
-        df = df.repartition(
+        df = _dir_columns(df, partition_cols).repartition(
             *[F.col(c) for c in partition_cols]
         ).sortWithinPartitions(*partition_cols)
     df.write.partitionBy(*partition_cols).mode("overwrite").parquet(out)
@@ -694,39 +723,38 @@ def _evolve_schema(cur_schema, incoming_schema):
     )
 
 
+def _frame_seq(df: DataFrame) -> int | None:
+    """``df``'s max ``_ingest_seq`` (one aggregate job), None without the
+    column."""
+    if INGEST_SEQ not in df.columns:
+        return None
+    return int(df.agg(F.max(INGEST_SEQ).alias("m")).first()["m"] or 0)
+
+
 def _seq_high_water(
-    manifest: dict,
-    df: DataFrame,
-    spark: SparkSession | None = None,
-    root: str | None = None,
+    spark: SparkSession, root: str, manifest: dict, seq: int | None
 ) -> int | None:
     """The arrival-order high-water mark to commit: the manifest's value,
-    raised to the written frame's own max(_ingest_seq) when the frame
-    carries the column — otherwise a later upsert could stamp
+    raised to ``seq``, the written batch's own max(_ingest_seq) (None when
+    the batch has no such column) — otherwise a later upsert could stamp
     batch_seq <= existing seqs and keep-last would prefer stale rows.
 
-    When the PRIOR manifest lacks the key (a legacy lake) but the frame
+    When the PRIOR manifest lacks the key (a legacy lake) but the batch
     carries ``_ingest_seq``, HEAL by paying the full-lake max() read
-    ONCE here (the same fallback a later upsert would otherwise pay on
-    every call) and committing it.  The frame's own max is NOT a safe
-    substitute: a merge/append frame covers only the touched partitions,
-    so its max can understate seqs living elsewhere in the lake, and a
-    subsequent upsert's ``batch_seq = value + 1`` would then stamp new
-    rows BELOW existing ones — keep-last would prefer stale data."""
-    hi = (
-        int(manifest["max_ingest_seq"])
-        if manifest.get("max_ingest_seq") is not None
-        else None
-    )
-    if INGEST_SEQ in df.columns:
-        if hi is None and spark is not None and root is not None:
-            lake = read_snapshot(spark, root, int(manifest["version"]))
-            if INGEST_SEQ in lake.columns:
-                row = lake.agg(F.max(INGEST_SEQ).alias("m")).first()
-                hi = int(row["m"] or 0)
-        row = df.agg(F.max(INGEST_SEQ).alias("m")).first()
-        hi = max(hi or 0, int(row["m"] or 0))
-    return hi
+    ONCE here and committing it; the value is stored into ``manifest``
+    so a second call in the same attempt does not read again.  The
+    batch's own max is NOT a safe substitute: a merge/append frame covers
+    only the touched partitions, so its max can understate seqs living
+    elsewhere in the lake, and a subsequent upsert's
+    ``batch_seq = value + 1`` would then stamp new rows BELOW existing
+    ones — keep-last would prefer stale data."""
+    if manifest and seq is not None and manifest.get("max_ingest_seq") is None:
+        lake = read_snapshot(spark, root, int(manifest["version"]))
+        manifest["max_ingest_seq"] = _frame_seq(lake)
+    hi = manifest.get("max_ingest_seq")
+    if hi is None and seq is None:
+        return None
+    return max(int(hi or 0), seq or 0)
 
 
 def _conform(df: DataFrame, schema) -> DataFrame:
@@ -742,12 +770,17 @@ def _conform(df: DataFrame, schema) -> DataFrame:
     return df.select(*cols)
 
 
-def _manifest_schema(spark: SparkSession, root: str, manifest: dict, version: int):
+def _manifest_schema(
+    spark: SparkSession, root: str, manifest: dict, version: int | None
+):
     """The snapshot's table schema: manifest-stored (the Delta-style
     answer — zero footer reads at any file count) with a legacy fallback
-    that derives it from the files once."""
+    that derives it from the files once; empty for a new lake (an empty
+    manifest)."""
     from pyspark.sql import types as T
 
+    if not manifest:
+        return T.StructType([])
     if manifest.get("schema"):
         return T.StructType.fromJson(manifest["schema"])
     return _read_files(
@@ -781,6 +814,111 @@ def _read_live(
     )
 
 
+class _Write(NamedTuple):
+    """What one attempt of a write commits: the live files it replaces,
+    its new files and their stats, the table schema after it, and its
+    batch's max ``_ingest_seq`` (None when the batch has no such
+    column)."""
+
+    replaced: list[str]
+    files: list[str]
+    stats: dict
+    schema: Any
+    seq: int | None
+
+
+def _written(
+    spark: SparkSession,
+    root: str,
+    df: DataFrame,
+    schema,
+    partition_cols: Sequence[str],
+    ts_col: str,
+    replaced: list[str],
+) -> _Write:
+    """Write ``df`` as clustered data files replacing ``replaced``, with
+    ``schema`` as the table schema after the write."""
+    files = _write_data_files(spark, df, root, partition_cols)
+    stats = _file_time_stats(spark, root, files, schema, partition_cols, ts_col)
+    return _Write(replaced, files, stats, schema, _frame_seq(df))
+
+
+def _transact(
+    spark: SparkSession,
+    root: str,
+    partition_cols: Sequence[str],
+    applied_id: str | None,
+    retries: int,
+    attempt: Callable[[int | None, dict], _Write | None],
+) -> tuple[int | None, bool]:
+    """The one write transaction every snapshot writer runs.
+
+    Each try reads the current version and manifest (None and an empty
+    manifest on a new lake, so the first commit is the same transaction),
+    refuses a foreign partitioning and skips when the manifest already
+    lists ``applied_id``: replay idempotence, the Delta-txn pattern.
+    Otherwise ``attempt(version, manifest)`` writes the writer's own data
+    files and returns them as a :class:`_Write`, or None when there is
+    nothing to commit.  The next manifest is the current one minus the
+    replaced files plus the new ones, the surviving files' stats carried
+    over, the ``applied_ids`` ledger advanced, the write's schema and the
+    seq high-water (:func:`_seq_high_water`); :func:`commit_version`
+    publishes it as version N+1.
+
+    A concurrent writer winning version N+1 (:class:`CommitConflict`)
+    re-runs the whole try against the new snapshot, up to ``retries``
+    times.  The loser's data files, like those of a crash before the
+    commit, are unreferenced garbage for ``vacuum``; the live snapshot is
+    untouched.  Returns the lake's version and whether this call
+    committed it.
+    """
+    last: CommitConflict | None = None
+    for _ in range(retries + 1):
+        v = current_version(spark, root)
+        manifest = read_manifest(spark, root, v) if v is not None else {}
+        _check_partition_cols(manifest, partition_cols)
+        if applied_id is not None and applied_id in manifest.get("applied_ids", []):
+            return v, False
+        write = attempt(v, manifest)
+        if write is None:
+            return v, False
+        dropped = set(write.replaced)
+        parts: dict[str, list[str]] = {}
+        for part, fl in manifest.get("partitions", {}).items():
+            left = [f for f in fl if f not in dropped]
+            if left:
+                parts[part] = left
+        kept = {f for fl in parts.values() for f in fl}
+        stats = {
+            f: st for f, st in manifest.get("file_stats", {}).items() if f in kept
+        }
+        stats.update(write.stats)
+        for f in write.files:
+            parts.setdefault(_partition_of(f, partition_cols), []).append(f)
+        applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
+        nxt = {
+            "version": (v or 0) + 1,
+            "partitions": parts,
+            "file_stats": stats,
+            "schema": write.schema.jsonValue(),
+            "partition_cols": list(partition_cols),
+            "applied_ids": applied,
+            # horizon bookkeeping from birth — absence of these keys is
+            # the legacy-ledger marker (see _applied_ids_next)
+            "applied_ids_evicted": evicted,
+            "applied_ids_frozen_n": frozen,
+        }
+        hi = _seq_high_water(spark, root, manifest, write.seq)
+        if hi is not None:
+            nxt["max_ingest_seq"] = hi
+        try:
+            commit_version(spark, root, nxt, nxt["version"])
+            return nxt["version"], True
+        except CommitConflict as e:
+            last = e
+    raise last
+
+
 def snapshot_merge_partitions(
     spark: SparkSession,
     root: str,
@@ -792,10 +930,8 @@ def snapshot_merge_partitions(
     retries: int = 2,
 ) -> int:
     """Generic partition-granular transaction: replace the partitions
-    ``incoming`` touches with ``merge_fn(current_touched, incoming)``.
-
-    The building block the keep-last upsert, the rollup's partial-candle
-    merge, and the streaming pair log all share:
+    ``incoming`` touches with ``merge_fn(current_touched, incoming)`` —
+    the rollup's partial-candle merge.
 
     * **Pruned input** — ``current_touched`` reads ONLY the touched
       partitions' files, resolved through the manifest (no directory
@@ -804,9 +940,9 @@ def snapshot_merge_partitions(
       batch; a manifest already listing it skips the whole transaction
       (the Delta-txn pattern), so at-least-once delivery commits
       exactly once.
-    * **Snapshot isolation + optimistic retry** — same commit protocol
-      as :func:`snapshot_upsert`; losing a version race recomputes
-      against the new snapshot.
+    * **Snapshot isolation + optimistic retry** — the commit protocol
+      every writer shares (:func:`_transact`); losing a version race
+      recomputes against the new snapshot.
 
     ``merge_fn(current: DataFrame | None, incoming) -> DataFrame``
     receives None when the lake doesn't exist yet (bootstrap).  Its
@@ -819,106 +955,23 @@ def snapshot_merge_partitions(
     the current version is returned.  The bootstrap still commits
     version 1 for an empty batch, so readers of a new table find one.
     """
-    last: CommitConflict | None = None
     with evaluated_once(incoming) as batch:
-        for _ in range(retries + 1):
-            try:
-                return _snapshot_merge_once(
-                    spark, root, batch, merge_fn, partition_cols,
-                    applied_id, ts_col,
-                )
-            except CommitConflict as e:
-                last = e
-    raise last
 
+        def attempt(v: int | None, manifest: dict) -> _Write | None:
+            current, replaced = None, []
+            if v is not None:
+                keys = set(_touched_partitions(batch, partition_cols, ts_col=None))
+                if not keys:
+                    return None
+                schema = _manifest_schema(spark, root, manifest, v)
+                replaced = _partition_files(manifest, keys)
+                current = _read_live(spark, root, manifest, replaced, schema)
+            merged = merge_fn(current, batch)
+            return _written(
+                spark, root, merged, merged.schema, partition_cols, ts_col, replaced
+            )
 
-def _snapshot_merge_once(
-    spark: SparkSession,
-    root: str,
-    incoming: DataFrame,
-    merge_fn,
-    partition_cols: Sequence[str],
-    applied_id: str | None,
-    ts_col: str,
-) -> int:
-    v = current_version(spark, root)
-    if v is None:
-        merged = merge_fn(None, incoming)
-        files = _write_data_files(spark, merged, root, partition_cols)
-        parts: dict[str, list[str]] = {}
-        for f in files:
-            parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-        man1 = {
-            "version": 1,
-            "partitions": parts,
-            "file_stats": _file_time_stats(
-                spark, root, files, merged.schema, partition_cols, ts_col
-            ),
-            "schema": merged.schema.jsonValue(),
-            "partition_cols": list(partition_cols),
-            "applied_ids": [applied_id] if applied_id else [],
-            # horizon bookkeeping from birth — absence of these keys is
-            # the legacy-ledger marker (see _applied_ids_next)
-            "applied_ids_evicted": 0,
-            "applied_ids_frozen_n": 0,
-        }
-        if INGEST_SEQ in merged.columns:
-            row = merged.agg(F.max(INGEST_SEQ).alias("m")).first()
-            man1["max_ingest_seq"] = int(row["m"] or 0)
-        commit_version(spark, root, man1, 1)
-        return 1
-    manifest = read_manifest(spark, root, v)
-    _check_partition_cols(manifest, partition_cols)
-    if applied_id is not None and applied_id in manifest.get("applied_ids", []):
-        return v
-
-    # `incoming` is consumed twice below (touched-keys collect, then the
-    # merge+write job): snapshot_merge_partitions hands it over cut
-    # (evaluated_once), so the batch's plan runs once
-    touched_keys = set(_touched_partitions(incoming, partition_cols, ts_col=None))
-    if not touched_keys:
-        return v
-    schema = _manifest_schema(spark, root, manifest, v)
-    current_touched = _read_live(
-        spark, root, manifest, _partition_files(manifest, touched_keys), schema
-    )
-    merged = merge_fn(current_touched, incoming)
-    new_files = _write_data_files(spark, merged, root, partition_cols)
-
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
-    kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
-    }
-    stats.update(
-        _file_time_stats(
-            spark, root, new_files, merged.schema, partition_cols, ts_col
-        )
-    )
-    applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
-    new_manifest = {
-        "version": v + 1,
-        "partitions": parts,
-        "file_stats": stats,
-        "schema": merged.schema.jsonValue(),
-        "partition_cols": list(partition_cols),
-        "applied_ids": applied,
-        "applied_ids_evicted": evicted,
-        "applied_ids_frozen_n": frozen,
-    }
-    hi = _seq_high_water(manifest, merged, spark, root)
-    if hi is not None:
-        new_manifest["max_ingest_seq"] = hi
-    commit_version(spark, root, new_manifest, v + 1)
-    return v + 1
+        return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 
 
 def snapshot_append(
@@ -933,66 +986,18 @@ def snapshot_append(
     """Append-only snapshot commit: add ``df``'s files to their
     partitions without replacing anything — the discipline for immutable
     facts (fingerprint band rows).  With ``applied_id``, a replayed
-    batch appends NOTHING instead of relying on downstream dedup."""
-    last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _snapshot_append_once(
-                spark, root, df, partition_cols, applied_id, ts_col
-            )
-        except CommitConflict as e:
-            last = e
-    raise last
-
-
-def _snapshot_append_once(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    applied_id: str | None,
-    ts_col: str,
-) -> int:
-    v = current_version(spark, root)
-    if v is None:
-        return _snapshot_merge_once(
-            spark, root, df, lambda cur, inc: inc, partition_cols,
-            applied_id, ts_col,
+    batch appends NOTHING instead of relying on downstream dedup.  Same
+    additive-evolution contract as the upsert: new columns widen the
+    committed schema (the explicit-schema read path would otherwise
+    silently drop them forever), retypes are refused."""
+    def attempt(v: int | None, manifest: dict) -> _Write:
+        cur = _manifest_schema(spark, root, manifest, v)
+        evolved = _evolve_schema(cur, df.schema)
+        return _written(
+            spark, root, _conform(df, evolved), evolved, partition_cols, ts_col, []
         )
-    manifest = read_manifest(spark, root, v)
-    _check_partition_cols(manifest, partition_cols)
-    if applied_id is not None and applied_id in manifest.get("applied_ids", []):
-        return v
-    # Same additive-evolution contract as the upsert path: new columns
-    # widen the committed schema (the explicit-schema read path would
-    # otherwise silently drop them forever), retypes are refused.
-    cur_schema = _manifest_schema(spark, root, manifest, v)
-    evolved = _evolve_schema(cur_schema, df.schema)
-    df = _conform(df, evolved)
-    new_files = _write_data_files(spark, df, root, partition_cols)
-    parts = {k: list(fl) for k, fl in manifest["partitions"].items()}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = dict(manifest.get("file_stats", {}))
-    stats.update(
-        _file_time_stats(spark, root, new_files, evolved, partition_cols, ts_col)
-    )
-    applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
-    new_manifest = {
-        "version": v + 1,
-        "partitions": parts,
-        "file_stats": stats,
-        "schema": evolved.jsonValue(),
-        "partition_cols": list(partition_cols),
-        "applied_ids": applied,
-        "applied_ids_evicted": evicted,
-        "applied_ids_frozen_n": frozen,
-    }
-    hi = _seq_high_water(manifest, df, spark, root)
-    if hi is not None:
-        new_manifest["max_ingest_seq"] = hi
-    commit_version(spark, root, new_manifest, v + 1)
-    return v + 1
+
+    return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 
 
 def snapshot_overwrite(
@@ -1016,57 +1021,14 @@ def snapshot_overwrite(
     rename protocol.  Old versions stay readable (time travel) until
     ``vacuum``.  Unlike upsert/append, the committed schema is the
     frame's own: an overwrite IS the migration path."""
-    last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _snapshot_overwrite_once(
-                spark, root, df, partition_cols, applied_id, ts_col
-            )
-        except CommitConflict as e:
-            last = e
-    raise last
 
+    def attempt(v: int | None, manifest: dict) -> _Write:
+        replaced = [f for fl in manifest.get("partitions", {}).values() for f in fl]
+        return _written(
+            spark, root, df, df.schema, partition_cols, ts_col, replaced
+        )
 
-def _snapshot_overwrite_once(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    applied_id: str | None,
-    ts_col: str,
-) -> int:
-    v = current_version(spark, root)
-    manifest = read_manifest(spark, root, v) if v is not None else {}
-    if v is not None:
-        _check_partition_cols(manifest, partition_cols)
-        if applied_id is not None and applied_id in manifest.get(
-            "applied_ids", []
-        ):
-            return v
-    new_files = _write_data_files(spark, df, root, partition_cols)
-    parts: dict[str, list[str]] = {}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
-    new_manifest = {
-        "version": (v or 0) + 1,
-        "partitions": parts,
-        "file_stats": _file_time_stats(
-            spark, root, new_files, df.schema, partition_cols, ts_col
-        ),
-        "schema": df.schema.jsonValue(),
-        "partition_cols": list(partition_cols),
-        "applied_ids": applied,
-        "applied_ids_evicted": evicted,
-        "applied_ids_frozen_n": frozen,
-    }
-    hi = _seq_high_water(manifest, df, spark, root) if v is not None else (
-        _seq_high_water({}, df)
-    )
-    if hi is not None:
-        new_manifest["max_ingest_seq"] = hi
-    commit_version(spark, root, new_manifest, (v or 0) + 1)
-    return (v or 0) + 1
+    return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 
 
 def snapshot_upsert(
@@ -1108,18 +1070,13 @@ def snapshot_upsert(
     ``applied_id`` is not recorded); the call returns the current
     version, None when there is no lake yet.
     """
-    last: CommitConflict | None = None
     with evaluated_once(_with_date(incoming)) as batch:
         touched = functools.cache(lambda: _touched_partitions(batch, partition_cols))
-        for _ in range(retries + 1):
-            try:
-                return _snapshot_upsert_once(
-                    spark, batch, touched, root, key_cols, partition_cols,
-                    batch_seq, applied_id,
-                )
-            except CommitConflict as e:
-                last = e
-    raise last
+        attempt = functools.partial(
+            _upsert_write, spark, root, batch, touched, key_cols, partition_cols,
+            batch_seq,
+        )
+        return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 
 
 def _files_to_rewrite(
@@ -1157,17 +1114,18 @@ def _files_to_rewrite(
     return sorted(out)
 
 
-def _snapshot_upsert_once(
+def _upsert_write(
     spark: SparkSession,
+    root: str,
     incoming: DataFrame,
     touched,
-    root: str,
     key_cols: Sequence[str],
     partition_cols: Sequence[str],
     batch_seq: int | None,
-    applied_id: str | None,
-) -> int | None:
-    """One optimistic attempt of the keep-last MERGE.
+    v: int | None,
+    manifest: dict,
+) -> _Write | None:
+    """One attempt of the keep-last MERGE against ``(v, manifest)``.
 
     ``touched()`` returns the batch's :func:`_touched_partitions`.  The
     files to rewrite come from the manifest (:func:`_files_to_rewrite`),
@@ -1181,38 +1139,15 @@ def _snapshot_upsert_once(
     stats aggregate.  The table schema and the arrival-order high-water
     mark are manifest fields too (``schema``, ``max_ingest_seq``) — no
     footer reads, no full-lake aggregate on the hot path (legacy
-    manifests without them fall back to one full read).  A crash before
-    ``commit_version`` leaves unreferenced data files (garbage, collected
-    by ``vacuum``) and an unchanged live snapshot.  Returns the committed
-    version (the current one, None without a lake, for an empty batch).
+    manifests without them fall back to one full read).  None for an
+    empty batch.
     """
-    from pyspark.sql import types as T
-
-    v = current_version(spark, root)
-    manifest = read_manifest(spark, root, v) if v is not None else {}
-    _check_partition_cols(manifest, partition_cols)
-    if applied_id is not None and applied_id in manifest.get("applied_ids", []):
-        return v
     parts_now = touched()
     if not parts_now:
-        return v
-
-    if v is None:
-        cur_schema = T.StructType([])
-    else:
-        cur_schema = _manifest_schema(spark, root, manifest, v)
+        return None
+    cur_schema = _manifest_schema(spark, root, manifest, v)
     if batch_seq is None:
-        if v is None:
-            batch_seq = 0
-        elif manifest.get("max_ingest_seq") is not None:
-            batch_seq = int(manifest["max_ingest_seq"]) + 1
-        else:
-            row = (
-                read_snapshot(spark, root, v)
-                .agg(F.max(INGEST_SEQ).alias("m"))
-                .first()
-            )
-            batch_seq = int(row["m"] or 0) + 1
+        batch_seq = 0 if v is None else _seq_high_water(spark, root, manifest, 0) + 1
     if INGEST_SEQ not in incoming.columns:
         incoming = incoming.withColumn(
             INGEST_SEQ, F.lit(batch_seq).cast("long")
@@ -1236,33 +1171,24 @@ def _snapshot_upsert_once(
         ).unionByName(union)
     names = list(partition_cols)
     merged = dedup_keep_last(
-        union.repartition(*names),
-        # partition columns first: the aggregate's sort then also serves
-        # the clustered write
-        keys=list(dict.fromkeys([*partition_cols, *key_cols])),
+        # hashed by the directory values, which are derived after the
+        # shuffle so it carries no copies; grouped by them first, the
+        # aggregate's sort then also serves the clustered write
+        _dir_columns(union.repartition(*_dir_values(union, names)), names),
+        keys=list(dict.fromkeys([*names, *(_PCOPY + c for c in names), *key_cols])),
         order_col=INGEST_SEQ,
     ).sortWithinPartitions(*names)
     new_files = _write_data_files(
         spark, merged, root, partition_cols, cluster=False
     )
 
-    dropped = set(rewrite)
     read_parts = {_partition_of(f, partition_cols) for f in rewrite}
-    parts: dict[str, list[str]] = {}
-    for part, fl in manifest.get("partitions", {}).items():
-        left = [f for f in fl if f not in dropped]
-        if left:
-            parts[part] = left
-    kept = {f for fl in parts.values() for f in fl}
-    stats = {
-        f: st for f, st in manifest.get("file_stats", {}).items() if f in kept
-    }
     landed: dict[str, list[str]] = {}
     for f in new_files:
         landed.setdefault(_partition_of(f, partition_cols), []).append(f)
+    stats: dict[str, dict] = {}
     scan: list[str] = []
     for part, fl in landed.items():
-        parts.setdefault(part, []).extend(fl)
         t = parts_now[part]
         if (
             append_ok
@@ -1279,27 +1205,7 @@ def _snapshot_upsert_once(
             scan += fl
     stats.update(_file_time_stats(spark, root, scan, evolved, partition_cols))
     seqs = [t["seq"] for t in parts_now.values() if t["seq"] is not None]
-    applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
-    commit_version(
-        spark,
-        root,
-        {
-            "version": (v or 0) + 1,
-            "partitions": parts,
-            "file_stats": stats,
-            "schema": evolved.jsonValue(),
-            "partition_cols": list(partition_cols),
-            "applied_ids": applied,
-            "applied_ids_evicted": evicted,
-            "applied_ids_frozen_n": frozen,
-            "max_ingest_seq": max(
-                int(manifest.get("max_ingest_seq") or 0),
-                max(seqs) if seqs else batch_seq,
-            ),
-        },
-        (v or 0) + 1,
-    )
-    return (v or 0) + 1
+    return _Write(rewrite, new_files, stats, evolved, max(seqs, default=batch_seq))
 
 
 def snapshot_delete(
@@ -1323,110 +1229,41 @@ def snapshot_delete(
     Scale shape: one column-pruned discovery scan finds the touched
     partitions (it reads only the predicate's columns plus the partition
     columns); the rewrite then reads exactly those partitions' files via
-    the manifest.  Untouched partitions keep byte-identical manifest
-    entries; the pre-delete version stays time-travelable until
-    ``vacuum`` (which is also the GDPR clock: data is physically gone
-    only when no retained manifest references its files).
+    the manifest, evaluated once for the count and the write.  Untouched
+    partitions keep byte-identical manifest entries; the pre-delete
+    version stays time-travelable until ``vacuum`` (which is also the
+    GDPR clock: data is physically gone only when no retained manifest
+    references its files).
     """
-    last: CommitConflict | None = None
-    for _ in range(retries + 1):
-        try:
-            return _snapshot_delete_once(
-                spark, root, predicate, partition_cols, applied_id, ts_col
-            )
-        except CommitConflict as e:
-            last = e
-    raise last
+    n_deleted = 0
 
+    def attempt(v: int | None, manifest: dict) -> _Write | None:
+        nonlocal n_deleted
+        if v is None:
+            raise FileNotFoundError(f"no snapshot versions under {root}")
+        keys = {
+            _partition_key(r, partition_cols)
+            for r in read_snapshot(spark, root, v)
+            .filter(predicate)
+            .select(*_partition_strings(partition_cols))
+            .distinct()
+            .collect()
+        }
+        if not keys:
+            return None
+        schema = _manifest_schema(spark, root, manifest, v)
+        replaced = _partition_files(manifest, keys)
+        with evaluated_once(
+            _read_live(spark, root, manifest, replaced, schema)
+        ) as current:
+            kept = current.filter(~F.coalesce(predicate, F.lit(False)))
+            n_deleted = current.count() - kept.count()
+            files = _write_data_files(spark, kept, root, partition_cols)
+        stats = _file_time_stats(spark, root, files, schema, partition_cols, ts_col)
+        return _Write(replaced, files, stats, schema, None)
 
-def _snapshot_delete_once(
-    spark: SparkSession,
-    root: str,
-    predicate,
-    partition_cols: Sequence[str],
-    applied_id: str | None,
-    ts_col: str,
-) -> tuple[int, int]:
-    v = current_version(spark, root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot versions under {root}")
-    manifest = read_manifest(spark, root, v)
-    _check_partition_cols(manifest, partition_cols)
-    if applied_id is not None and applied_id in manifest.get("applied_ids", []):
-        return v, 0
-
-    touched_keys = {
-        _partition_key(r, partition_cols)
-        for r in read_snapshot(spark, root, v)
-        .filter(predicate)
-        .select(*_partition_strings(partition_cols))
-        .distinct()
-        .collect()
-    }
-    if not touched_keys:
-        return v, 0
-    schema = _manifest_schema(spark, root, manifest, v)
-    current_touched = _read_live(
-        spark, root, manifest, _partition_files(manifest, touched_keys), schema
-    ).localCheckpoint(eager=True)
-    kept = current_touched.filter(
-        ~F.coalesce(predicate, F.lit(False))
-    )
-    n_deleted = current_touched.count() - kept.count()
-    new_files = _write_data_files(spark, kept, root, partition_cols)
-
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
-    kept_files = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept_files
-    }
-    stats.update(
-        _file_time_stats(spark, root, new_files, schema, partition_cols, ts_col)
-    )
-    applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
-    commit_version(
-        spark,
-        root,
-        _carry_extras(
-            manifest,
-            {
-                "version": v + 1,
-                "partitions": parts,
-                "file_stats": stats,
-                "partition_cols": list(partition_cols),
-                "applied_ids": applied,
-                "applied_ids_evicted": evicted,
-                "applied_ids_frozen_n": frozen,
-            },
-        ),
-        v + 1,
-    )
-    return v + 1, int(n_deleted)
-
-
-def _carry_extras(manifest: dict, new_manifest: dict) -> dict:
-    """A commit that rewrites files without a new table frame (delete)
-    must not lose the logical manifest state: table schema, replay
-    ledger, arrival high-water."""
-    for k in (
-        "schema",
-        "partition_cols",
-        "applied_ids",
-        "applied_ids_evicted",
-        "applied_ids_frozen_n",
-        "max_ingest_seq",
-    ):
-        if manifest.get(k) is not None:
-            new_manifest.setdefault(k, manifest[k])
-    return new_manifest
+    v, committed = _transact(spark, root, partition_cols, applied_id, retries, attempt)
+    return v, n_deleted if committed else 0
 
 
 def vacuum(spark: SparkSession, root: str, keep: int = 1) -> list[str]:

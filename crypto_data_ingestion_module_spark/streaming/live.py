@@ -39,12 +39,16 @@ from crypto_data_ingestion_module_spark.functions.timeutil import (
     parse_interval_ms,
     should_collect_ms,
 )
-from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_upsert
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    current_version,
+    snapshot_upsert,
+)
 from crypto_data_ingestion_module_spark.sources.fetch import (
     Adapter,
     fetch_pages,
     normalize_mock_pages,
 )
+from crypto_data_ingestion_module_spark.streaming.metrics import log_event
 
 
 def live_collection_stream(
@@ -68,6 +72,12 @@ def live_collection_stream(
     ``tick_seconds``), gate each interval on that boundary (719-739),
     synthesize the fetch manifest for ``[boundary - interval, boundary)``
     (686-690), run the same fetch/normalize/upsert path as backfill.
+
+    Each micro-batch with a tick logs one ``live_cycle`` record
+    (``streaming.metrics.log_event``, no Spark job): the boundary in
+    epoch ms, the gated intervals, the fetch manifest's row count and
+    the committed version, or ``"no commit"`` for a cycle that gated no
+    interval, fetched nothing or replayed a committed boundary.
 
     ``ticks`` may inject any streaming DataFrame with a ``timestamp``
     column (tests use ``rate-micro-batch`` with a pinned start time for
@@ -94,37 +104,45 @@ def live_collection_stream(
             int(max_ts.timestamp() * 1000) // (tick_seconds * 1000)
         ) * (tick_seconds * 1000)
 
-        tasks = []
-        for interval in intervals:
-            # pure driver-side arithmetic — launching a Spark job per
-            # interval just to evaluate a literal gate wastes a
-            # scheduler round-trip every cycle
-            if not should_collect_ms(boundary_ms, interval):
-                continue
-            ivl_ms = parse_interval_ms(interval)
-            for symbol in symbols:
-                for exchange in exchanges:
-                    tasks.append(
-                        (symbol, interval, exchange, interval,
-                         300, boundary_ms - ivl_ms, boundary_ms)
-                    )
-        if not tasks:
-            return
-        manifest = sess.createDataFrame(
-            tasks,
-            "symbol string, interval string, exchange string, "
-            "native_interval string, page_limit int, "
-            "chunk_start_ms long, chunk_end_ms long",
-        )
-        raw = fetch_pages(sess, manifest, adapter, pacing=pacing)
-        candles = normalizer(raw).drop("_ingest_seq")
-        # the cycle boundary, not the micro-batch id, is the logical
-        # batch identity: a restarted stream re-fetching the same
-        # boundary must not double-commit it.  The sink evaluates the
-        # fetch once and commits nothing when it comes back empty.
-        snapshot_upsert(
-            sess, candles, lake_root,
-            applied_id=f"cycle-{boundary_ms}",
+        # pure driver-side arithmetic — launching a Spark job per
+        # interval just to evaluate a literal gate wastes a scheduler
+        # round-trip every cycle
+        gated = [i for i in intervals if should_collect_ms(boundary_ms, i)]
+        tasks = [
+            (symbol, interval, exchange, interval,
+             300, boundary_ms - parse_interval_ms(interval), boundary_ms)
+            for interval in gated
+            for symbol in symbols
+            for exchange in exchanges
+        ]
+        version: int | str = "no commit"
+        if tasks:
+            manifest = sess.createDataFrame(
+                tasks,
+                "symbol string, interval string, exchange string, "
+                "native_interval string, page_limit int, "
+                "chunk_start_ms long, chunk_end_ms long",
+            )
+            raw = fetch_pages(sess, manifest, adapter, pacing=pacing)
+            candles = normalizer(raw).drop("_ingest_seq")
+            # the cycle boundary, not the micro-batch id, is the logical
+            # batch identity: a restarted stream re-fetching the same
+            # boundary must not double-commit it.  The sink evaluates
+            # the fetch once and commits nothing when it comes back
+            # empty.
+            before = current_version(sess, lake_root)
+            after = snapshot_upsert(
+                sess, candles, lake_root,
+                applied_id=f"cycle-{boundary_ms}",
+            )
+            if after != before:
+                version = after
+        log_event(
+            "live_cycle",
+            boundary_ms=boundary_ms,
+            intervals=gated,
+            manifest_rows=len(tasks),
+            version=version,
         )
 
     writer = ticks.writeStream.foreachBatch(_cycle).option(

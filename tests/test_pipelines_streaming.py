@@ -176,6 +176,53 @@ def test_live_collection_cycle(spark, tmp_path):
     assert c15.count() == 1  # [boundary-15m, boundary) holds one 15m candle
 
 
+def test_live_cycle_logs_one_record_per_cycle(spark, tmp_path, caplog):
+    """Each cycle logs its boundary, gated intervals, fetch-manifest row
+    count and committed version; a cycle replaying a committed boundary
+    logs ``"no commit"``."""
+    import json
+    import logging
+
+    caplog.set_level(logging.INFO, logger="crypto_data_ingestion_module_spark")
+    boundary_ms = 1_704_070_800_000  # 2024-01-01 01:00:00 UTC
+    ticks = tmp_path / "ticks"
+    ticks.mkdir()
+    # one file per micro-batch: 01:00, 01:05 (the same 15m boundary) and
+    # 01:15, processed in modification-time order
+    for i, minutes in enumerate((0, 5, 15)):
+        stamp = dt.datetime.fromtimestamp(
+            boundary_ms / 1000 + 60 * minutes, dt.timezone.utc
+        )
+        tick = ticks / f"tick{i}.json"
+        tick.write_text(
+            json.dumps({"timestamp": stamp.strftime("%Y-%m-%dT%H:%M:%S.000Z")}) + "\n"
+        )
+        os.utime(tick, (1_000_000 + i, 1_000_000 + i))
+    q = live_collection_stream(
+        spark, MockExchangeAdapter(), ["BTC-USDT"], ["15m", "1h", "1d"],
+        str(tmp_path / "lake"), str(tmp_path / "ckpt"), tick_seconds=900,
+        available_now=True, exchanges=("coinbase", "kucoin"),
+        ticks=spark.readStream.schema("timestamp timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(ticks)),
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    records = [
+        json.loads(r.getMessage()[len("live_cycle "):])
+        for r in caplog.records
+        if r.getMessage().startswith("live_cycle {")
+    ]
+    assert records == [
+        {"boundary_ms": boundary_ms, "intervals": ["15m", "1h"],
+         "manifest_rows": 4, "version": 1},
+        {"boundary_ms": boundary_ms, "intervals": ["15m", "1h"],
+         "manifest_rows": 4, "version": "no commit"},
+        {"boundary_ms": boundary_ms + 900_000, "intervals": ["15m"],
+         "manifest_rows": 2, "version": 2},
+    ]
+
+
 def test_normalize_real_pages_dialects(spark):
     """Raw venue pages (positional string arrays) through the per-dialect
     normalizers: every venue must yield identical canonical candles."""

@@ -261,11 +261,49 @@ def test_file_cap_rewrite_preserves_content_and_isolation(
         assert all(len(fl) <= 3 for fl in parts.values()), version
 
 
-def test_snapshot_upsert_retries_on_lost_commit_race(spark, tmp_path, monkeypatch):
+WRITERS = ("upsert", "merge", "append", "overwrite", "delete")
+
+
+def _write_one(spark, root, writer, applied_id=None):
+    """One call of ``writer`` on the lake at ``root``: the 15m candle at
+    T1 (open 111) upserted, merged in or appended, the lake overwritten
+    with it, or the candle with open 100 deleted.  Returns the version."""
+    from crypto_data_ingestion_module_spark.operators.merge import INGEST_SEQ
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        _with_date,
+        snapshot_append,
+        snapshot_delete,
+        snapshot_merge_partitions,
+        snapshot_overwrite,
+    )
+
+    batch = _with_date(
+        _candles(spark, [(111.0, 1.1, T1, "BTC-USDT", "coinbase", "15m")])
+    ).withColumn(INGEST_SEQ, F.lit(9).cast("long"))
+    if writer == "upsert":
+        return snapshot_upsert(spark, batch, root, applied_id=applied_id)
+    if writer == "merge":
+        return snapshot_merge_partitions(
+            spark, root, batch,
+            lambda cur, inc: inc if cur is None else cur.unionByName(inc),
+            PARTITION_COLS, applied_id=applied_id,
+        )
+    if writer == "append":
+        return snapshot_append(spark, root, batch, PARTITION_COLS, applied_id)
+    if writer == "overwrite":
+        return snapshot_overwrite(spark, root, batch, PARTITION_COLS, applied_id)
+    return snapshot_delete(
+        spark, root, F.col("open") == 100.0, applied_id=applied_id
+    )[0]
+
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_writer_retries_on_lost_commit_race(spark, tmp_path, monkeypatch, writer):
     """Optimistic concurrency: if another writer claims the next version
-    between merge and commit, the upsert recomputes against the NEW
+    between write and commit, the writer recomputes against the NEW
     current snapshot and lands on a later version with both writers'
-    rows intact."""
+    effects: an overwrite then also replaces the competitor's file."""
     import crypto_data_ingestion_module_spark.sinks.snapshot as snap
 
     root = str(tmp_path / "snap")
@@ -289,16 +327,79 @@ def test_snapshot_upsert_retries_on_lost_commit_race(spark, tmp_path, monkeypatc
         return real_commit(sp, r, manifest, version)
 
     monkeypatch.setattr(snap, "commit_version", racing_commit)
-    v = snapshot_upsert(
-        spark,
-        _candles(spark, [(111.0, 1.1, T1, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        batch_seq=9,
-    )
+    v = _write_one(spark, root, writer)
     # competitor took v2; our retry landed v3 with everyone's rows
     assert v == 3
     state = _state(read_snapshot(spark, root))
-    assert [s[3] for s in state] == [100.0, 111.0, 500.0]
+    want = {
+        "overwrite": [111.0],
+        "delete": [500.0],
+    }.get(writer, [100.0, 111.0, 500.0])
+    assert [s[3] for s in state] == want
+
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_writer_releases_its_cut_and_skips_a_replay_without_a_job(
+    spark, tmp_path, writer
+):
+    """Every writer releases the blocks of the lineage cuts it takes (a
+    delete once kept its checkpointed rows cached forever), and a replay
+    of an applied ``applied_id`` commits no version and runs no job."""
+    from tests.conftest import count_jobs
+
+    root = str(tmp_path / "snap")
+    snapshot_upsert(
+        spark,
+        _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
+        root,
+    )
+    def cached():
+        # ids, not a count: the context cleaner may release other tests'
+        # blocks meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = cached()
+    v = _write_one(spark, root, writer, applied_id="once")
+    assert v == 2
+    assert cached() <= before
+    assert count_jobs(
+        spark, lambda: _write_one(spark, root, writer, applied_id="once")
+    ) == (v, 0)
+    assert current_version(spark, root) == v
+
+
+def test_empty_string_and_null_partition_values_share_one_write_task(
+    spark, tmp_path
+):
+    """Hive writes ``''`` and NULL to one default-partition directory; a
+    write task holding both values of a partition column, next to two
+    values of another, once opened a file there twice and failed.  An
+    upsert and an append of such a batch each store all four rows and
+    read both values back."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        PARTITION_COLS,
+        _with_date,
+        snapshot_append,
+    )
+
+    rows = [
+        (100.0, 1.0, T0, sym, "coinbase", ivl)
+        for sym in ("", None)
+        for ivl in ("15m", "1h")
+    ]
+    want = sorted((s is None, s, i) for _, _, _, s, _, i in rows)
+    for name in ("upsert", "append"):
+        root = str(tmp_path / name)
+        batch = _with_date(_candles(spark, rows)).coalesce(1)
+        if name == "upsert":
+            snapshot_upsert(spark, batch, root)
+        else:
+            snapshot_append(spark, root, batch, PARTITION_COLS)
+        got = sorted(
+            (r.symbol is None, r.symbol, r.interval)
+            for r in read_snapshot(spark, root).collect()
+        )
+        assert got == want, name
 
 
 def test_time_range_read_prunes_files_via_manifest_stats(spark, tmp_path):
