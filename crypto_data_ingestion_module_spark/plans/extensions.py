@@ -17,60 +17,12 @@ from crypto_data_ingestion_module_spark.plans.queries import (
     _register,
     _t,
 )
+from crypto_data_ingestion_module_spark.plans.stream_fixtures import (
+    drain_to_memory,
+    run_dir,
+    staged,
+)
 
-
-def _cleanup_stream_scratch() -> None:
-    """atexit hook: remove the staged streaming-input dirs (built once
-    per process per sf_dir, previously never removed) and whatever run
-    scratch survives in each ``*_SCRATCH`` list (the in-function ``while
-    lst: rmtree(pop())`` sweeps only run N-1's scratch on run N, so the
-    LAST run's dir outlived the process).  Globals resolve at call time,
-    so registering here — before the registries below are defined — is
-    safe; ``ignore_errors`` keeps interpreter teardown quiet."""
-    import shutil as _sh
-    import os as _os
-
-    for d in (
-        _STREAM_CURATE_FILES,
-        _STREAM_ANN_FILES,
-        _STREAM_MG_FILES,
-        _STREAM_DEDUP_FILES,
-        _STREAM_QC_INPUT,
-        _STREAM_QC_TRAIN_INPUT,
-    ):
-        while d:
-            # values are inner landing dirs; the mkdtemp root is their
-            # parent (e.g. sgraft_stream_curate_*/docs_in)
-            _sh.rmtree(_os.path.dirname(d.popitem()[1]), ignore_errors=True)
-    for lst in (
-        _STREAM_CURATE_SCRATCH,
-        _STREAM_ANN_SCRATCH,
-        _STREAM_MG_SCRATCH,
-        _STREAM_DEDUP_SCRATCH,
-        _STREAM_QC_TRAIN_SCRATCH,
-        _STREAM_QC_CKPTS,
-    ):
-        while lst:
-            _sh.rmtree(lst.pop(), ignore_errors=True)
-    # queries.py's staged-input registries leak the same sgraft_stream_*
-    # class of dirs (ADVICE r16); import at call time like the rest
-    from crypto_data_ingestion_module_spark.plans import queries as _q
-
-    for d2 in (
-        _q._STREAM_DEDUP_INPUT,
-        _q._STREAM_ROLLUP_INPUT,
-        _q._STREAM_SESS_INPUT,
-        _q._STREAM_CANDLE_INPUT,
-    ):
-        while d2:
-            _sh.rmtree(_os.path.dirname(d2.popitem()[1]), ignore_errors=True)
-    while _q._STREAM_CANDLE_CKPTS:
-        _sh.rmtree(_q._STREAM_CANDLE_CKPTS.pop(), ignore_errors=True)
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_stream_scratch)
 
 # --------------------------------------------------------------------------
 # X1 exact dedup
@@ -1691,18 +1643,21 @@ SELECT * FROM (
 # (edges, not the corpus) for CC.
 # --------------------------------------------------------------------------
 
-#: staged landing files build once per (process, sf_dir); lake +
-#: checkpoint are fresh per run (the accumulated band index and pair
-#: log must start empty or replayed ids would be deduped), torn down
-#: at the NEXT invocation (the returned DF is lazy).
-_STREAM_CURATE_FILES: dict[str, str] = {}
-_STREAM_CURATE_SCRATCH: list[str] = []
+def _staged_doc_thirds(spark: SparkSession, sf_dir: str) -> str:
+    """The documents as three id-striped files, one micro-batch each
+    under maxFilesPerTrigger=1, shared by every row that drains them.
+    The split is arbitrary by design: those rows claim batch-split
+    independence."""
+    docs = _t(spark, sf_dir, "documents")
+    return staged(
+        "docs",
+        sf_dir,
+        lambda: [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+    )
 
 
 def _stream_curated_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.streaming.curate_stream import (
         settle_curated,
@@ -1710,27 +1665,8 @@ def _stream_curated_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    inp = _STREAM_CURATE_FILES.get(sf_dir)
-    if inp is None:
-        stage = tempfile.mkdtemp(prefix="sgraft_stream_curate_")
-        inp = os.path.join(stage, "docs_in")
-        os.makedirs(inp)
-        # three id-striped files -> three micro-batches under
-        # maxFilesPerTrigger=1; the split is arbitrary by design (the
-        # claim IS batch-split independence)
-        for i in range(3):
-            tmp = os.path.join(stage, f"_d{i}")
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            (f,) = [x for x in os.listdir(tmp) if x.endswith(".parquet")]
-            shutil.move(
-                os.path.join(tmp, f), os.path.join(inp, f"d{i}.parquet")
-            )
-        _STREAM_CURATE_FILES[sf_dir] = inp
-    while _STREAM_CURATE_SCRATCH:
-        shutil.rmtree(_STREAM_CURATE_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_curate_run_")
+    inp = _staged_doc_thirds(spark, sf_dir)
+    scratch = run_dir("curate")
     lake = os.path.join(scratch, "lake")
     src = (
         spark.readStream.schema(docs.schema)
@@ -1746,7 +1682,6 @@ def _stream_curated_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hamming=3,
     )
     q.awaitTermination()
-    _STREAM_CURATE_SCRATCH.append(scratch)
     return settle_curated(spark, lake).select(
         "doc_id",
         "lang",
@@ -2565,14 +2500,8 @@ _register(
 # cost is manifest machinery, independent of index history.
 # --------------------------------------------------------------------------
 
-_STREAM_ANN_FILES: dict[str, str] = {}
-_STREAM_ANN_SCRATCH: list[str] = []
-
-
 def _stream_ann_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.streaming.ann_stream import (
         read_index,
@@ -2580,26 +2509,14 @@ def _stream_ann_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    inp = _STREAM_ANN_FILES.get(sf_dir)
-    if inp is None:
-        stage = tempfile.mkdtemp(prefix="sgraft_stream_ann_")
-        inp = os.path.join(stage, "emb_in")
-        os.makedirs(inp)
-        # three id-striped files in SHUFFLED arrival order — the claim
-        # is split- and order-independence under frozen quantizers
-        for n, i in enumerate((1, 0, 2)):
-            tmp = os.path.join(stage, f"_e{i}")
-            emb.filter(F.col("vec_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            (f,) = [x for x in os.listdir(tmp) if x.endswith(".parquet")]
-            shutil.move(
-                os.path.join(tmp, f), os.path.join(inp, f"e{n}.parquet")
-            )
-        _STREAM_ANN_FILES[sf_dir] = inp
-    while _STREAM_ANN_SCRATCH:
-        shutil.rmtree(_STREAM_ANN_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_ann_run_")
+    # three id-striped files in SHUFFLED arrival order — the claim is
+    # split- and order-independence under frozen quantizers
+    inp = staged(
+        "ann",
+        sf_dir,
+        lambda: [emb.filter(F.col("vec_id") % 3 == i) for i in (1, 0, 2)],
+    )
+    scratch = run_dir("ann")
     lake = os.path.join(scratch, "index")
     src = (
         spark.readStream.schema(emb.schema)
@@ -2616,7 +2533,6 @@ def _stream_ann_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_codes=16,
     )
     q.awaitTermination()
-    _STREAM_ANN_SCRATCH.append(scratch)
     return read_index(spark, lake).select(
         "nid",
         F.col("list_id").cast("long").alias("list_id"),
@@ -3471,16 +3387,7 @@ WHERE l.doc_id % 2 = 1
 # work is constant; the stream never shuffles at all.
 # --------------------------------------------------------------------------
 
-_STREAM_QC_INPUT: dict[str, str] = {}
-_STREAM_QC_CKPTS: list[str] = []
-
-
 def _stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from crypto_data_ingestion_module_spark.operators.linear import (
         train_perceptron_hashed,
     )
@@ -3490,20 +3397,7 @@ def _stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the model table is bounded by contract (<= parameter count rows)
     wmap = {r["bucket"]: r["w"] for r in w.collect()}
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    inp = _STREAM_QC_INPUT.get(sf_dir)
-    if inp is None:
-        inp = os.path.join(tempfile.mkdtemp(prefix="sgraft_stream_qc_"), "in")
-        docs.repartition(3).write.mode("overwrite").parquet(inp)
-        _STREAM_QC_INPUT[sf_dir] = inp
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("stream_qc_"):
-            spark.catalog.dropTempView(t.name)
-    run_id = uuid.uuid4().hex[:12]
-    tbl = "stream_qc_" + run_id
-    while _STREAM_QC_CKPTS:
-        shutil.rmtree(_STREAM_QC_CKPTS.pop(), ignore_errors=True)
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgraft_qc_ckpt_{run_id}")
-    _STREAM_QC_CKPTS.append(ckpt)
+    inp = _staged_doc_thirds(spark, sf_dir)
     zero = F.lit(0).cast("long")
     if wmap:
         wlit = F.create_map(
@@ -3522,7 +3416,7 @@ def _stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch and the row measures serving, not trigger machinery
     # (the cross-batch streaming disciplines are carried by
     # stream_dedup_within_watermark and stream_rollup_1h)
-    q = (
+    scores = (
         spark.readStream.schema(docs.schema)
         .parquet(inp)
         .filter(F.col("text").isNotNull())
@@ -3536,15 +3430,8 @@ def _stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             (margin >= 0).alias("keep"),
         )
         .withColumn("agree", (F.col("teacher_y") * F.col("margin")) > 0)
-        .writeStream.format("memory")
-        .queryName(tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(tbl)
+    return drain_to_memory(scores, "stream_qc")
 
 
 _register(
@@ -3593,15 +3480,9 @@ FROM lab l LEFT JOIN sc USING (doc_id)
 # --------------------------------------------------------------------------
 
 _QC_STREAM_TRAIN_ITERS = 4
-_STREAM_QC_TRAIN_INPUT: dict[str, str] = {}
-_STREAM_QC_TRAIN_SCRATCH: list[str] = []
 
 
 def _stream_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from crypto_data_ingestion_module_spark.operators.linear import (
         examples_frame,
     )
@@ -3611,23 +3492,17 @@ def _stream_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats, labels = _qc_feats_labels(spark, sf_dir)
     ex = examples_frame(feats, labels)
-    inp = _STREAM_QC_TRAIN_INPUT.get(sf_dir)
-    if inp is None:
-        inp = os.path.join(
-            tempfile.mkdtemp(prefix="sgraft_stream_qct_"), "in"
-        )
-        ex.repartition(2).write.mode("overwrite").parquet(inp)
-        _STREAM_QC_TRAIN_INPUT[sf_dir] = inp
-    while _STREAM_QC_TRAIN_SCRATCH:
-        shutil.rmtree(_STREAM_QC_TRAIN_SCRATCH.pop(), ignore_errors=True)
-    ckroot = tempfile.mkdtemp(prefix="sgraft_stream_qct_ck_")
-    _STREAM_QC_TRAIN_SCRATCH.append(ckroot)
+    inp = staged(
+        "qct",
+        sf_dir,
+        lambda: [ex.filter(F.col("_k") % 2 == i) for i in range(2)],
+    )
     w = stream_train_perceptron(
         spark,
         inp,
         ex.schema,
         iterations=_QC_STREAM_TRAIN_ITERS,
-        checkpoint_root=ckroot,
+        checkpoint_root=run_dir("qct"),
     )
     return spark.createDataFrame(
         sorted(w.items()), schema="bucket int, w long"
@@ -3965,14 +3840,8 @@ ORDER BY cnt DESC, tok
 # is one broadcast semi-join at read time.
 # --------------------------------------------------------------------------
 
-_STREAM_MG_FILES: dict[str, str] = {}
-_STREAM_MG_SCRATCH: list[str] = []
-
-
 def _stream_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         frequent_items_exact_from_partials,
@@ -3985,24 +3854,8 @@ def _stream_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    inp = _STREAM_MG_FILES.get(sf_dir)
-    if inp is None:
-        stage = tempfile.mkdtemp(prefix="sgraft_stream_mg_")
-        inp = os.path.join(stage, "docs_in")
-        os.makedirs(inp)
-        for i in range(3):
-            tmp = os.path.join(stage, f"_d{i}")
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            (f,) = [x for x in os.listdir(tmp) if x.endswith(".parquet")]
-            shutil.move(
-                os.path.join(tmp, f), os.path.join(inp, f"d{i}.parquet")
-            )
-        _STREAM_MG_FILES[sf_dir] = inp
-    while _STREAM_MG_SCRATCH:
-        shutil.rmtree(_STREAM_MG_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_mg_run_")
+    inp = _staged_doc_thirds(spark, sf_dir)
+    scratch = run_dir("mg")
     lake = os.path.join(scratch, "mg")
 
     def _toks(frame: DataFrame) -> DataFrame:
@@ -4029,7 +3882,6 @@ def _stream_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_HH_STORE_K,
     )
     q.awaitTermination()
-    _STREAM_MG_SCRATCH.append(scratch)
     out = frequent_items_exact_from_partials(
         _toks(docs).select("tok"),
         read_snapshot(spark, lake),
@@ -5181,14 +5033,8 @@ _register(
 # never a corpus rescan.
 # --------------------------------------------------------------------------
 
-_STREAM_DEDUP_FILES: dict[str, str] = {}
-_STREAM_DEDUP_SCRATCH: list[str] = []
-
-
 def _stream_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.streaming.dedup_stream import (
         read_dedup_pairs_md5,
@@ -5196,24 +5042,8 @@ def _stream_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    inp = _STREAM_DEDUP_FILES.get(sf_dir)
-    if inp is None:
-        stage = tempfile.mkdtemp(prefix="sgraft_stream_dedup_")
-        inp = os.path.join(stage, "docs_in")
-        os.makedirs(inp)
-        for i in range(3):
-            tmp = os.path.join(stage, f"_d{i}")
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            (f,) = [x for x in os.listdir(tmp) if x.endswith(".parquet")]
-            shutil.move(
-                os.path.join(tmp, f), os.path.join(inp, f"d{i}.parquet")
-            )
-        _STREAM_DEDUP_FILES[sf_dir] = inp
-    while _STREAM_DEDUP_SCRATCH:
-        shutil.rmtree(_STREAM_DEDUP_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_dedup_run_")
+    inp = _staged_doc_thirds(spark, sf_dir)
+    scratch = run_dir("dedup_pairs")
     lake = os.path.join(scratch, "lake")
     src = (
         spark.readStream.schema(docs.schema)
@@ -5229,7 +5059,6 @@ def _stream_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=3,
     )
     q.awaitTermination()
-    _STREAM_DEDUP_SCRATCH.append(scratch)
     return read_dedup_pairs_md5(spark, lake).select(
         "id_a", "id_b", "n_match", "est_jaccard"
     )

@@ -32,6 +32,12 @@ from crypto_data_ingestion_module_spark.functions.timeutil import (
 from crypto_data_ingestion_module_spark.operators.dedup import dedup_keep_last
 from crypto_data_ingestion_module_spark.operators.merge import merge_keep_last
 from crypto_data_ingestion_module_spark.operators.resample import resample_ohlcv
+from crypto_data_ingestion_module_spark.plans.stream_fixtures import (
+    drain_to_memory,
+    run_dir,
+    split_at_midpoint,
+    staged,
+)
 from crypto_data_ingestion_module_spark.session import configure, load_table
 
 
@@ -306,63 +312,28 @@ def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exists next to the unbounded MERGE.
 # --------------------------------------------------------------------------
 
-#: Input-manufacture cache: the duplicated parquet landing zone is the
-#: FIXTURE, not the operator under test — build it once per (process,
-#: sf_dir) so repeated bench runs measure the stream, not the setup
-#: write.  The checkpoint stays fresh per run (a reused checkpoint
-#: would make availableNow a no-op on the second run).
-_STREAM_DEDUP_INPUT: dict[str, str] = {}
-
-
 def _stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    inp = _STREAM_DEDUP_INPUT.get(sf_dir)
-    if inp is None:
-        inp = os.path.join(
-            tempfile.mkdtemp(prefix="sgraft_stream_dedup_"), "in"
-        )
-        ev.repartition(2).write.mode("overwrite").parquet(inp)
-        ev.filter(F.col("event_id") % 3 == 0).repartition(2).write.mode(
-            "append"
-        ).parquet(inp)
-        _STREAM_DEDUP_INPUT[sf_dir] = inp
-    # memory sinks pin their rows in driver memory for the lifetime of
-    # the temp view: drop the previous runs' views (their DataFrames
-    # are dead by the time a new run starts — bench/validate/driver all
-    # consume the result before re-invoking) so repeated runs do not
-    # accumulate result copies
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("stream_dedup_"):
-            spark.catalog.dropTempView(t.name)
-    run_id = uuid.uuid4().hex[:12]
-    tbl = "stream_dedup_" + run_id
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgraft_sd_ckpt_{run_id}")
-    q = (
+    # two id stripes of the originals, then two of the re-delivered third
+    inp = staged(
+        "dedup_wm",
+        sf_dir,
+        lambda: [
+            frame.filter(F.col("event_id") % 2 == i)
+            for frame in (ev, ev.filter(F.col("event_id") % 3 == 0))
+            for i in range(2)
+        ],
+    )
+    src = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(inp)
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark(["event_id"])
-        .writeStream.format("memory")
-        .queryName(tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    # the checkpoint (offsets + per-partition state-store files) is only
-    # needed while the drained query runs — never resumed — so remove it
-    # rather than leak one dir per invocation into the global tempdir
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(tbl).select(
+    return drain_to_memory(src, "stream_dedup").select(
         "event_id",
         F.unix_millis("ts").alias("ts_ms"),
         "user_id",
@@ -394,7 +365,7 @@ FROM events
 # streaming half of the continuous-aggregate stack finally gets a
 # driver receipt (streaming/rollup_stream.py was pytest-only through
 # r12).  Ticks arrive in 2 micro-batches (maxFilesPerTrigger=1 over a
-# randomly-split 2-file landing zone, so the second batch RE-MERGES
+# 2-file id-striped landing zone, so the second batch RE-MERGES
 # nearly every bucket the first one wrote); every batch merges its
 # ALGEBRAIC candle
 # partials into the snapshot lake (one atomic manifest commit per
@@ -414,19 +385,8 @@ FROM events
 # state lives in the lake, not in a state store.
 # --------------------------------------------------------------------------
 
-#: fixture cache (input landing zone) + previous runs' lake dirs.  The
-#: INPUT is the fixture and builds once per (process, sf_dir); the LAKE
-#: and checkpoint must be fresh per run (a reused lake would no-op on
-#: replayed batch ids), so each invocation tears down the previous
-#: run's dirs instead of leaking them for the process lifetime.
-_STREAM_ROLLUP_INPUT: dict[str, str] = {}
-_STREAM_ROLLUP_SCRATCH: list[str] = []
-
-
 def _stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.operators.rollup import (
         finalize,
@@ -439,18 +399,13 @@ def _stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    inp = _STREAM_ROLLUP_INPUT.get(sf_dir)
-    if inp is None:
-        inp = os.path.join(
-            tempfile.mkdtemp(prefix="sgraft_stream_rollup_"), "in"
-        )
-        ev.repartition(2).write.mode("overwrite").parquet(inp)
-        _STREAM_ROLLUP_INPUT[sf_dir] = inp
-    while _STREAM_ROLLUP_SCRATCH:
-        shutil.rmtree(_STREAM_ROLLUP_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_rollup_run_")
+    inp = staged(
+        "rollup",
+        sf_dir,
+        lambda: [ev.filter(F.col("event_id") % 2 == i) for i in range(2)],
+    )
+    scratch = run_dir("rollup")
     lake = os.path.join(scratch, "lake")
-    ckpt = os.path.join(scratch, "ckpt")
     src = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -459,7 +414,7 @@ def _stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_rollup(
         src,
         lake,
-        ckpt,
+        os.path.join(scratch, "ckpt"),
         3_600_000,
         keys=("event_type",),
         ts_col="ts",
@@ -468,11 +423,6 @@ def _stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak_col="event_id",
     )
     q.awaitTermination()
-    # the checkpoint dies with the drained query; the LAKE must outlive
-    # this call (the returned DataFrame reads it lazily), so it is torn
-    # down at the NEXT invocation instead
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _STREAM_ROLLUP_SCRATCH.append(scratch)
     part = read_rollup_snapshot(spark, lake).drop("date")
     return finalize(part, ["event_type"]).select(
         "bucket_ts",
@@ -547,16 +497,7 @@ GROUP BY bucket_ts, event_type
 # RESULT equals the batch result.
 # --------------------------------------------------------------------------
 
-_STREAM_SESS_INPUT: dict[str, str] = {}
-
-
 def _stream_sessions_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     from crypto_data_ingestion_module_spark.streaming.analytics import (
         user_sessions_stream,
     )
@@ -564,16 +505,9 @@ def _stream_sessions_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    inp = _STREAM_SESS_INPUT.get(sf_dir)
-    if inp is None:
-        root = tempfile.mkdtemp(prefix="sgraft_stream_sess_")
-        inp = os.path.join(root, "in")
-        os.makedirs(inp)
-        stats = ev.agg(
-            F.unix_millis(F.min("ts")).alias("lo"),
-            F.unix_millis(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        mid, hi = (stats["lo"] + stats["hi"]) // 2, stats["hi"]
+
+    def parts() -> list[DataFrame]:
+        early, late, hi = split_at_midpoint(ev)
         sentinel = spark.range(1).select(
             F.lit(-1).cast("long").alias("event_id"),
             (
@@ -583,52 +517,17 @@ def _stream_sessions_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).cast("long").alias("user_id"),
             F.lit(0.0).alias("value"),
         )
-        halves = [
-            ev.filter(F.unix_millis("ts") < mid),
-            ev.filter(F.unix_millis("ts") >= mid),
-            sentinel,
-        ]
-        now = time.time()
-        for i, part in enumerate(halves):
-            tmp = os.path.join(root, f"w{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            (src_file,) = [
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            ]
-            dst = os.path.join(inp, f"{i}.parquet")
-            shutil.move(os.path.join(tmp, src_file), dst)
-            # the file source replays oldest-mtime-first: pin the
-            # half-then-sentinel order explicitly
-            os.utime(dst, (now + 600 * i, now + 600 * i))
-        _STREAM_SESS_INPUT[sf_dir] = inp
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("stream_sess_"):
-            spark.catalog.dropTempView(t.name)
-    run_id = uuid.uuid4().hex[:12]
-    tbl = "stream_sess_" + run_id
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgraft_ss_ckpt_{run_id}")
+        return [early, late, sentinel]
+
     src = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
+        .parquet(staged("sess", sf_dir, parts))
     )
-    q = (
-        user_sessions_stream(src, gap="30 minutes", lateness="1 hour")
-        .writeStream.format("memory")
-        .queryName(tbl)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _STREAM_CANDLE_CKPTS.append(ckpt)  # same leak class, same sweep
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if ckpt in _STREAM_CANDLE_CKPTS:
-            _STREAM_CANDLE_CKPTS.remove(ckpt)
-    return spark.table(tbl).filter(F.col("user_id") >= 0).select(
+    sessions = user_sessions_stream(src, gap="30 minutes", lateness="1 hour")
+    return drain_to_memory(sessions, "stream_sess").filter(
+        F.col("user_id") >= 0
+    ).select(
         "user_id", "session_start", "session_end", "n_events", "total_value"
     )
 
@@ -693,20 +592,7 @@ FROM sess GROUP BY user_id, sid
 # the batch resample.
 # --------------------------------------------------------------------------
 
-_STREAM_CANDLE_INPUT: dict[str, str] = {}
-#: checkpoint dirs of in-flight/failed stateful-candle runs; swept by
-#: the atexit hook in plans/extensions.py (ADVICE r16: a run that
-#: raised before its own rmtree leaked sgraft_sc_ckpt_*)
-_STREAM_CANDLE_CKPTS: list[str] = []
-
-
 def _stream_candles_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     from crypto_data_ingestion_module_spark.streaming.stateful import (
         candles_from_ticks,
     )
@@ -718,16 +604,9 @@ def _stream_candles_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("qty"),
         F.col("event_id").alias("tick_id"),
     )
-    inp = _STREAM_CANDLE_INPUT.get(sf_dir)
-    if inp is None:
-        root = tempfile.mkdtemp(prefix="sgraft_stream_candle_")
-        inp = os.path.join(root, "in")
-        os.makedirs(inp)
-        stats = ticks.agg(
-            F.unix_millis(F.min("ts")).alias("lo"),
-            F.unix_millis(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        mid, hi = (stats["lo"] + stats["hi"]) // 2, stats["hi"]
+
+    def parts() -> list[DataFrame]:
+        early, late, hi = split_at_midpoint(ticks)
         sentinel = spark.range(1).select(
             F.lit("__sentinel__").alias("symbol"),
             (
@@ -738,57 +617,19 @@ def _stream_candles_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("qty"),
             F.lit(-1).cast("long").alias("tick_id"),
         )
-        halves = [
-            ticks.filter(F.unix_millis("ts") < mid),
-            ticks.filter(F.unix_millis("ts") >= mid),
-            sentinel,
-        ]
-        now = time.time()
-        for i, part in enumerate(halves):
-            tmp = os.path.join(root, f"w{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            (src_file,) = [
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            ]
-            dst = os.path.join(inp, f"{i}.parquet")
-            shutil.move(os.path.join(tmp, src_file), dst)
-            # the file source replays oldest-mtime-first: pin the
-            # half-then-sentinel order explicitly
-            os.utime(dst, (now + 600 * i, now + 600 * i))
-        _STREAM_CANDLE_INPUT[sf_dir] = inp
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("stream_candle_"):
-            spark.catalog.dropTempView(t.name)
-    run_id = uuid.uuid4().hex[:12]
-    tbl = "stream_candle_" + run_id
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgraft_sc_ckpt_{run_id}")
-    _STREAM_CANDLE_CKPTS.append(ckpt)
+        return [early, late, sentinel]
+
     src = (
         spark.readStream.schema(ticks.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
+        .parquet(staged("candle", sf_dir, parts))
     )
-    q = (
-        candles_from_ticks(
-            src, interval_ms=3_600_000, lateness="30 minutes"
-        )
-        .writeStream.format("memory")
-        .queryName(tbl)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    candles = candles_from_ticks(
+        src, interval_ms=3_600_000, lateness="30 minutes"
     )
-    # try/finally: a raising run must not leak its checkpoint (ADVICE
-    # r16); success removes it here, failure leaves it to the atexit
-    # sweep of _STREAM_CANDLE_CKPTS
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if ckpt in _STREAM_CANDLE_CKPTS:
-            _STREAM_CANDLE_CKPTS.remove(ckpt)
-    return spark.table(tbl).filter(F.col("symbol") != "__sentinel__").select(
+    return drain_to_memory(candles, "stream_candle").filter(
+        F.col("symbol") != "__sentinel__"
+    ).select(
         "symbol", "bucket_ts", "open", "high", "low", "close",
         "volume", "n_ticks",
     )
@@ -840,17 +681,8 @@ GROUP BY symbol, bucket_ts
 # commit cost is manifest machinery, independent of view history.
 # --------------------------------------------------------------------------
 
-#: staged batch files build once per (process, sf_dir); lake +
-#: checkpoints are fresh per run (a reused lake would no-op on replayed
-#: ids), torn down at the NEXT invocation (the returned DF is lazy).
-_STREAM_IVM_FILES: dict[str, tuple[str, str]] = {}
-_STREAM_IVM_SCRATCH: list[str] = []
-
-
 def _stream_ivm_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from crypto_data_ingestion_module_spark.operators.ivm import (
         read_join_view,
@@ -865,36 +697,17 @@ def _stream_ivm_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    staged = _STREAM_IVM_FILES.get(sf_dir)
-    if staged is None:
-        stage = tempfile.mkdtemp(prefix="sgraft_stream_ivm_")
-        lfiles = os.path.join(stage, "lfiles")
-        rfiles = os.path.join(stage, "rfiles")
-        os.makedirs(lfiles)
-        os.makedirs(rfiles)
-
-        def _stage(df, key, n, out_dir, tag):
-            for i in range(n):
-                tmp = os.path.join(stage, f"_{tag}{i}")
-                df.filter(F.col(key) % n == i).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                (f,) = [
-                    x for x in os.listdir(tmp) if x.endswith(".parquet")
-                ]
-                shutil.move(
-                    os.path.join(tmp, f),
-                    os.path.join(out_dir, f"{tag}{i}.parquet"),
-                )
-
-        _stage(left, "o_orderkey", 3, lfiles, "l")
-        _stage(right, "custkey", 2, rfiles, "r")
-        staged = (lfiles, rfiles)
-        _STREAM_IVM_FILES[sf_dir] = staged
-    lfiles, rfiles = staged
-    while _STREAM_IVM_SCRATCH:
-        shutil.rmtree(_STREAM_IVM_SCRATCH.pop(), ignore_errors=True)
-    scratch = tempfile.mkdtemp(prefix="sgraft_stream_ivm_run_")
+    lfiles = staged(
+        "ivm_left",
+        sf_dir,
+        lambda: [left.filter(F.col("o_orderkey") % 3 == i) for i in range(3)],
+    )
+    rfiles = staged(
+        "ivm_right",
+        sf_dir,
+        lambda: [right.filter(F.col("custkey") % 2 == i) for i in range(2)],
+    )
+    scratch = run_dir("ivm")
     lake = os.path.join(scratch, "lake")
     lin = os.path.join(scratch, "lin")
     rin = os.path.join(scratch, "rin")
@@ -919,13 +732,12 @@ def _stream_ivm_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # alternating sequential drains; the late left file lands AFTER the
     # right side exists so ΔA⋈B runs against non-empty B
-    _land(lfiles, ["l0", "l1"], lin)
+    _land(lfiles, ["0", "1"], lin)
     _drain(lin, "left", left.schema)
-    _land(rfiles, ["r0", "r1"], rin)
+    _land(rfiles, ["0", "1"], rin)
     _drain(rin, "right", right.schema)
-    _land(lfiles, ["l2"], lin)
+    _land(lfiles, ["2"], lin)
     _drain(lin, "left", left.schema)
-    _STREAM_IVM_SCRATCH.append(scratch)
     return read_join_view(spark, lake).select(
         "custkey", "o_orderkey", "o_totalprice", "c_mktsegment"
     )
@@ -953,24 +765,15 @@ def _stream_ivm_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join key.
 # --------------------------------------------------------------------------
 
-_STREAM_SSJ_INPUT: dict[str, tuple[str, str]] = {}
-
-
 def _stream_cross_venue_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     from crypto_data_ingestion_module_spark.streaming.join import (
         cross_venue_spread,
     )
 
     ev = _t(spark, sf_dir, "events")
 
-    def _venue(etype: str, tag: str) -> DataFrame:
-        return ev.filter(F.col("event_type") == etype).select(
+    def _venue(frame: DataFrame, etype: str, tag: str) -> DataFrame:
+        return frame.filter(F.col("event_type") == etype).select(
             F.col("user_id").cast("string").alias("symbol"),
             F.lit("15m").alias("interval"),
             F.col("ts").alias("timestamp"),
@@ -979,65 +782,26 @@ def _stream_cross_venue_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0).alias("volume"),
         )
 
-    sides = _STREAM_SSJ_INPUT.get(sf_dir)
-    if sides is None:
-        root = tempfile.mkdtemp(prefix="sgraft_stream_ssj_")
-        stats = ev.agg(
-            F.unix_millis(F.min("ts")).alias("lo"),
-            F.unix_millis(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        mid = (stats["lo"] + stats["hi"]) // 2
-        now = time.time()
-        dirs = []
-        for etype, tag in (("view", "a"), ("click", "b")):
-            d = os.path.join(root, tag)
-            os.makedirs(d)
-            side = _venue(etype, tag)
-            halves = [
-                side.filter(F.unix_millis("timestamp") < mid),
-                side.filter(F.unix_millis("timestamp") >= mid),
-            ]
-            for i, part in enumerate(halves):
-                tmp = os.path.join(root, f"_{tag}{i}")
-                part.coalesce(1).write.mode("overwrite").parquet(tmp)
-                (f,) = [
-                    x for x in os.listdir(tmp) if x.endswith(".parquet")
-                ]
-                dst = os.path.join(d, f"{i}.parquet")
-                shutil.move(os.path.join(tmp, f), dst)
-                os.utime(dst, (now + 600 * i, now + 600 * i))
-            dirs.append(d)
-        sides = tuple(dirs)
-        _STREAM_SSJ_INPUT[sf_dir] = sides
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith("stream_ssj_"):
-            spark.catalog.dropTempView(t.name)
-    run_id = uuid.uuid4().hex[:12]
-    tbl = "stream_ssj_" + run_id
-    ckpt = os.path.join(tempfile.gettempdir(), f"sgraft_ssj_ckpt_{run_id}")
-    schema = _venue("view", "a").schema
-    lhs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sides[0])
+    def _side(etype: str, tag: str) -> DataFrame:
+        # both sides split at the midpoint of ALL events, one boundary
+        inp = staged(
+            "ssj_" + tag,
+            sf_dir,
+            lambda: [_venue(h, etype, tag) for h in split_at_midpoint(ev)[:2]],
+        )
+        return (
+            spark.readStream.schema(_venue(ev, etype, tag).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+        )
+
+    spread = cross_venue_spread(
+        _side("view", "a"),
+        _side("click", "b"),
+        interval="15m",
+        lateness="30 minutes",
     )
-    rhs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sides[1])
-    )
-    q = (
-        cross_venue_spread(lhs, rhs, interval="15m", lateness="30 minutes")
-        .writeStream.format("memory")
-        .queryName(tbl)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(tbl).select(
+    return drain_to_memory(spread, "stream_ssj").select(
         "symbol",
         "interval",
         "bucket_ts",

@@ -989,13 +989,18 @@ def snapshot_append(
     batch appends NOTHING instead of relying on downstream dedup.  Same
     additive-evolution contract as the upsert: new columns widen the
     committed schema (the explicit-schema read path would otherwise
-    silently drop them forever), retypes are refused."""
-    def attempt(v: int | None, manifest: dict) -> _Write:
+    silently drop them forever), retypes are refused.  An empty frame
+    over an existing lake writes no file and commits no version (the
+    :func:`snapshot_upsert` rule); the bootstrap still commits version 1
+    so readers of a new table find one."""
+
+    def attempt(v: int | None, manifest: dict) -> _Write | None:
         cur = _manifest_schema(spark, root, manifest, v)
         evolved = _evolve_schema(cur, df.schema)
-        return _written(
+        write = _written(
             spark, root, _conform(df, evolved), evolved, partition_cols, ts_col, []
         )
+        return None if v is not None and not write.files else write
 
     return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 

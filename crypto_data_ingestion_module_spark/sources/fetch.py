@@ -130,7 +130,6 @@ def fetch_pages(
     manifest: DataFrame,
     adapter: Adapter,
     pacing: dict[str, float] | None = None,
-    mock_layout: bool = True,
 ) -> DataFrame:
     """Run the fetch kernel over a task manifest.
 

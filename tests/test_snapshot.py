@@ -937,6 +937,24 @@ def test_append_advances_seq_high_water(spark, tmp_path):
     assert got[T1] == 999.0
 
 
+def test_empty_append_commits_no_version(spark, tmp_path):
+    """An empty frame appended to an existing lake writes no file and
+    leaves the version where it was, like an empty upsert or merge."""
+    from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_append
+
+    root = str(tmp_path / "snap")
+    df = spark.createDataFrame(
+        [(T0, "a", 1.0), (T1, "a", 2.0), (T2, "b", 3.0)],
+        "bucket_ts timestamp, sym string, v double",
+    ).withColumn("date", F.to_date("bucket_ts"))
+    assert snapshot_append(spark, root, df, ["date"], ts_col="bucket_ts") == 1
+    for _ in range(2):
+        v = snapshot_append(spark, root, df.limit(0), ["date"], ts_col="bucket_ts")
+        assert v == 1
+    assert current_version(spark, root) == 1
+    assert read_snapshot(spark, root).count() == 3
+
+
 def test_delete_threads_ts_col_for_rewritten_file_stats(spark, tmp_path):
     """ADVICE r5: deleting from a lake keyed on a non-default time axis
     keeps per-file time stats for the rewritten files (pruning intact)."""
