@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     read_snapshot,
     snapshot_append,
+    snapshot_refresh,
 )
 
 # ---------------------------------------------------------------------------
@@ -384,69 +385,12 @@ def refresh_partials_overwrite(
     build_fn,
     partition_cols: Sequence[str],
 ) -> None:
-    """Fingerprint-gated ``snapshot_overwrite`` refresh for sketch-partial
-    lakes that have NO exact second pass (KMV bottom-k, Count-Min
-    counters): stale partials must be REPLACED, never absorbed.
-
-    The gate mirrors ``_serve_artifact`` (ADVICE r7/r9): only the NEWEST
-    ledger entry's fingerprint says "the live snapshot was built from
-    this data".  Bare membership of ``fingerprint`` in the whole
-    carried-forward replay ledger would also match a STALE fingerprint —
-    a source REVERT to a previously-seen size+mtime (e.g. a backup
-    restore) would be treated as a replay and the lake would serve
-    partials built from different data forever.  The committed
-    ``applied_id`` is salted with the version about to be written
-    (``{fp}#v{v+1}``), so a reverted fingerprint commits a FRESH
-    overwrite while concurrent builders that read the same head still
-    collapse onto one commit (same computed id -> one CommitConflict
-    winner, the loser's retry no-ops on ledger membership).
-
-    Legacy lakes whose ledger suffix was frozen SORTED (missing
-    ``applied_ids_evicted``) have no trustworthy newest entry: skip the
-    gate once and rebuild — the salted commit appends the first
-    arrival-ordered entry (same transition rule as ``_serve_artifact``).
-
-    Contract (ADVICE r10): ``fingerprint`` must not contain ``'#'``
-    (asserted) — the gate splits the newest applied_id on the first
-    ``'#'`` to recover the fingerprint, so an embedded ``'#'`` would
-    never match and force a full rebuild on every call.  Likewise, do
-    NOT mix append writers (``snapshot_append``, whose applied_ids are
-    batch ids, not ``fp#v`` pairs) with this refresh gate on one lake
-    root: an append's id at the ledger head never matches any
-    fingerprint, so every refresh after an append rebuilds from scratch
-    — wasteful, though never incorrect.
-    """
-    assert "#" not in fingerprint, (
-        "refresh_partials_overwrite: '#' is reserved as the "
-        f"fingerprint/version separator, got {fingerprint!r}"
-    )
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-        read_manifest,
-        snapshot_overwrite,
-    )
-
-    v = current_version(spark, root)
-    if v is not None:
-        man = read_manifest(spark, root, v)
-        ids = man.get("applied_ids", [])
-        frozen = man.get("applied_ids_frozen_n")
-        if frozen is None:
-            frozen = (
-                len(ids) if ids and "applied_ids_evicted" not in man else 0
-            )
-        all_frozen = bool(ids) and int(frozen) >= len(ids)
-        if (
-            ids
-            and not all_frozen
-            and ids[-1].split("#", 1)[0] == fingerprint
-        ):
-            return  # live snapshot already built from exactly this data
-    snapshot_overwrite(
-        spark,
-        root,
-        build_fn(),
-        partition_cols=partition_cols,
-        applied_id=f"{fingerprint}#v{(v or 0) + 1}",
-        ts_col="_none_",
+    """Fingerprint-gated refresh (``sinks.snapshot.snapshot_refresh``)
+    for sketch-partial lakes that have NO exact second pass (KMV
+    bottom-k, Count-Min counters): stale partials must be REPLACED, never
+    absorbed, and partials built from ``fingerprint`` are not rebuilt.
+    Do not mix append writers with this gate on one lake root: every
+    refresh after an append rebuilds."""
+    snapshot_refresh(
+        spark, root, fingerprint, build_fn, partition_cols, ts_col="_none_"
     )

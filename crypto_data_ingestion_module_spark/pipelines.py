@@ -60,8 +60,9 @@ def _progress(
     spark: SparkSession, lake_root: str, version: int
 ) -> tuple[DataFrame, str]:
     """Per-series ``last_collected_ts`` and ``n_candles`` of a committed
-    version, and their source: ``"manifest"`` when every live file has
-    stats, else ``"scan"`` (the same aggregate over the lake)."""
+    version, and their source: ``"manifest"`` when the manifest answers
+    (``snapshot_group_stats``), else ``"scan"`` (the same aggregate over
+    the lake)."""
     stats = snapshot_group_stats(read_manifest(spark, lake_root, version), SERIES)
     if stats is not None:
         return _local_progress(spark, stats), "manifest"
@@ -117,9 +118,8 @@ def backfill(
     from the committed version's manifest (per-file max timestamp and
     row count, ``sinks.snapshot.snapshot_group_stats``), so the work
     before the fetch and after the commit is metadata reads plus one
-    broadcast join, and ``progress`` is a local relation.  A lake with
-    files written before the manifest recorded row counts, or with a
-    NULL or empty series value, is scanned instead.  Each call logs one
+    broadcast join, and ``progress`` is a local relation.  A lake with a
+    NULL or empty series value is scanned instead.  Each call logs one
     ``backfill`` record (``streaming.metrics.log_event``) naming the
     watermark and progress sources (``"manifest"``, or ``"scan"`` when
     the lake was scanned), the committed version and the quarantined

@@ -1419,61 +1419,28 @@ def _serve_artifact(
     ``applied_id`` — a replayed build commits nothing, concurrent
     builders collapse onto one winner, and a regeneration of the source
     data triggers exactly one overwrite whose predecessor files
-    ``vacuum`` then collects.  Stale sibling SEMANTIC versions of the
-    same family are pruned on publish."""
+    ``vacuum`` then collects (``sinks.snapshot.snapshot_refresh``).
+    Stale sibling SEMANTIC versions of the same family are pruned on
+    publish."""
     import os
     import shutil
 
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        current_version,
-        read_manifest,
         read_snapshot,
-        snapshot_overwrite,
+        snapshot_refresh,
         vacuum,
     )
 
     root = _artifact_lake_root(sf_dir, family, version)
-    fp = _data_fingerprint(sf_dir)
-    v = current_version(spark, root)
-    if v is not None:
-        man = read_manifest(spark, root, v)
-        ids = man.get("applied_ids", [])
-        # CURRENT-content check: the newest ledger entry is the commit
-        # that produced the live snapshot, so only ITS fingerprint says
-        # "already built from this data".  Membership in the whole
-        # replay ledger would also match a STALE fingerprint (source
-        # data reverted to an earlier size+mtime, e.g. restored from a
-        # backup) and serve an artifact built from different data
-        # forever (ADVICE r7).  Ledger ids are fp#v<version-read>; bare
-        # fp matches pre-r8 artifact lakes.
-        #
-        # BUT "ids[-1] is the newest commit" only holds for the
-        # arrival-ordered suffix.  A pre-horizon legacy lake froze its
-        # ledger SORTED (snapshot.py), so while NO post-transition
-        # entry exists (frozen_n >= len(ids)) ids[-1] is merely the
-        # lexicographically largest id — a fingerprint revert matching
-        # it would serve a stale artifact, the exact failure this check
-        # targets (ADVICE r8).  Skip the serve check once and rebuild:
-        # the salted commit appends the first arrival-ordered entry.
-        frozen = man.get("applied_ids_frozen_n")
-        if frozen is None:
-            frozen = (
-                len(ids)
-                if ids and "applied_ids_evicted" not in man
-                else 0
-            )
-        all_frozen = bool(ids) and int(frozen) >= len(ids)
-        if ids and not all_frozen and ids[-1].split("#", 1)[0] == fp:
-            return read_snapshot(spark, root, v).drop("shard")
-    df = build_fn().withColumn("shard", F.lit("all"))
-    # version-salted applied_id: a reverted fingerprint must commit a
-    # FRESH overwrite (bare fp would be deduped by the ledger's replay
-    # membership check and keep serving the stale build), while
-    # concurrent builders that read the same head still collapse onto
-    # one commit because they compute the same id.
-    ver = snapshot_overwrite(
-        spark, root, df, partition_cols=("shard",), applied_id=f"{fp}#v{(v or 0) + 1}"
+    ver, rebuilt = snapshot_refresh(
+        spark,
+        root,
+        _data_fingerprint(sf_dir),
+        lambda: build_fn().withColumn("shard", F.lit("all")),
+        ("shard",),
     )
+    if not rebuilt:
+        return read_snapshot(spark, root, ver).drop("shard")
     vacuum(spark, root, keep=2)
     # Sibling SEMANTIC versions (older _CLUSTER_LAKE_VERSION-style dirs
     # of the same family) are pruned with a one-generation DEFERRAL

@@ -7,6 +7,7 @@ cluster deployment only overrides this one module.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Sequence
 
@@ -85,44 +86,48 @@ def get_spark(app_name: str = "crypto-spark", cpus: str | int | None = None) -> 
     return spark
 
 
+@functools.cache
+def _package_zip() -> str:
+    """This package's sources as a zip, built once per process in a
+    temp dir of its own that is removed at exit.  The dir is private
+    to the process: under a name shared across processes, one process's
+    exit would delete the zip another still serves to its executors."""
+    import atexit
+    import shutil
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    pkg_name = os.path.basename(pkg_dir)
+    tmp = tempfile.mkdtemp(prefix="sgraft_pkg_")
+    atexit.register(shutil.rmtree, tmp, True)
+    zpath = os.path.join(tmp, f"{pkg_name}.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.relpath(full, pkg_dir)
+                    zf.write(full, os.path.join(pkg_name, rel))
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
     Closures in mapInPandas/pandas_udf kernels reference module-level
     functions; workers unpickle them by importing the module, which only
     works if the package is on the *worker's* PYTHONPATH.  Shipping a zip
-    via ``addPyFile`` covers any launch directory locally and is exactly
-    what a real cluster deployment needs.
+    (:func:`_package_zip`) via ``addPyFile`` covers any launch directory
+    locally and is exactly what a real cluster deployment needs.
     """
     sc = spark.sparkContext
     if getattr(sc, "_cdim_pkg_shipped", False):
         return
-    import tempfile
-    import zipfile
-    import zlib
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    # cache key = path + content mtimes: crc32 (NOT salted hash()) so the
-    # path is stable across processes, and source edits invalidate the
-    # cached zip instead of shipping stale code to executors
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        if "__pycache__" in root:
-            continue
-        for f in sorted(files):
-            if f.endswith(".py"):
-                full = os.path.join(root, f)
-                sources.append((full, int(os.path.getmtime(full))))
-    digest = zlib.crc32(repr((pkg_dir, sources)).encode())
-    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}_{digest:08x}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for full, _mt in sources:
-                rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                zf.write(full, rel)
     try:
-        sc.addPyFile(zpath)
+        sc.addPyFile(_package_zip())
     except Exception:  # pragma: no cover - e.g. Connect sessions
         pass
     sc._cdim_pkg_shipped = True

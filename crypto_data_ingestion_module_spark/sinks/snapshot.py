@@ -5,8 +5,9 @@ writer a thin attempt over one shared transaction (``_transact``): the
 candle lake (K1/K2: the reference's partitioned day-files and keep-last
 MERGE, crypto_collector.py:514-558) by ``snapshot_upsert``, the rollup
 partials by ``snapshot_merge_partitions``, the sketch, IVM and streamed
-ANN stores by ``snapshot_append``, and served artifacts by
-``snapshot_overwrite``; ``snapshot_delete`` removes rows.  The reference
+ANN stores by ``snapshot_append``, and served artifacts and sketch
+partials by ``snapshot_overwrite`` behind the fingerprint gate
+``snapshot_refresh``; ``snapshot_delete`` removes rows.  The reference
 overwrites its day-file in place (542-556): one process, no concurrent
 readers, and a kill mid-write truncates the file.
 
@@ -45,6 +46,23 @@ directories; they resolve a MANIFEST through a version log:
 * Old versions stay readable (time travel) until ``vacuum`` drops
   manifests older than ``keep`` and deletes data files no retained
   manifest references.
+
+A manifest has one format, built by ``_transact`` for every writer:
+
+* ``version``: its own number;
+* ``partitions``: the live data files, grouped by ``c=v/...`` partition
+  key;
+* ``file_stats``: per file, ``ts_min_us``, ``ts_max_us`` and ``rows`` of
+  the write's time column (empty for a lake without one);
+* ``schema``: the table StructType as JSON, so no read opens a footer;
+* ``partition_cols``: the lake's partitioning;
+* ``applied_ids``: the replay ledger, the newest ``APPLIED_IDS_RETAIN``
+  batch ids in arrival order, and ``applied_ids_evicted``, how many ids
+  aged out of it;
+* ``max_ingest_seq``: the high-water ``_ingest_seq`` of the rows, once a
+  committed batch carried that column.
+
+Readers ignore any other key.
 
 At 100 TB the manifest is bounded by file count, not rows, and the upsert
 reads and writes only the files its keys can collide with.  Exactly-once
@@ -105,37 +123,17 @@ MAX_FILES_PER_PARTITION = 16
 
 def _applied_ids_next(
     manifest: dict, applied_id: str | None
-) -> tuple[list[str], int, int]:
-    """The next manifest's bounded replay ledger.
-
-    Returns ``(ids, evicted_total, frozen_n)``: the arrival-ordered id
-    list truncated to the newest ``APPLIED_IDS_RETAIN`` post-transition
-    entries, the cumulative count of ids ever evicted (carried forward
-    so operators can see that the ledger has compacted), and the length
-    of the frozen legacy prefix.  Arrival order — not the sorted order
-    older manifests stored — is what makes "newest N" a replay HORIZON
-    rather than an arbitrary lexicographic sample.
-
-    A manifest written before the horizon existed (no
-    ``applied_ids_evicted`` key) stored its ledger SORTED, so "newest N"
-    truncation would actually evict the lexicographically smallest ids —
-    possibly genuinely recent ones, whose replay would then re-apply
-    (ADVICE r7).  The transition commit therefore FREEZES the inherited
-    ledger whole (bounded: it never grows again) and the horizon bounds
-    only ids appended after the transition.
-    """
+) -> tuple[list[str], int]:
+    """The next manifest's bounded replay ledger: ``(ids, evicted)``, the
+    arrival-ordered ids with ``applied_id`` appended, truncated to the
+    newest ``APPLIED_IDS_RETAIN``, and the cumulative count of ids ever
+    evicted (carried forward so operators can see that the ledger has
+    compacted)."""
     ids = list(manifest.get("applied_ids", []))
-    frozen = manifest.get("applied_ids_frozen_n")
-    if frozen is None:
-        legacy = bool(ids) and "applied_ids_evicted" not in manifest
-        frozen = len(ids) if legacy else 0
-    frozen = int(frozen)
     if applied_id is not None and applied_id not in ids:
         ids.append(applied_id)
-    suffix = ids[frozen:]
-    evicted = max(0, len(suffix) - APPLIED_IDS_RETAIN)
-    total = int(manifest.get("applied_ids_evicted", 0)) + evicted
-    return ids[:frozen] + suffix[evicted:], total, frozen
+    evicted = max(0, len(ids) - APPLIED_IDS_RETAIN)
+    return ids[evicted:], int(manifest.get("applied_ids_evicted", 0)) + evicted
 
 
 class CommitConflict(RuntimeError):
@@ -480,13 +478,22 @@ def commit_version(
     _publish_if_absent(spark, fs, tmp, final)
 
 
-def snapshot_files(spark: SparkSession, root: str,
-                   version: int | None = None) -> list[str]:
+def _manifest_at(spark: SparkSession, root: str, version: int | None) -> dict:
+    """The manifest of ``version``, the current one when None."""
     v = current_version(spark, root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshot versions under {root}")
-    man = read_manifest(spark, root, v)
-    return [f for fl in man["partitions"].values() for f in fl]
+    return read_manifest(spark, root, v)
+
+
+def _live_files(manifest: dict) -> list[str]:
+    """Every data file ``manifest`` lists; none for a new lake."""
+    return [f for fl in manifest.get("partitions", {}).values() for f in fl]
+
+
+def snapshot_files(spark: SparkSession, root: str,
+                   version: int | None = None) -> list[str]:
+    return _live_files(_manifest_at(spark, root, version))
 
 
 def _file_time_stats(
@@ -534,46 +541,35 @@ def _read_files(
     spark: SparkSession,
     root: str,
     files: list[str],
-    schema=None,
-    partition_cols: Sequence[str] | None = None,
+    schema,
+    partition_cols: Sequence[str],
 ) -> DataFrame:
     """Exact-file-list read: no directory listing (in-flight writers are
     invisible), no partition inference (see ``_PCOPY``) — the partition
     values come back from inside the files with their written types.
 
-    With ``schema`` (the manifest-stored table StructType) and
-    ``partition_cols``, the scan is planned with an EXPLICIT schema —
-    zero parquet footers are opened, which is the difference between
-    O(1) and O(file-count) planning on a many-partition snapshot
+    The scan is planned with ``schema``, the manifest-stored table
+    StructType, so zero parquet footers are opened: the difference
+    between O(1) and O(file-count) planning on a many-partition snapshot
     (measured 2x on a 9,600-partition bootstrap).  Files written before
-    an additive evolution simply read NULL for the new columns, exactly
-    as the mergeSchema path resolved them.  Without ``schema`` (legacy
-    manifests), fall back to mergeSchema inference."""
+    an additive evolution read NULL for the new columns; an empty
+    ``files`` reads an empty frame."""
     from pyspark.sql import types as T
 
-    paths = [f"{root.rstrip('/')}/{f}" for f in files]
-    if schema is not None and partition_cols is not None:
-        pset = set(partition_cols)
-        read_schema = T.StructType(
-            [
-                T.StructField(
-                    (_PCOPY + f.name) if f.name in pset else f.name,
-                    f.dataType,
-                    True,
-                )
-                for f in schema.fields
-            ]
-        )
-        df = spark.read.schema(read_schema).parquet(*paths)
-    else:
-        # mergeSchema: after additive schema evolution a snapshot
-        # legitimately mixes old and new file schemas; default inference
-        # reads ONE footer and could silently drop the evolved columns.
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    for c in list(df.columns):
-        if c.startswith(_PCOPY):
-            df = df.withColumnRenamed(c, c[len(_PCOPY):])
-    return df
+    pset = set(partition_cols)
+    read_schema = T.StructType(
+        [
+            T.StructField(
+                (_PCOPY + f.name) if f.name in pset else f.name,
+                f.dataType,
+                True,
+            )
+            for f in schema.fields
+        ]
+    )
+    return spark.read.schema(read_schema).parquet(
+        *[f"{root.rstrip('/')}/{f}" for f in files]
+    ).toDF(*schema.fieldNames())
 
 
 def _to_micros(t) -> int:
@@ -586,6 +582,18 @@ def _to_micros(t) -> int:
     return int(t)
 
 
+def _files_in_range(manifest: dict, lo: int, hi: int) -> list[str]:
+    """The live files whose ``[ts_min_us, ts_max_us]`` meets ``[lo, hi]``,
+    plus every file without stats (a lake without a time column)."""
+    stats = manifest["file_stats"]
+    return sorted(
+        f
+        for f in _live_files(manifest)
+        if (st := stats.get(f)) is None
+        or (st["ts_min_us"] <= hi and st["ts_max_us"] >= lo)
+    )
+
+
 def snapshot_files_in_range(
     spark: SparkSession,
     root: str,
@@ -593,24 +601,9 @@ def snapshot_files_in_range(
     version: int | None = None,
 ) -> list[str]:
     """Data-skipping file selection: keep only files whose manifest
-    [ts_min, ts_max] interval intersects ``time_range`` (files missing
-    stats — e.g. written by an older layout — are conservatively
-    kept)."""
-    v = current_version(spark, root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no snapshot versions under {root}")
-    man = read_manifest(spark, root, v)
-    stats = man.get("file_stats", {})
+    [ts_min, ts_max] interval intersects ``time_range``."""
     lo, hi = _to_micros(time_range[0]), _to_micros(time_range[1])
-    out = []
-    for fl in man["partitions"].values():
-        for f in fl:
-            st = stats.get(f)
-            if st is None or (
-                st["ts_min_us"] <= hi and st["ts_max_us"] >= lo
-            ):
-                out.append(f)
-    return sorted(out)
+    return _files_in_range(_manifest_at(spark, root, version), lo, hi)
 
 
 def snapshot_group_stats(
@@ -622,12 +615,12 @@ def snapshot_group_stats(
 
     Keys are tuples of the decoded partition values in ``group_cols``
     order, as strings.  Returns None, and the caller then scans, when
-    any live file lacks stats or a row count (manifests written before
-    ``rows`` was recorded), or when a group value is NULL or empty:
-    Hive writes both to the default-partition directory, so the
-    manifest cannot tell them apart, while the files keep them distinct.
+    any live file lacks stats (a lake without a time column), or when a
+    group value is NULL or empty: Hive writes both to the
+    default-partition directory, so the manifest cannot tell them apart,
+    while the files keep them distinct.
     """
-    stats = manifest.get("file_stats", {})
+    stats = manifest["file_stats"]
     out: dict[tuple, tuple[int, int]] = {}
     for part, files in manifest["partitions"].items():
         values = _partition_values(part)
@@ -640,7 +633,7 @@ def snapshot_group_stats(
             return None
         for f in files:
             st = stats.get(f)
-            if st is None or "rows" not in st:
+            if st is None:
                 return None
             hi, n = out.get(key, (st["ts_max_us"], 0))
             out[key] = (max(hi, st["ts_max_us"]), n + st["rows"])
@@ -663,29 +656,19 @@ def read_snapshot(
     then applies the exact predicate, so results equal a full read +
     filter while IO is bounded by the files that can match.
     """
-    v = current_version(spark, root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no snapshot versions under {root}")
-    man = read_manifest(spark, root, v)
-    pcols = man.get("partition_cols")
-    sch = None
-    if man.get("schema") and pcols:
-        from pyspark.sql import types as T
-
-        sch = T.StructType.fromJson(man["schema"])
-
-    def _rd(fl):
-        return _read_files(spark, root, fl, sch, pcols)
-
+    man = _manifest_at(spark, root, version)
     if time_range is None:
-        return _rd(snapshot_files(spark, root, v))
-    files = snapshot_files_in_range(spark, root, time_range, v)
-    if not files:
-        full = _rd(snapshot_files(spark, root, v))
-        return full.filter(F.lit(False))
-    lo, hi = _to_micros(time_range[0]), _to_micros(time_range[1])
+        files = _live_files(man)
+    else:
+        lo, hi = _to_micros(time_range[0]), _to_micros(time_range[1])
+        files = _files_in_range(man, lo, hi)
+    df = _read_files(
+        spark, root, files, _manifest_schema(man), man["partition_cols"]
+    )
+    if time_range is None:
+        return df
     us = F.unix_micros(F.col(ts_col))
-    return _rd(files).filter((us >= F.lit(lo)) & (us <= F.lit(hi)))
+    return df.filter((us >= F.lit(lo)) & (us <= F.lit(hi)))
 
 
 def _check_partition_cols(manifest: dict, partition_cols: Sequence[str]) -> None:
@@ -731,26 +714,11 @@ def _frame_seq(df: DataFrame) -> int | None:
     return int(df.agg(F.max(INGEST_SEQ).alias("m")).first()["m"] or 0)
 
 
-def _seq_high_water(
-    spark: SparkSession, root: str, manifest: dict, seq: int | None
-) -> int | None:
+def _seq_high_water(manifest: dict, seq: int | None) -> int | None:
     """The arrival-order high-water mark to commit: the manifest's value,
     raised to ``seq``, the written batch's own max(_ingest_seq) (None when
-    the batch has no such column) — otherwise a later upsert could stamp
-    batch_seq <= existing seqs and keep-last would prefer stale rows.
-
-    When the PRIOR manifest lacks the key (a legacy lake) but the batch
-    carries ``_ingest_seq``, HEAL by paying the full-lake max() read
-    ONCE here and committing it; the value is stored into ``manifest``
-    so a second call in the same attempt does not read again.  The
-    batch's own max is NOT a safe substitute: a merge/append frame covers
-    only the touched partitions, so its max can understate seqs living
-    elsewhere in the lake, and a subsequent upsert's
-    ``batch_seq = value + 1`` would then stamp new rows BELOW existing
-    ones — keep-last would prefer stale data."""
-    if manifest and seq is not None and manifest.get("max_ingest_seq") is None:
-        lake = read_snapshot(spark, root, int(manifest["version"]))
-        manifest["max_ingest_seq"] = _frame_seq(lake)
+    the batch has no such column), so a later upsert stamps its rows
+    above every stored one; None when both are None."""
     hi = manifest.get("max_ingest_seq")
     if hi is None and seq is None:
         return None
@@ -770,22 +738,13 @@ def _conform(df: DataFrame, schema) -> DataFrame:
     return df.select(*cols)
 
 
-def _manifest_schema(
-    spark: SparkSession, root: str, manifest: dict, version: int | None
-):
-    """The snapshot's table schema: manifest-stored (the Delta-style
-    answer — zero footer reads at any file count) with a legacy fallback
-    that derives it from the files once; empty for a new lake (an empty
-    manifest)."""
+def _manifest_schema(manifest: dict):
+    """The snapshot's table schema, stored in the manifest (the
+    Delta-style answer: zero footer reads at any file count); empty for
+    a new lake (an empty manifest)."""
     from pyspark.sql import types as T
 
-    if not manifest:
-        return T.StructType([])
-    if manifest.get("schema"):
-        return T.StructType.fromJson(manifest["schema"])
-    return _read_files(
-        spark, root, snapshot_files(spark, root, version)
-    ).schema
+    return T.StructType.fromJson(manifest["schema"]) if manifest else T.StructType([])
 
 
 def _partition_files(manifest: dict, keys: set[str]) -> list[str]:
@@ -802,16 +761,12 @@ def _read_live(
     files: list[str],
     schema,
 ) -> DataFrame:
-    """Manifest-pruned read of exactly ``files`` — a write's input never
-    scales with snapshot size, only with the files it must rewrite.
-    Conformed to the table schema so pre-evolution files union cleanly."""
+    """Manifest-pruned read of exactly ``files`` with the table
+    ``schema``: a write's input never scales with snapshot size, only
+    with the files it must rewrite."""
     if not files:
-        return _conform(spark.createDataFrame([], schema), schema)
-    explicit = schema if manifest.get("schema") else None
-    return _conform(
-        _read_files(spark, root, files, explicit, manifest.get("partition_cols")),
-        schema,
-    )
+        return spark.createDataFrame([], schema)
+    return _read_files(spark, root, files, schema, manifest["partition_cols"])
 
 
 class _Write(NamedTuple):
@@ -895,7 +850,7 @@ def _transact(
         stats.update(write.stats)
         for f in write.files:
             parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-        applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
+        applied, evicted = _applied_ids_next(manifest, applied_id)
         nxt = {
             "version": (v or 0) + 1,
             "partitions": parts,
@@ -903,12 +858,9 @@ def _transact(
             "schema": write.schema.jsonValue(),
             "partition_cols": list(partition_cols),
             "applied_ids": applied,
-            # horizon bookkeeping from birth — absence of these keys is
-            # the legacy-ledger marker (see _applied_ids_next)
             "applied_ids_evicted": evicted,
-            "applied_ids_frozen_n": frozen,
         }
-        hi = _seq_high_water(spark, root, manifest, write.seq)
+        hi = _seq_high_water(manifest, write.seq)
         if hi is not None:
             nxt["max_ingest_seq"] = hi
         try:
@@ -963,7 +915,7 @@ def snapshot_merge_partitions(
                 keys = set(_touched_partitions(batch, partition_cols, ts_col=None))
                 if not keys:
                     return None
-                schema = _manifest_schema(spark, root, manifest, v)
+                schema = _manifest_schema(manifest)
                 replaced = _partition_files(manifest, keys)
                 current = _read_live(spark, root, manifest, replaced, schema)
             merged = merge_fn(current, batch)
@@ -995,8 +947,7 @@ def snapshot_append(
     so readers of a new table find one."""
 
     def attempt(v: int | None, manifest: dict) -> _Write | None:
-        cur = _manifest_schema(spark, root, manifest, v)
-        evolved = _evolve_schema(cur, df.schema)
+        evolved = _evolve_schema(_manifest_schema(manifest), df.schema)
         write = _written(
             spark, root, _conform(df, evolved), evolved, partition_cols, ts_col, []
         )
@@ -1028,12 +979,53 @@ def snapshot_overwrite(
     frame's own: an overwrite IS the migration path."""
 
     def attempt(v: int | None, manifest: dict) -> _Write:
-        replaced = [f for fl in manifest.get("partitions", {}).values() for f in fl]
         return _written(
-            spark, root, df, df.schema, partition_cols, ts_col, replaced
+            spark, root, df, df.schema, partition_cols, ts_col,
+            _live_files(manifest),
         )
 
     return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
+
+
+def snapshot_refresh(
+    spark: SparkSession,
+    root: str,
+    fingerprint: str,
+    build_fn: Callable[[], DataFrame],
+    partition_cols: Sequence[str],
+    ts_col: str = "timestamp",
+) -> tuple[int, bool]:
+    """Fingerprint-gated :func:`snapshot_overwrite`: replace the lake's
+    content with ``build_fn()`` unless the live snapshot was built from
+    ``fingerprint`` (a cheap identity of the source data).  Returns the
+    live version and whether ``build_fn`` ran.
+
+    Only the NEWEST ledger entry says what the live snapshot was built
+    from.  Membership in the whole replay ledger would also match a
+    stale fingerprint, so a source reverted to an earlier one (a backup
+    restore) would be served a build of different data forever.  The
+    committed id is ``{fingerprint}#v{N}``, salted with the version N
+    about to be written: a reverted fingerprint commits a fresh
+    overwrite, while concurrent builders that read the same head compute
+    the same id and collapse onto one commit (the loser's retry finds it
+    in the ledger).  ``fingerprint`` must not contain ``'#'``.  Another
+    writer's id at the ledger head (an append's batch id) matches no
+    fingerprint, so a refresh after it rebuilds: wasteful, never wrong.
+    """
+    if "#" in fingerprint:
+        raise ValueError(
+            "'#' is reserved as the fingerprint/version separator, got "
+            f"{fingerprint!r}"
+        )
+    v = current_version(spark, root)
+    if v is not None:
+        ids = read_manifest(spark, root, v)["applied_ids"]
+        if ids and ids[-1].split("#", 1)[0] == fingerprint:
+            return v, False
+    applied_id = f"{fingerprint}#v{(v or 0) + 1}"
+    return snapshot_overwrite(
+        spark, root, build_fn(), partition_cols, applied_id, ts_col
+    ), True
 
 
 def snapshot_upsert(
@@ -1042,7 +1034,6 @@ def snapshot_upsert(
     root: str,
     key_cols: Sequence[str] = LOGICAL_KEY,
     partition_cols: Sequence[str] = PARTITION_COLS,
-    batch_seq: int | None = None,
     retries: int = 2,
     applied_id: str | None = None,
 ) -> int | None:
@@ -1051,8 +1042,10 @@ def snapshot_upsert(
     Keys are deduplicated within a partition (``key_cols`` plus
     ``partition_cols``; for the candle lake the same thing, since
     ``date`` is derived from ``timestamp``), the most recently arrived
-    row winning.  The first call on a new lake bootstraps version 1
-    through the same commit, against an empty manifest.
+    row winning: the greater ``_ingest_seq``, which a batch without the
+    column takes as one past the lake's ``max_ingest_seq`` (0 on a new
+    lake).  The first call on a new lake bootstraps version 1 through
+    the same commit, against an empty manifest.
 
     A concurrent writer winning the version race surfaces as the
     ``commit_version`` conflict error; the losing upsert is safely
@@ -1078,8 +1071,7 @@ def snapshot_upsert(
     with evaluated_once(_with_date(incoming)) as batch:
         touched = functools.cache(lambda: _touched_partitions(batch, partition_cols))
         attempt = functools.partial(
-            _upsert_write, spark, root, batch, touched, key_cols, partition_cols,
-            batch_seq,
+            _upsert_write, spark, root, batch, touched, key_cols, partition_cols
         )
         return _transact(spark, root, partition_cols, applied_id, retries, attempt)[0]
 
@@ -1126,7 +1118,6 @@ def _upsert_write(
     touched,
     key_cols: Sequence[str],
     partition_cols: Sequence[str],
-    batch_seq: int | None,
     v: int | None,
     manifest: dict,
 ) -> _Write | None:
@@ -1142,21 +1133,16 @@ def _upsert_write(
     exchange.  A partition that read no file and landed in one new file
     takes that file's stats from ``touched()``; other new files get one
     stats aggregate.  The table schema and the arrival-order high-water
-    mark are manifest fields too (``schema``, ``max_ingest_seq``) — no
-    footer reads, no full-lake aggregate on the hot path (legacy
-    manifests without them fall back to one full read).  None for an
-    empty batch.
+    mark are manifest fields too (``schema``, ``max_ingest_seq``): no
+    footer reads, no full-lake aggregate.  None for an empty batch.
     """
     parts_now = touched()
     if not parts_now:
         return None
-    cur_schema = _manifest_schema(spark, root, manifest, v)
-    if batch_seq is None:
-        batch_seq = 0 if v is None else _seq_high_water(spark, root, manifest, 0) + 1
+    cur_schema = _manifest_schema(manifest)
+    stamp = 0 if v is None else _seq_high_water(manifest, 0) + 1
     if INGEST_SEQ not in incoming.columns:
-        incoming = incoming.withColumn(
-            INGEST_SEQ, F.lit(batch_seq).cast("long")
-        )
+        incoming = incoming.withColumn(INGEST_SEQ, F.lit(stamp).cast("long"))
 
     # Schema evolution, additive-only: a batch carrying NEW columns
     # widens the table (pre-existing rows read NULL there) instead of
@@ -1210,7 +1196,7 @@ def _upsert_write(
             scan += fl
     stats.update(_file_time_stats(spark, root, scan, evolved, partition_cols))
     seqs = [t["seq"] for t in parts_now.values() if t["seq"] is not None]
-    return _Write(rewrite, new_files, stats, evolved, max(seqs, default=batch_seq))
+    return _Write(rewrite, new_files, stats, evolved, max(seqs, default=stamp))
 
 
 def snapshot_delete(
@@ -1256,7 +1242,7 @@ def snapshot_delete(
         }
         if not keys:
             return None
-        schema = _manifest_schema(spark, root, manifest, v)
+        schema = _manifest_schema(manifest)
         replaced = _partition_files(manifest, keys)
         with evaluated_once(
             _read_live(spark, root, manifest, replaced, schema)

@@ -48,7 +48,12 @@ from crypto_data_ingestion_module_spark.sources.fetch import (
     fetch_pages,
     normalize_mock_pages,
 )
+from crypto_data_ingestion_module_spark.sources.venues import VENUE_INTERVALS
 from crypto_data_ingestion_module_spark.streaming.metrics import log_event
+
+#: (exchange, interval) -> the venue's native interval form, which the
+#: adapter puts in its request (``sources.http.build_request``).
+_NATIVE = {(ex, ivl): native for ex, ivl, native, *_ in VENUE_INTERVALS}
 
 
 def live_collection_stream(
@@ -71,7 +76,8 @@ def live_collection_stream(
     Each micro-batch: freeze the cycle boundary (max tick floored to
     ``tick_seconds``), gate each interval on that boundary (719-739),
     synthesize the fetch manifest for ``[boundary - interval, boundary)``
-    (686-690), run the same fetch/normalize/upsert path as backfill.
+    (686-690) with each venue's native interval form, run the same
+    fetch/normalize/upsert path as backfill.
 
     Each micro-batch with a tick logs one ``live_cycle`` record
     (``streaming.metrics.log_event``, no Spark job): the boundary in
@@ -108,8 +114,9 @@ def live_collection_stream(
         # interval just to evaluate a literal gate wastes a scheduler
         # round-trip every cycle
         gated = [i for i in intervals if should_collect_ms(boundary_ms, i)]
+        # a pair the venue dim does not list keeps the canonical form
         tasks = [
-            (symbol, interval, exchange, interval,
+            (symbol, interval, exchange, _NATIVE.get((exchange, interval), interval),
              300, boundary_ms - parse_interval_ms(interval), boundary_ms)
             for interval in gated
             for symbol in symbols

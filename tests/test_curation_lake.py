@@ -125,69 +125,3 @@ def test_serve_artifact_lake_refresh_and_replay(spark, tmp_path, monkeypatch):
     fps["fp"] = "fp-4"
     ext._serve_artifact(spark, SF_SMALL, "fam", "v1", build)
     assert not os.path.exists(os.path.join(fam_dir, "v0-old"))
-
-
-def test_serve_artifact_frozen_legacy_ledger_rebuilds_once(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r8: on a pre-horizon legacy lake the frozen ledger is
-    SORTED, so ids[-1] is the lexicographically largest id, not the
-    newest commit — a fingerprint revert matching it must NOT serve the
-    (stale) live artifact.  While the ledger has no post-transition
-    arrival-ordered entry, the serve check is skipped: one rebuild
-    stamps a salted arrival-ordered id, after which serving resumes."""
-    import json
-    import os
-
-    import crypto_data_ingestion_module_spark.plans.extensions as ext
-    from pyspark.sql import functions as F
-
-    monkeypatch.setattr(ext, "_ARTIFACTS_ROOT", str(tmp_path / "artifacts"))
-    fps = {"fp": "fp-z"}
-    monkeypatch.setattr(ext, "_data_fingerprint", lambda sf_dir: fps["fp"])
-    builds = {"n": 0}
-
-    def build():
-        builds["n"] += 1
-        return spark.range(3).withColumn("payload", F.lit(builds["n"]))
-
-    # live content ends up built from fp-a; ledger holds both ids
-    ext._serve_artifact(spark, SF_SMALL, "fam", "v1", build)
-    fps["fp"] = "fp-a"
-    ext._serve_artifact(spark, SF_SMALL, "fam", "v1", build)
-    assert builds["n"] == 2
-
-    # rewrite the head manifest as a pre-horizon legacy one: ledger
-    # SORTED, no applied_ids_evicted / applied_ids_frozen_n keys —
-    # lexicographic order puts the STALE fp-z id last even though the
-    # live snapshot was built from fp-a
-    root = ext._artifact_lake_root(SF_SMALL, "fam", "v1")
-    vdir = os.path.join(root, "_versions")
-    head = sorted(os.listdir(vdir))[-1]
-    mpath = os.path.join(vdir, head)
-    with open(mpath) as fh:
-        man = json.load(fh)
-    man["applied_ids"] = sorted(man["applied_ids"])
-    man.pop("applied_ids_evicted", None)
-    man.pop("applied_ids_frozen_n", None)
-    assert man["applied_ids"][-1].startswith("fp-z")
-    with open(mpath, "w") as fh:
-        json.dump(man, fh, sort_keys=True)
-    # drop the Hadoop local-FS checksum shadow — the direct rewrite
-    # above invalidated it and read_manifest goes through Hadoop
-    crc = os.path.join(vdir, f".{head}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    # data reverts to fp-z: ids[-1] matches, but on an all-frozen
-    # ledger that signal is meaningless — must REBUILD (old code served
-    # the fp-a artifact here)
-    fps["fp"] = "fp-z"
-    got = ext._serve_artifact(spark, SF_SMALL, "fam", "v1", build)
-    assert builds["n"] == 3
-    assert {r.payload for r in got.collect()} == {3}
-
-    # the rebuild stamped an arrival-ordered salted id: serving now
-    # works again without rebuilding
-    ext._serve_artifact(spark, SF_SMALL, "fam", "v1", build)
-    assert builds["n"] == 3

@@ -326,3 +326,49 @@ def test_python_symbol_dialects_match_column_expressions(spark):
         assert H.bitstamp_symbol(r.symbol) == r.bs, r.symbol
         assert H.bitfinex_symbol(r.symbol) == r.bf, r.symbol
         assert H.binanceus_symbol(r.symbol) == r.bn, r.symbol
+
+
+def test_live_cycle_requests_each_venue_in_its_native_interval(spark, tmp_path):
+    """One live cycle through the HTTP adapter sends each venue its own
+    interval form (the cycle once sent the canonical ``15m`` to all, on
+    which Coinbase and Bitstamp requests raise and Kucoin asks for an
+    unknown type), so every venue's candles reach the lake."""
+    import json
+
+    from crypto_data_ingestion_module_spark.sinks.snapshot import read_snapshot
+    from crypto_data_ingestion_module_spark.streaming.live import (
+        live_collection_stream,
+    )
+
+    payloads = _recorded_transport().payloads
+    log = tmp_path / "requests.jsonl"
+
+    def transport(url, params):
+        # the executor copies record to a file: their own state never
+        # reaches this process
+        with open(log, "a") as fh:
+            fh.write(json.dumps({"url": url, "params": params}) + "\n")
+        return payloads.get(url, (404, None))
+
+    lake = str(tmp_path / "lake")
+    ticks = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 1)
+        .option("startTimestamp", END_MS)
+        .option("advanceMillisPerBatch", 1000)
+        .load()
+    )
+    q = live_collection_stream(
+        spark, HttpExchangeAdapter(transport=transport), ["BTC-USDT"], ["15m"],
+        lake, str(tmp_path / "ckpt"), available_now=True, ticks=ticks,
+        normalizer=normalize_real_pages,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    got = read_snapshot(spark, lake).groupBy("exchange").count().collect()
+    assert {r.exchange: r["count"] for r in got} == dict.fromkeys(VENUE_NATIVE, 2)
+    sent = [json.loads(line) for line in log.read_text().splitlines()]
+    params = {r["url"]: r["params"] for r in sent}
+    coinbase = "https://api.exchange.coinbase.com/products/BTC-USD/candles"
+    assert params[coinbase]["granularity"] == 900
+    assert params["https://api.kucoin.com/api/v1/market/candles"]["type"] == "15min"

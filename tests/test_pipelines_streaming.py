@@ -695,42 +695,19 @@ def test_backfill_logs_one_record_per_call(spark, tmp_path, caplog):
     assert (noop["version"], noop["quarantined"]) == ("empty batch", 2)
 
 
-def test_backfill_scans_a_lake_without_row_counts(spark, tmp_path, caplog):
-    """A lake whose manifest lacks a file's row count (written before the
-    count was recorded) keeps the scan, with the same answer."""
-    import logging
-
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        commit_version,
-        read_manifest,
-    )
-
-    caplog.set_level(logging.INFO, logger="crypto_data_ingestion_module_spark")
-    lake = str(tmp_path / "lake")
-    end_ms = START_MS + 2 * DAY_MS
-    args = (_symbols(spark), _intervals(spark), end_ms, MockExchangeAdapter(), lake)
-    first = sorted(backfill(spark, *args)[0].collect())
-    legacy = read_manifest(spark, lake, 1)
-    for st in legacy["file_stats"].values():
-        del st["rows"]
-        break
-    legacy["version"] = 2
-    commit_version(spark, lake, legacy, 2)
-
-    progress, _ = backfill(spark, *args)
-    assert sorted(progress.collect()) == first
-    record = _backfill_records(caplog)[-1]
-    assert record["watermark_source"] == record["progress_source"] == "scan"
-
-
-def test_backfill_progress_keeps_empty_and_null_series_apart(spark, tmp_path):
+def test_backfill_progress_keeps_empty_and_null_series_apart(
+    spark, tmp_path, caplog
+):
     """Hive writes an empty-string and a NULL partition value to the same
     default-partition directory name, so the manifest cannot tell the two
     apart; the scan reads the values each file stores.  Progress over a
     lake holding an empty-string series and a NULL series must equal the
-    scan row for row."""
+    scan row for row, and the call logs that it scanned."""
+    import logging
+
     from crypto_data_ingestion_module_spark.sinks.snapshot import snapshot_upsert
 
+    caplog.set_level(logging.INFO, logger="crypto_data_ingestion_module_spark")
     lake = str(tmp_path / "lake")
     args = (
         _symbols(spark), _intervals(spark), START_MS + DAY_MS,
@@ -762,6 +739,8 @@ def test_backfill_progress_keeps_empty_and_null_series_apart(spark, tmp_path):
     got = sorted(progress.collect(), key=key)
     assert got == sorted(want.collect(), key=key)
     assert {r.symbol for r in got} >= {"", None}
+    record = _backfill_records(caplog)[-1]
+    assert record["watermark_source"] == record["progress_source"] == "scan"
 
 
 def test_backfill_manifest_broadcasts_the_grid(spark):

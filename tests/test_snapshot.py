@@ -162,7 +162,9 @@ def test_reader_sees_old_or_new_never_mixed(spark, tmp_path):
 
     # --- the real commit path (re-merges; the orphaned staged files above
     # stay invisible garbage until vacuum)
-    v = snapshot_upsert(spark, patch, root, batch_seq=6)
+    v = snapshot_upsert(
+        spark, patch.withColumn("_ingest_seq", F.lit(6).cast("long")), root
+    )
     new_state = _state(read_snapshot(spark, root))
     assert v == 2
     assert new_state != old_state
@@ -194,9 +196,9 @@ def test_vacuum_drops_only_unreferenced(spark, tmp_path):
     )
     snapshot_upsert(
         spark,
-        _candles(spark, [(111.0, 1.1, T0, "BTC-USDT", "coinbase", "15m")]),
+        _candles(spark, [(111.0, 1.1, T0, "BTC-USDT", "coinbase", "15m")])
+        .withColumn("_ingest_seq", F.lit(2).cast("long")),
         root,
-        batch_seq=2,
     )
     before = _state(read_snapshot(spark, root))
     v1_files = set(snapshot_files(spark, root, 1))
@@ -303,7 +305,12 @@ def test_writer_retries_on_lost_commit_race(spark, tmp_path, monkeypatch, writer
     """Optimistic concurrency: if another writer claims the next version
     between write and commit, the writer recomputes against the NEW
     current snapshot and lands on a later version with both writers'
-    effects: an overwrite then also replaces the competitor's file."""
+    effects: an overwrite then also replaces the competitor's file.
+
+    Every committed manifest has the one format: schema, partitioning,
+    ledger and eviction count, the seq high-water (every batch here
+    carries ``_ingest_seq``) and a row count for every live file of this
+    lake with a time column."""
     import crypto_data_ingestion_module_spark.sinks.snapshot as snap
 
     root = str(tmp_path / "snap")
@@ -315,7 +322,7 @@ def test_writer_retries_on_lost_commit_race(spark, tmp_path, monkeypatch, writer
 
     competitor = _candles(
         spark, [(500.0, 5.0, T2, "BTC-USDT", "coinbase", "15m")]
-    )
+    ).withColumn("_ingest_seq", F.lit(7).cast("long"))
     real_commit = snap.commit_version
     fired = {"n": 0}
 
@@ -323,7 +330,7 @@ def test_writer_retries_on_lost_commit_race(spark, tmp_path, monkeypatch, writer
         if fired["n"] == 0:
             fired["n"] += 1
             # another writer wins version 2 first
-            snap.snapshot_upsert(sp, competitor, r, batch_seq=7)
+            snap.snapshot_upsert(sp, competitor, r)
         return real_commit(sp, r, manifest, version)
 
     monkeypatch.setattr(snap, "commit_version", racing_commit)
@@ -336,6 +343,16 @@ def test_writer_retries_on_lost_commit_race(spark, tmp_path, monkeypatch, writer
         "delete": [500.0],
     }.get(writer, [100.0, 111.0, 500.0])
     assert [s[3] for s in state] == want
+    for version in range(1, v + 1):
+        man = read_manifest(spark, root, version)
+        assert {
+            "schema", "partition_cols", "applied_ids", "applied_ids_evicted",
+            "max_ingest_seq",
+        } <= man.keys(), version
+        assert "applied_ids_frozen_n" not in man, version
+        stats = man["file_stats"]
+        assert set(stats) == set(snapshot_files(spark, root, version)), version
+        assert all("rows" in st for st in stats.values()), version
 
 
 @pytest.mark.parametrize("writer", WRITERS)
@@ -617,9 +634,7 @@ def test_upsert_merge_input_is_manifest_pruned(spark, tmp_path):
     # a correction of the stored ETH candle collides with that file only
     rewrite = _files_to_rewrite(m1, touched(T0), append_ok=True)
     assert rewrite == m1["partitions"][eth]
-    pruned = _read_live(
-        spark, root, m1, rewrite, _manifest_schema(spark, root, m1, v1)
-    )
+    pruned = _read_live(spark, root, m1, rewrite, _manifest_schema(m1))
     got_files = {f.split(root, 1)[1].lstrip("/") for f in pruned.inputFiles()}
     assert got_files == set(rewrite)
     # a later candle of the same day collides with nothing; without the
@@ -1101,11 +1116,15 @@ def test_applied_ids_ledger_is_bounded(spark, tmp_path, monkeypatch):
     # 1,000-commit loop over the ledger fold itself: bounded throughout
     man = {"applied_ids": [], "applied_ids_evicted": 0}
     for i in range(1000):
-        ids, evicted, _frozen = snap._applied_ids_next(man, f"batch-{i:04d}")
+        ids, evicted = snap._applied_ids_next(man, f"batch-{i:04d}")
         man = {"applied_ids": ids, "applied_ids_evicted": evicted}
         assert len(man["applied_ids"]) <= 8
     assert man["applied_ids"] == [f"batch-{i:04d}" for i in range(992, 1000)]
     assert man["applied_ids_evicted"] == 992
+    # the always-0 frozen-prefix count that older manifests hold is ignored
+    assert snap._applied_ids_next(dict(man, applied_ids_frozen_n=0), "x") == (
+        snap._applied_ids_next(man, "x")
+    )
 
     # integration: a real lake under commit pressure keeps a bounded
     # arrival-ordered ledger and still rejects an IN-horizon duplicate
@@ -1170,89 +1189,6 @@ def test_evicted_applied_id_reapplies_and_keep_last_absorbs(
         applied_id="b0",
     )
     assert out == v + 1
-
-
-def test_legacy_sorted_ledger_is_frozen_not_truncated(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r7: a pre-horizon manifest stored its applied_ids SORTED,
-    so 'newest N' truncation on the transition commit would actually
-    evict the lexicographically smallest ids — possibly recent ones,
-    whose replay would then re-apply.  The transition must freeze the
-    inherited ledger whole and bound only post-transition arrivals."""
-    import crypto_data_ingestion_module_spark.sinks.snapshot as snap
-
-    monkeypatch.setattr(snap, "APPLIED_IDS_RETAIN", 4)
-
-    # legacy manifest: oversized SORTED ledger, no eviction bookkeeping
-    legacy_ids = sorted(f"job-{i:03d}" for i in range(10))
-    man = {"applied_ids": legacy_ids}
-    ids, evicted, frozen = snap._applied_ids_next(man, "zz-new-1")
-    assert frozen == 10
-    assert ids[:10] == legacy_ids  # nothing legacy evicted
-    assert ids[10:] == ["zz-new-1"]
-    assert evicted == 0
-
-    # subsequent bounded commits evict ONLY post-transition arrivals
-    man = {
-        "applied_ids": ids,
-        "applied_ids_evicted": evicted,
-        "applied_ids_frozen_n": frozen,
-    }
-    for i in range(2, 9):
-        ids, evicted, frozen = snap._applied_ids_next(man, f"zz-new-{i}")
-        man = {
-            "applied_ids": ids,
-            "applied_ids_evicted": evicted,
-            "applied_ids_frozen_n": frozen,
-        }
-    assert man["applied_ids"][:10] == legacy_ids  # frozen prefix intact
-    assert man["applied_ids"][10:] == [f"zz-new-{i}" for i in range(5, 9)]
-    assert man["applied_ids_evicted"] == 4  # zz-new-1..4 aged out
-
-    # integration: commit over a real legacy manifest — every frozen id
-    # still dedupes a replay afterwards
-    root = str(tmp_path / "snap")
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="m0",
-    )
-    v = current_version(spark, root)
-    old = read_manifest(spark, root, v)
-    legacy = {
-        k: val
-        for k, val in old.items()
-        if k not in ("applied_ids_evicted", "applied_ids_frozen_n")
-    }
-    legacy["applied_ids"] = sorted(legacy_ids + ["m0"])
-    legacy["version"] = v + 1
-    commit_version(spark, root, legacy, v + 1)
-    for i in range(6):  # push well past RETAIN=4
-        snapshot_upsert(
-            spark,
-            _candles(
-                spark, [(200.0 + i, 1.0, T0, "BTC-USDT", "coinbase", "15m")]
-            ),
-            root,
-            applied_id=f"zz-post-{i}",
-        )
-    v2 = current_version(spark, root)
-    man2 = read_manifest(spark, root, v2)
-    assert man2["applied_ids_frozen_n"] == 11
-    assert set(legacy_ids) <= set(man2["applied_ids"])
-    # a replay of ANY legacy-era id is still a no-op
-    out = snapshot_upsert(
-        spark,
-        _candles(spark, [(999.0, 9.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-        applied_id="job-000",
-    )
-    assert out == v2
-    assert not any(
-        o == 999.0 for (_, _, _, o, _) in _state(read_snapshot(spark, root))
-    )
 
 
 def test_beyond_horizon_replay_contract_upsert_and_append(
@@ -1339,61 +1275,6 @@ def test_beyond_horizon_replay_contract_upsert_and_append(
     after = read_snapshot(spark, root_a)
     assert after.count() == n_before + 1
     assert after.where(F.col("open") == 500.0).count() == 2
-
-
-def test_legacy_manifest_heals_max_ingest_seq_with_lake_wide_max(
-    spark, tmp_path
-):
-    """ADVICE r6: a legacy manifest (no max_ingest_seq) heals onto the
-    manifest fast path at the next merge/append commit — with the
-    LAKE-WIDE max, not the frame's own.  A frame covers only its touched
-    partitions, so its max can understate seqs living elsewhere; a later
-    upsert's batch_seq = healed+1 would then stamp new rows BELOW live
-    ones and keep-last would prefer stale data."""
-    from crypto_data_ingestion_module_spark.operators.merge import INGEST_SEQ
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        snapshot_append,
-    )
-
-    root = str(tmp_path / "snap")
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(100.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-    )
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(110.0, 1.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-    )
-    v = current_version(spark, root)
-    man = read_manifest(spark, root, v)
-    lake_hi = int(man["max_ingest_seq"])
-    assert lake_hi >= 1
-    # simulate a legacy lake: strip the high-water key from the manifest
-    legacy = {k: val for k, val in man.items() if k != "max_ingest_seq"}
-    legacy["version"] = v + 1
-    commit_version(spark, root, legacy, v + 1)
-    assert read_manifest(spark, root, v + 1).get("max_ingest_seq") is None
-    # append into a DIFFERENT partition with a deliberately LOW seq
-    from crypto_data_ingestion_module_spark.sinks.snapshot import (
-        _with_date,
-    )
-
-    low = _with_date(
-        _candles(spark, [(200.0, 1.0, T2, "BTC-USDT", "coinbase", "15m")])
-    ).withColumn(INGEST_SEQ, F.lit(0).cast("long"))
-    v2 = snapshot_append(spark, root, low, partition_cols=man["partition_cols"])
-    healed = read_manifest(spark, root, v2)["max_ingest_seq"]
-    assert healed == lake_hi  # lake-wide, not the frame's 0
-    # and the fast path now yields a batch_seq that supersedes live rows
-    snapshot_upsert(
-        spark,
-        _candles(spark, [(300.0, 3.0, T0, "BTC-USDT", "coinbase", "15m")]),
-        root,
-    )
-    got = _state(read_snapshot(spark, root))
-    assert any(ts == T0 and o == 300.0 for (_, _, ts, o, _) in got)
 
 
 def test_snapshot_overwrite_replaces_everything_and_keeps_ledger(
@@ -1635,8 +1516,9 @@ def test_group_stats_equal_a_scan_after_every_kind_of_commit(
 
 
 def test_group_stats_fall_back_without_row_counts(spark, tmp_path):
-    """A live file without ``rows`` (a manifest written before the count
-    was recorded) makes the helper answer None, so callers scan."""
+    """The manifest's per-series max timestamp and row count equal the
+    scan's, and grouping by a column that is not a partition column is
+    refused."""
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
         snapshot_group_stats,
     )
@@ -1657,7 +1539,5 @@ def test_group_stats_fall_back_without_row_counts(spark, tmp_path):
     assert snapshot_group_stats(man, ["symbol"]) == _scan_group_stats(
         spark, root, ["symbol"]
     )
-    del man["file_stats"][snapshot_files(spark, root)[0]]["rows"]
-    assert snapshot_group_stats(man, ["symbol"]) is None
     with pytest.raises(ValueError, match="partition columns"):
-        snapshot_group_stats(read_manifest(spark, root, 1), ["open"])
+        snapshot_group_stats(man, ["open"])
