@@ -23,7 +23,7 @@ Storage is the repo's snapshot lake (``sinks/snapshot.py``): each MG
 day/stratum batch is one ``snapshot_append`` with an ``applied_id``, so
 a replayed daily job commits nothing; the families without an exact
 second pass (KMV, Count-Min) are rebuilt whole through the
-fingerprint-gated :func:`refresh_partials_overwrite`.  Readers get
+fingerprint-gated ``sinks.snapshot.snapshot_refresh``.  Readers get
 snapshot isolation, and the partial tables inherit time travel +
 vacuum.  Partials are partitioned by the stratum column — a range read
 prunes to the touched partitions through the manifest, never scanning
@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_module_spark.sinks.snapshot import (
     read_snapshot,
     snapshot_append,
-    snapshot_refresh,
 )
 
 # ---------------------------------------------------------------------------
@@ -372,25 +371,3 @@ def cm_estimates_over_range(
     merged = p.groupBy("s", "b").agg(F.sum("c").alias("c"))
     return cm_point_estimates(merged, items, item_col, depth, width)
 
-
-# ---------------------------------------------------------------------------
-# Overwrite-refresh gate for the no-second-pass families (KMV, Count-Min)
-# ---------------------------------------------------------------------------
-
-
-def refresh_partials_overwrite(
-    spark: SparkSession,
-    root: str,
-    fingerprint: str,
-    build_fn,
-    partition_cols: Sequence[str],
-) -> None:
-    """Fingerprint-gated refresh (``sinks.snapshot.snapshot_refresh``)
-    for sketch-partial lakes that have NO exact second pass (KMV
-    bottom-k, Count-Min counters): stale partials must be REPLACED, never
-    absorbed, and partials built from ``fingerprint`` are not rebuilt.
-    Do not mix append writers with this gate on one lake root: every
-    refresh after an append rebuilds."""
-    snapshot_refresh(
-        spark, root, fingerprint, build_fn, partition_cols, ts_col="_none_"
-    )

@@ -4406,7 +4406,9 @@ def _kmv_from_partials_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         kmv_distinct_over_range,
         kmv_partials,
-        refresh_partials_overwrite,
+    )
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        snapshot_refresh,
     )
 
     ev = _t(spark, sf_dir, "events").select(
@@ -4417,7 +4419,7 @@ def _kmv_from_partials_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # version-salted, newest-entry-gated refresh (ADVICE r9): a source
     # REVERT to a previously-seen fingerprint commits a fresh overwrite
     # instead of serving stale partials off ledger membership.
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark,
         root,
         f"kmv-{_events_fingerprint(sf_dir)}",
@@ -4471,7 +4473,9 @@ def _token_cm_from_partials_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         cm_estimates_over_range,
         cm_sketch_partials,
-        refresh_partials_overwrite,
+    )
+    from crypto_data_ingestion_module_spark.sinks.snapshot import (
+        snapshot_refresh,
     )
 
     d = _t(spark, sf_dir, "documents")
@@ -4487,7 +4491,7 @@ def _token_cm_from_partials_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # version-salted, newest-entry-gated refresh (ADVICE r9): CM
     # counters are sums with no exact second pass, so a fingerprint
     # revert must REPLACE the lake, not no-op on ledger membership.
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark,
         root,
         f"cm-{_data_fingerprint(sf_dir)}",

@@ -993,7 +993,6 @@ def snapshot_refresh(
     fingerprint: str,
     build_fn: Callable[[], DataFrame],
     partition_cols: Sequence[str],
-    ts_col: str = "timestamp",
 ) -> tuple[int, bool]:
     """Fingerprint-gated :func:`snapshot_overwrite`: replace the lake's
     content with ``build_fn()`` unless the live snapshot was built from
@@ -1011,6 +1010,8 @@ def snapshot_refresh(
     in the ledger).  ``fingerprint`` must not contain ``'#'``.  Another
     writer's id at the ledger head (an append's batch id) matches no
     fingerprint, so a refresh after it rebuilds: wasteful, never wrong.
+    Refreshed artifacts (cluster and segment tables, sketch partials)
+    carry no time column, so their file stats are empty.
     """
     if "#" in fingerprint:
         raise ValueError(
@@ -1024,7 +1025,7 @@ def snapshot_refresh(
             return v, False
     applied_id = f"{fingerprint}#v{(v or 0) + 1}"
     return snapshot_overwrite(
-        spark, root, build_fn(), partition_cols, applied_id, ts_col
+        spark, root, build_fn(), partition_cols, applied_id
     ), True
 
 

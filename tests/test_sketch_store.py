@@ -2,6 +2,7 @@
 daily partials whose range merge EQUALS recompute-from-scratch — the
 100 TB monitoring discipline (VERDICT r6 item 5)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.sketch import (
@@ -15,7 +16,6 @@ from crypto_data_ingestion_module_spark.operators.sketch_store import (
     kmv_distinct_over_range,
     kmv_partials,
     quantiles_from_histogram,
-    refresh_partials_overwrite,
     store_mg_partials,
 )
 from crypto_data_ingestion_module_spark.session import load_table
@@ -23,6 +23,7 @@ from crypto_data_ingestion_module_spark.sinks.snapshot import (
     current_version,
     read_snapshot,
     snapshot_append,
+    snapshot_refresh,
 )
 from tests.conftest import SF_SMALL
 
@@ -162,7 +163,7 @@ def test_histogram_quantiles_merge_equals_scratch_and_bounds_error(
     ev = _events_with_day(spark)
     lo, hi, bins = 0.0, 1000.0, 200
     root = str(tmp_path / "hist")
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark,
         root,
         "hist-v1",
@@ -212,7 +213,7 @@ def test_kmv_partials_merge_equals_one_shot(spark, tmp_path):
         (F.col("id") % 3).cast("string").alias("day"),
         (F.col("id") % 997).cast("string").alias("u"),
     )
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark, root, "kmv-v1", lambda: kmv_partials(full, "u", "day", k=64),
         ("day",),
     )
@@ -253,7 +254,7 @@ def test_cm_partials_range_estimates_equal_from_scratch(spark, tmp_path):
         (F.col("id") % 4).cast("string").alias("day"),
         (F.col("id") % 311).cast("string").alias("u"),
     )
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark, root, "cm-v1",
         lambda: cm_sketch_partials(full, "u", "day", 4, 128), ("day",),
     )
@@ -335,7 +336,7 @@ def test_cm_double_append_inflates_and_overwrite_refresh_heals(
     assert doubled == {k: 2 * v for k, v in want.items()}
     assert doubled != want
 
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark,
         root,
         "cm-freshfp",
@@ -407,7 +408,6 @@ def test_refresh_gate_rebuilds_on_fingerprint_revert(spark, tmp_path):
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         kmv_distinct_over_range,
         kmv_partials,
-        refresh_partials_overwrite,
     )
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
         current_version,
@@ -425,9 +425,9 @@ def test_refresh_gate_rebuilds_on_fingerprint_revert(spark, tmp_path):
         return lambda: kmv_partials(df, "u", "day", k=32)
 
     # fpA -> fpB -> revert to fpA (same fingerprint as the first build)
-    refresh_partials_overwrite(spark, root, "kmv-fpA", build(corpus_a), ("day",))
-    refresh_partials_overwrite(spark, root, "kmv-fpB", build(corpus_b), ("day",))
-    refresh_partials_overwrite(spark, root, "kmv-fpA", build(corpus_a), ("day",))
+    snapshot_refresh(spark, root, "kmv-fpA", build(corpus_a), ("day",))
+    snapshot_refresh(spark, root, "kmv-fpB", build(corpus_b), ("day",))
+    snapshot_refresh(spark, root, "kmv-fpA", build(corpus_a), ("day",))
     got = kmv_distinct_over_range(spark, root, k=32).collect()[0]
     want = kmv_distinct_estimate(corpus_a, "u", 32).collect()[0]
     # the revert REPLACED fpB's partials (bare-fp ids would have no-op'd)
@@ -435,7 +435,7 @@ def test_refresh_gate_rebuilds_on_fingerprint_revert(spark, tmp_path):
     # a replayed refresh of the live fingerprint commits nothing (the
     # newest-entry gate short-circuits before any write)
     v = current_version(spark, root)
-    refresh_partials_overwrite(spark, root, "kmv-fpA", build(corpus_a), ("day",))
+    snapshot_refresh(spark, root, "kmv-fpA", build(corpus_a), ("day",))
     assert current_version(spark, root) == v
 
 
@@ -445,7 +445,6 @@ def test_refresh_gate_concurrent_builders_collapse(spark, tmp_path):
     # membership — the lake advances exactly one version.
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         kmv_partials,
-        refresh_partials_overwrite,
     )
     from crypto_data_ingestion_module_spark.sinks.snapshot import (
         current_version,
@@ -457,7 +456,7 @@ def test_refresh_gate_concurrent_builders_collapse(spark, tmp_path):
     df = spark.range(100).select(
         F.lit("d0").alias("day"), F.col("id").cast("string").alias("u")
     )
-    refresh_partials_overwrite(
+    snapshot_refresh(
         spark, root, "kmv-fp1", lambda: kmv_partials(df, "u", "day", k=16), ("day",)
     )
     v = current_version(spark, root)
@@ -488,7 +487,6 @@ def test_refresh_gate_random_fingerprint_sequences(spark, tmp_path):
     from crypto_data_ingestion_module_spark.operators.sketch_store import (
         kmv_distinct_over_range,
         kmv_partials,
-        refresh_partials_overwrite,
     )
 
     rnd = random.Random(1234)
@@ -506,9 +504,16 @@ def test_refresh_gate_random_fingerprint_sequences(spark, tmp_path):
     seq = [rnd.choice(sorted(corpora)) for _ in range(8)]
     for fp in seq:
         df = corpora[fp]
-        refresh_partials_overwrite(
+        snapshot_refresh(
             spark, root, f"kmv-{fp}",
             lambda df=df: kmv_partials(df, "u", "day", k=32), ("day",),
         )
         got = kmv_distinct_over_range(spark, root, k=32).collect()[0]
         assert got["distinct_est"] == expected[fp], (seq, fp)
+
+
+def test_refresh_gate_refuses_a_reserved_separator(tmp_path):
+    # '#' separates fingerprint from version in the committed id, so a
+    # fingerprint carrying one is refused before any Spark call.
+    with pytest.raises(ValueError, match="reserved"):
+        snapshot_refresh(None, str(tmp_path), "a#b", lambda: None, ())
