@@ -115,7 +115,7 @@ SWEEP_SAMPLE_TWINS: tuple[str, ...] = (
     "stream_frequent_tokens",  # drain + partial-commit machinery
     #   (carried by stream_rollup_1h) + the tokenize/two-pass axes
     #   (carried by frequent_tokens_exact, measured)
-    "stream_dedup_pairs",  # drain + batch-partition machinery (carried
+    "stream_dedup_pairs",  # drain + snapshot-commit machinery (carried
     #   by stream_rollup_1h) + the md5-MinHash banding axes (carried by
     #   minhash_lsh_pairs_md5... which is itself a twin; the still-
     #   measured cost carriers are minhash_lsh_pairs (xxhash twin, same

@@ -62,9 +62,7 @@ def _read_side(spark: SparkSession, root: str) -> DataFrame | None:
 
     if current_version(spark, root) is None:
         return None
-    return read_snapshot(spark, root, ts_col="_none_").drop(
-        "bucket", "_ingest_seq"
-    )
+    return read_snapshot(spark, root).drop("bucket", "_ingest_seq")
 
 
 def _append(
@@ -80,7 +78,6 @@ def _append(
         _bucketed(df, key),
         partition_cols=("bucket",),
         applied_id=applied_id,
-        ts_col="_none_",
     )
 
 

@@ -1601,7 +1601,7 @@ SELECT * FROM (
 # heads carry each other's cost axes).  Decontamination (a stateless
 # per-batch filter, oracle-receipted by decontaminate_docs) is off
 # here to keep the row's axis the stateful curation machinery.
-# Crash-replay idempotence (batch_id dynamic-partition overwrite) and
+# Crash-replay idempotence (skipped by the manifest ledger) and
 # the decontaminated settle equality stay pytest-pinned
 # (tests/test_curate_stream).
 # 100 TB shape: per batch the band probe equi-joins the batch's rows
@@ -4992,8 +4992,8 @@ _register(
 # (incremental_minhash_md5_pairs — the oracle-pairable Kirsch–
 # Mitzenmacher family; the xxhash64 production twin stays rows-only by
 # the same contract as minhash_lsh_pairs) and appends its band rows,
-# pair log and index both batch-partitioned with dynamic overwrite
-# (replay replaces exactly its own output).
+# pair log and index both snapshot lakes (a replay is skipped by the
+# manifest ledger).
 # Why this is hash-checkable: band keys are pure per-document
 # functions, so an unordered pair surfaces exactly once — in the batch
 # carrying its LATER side — and the accumulated pair log over ANY

@@ -4,12 +4,13 @@ Every table this engine keeps commits through this one protocol, each
 writer a thin attempt over one shared transaction (``_transact``): the
 candle lake (K1/K2: the reference's partitioned day-files and keep-last
 MERGE, crypto_collector.py:514-558) by ``snapshot_upsert``, the rollup
-partials by ``snapshot_merge_partitions``, the sketch, IVM and streamed
-ANN stores by ``snapshot_append``, and served artifacts and sketch
-partials by ``snapshot_overwrite`` behind the fingerprint gate
-``snapshot_refresh``; ``snapshot_delete`` removes rows.  The reference
-overwrites its day-file in place (542-556): one process, no concurrent
-readers, and a kill mid-write truncates the file.
+partials by ``snapshot_merge_partitions``, the sketch, IVM, streamed
+ANN, streamed curation and md5-dedup stores by ``snapshot_append``, and
+served artifacts and sketch partials by ``snapshot_overwrite`` behind
+the fingerprint gate ``snapshot_refresh``; ``snapshot_delete`` removes
+rows.  The reference overwrites its day-file in place (542-556): one
+process, no concurrent readers, and a kill mid-write truncates the
+file.
 
 This module gives the standard 100 TB answer — readers never list data
 directories; they resolve a MANIFEST through a version log:
@@ -347,11 +348,12 @@ def _write_data_files(
     Clustered, each task streams its partitions sequentially, one writer
     at a time.  The upsert passes ``cluster=False``: it applied
     :func:`_dir_columns` itself, and its keep-last merge already
-    hash-partitioned and sorted the rows by the directory values.
+    hash-partitioned and sorted the rows by the directory values.  An
+    unpartitioned lake has nothing to cluster and writes as it comes.
     """
     batch_dir = f"data/{uuid.uuid4().hex}"
     out = f"{root.rstrip('/')}/{batch_dir}"
-    if cluster:
+    if cluster and partition_cols:
         df = _dir_columns(df, partition_cols).repartition(
             *[F.col(c) for c in partition_cols]
         ).sortWithinPartitions(*partition_cols)

@@ -32,6 +32,9 @@ from crypto_data_ingestion_module_spark.sinks.snapshot import (
     read_snapshot,
     snapshot_append,
 )
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 
 def index_batch(
@@ -101,7 +104,6 @@ def index_batch(
         assigned.join(codes, "nid"),
         partition_cols=("list_id",),
         applied_id=f"ann-{batch_id}",
-        ts_col="_no_ts",
     )
 
 
@@ -123,31 +125,20 @@ def stream_index_embeddings(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start incremental index maintenance over an embedding stream."""
-    from crypto_data_ingestion_module_spark.streaming.identity import (
-        stream_qid,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # stream-scoped batch identity (see streaming/identity.py)
-        qid = stream_qid(checkpoint)
-        index_batch(
+    return start_ledgered_sink(
+        source,
+        checkpoint,
+        lambda batch_df, bid: index_batch(
             batch_df,
             reference,
             lake_root,
-            f"{qid}-{batch_id}",
+            bid,
             n_lists,
             m,
             k_codes,
             vec_col,
             id_col,
             dim,
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -22,11 +22,14 @@ O(batch + collisions) —
   training-set cut, with the expensive pairwise work already amortized
   into the stream.
 
-Replay discipline: every per-batch output (docs, band rows, pairs) is
-partitioned by ``batch_id`` and written with dynamic partition
-overwrite, so a replayed micro-batch replaces exactly its own output —
-idempotent by partition, the same recovery contract as the pair log in
-``streaming.dedup_stream``.
+Replay discipline: every per-batch output (docs, pairs, band rows) is
+a ``sinks.snapshot`` append under the batch's stream-scoped id
+(``streaming.identity.start_ledgered_sink``), one lake per table, so a
+replayed micro-batch is skipped by each manifest ledger — the same
+recovery contract as the pair log in ``streaming.dedup_stream``.  The
+band index commits LAST: a replay after a partial commit skips the
+tables already applied and still probes an index without the batch's
+own bands.
 
 The equality contract — :func:`settle_curated` over a streamed corpus
 == the same stages over the same docs in one batch — is the
@@ -48,26 +51,18 @@ from crypto_data_ingestion_module_spark.operators.graph import assign_clusters
 from crypto_data_ingestion_module_spark.operators.text_dedup import (
     incremental_simhash_pairs,
 )
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    current_version,
+    read_snapshot,
+    snapshot_append,
+)
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 DOCS_SUBDIR = "docs"
 INDEX_SUBDIR = "simhash_index"
 PAIRS_SUBDIR = "pairs"
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
 
 
 def stream_curate_ingest(
@@ -84,18 +79,16 @@ def stream_curate_ingest(
 ) -> StreamingQuery:
     """Start the streaming curation ingestion.
 
-    ``lake_root`` accumulates three tables, all batch-partitioned:
-    ``docs/`` (decontaminated, quality-gated documents), ``simhash_index/``
-    (band rows of those documents), ``pairs/`` (near-dup pair log).
+    ``lake_root`` accumulates three snapshot lakes: ``docs/``
+    (decontaminated, quality-gated documents), ``simhash_index/`` (band
+    rows of those documents), ``pairs/`` (near-dup pair log).
     ``benchmark`` is the static contamination reference (None → skip).
     """
     docs_path = os.path.join(lake_root, DOCS_SUBDIR)
     index_path = os.path.join(lake_root, INDEX_SUBDIR)
     pairs_path = os.path.join(lake_root, PAIRS_SUBDIR)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _commit(batch_df: DataFrame, bid: str) -> None:
         spark = batch_df.sparkSession
         clean = (
             batch_df
@@ -107,41 +100,31 @@ def stream_curate_ingest(
         ).localCheckpoint(eager=True)
         if qdocs.isEmpty():
             return
-        # Existence checked explicitly; any other index-read failure
-        # propagates and fails the batch (never "first batch ever":
-        # that would check the batch only against itself and admit
-        # duplicates of the whole existing corpus).
+        # Only a lake with no version is "first batch ever"; any other
+        # index-read failure propagates and fails the batch (checking
+        # the batch only against itself would admit duplicates of the
+        # whole existing corpus).
         index = (
-            spark.read.parquet(index_path).drop("batch_id")
-            if _exists(spark, index_path)
+            read_snapshot(spark, index_path)
+            if current_version(spark, index_path) is not None
             else None
         )
         pairs, new_bands = incremental_simhash_pairs(
             qdocs, index, max_hamming, text_col, id_col
         )
-        pairs = pairs.localCheckpoint(eager=True)
-        _write_batch_partition(qdocs, batch_id, docs_path)
-        _write_batch_partition(pairs, batch_id, pairs_path)
-        _write_batch_partition(new_bands, batch_id, index_path)
+        snapshot_append(spark, docs_path, qdocs, (), applied_id=bid)
+        snapshot_append(spark, pairs_path, pairs, (), applied_id=bid)
+        snapshot_append(spark, index_path, new_bands, (), applied_id=bid)
 
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ledgered_sink(source, checkpoint, _commit, available_now)
 
 
 def read_curate_docs(spark: SparkSession, lake_root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(lake_root, DOCS_SUBDIR)).drop(
-        "batch_id"
-    )
+    return read_snapshot(spark, os.path.join(lake_root, DOCS_SUBDIR))
 
 
 def read_curate_pairs(spark: SparkSession, lake_root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(lake_root, PAIRS_SUBDIR)).drop(
-        "batch_id"
-    )
+    return read_snapshot(spark, os.path.join(lake_root, PAIRS_SUBDIR))
 
 
 def settle_curated(

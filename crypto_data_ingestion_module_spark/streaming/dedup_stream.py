@@ -6,14 +6,14 @@ reference's watermark-incremental candle collection
 
 Per micro-batch cost is O(batch + collisions): shingle+sign the batch,
 one equi-join against the accumulated band-row index, append.  State
-lives entirely in two batch-partitioned parquet tables (fingerprint
-index + pair log), NOT in streaming state stores — so it survives
-checkpoint wipes, is readable by batch jobs mid-stream, and has no
-watermark-bounded window: a duplicate of a document ingested a year ago
-is still caught, which dropDuplicatesWithinWatermark cannot do.
-``foreachBatch`` delivers at least once; each batch overwrites only its
-own ``batch_id`` partition, so a replay replaces its own output and
-appends nothing.
+lives entirely in two snapshot lakes (fingerprint index + pair log),
+NOT in streaming state stores — so it survives checkpoint wipes, is
+readable by batch jobs mid-stream, and has no watermark-bounded window:
+a duplicate of a document ingested a year ago is still caught, which
+dropDuplicatesWithinWatermark cannot do.  ``foreachBatch`` delivers at
+least once; each batch appends under its stream-scoped id
+(``streaming.identity.start_ledgered_sink``), so a replay is skipped by
+the manifest ledger and appends nothing.
 """
 
 from __future__ import annotations
@@ -22,6 +22,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from crypto_data_ingestion_module_spark.sinks.snapshot import (
+    current_version,
+    read_snapshot,
+    snapshot_append,
+)
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 INDEX_MD5_SUBDIR = "fingerprints_md5"
 PAIRS_MD5_SUBDIR = "pairs_md5"
@@ -44,48 +53,34 @@ def stream_dedup_ingest_md5(
     can reproduce, which is what lets the accumulated pair log hold a
     driver receipt (registry row ``stream_dedup_pairs``).
 
-    ``lake_root`` gains ``fingerprints_md5/`` (band rows ``(id, sig,
-    bkey)``) and ``pairs_md5/`` — both batch-partitioned with dynamic
-    overwrite, so a replayed micro-batch replaces exactly its own
-    output (the curate_stream recovery contract).
+    ``lake_root`` gains two snapshot lakes, ``fingerprints_md5/`` (band
+    rows ``(id, sig, bkey)``) and ``pairs_md5/``.  The index commits
+    after the pairs, so a replay after a partial commit skips the pairs
+    and still probes an index without the batch's own bands (the
+    curate_stream recovery contract).
     """
     from crypto_data_ingestion_module_spark.operators.text_dedup import (
         incremental_minhash_md5_pairs,
-    )
-    from crypto_data_ingestion_module_spark.streaming.curate_stream import (
-        _exists,
-        _write_batch_partition,
     )
 
     index_path = os.path.join(lake_root, INDEX_MD5_SUBDIR)
     pairs_path = os.path.join(lake_root, PAIRS_MD5_SUBDIR)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _commit(batch_df: DataFrame, bid: str) -> None:
         spark = batch_df.sparkSession
         index = (
-            spark.read.parquet(index_path).drop("batch_id")
-            if _exists(spark, index_path)
+            read_snapshot(spark, index_path)
+            if current_version(spark, index_path) is not None
             else None
         )
         pairs, new_bands = incremental_minhash_md5_pairs(
             batch_df, index, num_hashes, bands, shingle_n, text_col, id_col
         )
-        # force the pair plan before the index gains the batch's bands
-        pairs = pairs.localCheckpoint(eager=True)
-        _write_batch_partition(pairs, batch_id, pairs_path)
-        _write_batch_partition(new_bands, batch_id, index_path)
+        snapshot_append(spark, pairs_path, pairs, (), applied_id=bid)
+        snapshot_append(spark, index_path, new_bands, (), applied_id=bid)
 
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ledgered_sink(source, checkpoint, _commit, available_now)
 
 
 def read_dedup_pairs_md5(spark: SparkSession, lake_root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(lake_root, PAIRS_MD5_SUBDIR)).drop(
-        "batch_id"
-    )
+    return read_snapshot(spark, os.path.join(lake_root, PAIRS_MD5_SUBDIR))

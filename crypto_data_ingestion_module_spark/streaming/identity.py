@@ -1,14 +1,15 @@
-"""Stream-scoped ledger identity shared by every foreachBatch sink.
+"""Stream-scoped ledger identity and the one foreachBatch sink every
+lake-writing stream starts through (:func:`start_ledgered_sink`).
 
 The snapshot-lake replay ledger dedupes on ``applied_id = f"{qid}-
-{batch_id}"`` (Delta's txnAppId discipline).  qid used to be
-``md5(checkpoint_path)`` alone, which has a silent-drop footgun
-(ADVICE r8): delete and recreate the SAME checkpoint path against an
-existing partial lake and the new stream restarts batch ids at 0 under
-the old qid — its first micro-batches collide with the previous
-incarnation's ledger entries and are dropped as replays.
+{batch_id}"`` (Delta's txnAppId discipline).  A qid of
+``md5(checkpoint_path)`` alone would drop data silently: delete and
+recreate the SAME checkpoint path against an existing lake and the new
+stream restarts batch ids at 0 under the old qid, so its first
+micro-batches collide with the previous incarnation's ledger entries
+and are skipped as replays.
 
-Fix: fold the checkpoint's own creation marker into the hash.  Spark
+So the checkpoint's own creation marker is folded into the hash.  Spark
 writes ``<checkpoint>/metadata`` (a StreamMetadata JSON holding the
 query ``id``) when the query starts, BEFORE any batch executes; the id
 is minted once per checkpoint-directory creation and persists across
@@ -19,27 +20,7 @@ working); recreated checkpoint path -> fresh qid (no collision).
 ``stream_qid`` must be called from INSIDE the foreachBatch sink — at
 plan-build time a brand-new checkpoint has no metadata file yet, so
 the marker would read empty there and restarts would change identity.
-
-Transition note: lakes written before this change carry path-only ids.
-A stream restarted across the upgrade re-scopes its ids, so one batch
-replayed exactly across the upgrade boundary can append twice.  Whether
-a consumer absorbs that depends on its merge algebra:
-
-* keep-last upsert — idempotent by key: absorbed.
-* MG partials — a duplicate partial only WIDENS the pass-1 candidate
-  set; the exact second pass keeps the answer correct: absorbed.
-
-The same transition window re-opens at the r10→r11 URI-parsing upgrade
-(ADVICE r11): checkpoints addressed as ``file:`` URIs with
-percent-encoded characters in the path (``%20`` etc.), or with the
-``file://localhost/...`` netloc form, previously failed the naive
-prefix-strip, read no metadata marker, and used path-only identity.
-urlparse/unquote now resolves them to the real local path, so those
-streams FIND their metadata marker and change qid across this upgrade —
-one batch replayed exactly across the boundary can append twice, with
-the same per-consumer algebra as above.  Plain paths and
-``file:/...``/``file:///...`` URIs without percent-encoding are
-unaffected (byte-identical identity before and after).
+:func:`start_ledgered_sink` does that for its callers.
 """
 
 from __future__ import annotations
@@ -49,6 +30,10 @@ import json
 import logging
 import os
 import urllib.parse
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 _log = logging.getLogger(__name__)
 _warned_fallback: set[str] = set()
@@ -91,3 +76,31 @@ def stream_qid(checkpoint: str) -> str:
             checkpoint,
         )
     return hashlib.md5(f"{checkpoint}|{marker}".encode()).hexdigest()[:12]
+
+
+def start_ledgered_sink(
+    source: DataFrame,
+    checkpoint: str,
+    commit: Callable[[DataFrame, str], object],
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start ``source`` into a foreachBatch sink that calls
+    ``commit(batch_df, f"{stream_qid(checkpoint)}-{batch_id}")`` for
+    every non-empty micro-batch.
+
+    ``commit`` writes through ``sinks.snapshot`` with that id (plus its
+    own prefix) as the ``applied_id``, so an at-least-once re-delivered
+    micro-batch is skipped by the manifest ledger.  Empty micro-batches
+    commit nothing and leave no ledger entry.  ``available_now`` drains
+    what the source holds and stops."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            commit(batch_df, f"{stream_qid(checkpoint)}-{batch_id}")
+
+    writer = source.writeStream.foreachBatch(_sink).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

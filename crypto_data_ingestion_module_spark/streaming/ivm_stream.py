@@ -33,7 +33,9 @@ from crypto_data_ingestion_module_spark.operators.ivm import (
     RIGHT,
     maintain_join_view,
 )
-from crypto_data_ingestion_module_spark.streaming.identity import stream_qid
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 
 def stream_join_view(
@@ -54,22 +56,16 @@ def stream_join_view(
     if side not in (LEFT, RIGHT):
         raise ValueError(f"side must be {LEFT!r} or {RIGHT!r}, got {side!r}")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        maintain_join_view(
+    return start_ledgered_sink(
+        source,
+        checkpoint,
+        lambda batch_df, bid: maintain_join_view(
             batch_df.sparkSession,
             lake_root,
             batch_df if side == LEFT else None,
             batch_df if side == RIGHT else None,
             on,
-            f"{side}-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+            f"{side}-{bid}",
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -31,6 +31,9 @@ from pyspark.sql.streaming import StreamingQuery
 from crypto_data_ingestion_module_spark.operators.rollup import (
     maintain_rollup_snapshot,
 )
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 
 def stream_rollup(
@@ -50,29 +53,26 @@ def stream_rollup(
     Every micro-batch is ONE atomic manifest swap on the snapshot lake
     (``maintain_rollup_snapshot``); the commit cost is independent of
     how many dates the batch touches.  The manifest's applied-ids
-    ledger makes at-least-once foreachBatch delivery never double-merge.
+    ledger, keyed ``rollup-{qid}-{n}`` (streaming/identity.py), makes
+    at-least-once foreachBatch delivery never double-merge, and a stream
+    on a fresh checkpoint never collides with an earlier one's ids.
     Read the lake back with ``operators.rollup.read_rollup_snapshot``.
     """
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_rollup_snapshot(
+    return start_ledgered_sink(
+        source,
+        checkpoint,
+        lambda batch_df, bid: maintain_rollup_snapshot(
             batch_df.sparkSession,
             batch_df,
             lake_root,
             interval_ms,
-            batch_id=batch_id,
+            batch_id=bid,
             keys=keys,
             ts_col=ts_col,
             price_col=price_col,
             volume_col=volume_col,
             tiebreak_col=tiebreak_col,
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

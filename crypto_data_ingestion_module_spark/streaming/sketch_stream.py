@@ -33,7 +33,9 @@ from pyspark.sql.streaming import StreamingQuery
 from crypto_data_ingestion_module_spark.operators.sketch_store import (
     store_mg_partials,
 )
-from crypto_data_ingestion_module_spark.streaming.identity import stream_qid
+from crypto_data_ingestion_module_spark.streaming.identity import (
+    start_ledgered_sink,
+)
 
 
 def stream_mg_partials(
@@ -49,24 +51,17 @@ def stream_mg_partials(
     micro-batch appends its own bounded ``(stratum, item, count_lower)``
     partial, replay-immune per batch id."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        qid = stream_qid(checkpoint)
-        store_mg_partials(
+    return start_ledgered_sink(
+        source,
+        checkpoint,
+        lambda batch_df, bid: store_mg_partials(
             batch_df.sparkSession,
             batch_df,
             col,
             root,
             stratum=stratum,
             k=k,
-            applied_id=f"mg-{qid}-{batch_id}",
-        )
-
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+            applied_id=f"mg-{bid}",
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-

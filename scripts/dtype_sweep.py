@@ -8,9 +8,11 @@ driver (VERDICT r4 item #2).
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pandas as pd
 

@@ -8,9 +8,11 @@ declarative shape Catalyst chose)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 EXTRA = (
     "ohlcv_resample_1h",      # flagship entry()
@@ -49,7 +51,7 @@ def main() -> int:
             )
         )
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote PLANS.md ({len(names)} queries)")
     return 0

@@ -22,11 +22,13 @@ adding operators: ``python3 scripts/plan_audit.py [sf_dir]``.
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 

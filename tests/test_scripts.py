@@ -207,3 +207,33 @@ def test_every_plans_module_imports_first():
         )
         assert res.returncode == 0, (mod, res.stderr[-2000:])
         assert int(res.stdout.split()[-1]) > 0, mod
+
+
+def test_no_script_puts_a_cwd_relative_path_on_sys_path():
+    """Every script finds the package from any directory: a relative or
+    ``os.getcwd()`` entry on ``sys.path`` resolves against the caller's
+    directory, so the script only runs from the repo root.  Static: the
+    scripts are parsed, not run."""
+    import ast
+    import glob
+
+    bad = []
+    for path in sorted(glob.glob(os.path.join(REPO, "scripts", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and node.args
+            ):
+                continue
+            entry = node.args[-1]
+            relative = isinstance(entry, ast.Constant) and not os.path.isabs(
+                str(entry.value)
+            )
+            if relative or "getcwd" in ast.unparse(entry):
+                bad.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not bad, bad

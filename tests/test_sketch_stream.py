@@ -1,10 +1,13 @@
 """Streaming sketch-partial maintenance (streaming/sketch_stream.py):
 streamed partials answer EXACTLY like the one-shot operators, and
-re-delivered micro-batches append nothing."""
+re-delivered micro-batches append nothing.  The recycled-checkpoint
+test covers every lake-writing stream that shares its sink
+(streaming/identity.py)."""
 
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_module_spark.operators.sketch import (
@@ -38,6 +41,23 @@ def _tokens(spark):
         )
         .filter(F.col("tok") != "")
     )
+
+
+def _assert_answers_like_one_shot(spark, root):
+    """The partial lake at ``root`` answers the exact heavy hitters of
+    every token exactly like the one-shot operator, and not emptily."""
+    fact = _tokens(spark)
+    got = [
+        tuple(r)
+        for r in frequent_items_exact_from_partials(
+            fact, read_snapshot(spark, root), "tok", k=K
+        ).collect()
+    ]
+    want = [
+        (r["item"], r["cnt"])
+        for r in frequent_items_exact(fact, "tok", k=K).collect()
+    ]
+    assert got == want and got
 
 
 def _settled_version(spark, root, q, timeout=120, quiet_s=3.0):
@@ -100,19 +120,7 @@ def test_streamed_mg_partials_answer_equals_one_shot(spark, tmp_path):
     assert v == 3
     assert len(read_manifest(spark, root, v)["applied_ids"]) == 3
 
-    fact = _tokens(spark)
-    got = [
-        tuple(r)
-        for r in frequent_items_exact_from_partials(
-            fact, read_snapshot(spark, root), "tok", k=K
-        ).collect()
-    ]
-    want = [
-        (r["item"], r["cnt"])
-        for r in frequent_items_exact(fact, "tok", k=K).collect()
-    ]
-    assert got == want
-    assert got, "empty heavy-hitter set"
+    _assert_answers_like_one_shot(spark, root)
 
     # replaying one batch identity appends nothing (no version bump)
     store_mg_partials(
@@ -127,77 +135,162 @@ def test_streamed_mg_partials_answer_equals_one_shot(spark, tmp_path):
     assert current_version(spark, root) == v
 
 
+def _stage_incarnations(df, key, tmp_path):
+    """Two input dirs, one per stream incarnation, each holding two
+    one-file micro-batches of ``df``.  Halves and batches come from
+    independent hashes of ``key``: batching a half by the same hash
+    would leave empty batches."""
+    dirs = []
+    for half in range(2):
+        in_dir = str(tmp_path / f"in{half}")
+        os.makedirs(in_dir)
+        for b in range(2):
+            tmp = str(tmp_path / f"w{half}{b}")
+            df.filter(
+                (F.pmod(F.xxhash64(key), F.lit(2)) == half)
+                & (F.pmod(F.xxhash64(key, F.lit(7)), F.lit(2)) == b)
+            ).coalesce(1).write.parquet(tmp)
+            os.rename(
+                glob.glob(tmp + "/*.parquet")[0],
+                os.path.join(in_dir, f"b{b}.parquet"),
+            )
+        dirs.append(in_dir)
+    return dirs
+
+
+def _mg_case(spark):
+    return (
+        _tokens(spark),
+        "tok",
+        lambda src, root, ck: stream_mg_partials(
+            src, root, ck, "tok", stratum="lang", k=K
+        ),
+        "",
+        lambda root: _assert_answers_like_one_shot(spark, root),
+    )
+
+
+def _rollup_case(spark):
+    from crypto_data_ingestion_module_spark.operators.rollup import (
+        finalize,
+        read_rollup_snapshot,
+    )
+    from crypto_data_ingestion_module_spark.streaming.rollup_stream import (
+        stream_rollup,
+    )
+
+    ev = load_table(spark, SF_SMALL, "events")
+
+    def check(root):
+        candles = finalize(read_rollup_snapshot(spark, root), ["event_type"])
+        ticks = candles.agg(F.sum("n_rows")).first()[0]
+        assert ticks == ev.count()
+
+    return (
+        ev,
+        "event_id",
+        lambda src, root, ck: stream_rollup(src, root, ck, 3_600_000),
+        "",
+        check,
+    )
+
+
+def _dedup_case(spark):
+    from crypto_data_ingestion_module_spark.operators.text_dedup import (
+        minhash_band_rows_md5,
+        minhash_lsh_pairs_md5,
+    )
+    from crypto_data_ingestion_module_spark.streaming.dedup_stream import (
+        read_dedup_pairs_md5,
+        stream_dedup_ingest_md5,
+    )
+
+    docs = load_table(spark, SF_SMALL, "documents")
+
+    def check(root):
+        ids = [
+            sorted(r.id for r in bands.select("id").distinct().collect())
+            for bands in (
+                read_snapshot(spark, f"{root}/fingerprints_md5"),
+                minhash_band_rows_md5(docs),
+            )
+        ]
+        assert ids[0] == ids[1] and ids[1]
+        cols = ["id_a", "id_b", "n_match"]
+        got = read_dedup_pairs_md5(spark, root).select(cols).collect()
+        want = minhash_lsh_pairs_md5(docs).select(cols).collect()
+        assert sorted(got) == sorted(want) and want
+
+    return (docs, "doc_id", stream_dedup_ingest_md5, "fingerprints_md5", check)
+
+
+def _curate_case(spark):
+    from crypto_data_ingestion_module_spark.functions import text as TX
+    from crypto_data_ingestion_module_spark.streaming.curate_stream import (
+        read_curate_docs,
+        stream_curate_ingest,
+    )
+
+    docs = load_table(spark, SF_SMALL, "documents")
+
+    def check(root):
+        got = {r.doc_id for r in read_curate_docs(spark, root).collect()}
+        want = {
+            r.doc_id
+            for r in docs.filter(TX.quality_score("text") >= 0.5).collect()
+        }
+        assert got == want and want
+
+    return (
+        docs,
+        "doc_id",
+        lambda src, root, ck: stream_curate_ingest(src, None, root, ck),
+        "docs",
+        check,
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_mg_case, _rollup_case, _dedup_case, _curate_case],
+    ids=["mg", "rollup", "dedup", "curate"],
+)
 def test_recreated_checkpoint_path_gets_fresh_stream_identity(
-    spark, tmp_path
+    spark, tmp_path, case
 ):
-    """ADVICE r8: deleting and recreating the SAME checkpoint path used
-    to restart batch ids at 0 under the same path-hashed qid, so the new
-    stream's first micro-batches collided with the old incarnation's
-    ledger entries and were silently dropped.  With the creation marker
-    folded into the identity (streaming/identity.py) the second
-    incarnation commits ALL its batches."""
+    """Deleting and recreating the SAME checkpoint path restarts batch
+    ids at 0.  Under a path-hashed or bare batch id the new stream's
+    first micro-batches collide with the old incarnation's ledger
+    entries and are silently skipped as replays.  Every lake-writing
+    stream starts through ``streaming.identity.start_ledgered_sink``,
+    whose ids fold in the checkpoint's creation marker, so the second
+    incarnation commits ALL its batches into the shared lake."""
     import shutil
 
-    # split/batch keys must be independent hashes: batching the
-    # parity-filtered half by the same key would leave empty batches
-    toks = (
-        _tokens(spark)
-        .withColumn("split_key", F.abs(F.xxhash64("tok")))
-        .withColumn("batch_key", F.abs(F.xxhash64("tok", F.lit(7))))
-    )
-    first = toks.filter(F.col("split_key") % 2 == 0)
-    second = toks.filter(F.col("split_key") % 2 == 1)
-    root = str(tmp_path / "mg")
+    fact, key, start, ledger_lake, check = case(spark)
+    root = str(tmp_path / "lake")
     ck = str(tmp_path / "ck")
+    ledger = os.path.join(root, ledger_lake)
 
-    in1 = str(tmp_path / "in1")
-    _write_batches(first, tmp_path / "w1", in1, "batch_key", n=2)
-    q = stream_mg_partials(
-        spark.readStream.schema(toks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in1),
-        root,
-        ck,
-        "tok",
-        stratum="lang",
-        k=K,
-    )
-    q.awaitTermination(120)
-    v1 = current_version(spark, root)
-    assert v1 == 2
+    versions = []
+    for in_dir in _stage_incarnations(fact, key, tmp_path):
+        # recycle the checkpoint path against the SAME lake
+        shutil.rmtree(ck, ignore_errors=True)
+        q = start(
+            spark.readStream.schema(fact.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir),
+            root,
+            ck,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        versions.append(current_version(spark, ledger))
 
-    # recycle the checkpoint path against the SAME partial lake
-    shutil.rmtree(ck)
-    in2 = str(tmp_path / "in2")
-    _write_batches(second, tmp_path / "w2", in2, "batch_key", n=2)
-    q2 = stream_mg_partials(
-        spark.readStream.schema(toks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in2),
-        root,
-        ck,
-        "tok",
-        stratum="lang",
-        k=K,
-    )
-    q2.awaitTermination(120)
-
-    # every batch of the second incarnation must have committed: the
-    # old path-only qid dropped them here (version stayed at 2)
-    assert current_version(spark, root) == v1 + 2
-
-    fact = _tokens(spark)
-    got = [
-        tuple(r)
-        for r in frequent_items_exact_from_partials(
-            fact, read_snapshot(spark, root), "tok", k=K
-        ).collect()
-    ]
-    want = [
-        (r["item"], r["cnt"])
-        for r in frequent_items_exact(fact, "tok", k=K).collect()
-    ]
-    assert got == want and got
+    # one commit per micro-batch in each incarnation: a colliding id
+    # left the version at 2 here
+    assert versions == [2, 4]
+    assert len(set(read_manifest(spark, ledger, 4)["applied_ids"])) == 4
+    check(root)
 
 
 def test_checkpoint_restart_resumes_without_double_append(spark, tmp_path):
@@ -256,15 +349,4 @@ def test_checkpoint_restart_resumes_without_double_append(spark, tmp_path):
     ids = read_manifest(spark, root, v_final)["applied_ids"]
     assert len(set(ids)) == len(ids)  # no double-append, ever
 
-    fact = _tokens(spark)
-    got = [
-        tuple(r)
-        for r in frequent_items_exact_from_partials(
-            fact, read_snapshot(spark, root), "tok", k=K
-        ).collect()
-    ]
-    want = [
-        (r["item"], r["cnt"])
-        for r in frequent_items_exact(fact, "tok", k=K).collect()
-    ]
-    assert got == want and got
+    _assert_answers_like_one_shot(spark, root)
